@@ -1467,7 +1467,8 @@ class Collection:
         planes across both corpora; catches paraphrases the lexical path
         misses); ``method="jaccard"`` is the deterministic exact-Jaccard
         screen (ngram_jaccard_between / its at-rest twin — replayable,
-        no hashing approximation); ``method="fuzzy"`` is the
+        no sampling; joins on 64-bit shingle hashes, whose collision
+        bound that docstring states); ``method="fuzzy"`` is the
         edit-distance screen (fuzzy_near_dups_between / PassJoin index —
         OCR-noise/typo variants; pass ``max_edits=`` not ``threshold``);
         ``method="winnow"`` is the passage-overlap screen at MOSS-

@@ -1,38 +1,39 @@
-"""Vectorized (Arrow + numpy) twins of the paired-moduli window
-fingerprints and the minhash signature fold.
+"""Vectorized (Arrow + numpy) paired-moduli window fingerprints, the
+minhash signature fold and the winnowing selection — the engine's one
+implementation of the window-hash primitive.
 
-The expression forms of these hashes (``dedup._win_fp`` / the per-slot
-``array_min(transform(...))`` signature) are higher-order-function
-trees, which Spark evaluates INTERPRETED per element — whole-stage
-codegen does not cover lambda functions. Profiling (r18) put the
+Spark evaluates higher-order-function trees (``transform`` over a
+per-window hash chain) INTERPRETED per element — whole-stage codegen
+does not cover lambda functions. Profiling (r18) put the interpreted
 fingerprint stage of ``winnow_overlap`` at ~20s of executor CPU plus
 ~30s of allocation/GC stall for 1.5 MB of text: every window evaluated
-a ~70-node tree per modulus through the Catalyst interpreter. Guide
-§4.2's rule applies exactly — let Spark do distribution and hand whole
-Arrow batches to vectorized native code.
+a ~70-node tree per modulus. Guide §4.2's rule applies exactly — let
+Spark do distribution and hand whole Arrow batches to vectorized
+native code.
 
-Bit-exactness contract (the reason these can replace the expression
-forms at all):
+Hash definitions (the same ones the DuckDB oracle SQL embeds):
 
-* codepoints — Spark's ``transform(split(text, ''), c -> ascii(c))``
-  yields Unicode code points (verified against Python ``ord`` over
-  astral/combining/CJK samples); numpy gets the same values from a
-  UTF-32-LE reinterpretation of the Python string, with no per-char
-  loop.
-* window hash — the SQL chain applies ``% P`` after every
-  multiply-add; the numpy path takes one ``% P`` after the full dot
-  product. Same residue: stepwise ``mod`` equals ``mod`` of the total,
+* codepoints — Unicode code points, obtained from a UTF-32-LE
+  reinterpretation of the Python string, with no per-char loop. They
+  equal Spark's ``transform(split(text, ''), c -> ascii(c))`` (the
+  source ``cdc_chunks`` folds chunks from) over astral/combining/CJK
+  text.
+* window hash — ``Σ c[i+k]·B^(L-1-k) mod P``, one ``% P`` after the
+  full dot product; that equals the stepwise Horner fold's residue,
   and the unreduced int64 dot is overflow-free (codepoint < 2^21,
   power < 2^30, so L terms stay < L·2^51 — safe through L = 2048; the
-  families use L ≤ 64).
+  families use L ≤ 64). The fingerprint packs two such hashes (base 31
+  mod 1e9+7, base 131 mod 1e9+9) as ``h1·MOD2 + h2`` — ~60 collision
+  bits in one int64.
 * minhash slots — ``(f·a + b) % P`` with f, a < P ≈ 2^30 stays < 2^61
   in int64; the per-slot minimum over the distinct window hashes is
   order-independent.
 
-Every function here is pinned value-equal to its expression twin by
-tests, and every riding query is oracle-checked; the expression
-builders remain in dedup.py as the documentation of record for the
-hash definitions (and for the oracle SQL generators that embed them).
+Every function here is pinned against pure-Python evaluations of these
+definitions (``tests/test_fphash.py``, and ``_py_cdc`` in
+``tests/test_dedup.py`` for content-defined chunking), and every riding
+query is oracle-checked. The Spark-side UDFs are named ``fphash_*`` so
+plan-contract tests can allow exactly these Python nodes.
 """
 
 from __future__ import annotations
@@ -46,6 +47,11 @@ from pyspark.sql import functions as F
 
 HASH_MOD = 1_000_000_007
 HASH_BASE = 31
+# second independent modulus/base for the window fingerprint: the pair
+# packs into one int64 (max (MOD-1)*MOD2 + MOD2-1 ≈ 1.0e18), giving ~60
+# collision bits instead of ~30 — at 1e12 windows (100 TB-scale) the
+# expected colliding PAIRS drop from "nearly everything" to ~5e5
+# corpus-wide, and the destructive transforms verify those exactly anyway
 HASH_MOD2 = 1_000_000_009
 HASH_BASE2 = 131
 
@@ -80,10 +86,10 @@ def paired_window_fps(
     mod2: int = HASH_MOD2,
 ):
     """The engine-wide ~60-bit paired-moduli window fingerprints of
-    ``t`` — ``h1·MOD2 + h2`` per window, identical to ``dedup._win_fp``
-    at every position. The moduli are parameters so callers (dedup)
-    bind THEIR module constants at call time — tests monkeypatch those
-    to force collisions."""
+    ``t`` — ``h1·MOD2 + h2`` per window, one per 0-based window start.
+    The moduli are parameters so callers (dedup) bind THEIR module
+    constants at call time — tests monkeypatch those to force
+    collisions."""
     codes = _codes(t)
     h1 = _window_hashes(codes, length, base, mod)
     h2 = _window_hashes(codes, length, base2, mod2)
@@ -99,14 +105,13 @@ def window_fps_col(
     mod2: int = HASH_MOD2,
 ) -> Column:
     """``array<long>`` of all ``length``-char paired-moduli window
-    fingerprints (index = 0-based window start) — the vectorized twin
-    of ``dedup._win_fps_transform`` evaluated in one Arrow batch per
-    partition chunk."""
+    fingerprints (index = 0-based window start), evaluated in one Arrow
+    batch per partition chunk. ``text_col`` is a column name."""
     L = int(length)
     ms = (int(base), int(mod), int(base2), int(mod2))
 
     @F.pandas_udf("array<long>")
-    def _fps(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def fphash_window_fps(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for texts in it:
             yield pd.Series(
                 [
@@ -115,7 +120,7 @@ def window_fps_col(
                 ]
             )
 
-    return _fps(text_col)
+    return fphash_window_fps(text_col)
 
 
 def minhash_sig_col(
@@ -127,15 +132,14 @@ def minhash_sig_col(
 ) -> Column:
     """``array<long>`` minhash signature — per slot j the minimum of
     ``(f·a_j + b_j) mod P`` over the distinct ``n``-char window hashes
-    (base 31 mod 1e9+7), identical to the per-slot
-    ``array_min(transform(...))`` expression chain."""
+    (base 31 mod 1e9+7)."""
     N = int(n)
     BS, MD = int(base), int(mod)
     A = [int(a) for a, _ in coeffs]
     B = [int(b) for _, b in coeffs]
 
     @F.pandas_udf("array<long>")
-    def _sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def fphash_minhash_sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         a = np.array(A, dtype=np.int64)[:, None]
         b = np.array(B, dtype=np.int64)[:, None]
         for texts in it:
@@ -148,7 +152,7 @@ def minhash_sig_col(
                 out.append(((fps[None, :] * a + b) % MD).min(axis=1))
             yield pd.Series(out)
 
-    return _sig(text_col)
+    return fphash_minhash_sig(text_col)
 
 
 def winnow_selections_col(
@@ -164,15 +168,14 @@ def winnow_selections_col(
     selections of ``text_col`` — parallel arrays of (0-based window
     start, paired-moduli fingerprint), one entry per selected window,
     with the MOSS tie rule (minimum hash, rightmost on ties) and the
-    truncated-single-window convention, identical to the
-    ``array_min``/``least`` selection over ``dedup._win_fp`` structs.
+    truncated-single-window convention.
     Duplicates across adjacent windows are NOT collapsed here; the
     caller keeps its ``distinct()``."""
     K, W = int(k), int(window)
     ms = (int(base), int(mod), int(base2), int(mod2))
 
     @F.pandas_udf("struct<p: array<long>, f: array<long>>")
-    def _sel(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    def fphash_winnow_sel(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for texts in it:
             ps, fs = [], []
             for t in texts:
@@ -204,4 +207,4 @@ def winnow_selections_col(
                 fs.append(mins)
             yield pd.DataFrame({"p": ps, "f": fs})
 
-    return _sel(text_col)
+    return fphash_winnow_sel(text_col)

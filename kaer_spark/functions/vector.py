@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import math
 import re
+import threading
 from collections import OrderedDict
 from collections.abc import Sequence
 from typing import Union
@@ -41,10 +42,12 @@ _SIMPLE_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 # expression handle, safe to embed in any number of plans, but its
 # underlying java object dies with the JVM — the context check drops the
 # cache when the session is restarted (tests stop/start sessions).
-# This caches no data and no results — construction only.
+# This caches no data and no results — construction only. One lock guards
+# the LRU: a multi-user application builds queries from several threads.
 _EXPR_CACHE_MAX = 512
 _expr_cache: OrderedDict[str, Column] = OrderedDict()
 _expr_cache_ctx: object | None = None
+_expr_cache_lock = threading.Lock()
 
 
 def cached_expr(sql: str) -> Column:
@@ -55,17 +58,18 @@ def cached_expr(sql: str) -> Column:
     sc = SparkContext._active_spark_context
     if sc is None:
         return F.expr(sql)
-    if sc is not _expr_cache_ctx:
-        _expr_cache.clear()
-        _expr_cache_ctx = sc
-    col = _expr_cache.get(sql)
-    if col is None:
-        col = F.expr(sql)
-        _expr_cache[sql] = col
-        if len(_expr_cache) > _EXPR_CACHE_MAX:
-            _expr_cache.popitem(last=False)
-    else:
-        _expr_cache.move_to_end(sql)
+    with _expr_cache_lock:
+        if sc is not _expr_cache_ctx:
+            _expr_cache.clear()
+            _expr_cache_ctx = sc
+        col = _expr_cache.get(sql)
+        if col is None:
+            col = F.expr(sql)
+            _expr_cache[sql] = col
+            if len(_expr_cache) > _EXPR_CACHE_MAX:
+                _expr_cache.popitem(last=False)
+        else:
+            _expr_cache.move_to_end(sql)
     return col
 
 

@@ -2,10 +2,14 @@
 embedding-cosine — the core LLM-training-data operators.
 
 None of these exist in the reference (SURVEY.md §2.3); they are the
-north-star extensions, built entirely from Catalyst-native expressions so
-every variant is reproducible by a SQL oracle (the hash functions are plain
-int64 polynomial arithmetic, not JVM murmur/xxhash, precisely so DuckDB can
-replay them bit-for-bit).
+north-star extensions, built from Catalyst expressions plus one set of
+Arrow UDFs: the paired-moduli window fingerprints (passage, winnowing,
+char-MinHash and content-defined-chunking paths) come from
+``kaer_spark.functions.fphash``. Every variant is reproducible by a SQL
+oracle — those fingerprints are plain int64 polynomial arithmetic, not JVM
+murmur/xxhash, precisely so DuckDB can replay them bit-for-bit. (The
+shingle-join stages key on Spark's ``xxhash64``; see
+:func:`ngram_jaccard_between` for what that costs in exactness.)
 
 Scale design (100 TB):
 
@@ -32,6 +36,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kaer_spark.functions.fphash import (
+    HASH_BASE,
+    HASH_BASE2,
+    HASH_MOD,
+    HASH_MOD2,
+    minhash_sig_col,
+    window_fps_col,
+    winnow_selections_col,
+)
 from kaer_spark.functions.text import char_shingles, tokens, word_shingles
 from kaer_spark.functions.vector import cached_expr, dot, vector_norm
 from kaer_spark.operators.util import (
@@ -40,15 +53,9 @@ from kaer_spark.operators.util import (
     watermark_health_cols,
 )
 
-HASH_MOD = 1_000_000_007
-HASH_BASE = 31
-# second independent modulus/base for the passage-window fingerprint: the
-# combined pair packs into one int64 (max (MOD-1)*MOD2 + MOD2-1 ≈ 1.0e18),
-# giving ~60 collision bits instead of ~30 — at 1e12 windows (100 TB-scale)
-# the expected colliding PAIRS drop from "nearly everything" to ~5e5
-# corpus-wide, and the destructive transforms verify those exactly anyway
-HASH_MOD2 = 1_000_000_009
-HASH_BASE2 = 131
+# HASH_* are defined once, in functions.fphash, and imported here. Callers
+# in this module pass them to the fphash UDFs at call time, so reassigning
+# them on this module (tests force collisions that way) takes effect.
 SIMHASH_BITS = 24
 
 
@@ -918,13 +925,22 @@ def ngram_jaccard_between(
     max_doc_freq: int | None = None,
     unit: str = "char",
 ) -> DataFrame:
-    """CROSS-corpus exact n-gram Jaccard pairs ``(left_id, right_id,
+    """CROSS-corpus n-gram Jaccard pairs ``(left_id, right_id,
     jaccard)`` — the deterministic decontamination screen next to the
     probabilistic :func:`minhash_near_dups_between` (same contract, no
-    hashing approximation: Jaccard is computed from true distinct-
-    shingle intersection counts, so the screen is exactly replayable by
-    a SQL oracle). ``max_doc_freq`` caps on the RIGHT (reference)
-    corpus's doc frequencies — see :func:`_between_pair_counts`. The
+    sampling: Jaccard is computed from distinct-shingle intersection
+    counts rather than estimated from signatures).
+
+    Exactness bound: both sides join on ``xxhash64(shingle)``, so two
+    different shingles whose 64-bit hashes collide count as shared. By
+    the birthday bound n²/2⁶⁵ that is about 2.7×10⁴ colliding shingle
+    pairs at 10¹² distinct shingles (the 100 TB design point), each
+    able to raise only the intersection counts of the documents that
+    hold them; at 10⁶ shingles the expectation is ~3×10⁻⁸, so at
+    fixture scale the values match the oracle exactly.
+
+    ``max_doc_freq`` caps on the RIGHT (reference) corpus's doc
+    frequencies — see :func:`_between_pair_counts`. The
     recurring regime serves the same values from a standing reference
     artifact via :func:`ngram_jaccard_against_index`."""
     return (
@@ -1592,35 +1608,16 @@ def minhash_signatures(
     where fp is the polynomial shingle hash. All arithmetic stays below
     2^60 (a, fp < 2^30), so int64-exact — and exactly reproducible in SQL.
 
-    The char-unit hot path (r11) never materializes shingle STRINGS for
-    the signature: window fingerprints evaluate as flat power-basis sums
-    over a once-per-row codepoint array (the passage-family trick,
-    ``_win_fp``-style), and each slot takes ``array_min`` over the
-    fingerprint array with duplicates intact — ``min`` over a multiset
-    equals ``min`` over its distinct set, so the signature is provably
-    identical to the distinct-shingle definition (verified value-equal at
-    sf0.1; 2.6s → 0.25s). ``shingles`` remains in the output as an
+    The char-unit hot path never materializes shingle STRINGS for the
+    signature: :func:`~kaer_spark.functions.fphash.minhash_sig_col`
+    hashes every window of a row in one Arrow batch and takes each slot's
+    minimum over the distinct window hashes, which is exactly the
+    distinct-shingle definition. ``shingles`` remains in the output as an
     independent column, so consumers that select only ``(id, sig)`` prune
-    the string work away entirely; the ``array_distinct`` on int64
-    fingerprints keeps the 16 slot-min passes short."""
+    the string work away entirely."""
     coeffs = minhash_coeffs(num_hashes, seed)
     if unit == "char":
         N = int(n)
-        # [r18] the whole char-path signature — window hashes, distinct,
-        # per-slot (f·a+b) mod P minima — is vectorized in one Arrow
-        # batch per partition chunk (functions.fphash, guide §4.2): the
-        # expression form was an interpreted higher-order transform per
-        # window plus 16 interpreted per-slot array_min transforms.
-        # Bit-identical (stepwise-mod == total-mod residue, int64
-        # overflow-free; pinned by test against the expression twin and
-        # oracle-checked on every riding query).
-        from kaer_spark.functions.fphash import minhash_sig_col
-
-        # (History: r17 measured a JVM-expression slot-collapse 2-3×
-        # SLOWER than per-slot array_min subtrees and reverted it — that
-        # measurement was about two EXPRESSION forms; the Arrow/numpy
-        # path replaces the whole interpreted family, not the tree
-        # shape, and was A/B-measured against the surviving form.)
         base = ensure_parallelism(df.filter(F.length(text_col) >= N))
         sig = minhash_sig_col(text_col, N, coeffs, HASH_BASE, HASH_MOD)
         return base.select(
@@ -3741,12 +3738,6 @@ def duplicate_passages(
     if length <= 0:
         raise ValueError("length must be positive")
     L = int(length)
-    # [r18] vectorized window hashing (functions.fphash — guide §4.2):
-    # the expression form is an interpreted higher-order transform
-    # (~70 tree nodes per window per modulus); the Arrow/numpy twin is
-    # bit-identical (pinned by test) and evaluates whole batches.
-    from kaer_spark.functions.fphash import window_fps_col
-
     # ensure_parallelism: the fixture-scale single-file scan would
     # otherwise run the whole O(chars × length) hash in ONE task (measured
     # 63s -> ~3s at sf0.1); at real scale the input has partitions and
@@ -3780,108 +3771,15 @@ def duplicate_passages(
     )
 
 
-
-def _win_fp(codes_col: str, i: Column, length: int) -> Column:
-    """Widened window fingerprint at 1-based start ``i`` over the
-    materialized codepoint array column ``codes_col``: two independent
-    polynomial hashes (base 31 mod 1e9+7 / base 131 mod 1e9+9) packed as
-    ``h1 * MOD2 + h2`` — a ~60-bit int64 a SQL oracle replays with the
-    identical bigint arithmetic.
-
-    Evaluated as the FLAT power-basis sum ``Σ c_{i+k} · Bᴸ⁻¹⁻ᵏ mod P``
-    with precomputed power literals — mathematically identical to the
-    Horner fold (same value mod P, verified row-for-row), but with no
-    per-window array slice and no inner ``aggregate``: the r10 fold shape
-    allocated a 24-element slice and ran an interpreted two-field fold
-    per window, which measured 15× slower at sf0.1 (16s vs 1.1s explode)
-    than this expression. Every intermediate stays < 2^52 even at the
-    full unicode range (c < 2^21, powers < 2^30)."""
-    L = int(length)
-    pw1 = [pow(HASH_BASE, L - 1 - k, HASH_MOD) for k in range(L)]
-    pw2 = [pow(HASH_BASE2, L - 1 - k, HASH_MOD2) for k in range(L)]
-    h1 = F.lit(0).cast("long")
-    h2 = F.lit(0).cast("long")
-    for k in range(L):
-        c = F.element_at(codes_col, i + F.lit(k))
-        h1 = (h1 + c * F.lit(pw1[k])) % F.lit(HASH_MOD)
-        h2 = (h2 + c * F.lit(pw2[k])) % F.lit(HASH_MOD2)
-    return h1 * F.lit(HASH_MOD2) + h2
-
-
-def _codes_col(text_col: str) -> Column:
-    """Codepoint array of the text — materialize once per row (a named
-    column, not an inline expression) so the ``element_at`` probes of
-    ``_win_fp`` never re-split the string."""
-    return F.transform(
-        F.split(F.col(text_col), ""), lambda ch: F.ascii(ch).cast("long")
-    )
-
-
-_WINFP_IDENT = __import__("re").compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
-
-
-def _horner_flat_sql(
-    codes_col: str, ivar: str, length: int, base: int, mod: int
-) -> str:
-    """SQL text of one flat power-basis hash chain — the EXACT tree the
-    ``_win_fp`` builder produces for that modulus (same nesting, same
-    int literal types), emitted as text so the whole window transform
-    parses in ONE ``F.expr`` round-trip instead of ``length × ~16``
-    py4j gateway calls per call site (the r17 ``functions/vector.py``
-    literal-fold pattern applied to the window-fingerprint family:
-    cProfile put ~2.3s of ``cdc_stats``'s construction in these
-    round-trips)."""
-    L = int(length)
-    h = "CAST(0 AS BIGINT)"
-    for k in range(L):
-        pw = pow(base, L - 1 - k, mod)
-        h = (
-            f"(({h} + element_at({codes_col}, ({ivar} + {k})) * {pw})"
-            f" % {mod})"
-        )
-    return h
-
-
-def _win_fp_sql(codes_col: str, ivar: str, length: int) -> str:
-    """SQL text of ``_win_fp`` at lambda variable ``ivar`` — paired
-    moduli packed as ``h1 * MOD2 + h2``, identical tree."""
-    h1 = _horner_flat_sql(codes_col, ivar, length, HASH_BASE, HASH_MOD)
-    h2 = _horner_flat_sql(codes_col, ivar, length, HASH_BASE2, HASH_MOD2)
-    return f"({h1} * {HASH_MOD2} + {h2})"
-
-
-def _win_fps_transform(text_col: str, length: int) -> Column:
-    """The bare window-fingerprint transform
-    ``transform(sequence(1, length(text) - L + 1), i -> <fp>)`` as ONE
-    parsed expression when ``text_col`` is a plain identifier (every
-    driver query; the builder fallback keeps exotic column names
-    working)."""
-    L = int(length)
-    if _WINFP_IDENT.match(text_col):
-        return cached_expr(
-            f"transform(sequence(1, length({text_col}) - {L} + 1), "
-            f"i -> {_win_fp_sql('__codes', 'i', L)})"
-        )
-    return F.transform(
-        F.sequence(F.lit(1), F.length(text_col) - L + 1),
-        lambda i: _win_fp("__codes", i, L),
-    )
-
-
 def _window_fp_explode(
     df: DataFrame, id_col: str, text_col: str, length: int
 ) -> DataFrame:
     """Exploded ``(id, pos0, fp)`` window fingerprints — the shared
     front end of the passage-dedup family (report, removal, cross-corpus
-    overlap): the codepoint array materializes once per row, each
-    ``length``-char window hashes by the flat paired-moduli sum
-    (``_win_fp``, ~60 collision bits), one narrow posexplode carries the
-    0-based start position."""
+    overlap): each ``length``-char window hashes to the paired-moduli
+    fingerprint (~60 collision bits, :mod:`kaer_spark.functions.fphash`),
+    and one narrow posexplode carries the 0-based start position."""
     L = int(length)
-    # [r18] vectorized window hashing (functions.fphash — guide §4.2,
-    # bit-identical twin of _win_fps_transform, pinned by test)
-    from kaer_spark.functions.fphash import window_fps_col
-
     return (
         ensure_parallelism(df.filter(F.length(text_col) >= L))
         .select(
@@ -4131,28 +4029,17 @@ def winnow_fingerprints(
     fewer than ``window`` hashes form one truncated window (its min is
     selected) — same convention both engine- and oracle-side.
 
-    Scale shape: codepoint array materialized once per row, the hash
-    sequence built scan-side, per-window struct ``array_min`` over
-    slices (window ≤ 8 structs a slice), one posexplode of the SELECTED
-    windows only, one distinct. Nothing leaves the scan stage until the
-    (id, pos, fp) rows — already winnowed — hit the distinct's exchange.
+    Scale shape: hashing and selection run scan-side in one Arrow batch
+    per partition chunk (``fphash.winnow_selections_col``), one explode
+    of the SELECTED windows only, one distinct. Nothing leaves the scan
+    stage until the (id, pos, fp) rows — already winnowed — hit the
+    distinct's exchange.
     """
     if k < 1 or window < 1:
         raise ValueError("k and window must be positive")
     K, w = int(k), int(window)
-    # [r18] hash + winnowing selection vectorized in one Arrow batch
-    # per partition chunk (functions.fphash — guide §4.2): the r17
-    # expression form (interpreted per-window Horner trees + a
-    # per-window array_min over struct slices, plus the checkpoint
-    # needed to stop CollapseProject inlining the hash array into every
-    # slice) profiled at ~20s executor CPU + ~30s allocation stall for
-    # 1.5 MB of text. The numpy twin is bit-identical — same paired
-    # moduli, same MOSS rightmost-tie rule, same truncated-window
-    # convention — pinned by test and oracle-checked on every winnow
-    # query. No checkpoint needed: the UDF output is a single struct of
-    # parallel (pos0, fp) arrays, exploded once.
-    from kaer_spark.functions.fphash import winnow_selections_col
-
+    # no checkpoint needed: the UDF output is a single struct of
+    # parallel (pos0, fp) arrays, exploded once
     sel = winnow_selections_col(
         text_col, K, w, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
     )
@@ -4854,60 +4741,43 @@ def cdc_chunks(
 
     Conventions (identical on the oracle side): windows are the same
     paired-moduli ~60-bit fingerprints as the passage/winnowing family
-    (``_win_fp``); cut offsets are window-end positions (0-based
-    ``i + w − 1`` for 1-based window start ``i``); 0 and ``len(text)``
-    are always boundaries; documents shorter than ``w`` are one chunk;
-    empty documents contribute nothing. ``chunk_fp`` is the paired
-    Horner fold of the chunk's codepoints (~60 collision bits).
+    (:func:`~kaer_spark.functions.fphash.window_fps_col`); cut offsets
+    are window-end positions (``j + w`` for 0-based window start ``j``);
+    0 and ``len(text)`` are always boundaries; documents shorter than
+    ``w`` are one chunk; empty documents contribute nothing.
+    ``chunk_fp`` is the paired Horner fold of the chunk's codepoints
+    (~60 collision bits).
 
-    Scale shape: the codepoint array and the window-hash array
-    materialize once per row behind a plan-barrier ``localCheckpoint``
-    (the winnowing CollapseProject lesson — without it every boundary
-    probe re-evaluates the whole hash array); boundaries and chunk spans
-    are per-row array expressions; ONE posexplode emits chunks; the
-    chunk fold visits each character once per modulus. Nothing shuffles
-    — downstream dedup keys on the int64 ``chunk_fp``."""
+    Scale shape: the window-hash array comes from one Arrow UDF per row
+    and reduces to the row's boundary array in the same projection;
+    chunk spans are per-row array expressions; ONE posexplode emits
+    chunks; the chunk fold visits each character once per modulus over
+    Spark's per-row codepoint array (the same code points the UDF reads).
+    Nothing shuffles — downstream dedup keys on the int64 ``chunk_fp``."""
     W, D = int(w), int(divisor)
     if W < 2 or D < 2:
         raise ValueError("w and divisor must be >= 2")
-    n_h = F.length(text_col) - W + 1
-    # parsed-in-one-call transform (see _horner_flat_sql) with the
-    # builder fallback for exotic column names
-    if _WINFP_IDENT.match(text_col):
-        tf = cached_expr(
-            f"transform(sequence(1, length({text_col}) - {W} + 1), "
-            f"i -> named_struct("
-            f"'h', {_win_fp_sql('__codes', 'i', W)}, 'i', i))"
-        )
-    else:
-        tf = F.transform(
-            F.sequence(F.lit(1), n_h),
-            lambda i: F.struct(
-                _win_fp("__codes", i, W).alias("h"), i.alias("i")
-            ),
-        )
-    hstructs = F.when(n_h >= 1, tf).otherwise(
-        F.expr("CAST(array() AS array<struct<h:bigint,i:int>>)")
+    fps = window_fps_col(
+        text_col, W, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
     )
-    base = (
-        ensure_parallelism(df.filter(F.length(text_col) > 0))
-        .withColumn("__codes", _codes_col(text_col))
-        .select(F.col(id_col).alias("id"), "__codes", hstructs.alias("__h"))
-        .localCheckpoint(eager=False)
+    cuts = F.array_compact(
+        F.transform(fps, lambda h, j: F.when(h % D == 0, (j + W).cast("long")))
     )
-    n = F.size("__codes").cast("long")
-    cuts = F.transform(
-        F.filter("__h", lambda s: s["h"] % D == 0),
-        lambda s: (s["i"] + (W - 1)).cast("long"),
+    codes = F.transform(
+        F.split(F.col(text_col), ""), lambda ch: F.ascii(ch).cast("long")
     )
+    n = F.length(text_col).cast("long")
     bounds = F.array_distinct(
         F.concat(F.array(F.lit(0).cast("long")), cuts, F.array(n))
     )
+    base = ensure_parallelism(df.filter(F.length(text_col) > 0)).select(
+        F.col(id_col).alias("id"), codes.alias("__codes"), bounds.alias("__b")
+    )
     spans = F.transform(
-        F.sequence(F.lit(0), F.size(bounds) - 2),
+        F.sequence(F.lit(0), F.size("__b") - 2),
         lambda j: F.struct(
-            F.element_at(bounds, j + 1).alias("s"),
-            (F.element_at(bounds, j + 2) - F.element_at(bounds, j + 1)).alias(
+            F.element_at("__b", j + 1).alias("s"),
+            (F.element_at("__b", j + 2) - F.element_at("__b", j + 1)).alias(
                 "len"
             ),
         ),

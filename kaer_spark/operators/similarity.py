@@ -715,8 +715,8 @@ def pq_encode_deterministic(
     Stays in codegen; nothing leaves the JVM.
 
     Measured dead end (r11): unrolling these folds into literal
-    element_at sums — the _win_fp trick that wins for 16–24-term hash
-    windows — is 2.5× SLOWER here: m·k·d ≈ 1024 terms per row blows past
+    element_at sums — a trick that won for 16–24-term hash windows —
+    is 2.5× SLOWER here: m·k·d ≈ 1024 terms per row blows past
     the codegen method limits and the whole expression falls back to
     interpreted eval. The zip_with/aggregate HOF stays."""
     m, d = len(codebooks), len(codebooks[0][0])

@@ -46,6 +46,7 @@ from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kaer_spark.functions.fphash import HASH_BASE, HASH_MOD
 from kaer_spark.functions.text import tokens
 from kaer_spark.operators.util import (
     ensure_parallelism,
@@ -56,8 +57,6 @@ from kaer_spark.operators.util import (
 META_FILE = "index.json"
 POSTINGS_DIR = "postings"
 DOCLENS_DIR = "doclens"
-HASH_MOD = 1_000_000_007
-HASH_BASE = 31
 K1_DEFAULT = 1.2
 B_DEFAULT = 0.75
 # pruned-postings size above which the candidate side is no longer

@@ -142,12 +142,12 @@ _SLOW_TESTS = frozenset({
     "test_dedup.py::test_minhash_between_and_dedup_against",
     "test_dedup.py::test_minhash_index_served_equals_from_text",
     "test_dedup.py::test_minhash_index_stats_report",
+    "test_dedup.py::test_minhash_signature_and_band_keys_match_expressions",
     "test_dedup.py::test_ngram_containment_indexed_equals_fresh",
     "test_dedup.py::test_ngram_jaccard_against_index_matches_between",
     "test_dedup.py::test_ngram_jaccard_between_matches_bruteforce",
     "test_dedup.py::test_ngram_jaccard_bucketed_table_no_postings_shuffle",
     "test_dedup.py::test_ngram_jaccard_indexed_equals_fresh",
-    "test_dedup.py::test_parsed_window_fp_trees_match_builders",
     "test_dedup.py::test_passage_overlap_between_and_removal_against",
     "test_dedup.py::test_passage_verify_rejects_fingerprint_collisions",
     "test_dedup.py::test_refresh_minhash_index_equals_rebuild",
@@ -317,11 +317,34 @@ _SLOW_TESTS = frozenset({
 })
 
 
+def stale_slow_keys(keys, modules) -> list[str]:
+    """The ``file::function`` keys whose file was collected (``modules``
+    maps file basename to its module) but which name no function in it.
+    Files outside the run are not checked, so running one file or one
+    test never trips this."""
+    stale = []
+    for key in keys:
+        fname, func = key.split("::")
+        mod = modules.get(fname)
+        if mod is not None and not hasattr(mod, func):
+            stale.append(key)
+    return sorted(stale)
+
+
 def pytest_collection_modifyitems(config, items):
     """Attach the `slow` marker to the re-tiered tests before the
     builtin `-m` filter (pytest.ini deselects `slow` by default) runs —
-    conftest hooks execute ahead of the mark plugin's filter."""
+    conftest hooks execute ahead of the mark plugin's filter. A key that
+    names a test no longer in its (collected) file fails the run: a
+    renamed slow test would otherwise silently join the fast tier."""
+    modules = {}
     for item in items:
+        modules[item.fspath.basename] = item.module
         key = f"{item.fspath.basename}::{item.function.__name__}"
         if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    stale = stale_slow_keys(_SLOW_TESTS, modules)
+    if stale:
+        raise pytest.UsageError(
+            f"tests/conftest.py _SLOW_TESTS names missing tests: {stale}"
+        )

@@ -1300,6 +1300,15 @@ def cdc_fixture(spark):
                 "while owls watch from the branches above the silent river"),
             (4, "tiny"),
             (5, ""),
+            # non-ASCII rows: cut positions come from the window-hash UDF's
+            # code points, chunk slices from Spark's split(text, '') — these
+            # pin the two sources to agree past the BMP and on accents/CJK
+            (6, "café naïve façade résumé — déjà vu über straße, crème "
+                "brûlée à la carte, señor jalapeño, Ångström, Øresund"),
+            (7, "日本語のテキストを内容定義チャンク分割で重複検出する試験"
+                "です。日本語のテキストを内容定義チャンク分割で重複検出"),
+            (8, "emoji 😀🎉 astral 𝕏𝕐 pairs 😀🎉 and more 🚀🌍 mixed "
+                "with plain text 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 tail 🎉😀 𝕏𝕐🚀 end"),
         ],
         "doc_id long, text string",
     )
@@ -2568,31 +2577,19 @@ def test_winnow_index_family_contract(spark, tmp_path):
     assert st["n_fp_rows"] == sum(1 for _ in rows(path))
 
 
-def test_parsed_window_fp_trees_match_builders(spark, documents):
-    """The r17 parsed-SQL constructors (_win_fps_transform, the winnow/
-    cdc struct transforms, the minhash signature slots and band keys)
-    must stay expression-identical to the per-element builder forms they
-    replaced — same Catalyst tree, not merely same values (a drifted
-    parse would silently change what the oracle replays)."""
+def test_minhash_signature_and_band_keys_match_expressions(spark, documents):
+    """The char-path minhash signature (Arrow UDF) must equal the
+    per-slot expression form value-for-value, and the parsed band-key
+    constructor must stay expression-identical to the per-band struct
+    expression it replaced — same Catalyst tree, not merely same values
+    (a drifted parse would silently change what the oracle replays)."""
     from pyspark.sql import functions as F
 
     import kaer_spark.operators.dedup as D
 
     docs = documents.select("doc_id", "text").limit(50)
-    base = docs.withColumn("__codes", D._codes_col("text"))
 
-    def builder_win(L):
-        return F.transform(
-            F.sequence(F.lit(1), F.length("text") - L + 1),
-            lambda i: D._win_fp("__codes", i, L),
-        )
-
-    for L in (16, 24):
-        a = base.select("doc_id", D._win_fps_transform("text", L).alias("w"))
-        b = base.select("doc_id", builder_win(L).alias("w"))
-        assert a.sameSemantics(b), f"parsed _win_fps_transform drifted (L={L})"
-
-    # minhash signature slots: parsed text vs the per-slot builder
+    # minhash signature: the Arrow UDF path vs the per-slot expressions
     coeffs = D.minhash_coeffs(16, 42)
     N = 8
     pw = [pow(D.HASH_BASE, N - 1 - k, D.HASH_MOD) for k in range(N)]
@@ -2609,7 +2606,12 @@ def test_parsed_window_fp_trees_match_builders(spark, documents):
 
     built_base = (
         ensure_parallelism(docs.filter(F.length("text") >= N))
-        .withColumn("__mh_codes", D._codes_col("text"))
+        .withColumn(
+            "__mh_codes",
+            F.transform(
+                F.split(F.col("text"), ""), lambda ch: F.ascii(ch).cast("long")
+            ),
+        )
         .withColumn(
             "__mh_fps",
             F.array_distinct(
@@ -2633,10 +2635,7 @@ def test_parsed_window_fp_trees_match_builders(spark, documents):
     parsed = D.minhash_signatures(
         docs, "doc_id", "text", N, 16, 42, "char"
     ).select("id", "sig")
-    # plan shapes differ by the pruned shingles projection, so compare
-    # values row-for-row (the slot trees themselves are asserted above
-    # via the shared _win_fps machinery and verified sameSemantics in
-    # the banded check below)
+    # one side is an Arrow UDF, so compare values row-for-row
     assert parsed.exceptAll(built).count() == 0
     assert built.exceptAll(parsed).count() == 0
 

@@ -1,5 +1,5 @@
-"""[r18] Bit-exactness pins for the vectorized (Arrow/numpy) hash twins
-in ``kaer_spark.functions.fphash`` against pure-Python evaluations of
+"""[r18] Bit-exactness pins for the vectorized (Arrow/numpy) window
+hashes in ``kaer_spark.functions.fphash`` against pure-Python evaluations of
 the published hash definitions (the same definitions the DuckDB oracle
 SQL embeds): paired-moduli window fingerprints, minhash signatures, and
 the MOSS winnowing selection with the rightmost-tie rule."""
@@ -33,7 +33,7 @@ EDGE_TEXTS = [
 ]
 
 
-def _py_win_fps(t: str, L: int) -> list[int]:
+def _py_window_fps(t: str, L: int) -> list[int]:
     cs = [ord(c) for c in t]
     out = []
     for i in range(len(cs) - L + 1):
@@ -73,7 +73,7 @@ def test_window_fps_col_matches_python(edge_df):
     ).collect()
     assert rows
     for r in rows:
-        assert list(r["fps"]) == _py_win_fps(EDGE_TEXTS[r["doc_id"]], L)
+        assert list(r["fps"]) == _py_window_fps(EDGE_TEXTS[r["doc_id"]], L)
 
 
 def test_minhash_sig_col_matches_python(edge_df):
@@ -89,7 +89,7 @@ def test_minhash_sig_col_matches_python(edge_df):
 
 
 def _py_winnow(t: str, K: int, W: int) -> set[tuple[int, int]]:
-    h = _py_win_fps(t, K)
+    h = _py_window_fps(t, K)
     if not h:
         return set()
     sel = set()
@@ -128,4 +128,4 @@ def test_window_fps_col_matches_python_on_fixture(documents):
     )
     assert rows
     for r in rows:
-        assert list(r["fps"]) == _py_win_fps(r["text"], L)
+        assert list(r["fps"]) == _py_window_fps(r["text"], L)

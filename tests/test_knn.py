@@ -82,6 +82,50 @@ def test_vector_functions_vs_numpy(embeddings):
         assert abs(r["cos"] - expect_cos) < 1e-9
 
 
+def test_cached_expr_is_thread_safe(spark, monkeypatch):
+    """Several threads building expressions concurrently past the LRU
+    bound (hits, misses and evictions interleaved on shared keys): no
+    call raises, each returns the expression it asked for, and the cache
+    stays bounded."""
+    import threading
+    import time
+    from collections import OrderedDict
+
+    import kaer_spark.functions.vector as V
+
+    class YieldingLRU(OrderedDict):
+        # hand the GIL to another thread between the lookup and the LRU
+        # update — the window an unguarded cache loses keys in
+        def get(self, key, default=None):
+            val = super().get(key, default)
+            time.sleep(0.0005)
+            return val
+
+    monkeypatch.setattr(V, "_EXPR_CACHE_MAX", 8)
+    monkeypatch.setattr(V, "_expr_cache", YieldingLRU())
+    # restored with the cache, so the two stay consistent after the test
+    monkeypatch.setattr(V, "_expr_cache_ctx", V._expr_cache_ctx)
+    errors = []
+
+    def build(t):
+        try:
+            for i in range(80):
+                k = (t * 7 + i) % 16
+                col = V.cached_expr(f"{k} + 1")
+                assert f"'{k} + 1'" in str(col)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build, args=(t,)) for t in range(8)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=120)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert len(V._expr_cache) <= 8
+
+
 def test_knn_join_matches_per_query_exact(corpus, embeddings):
     queries = embeddings.select("vec_id", "embedding").filter(F.col("vec_id") < 3)
     out = knn_join(

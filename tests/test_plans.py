@@ -4,6 +4,8 @@ silently costing 10× on a cluster)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -19,6 +21,25 @@ from kaer_spark.plans import (
 )
 
 QVEC = [0.1] * 64
+
+_PY_NODE = re.compile(r"Python|InPandas|InArrow")
+_ARROW_EVAL = re.compile(r"ArrowEvalPython \[(.*?)\], \[")
+
+
+def assert_python_only_fphash(plan: str) -> None:
+    """Exact allow-list for Python in a physical plan: every Python node
+    is an ``ArrowEvalPython`` whose UDFs are all the engine's ``fphash_*``
+    window hashes (kaer_spark.functions.fphash) — no BatchEvalPython, no
+    MapInPandas, no other UDF."""
+    for line in plan.splitlines():
+        if not _PY_NODE.search(line):
+            continue
+        m = _ARROW_EVAL.search(line)
+        assert m, f"non-Arrow Python node in plan: {line.strip()}"
+        udfs = re.findall(r"(?:^|, )([A-Za-z_]\w*)\(", m.group(1))
+        assert udfs and all(u.startswith("fphash_") for u in udfs), (
+            f"Python UDF outside the fphash allow-list: {line.strip()}"
+        )
 
 
 def test_filter_pushdown_reaches_scan(documents):
@@ -365,7 +386,7 @@ def test_remove_duplicate_passages_plan_shape(documents):
 
     plan = executed_plan(remove_duplicate_passages(documents, length=24))
     assert "CartesianProduct" not in plan
-    assert "Python" not in plan
+    assert_python_only_fphash(plan)
     assert "LeftSemi" in plan
     assert "Exchange SinglePartition" not in plan
 
@@ -397,7 +418,7 @@ def test_duplicate_passages_no_expand_distinct(documents):
 
     plan = executed_plan(duplicate_passages(documents, length=24, min_docs=2))
     assert "Expand" not in plan
-    assert "Python" not in plan
+    assert_python_only_fphash(plan)
     assert "Exchange SinglePartition" not in plan
 
 
@@ -412,7 +433,7 @@ def test_passage_overlap_between_plan_shape(documents):
     right = documents.filter(F.col("doc_id") % 2 == 1)
     plan = executed_plan(passage_overlap_between(left, right, length=24))
     assert "CartesianProduct" not in plan
-    assert "Python" not in plan
+    assert_python_only_fphash(plan)
     assert "LeftSemi" in plan
     assert "Exchange SinglePartition" not in plan
 
