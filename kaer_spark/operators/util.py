@@ -6,16 +6,29 @@ from pyspark.sql import DataFrame
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition if the input has too few partitions.
+    """Round-robin repartition if the input may have too few partitions.
 
     A small parquet table arrives as one split, which serializes
     expression-heavy narrow stages (shingling, hashing) onto a single core.
-    On a real multi-TB input this is a no-op — the scan already yields
-    hundreds of splits — so the guard only pays the shuffle when the data
-    is small enough for the shuffle to be trivially cheap.
+
+    Never executes anything: the decision is read from the physical plan.
+
+    * Not AQE-rooted (a scan, a ``localCheckpoint``, local rows, and
+      narrow operators over them): the split count is read from the
+      planned RDD, which fires no job. A many-split production scan is
+      returned unchanged.
+    * AQE-rooted (``AdaptiveSparkPlan``; the engine's sessions pin AQE on,
+      so any exchange or subquery roots the plan there): widened
+      unconditionally. Its partition count is only known once its
+      upstream shuffles have run, so probing it would run them as a
+      separate execution the real job does not reuse. And the answer
+      would usually be "too few": AQE coalesces a small shuffle's output
+      below the core count. At scale the widening costs one round-robin
+      exchange of the input, never a re-run of its upstream.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    root = df._jdf.queryExecution().executedPlan().nodeName()
+    if root != "AdaptiveSparkPlan" and df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

@@ -3,12 +3,15 @@ exact dedup → token accounting, as one declarative DataFrame program.
 
 This is the end-to-end story the individual operators exist for: at 100 TB
 the pipeline is a single Catalyst plan — the per-row enrichments (lang,
-quality, tokens, fingerprint) pipeline inside the parquet scan stage (on a
-FEW-SPLIT input, a conditional round-robin widening exchange is inserted
-first — ``ensure_parallelism``, a no-op on many-split production scans),
-the quality/language filter drops rows *before* the fingerprint hash
-shuffle for dedup, and the representative-per-duplicate-group choice
-is deterministic (min id), so reruns and the DuckDB oracle agree exactly.
+quality, tokens, fingerprint) pipeline inside the parquet scan stage
+(``ensure_parallelism`` first inserts a round-robin widening exchange
+when the plan shows the input may be narrower than the cores: a
+few-split scan, or the shuffle-rooted output of the boilerplate-line
+stage; it executes nothing to decide and leaves a many-split production
+scan alone), the quality/language filter drops rows *before* the
+fingerprint hash shuffle for dedup, and the representative-per-duplicate-
+group choice is deterministic (min id), so reruns and the DuckDB oracle
+agree exactly.
 
 Aggregate stats stick to order-independent reductions (count, int64 sum,
 min/max) so distributed partial aggregation cannot change the values.
@@ -72,21 +75,12 @@ def prepare_training_corpus(
         )
     from kaer_spark.operators.util import ensure_parallelism
 
-    # Widen a single-split scan before the enrichment projections (r17
-    # item 13): quality/token/fingerprint/lang are expression-heavy and
-    # otherwise run in ONE task on a small input (profiled 2.7s
-    # serialized; interleaved A/B ~0.8×). No-op on many-split scans.
-    # [r18, ADVICE] Skip the probe entirely after the line-dedup branch:
-    # that input is shuffle-rooted (already spread by the fingerprint
-    # exchange), and under AQE the probe's `.rdd` access finalizes the
-    # adaptive plan and eagerly materializes the upstream shuffle as a
-    # separate execution the real job does not reuse.
-    if remove_boilerplate_lines:
-        base = docs
-    else:
-        base = ensure_parallelism(docs)
+    # Widen before the enrichment projections (r17 item 13):
+    # quality/token/fingerprint/lang are expression-heavy and otherwise
+    # run in ONE task on a small input (profiled 2.7s serialized;
+    # interleaved A/B ~0.8×).
     enriched = with_lang_guess(
-        base.select(
+        ensure_parallelism(docs).select(
             F.col(id_col),
             F.col(text_col),
             quality_score(text_col).alias("quality"),

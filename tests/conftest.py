@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
 
 import pytest
 
@@ -13,6 +15,31 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     spark = get_spark(app_name="kaer-spark-tests", shuffle_partitions=8)
     yield spark
+
+
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+@contextlib.contextmanager
+def jobs_fired(spark):
+    """Yield a list that, once the block exits, holds the ids of the Spark
+    jobs this thread fired inside it (read from the status tracker under
+    a fresh job group). The caller's job group is restored on exit."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    group = f"jobs-fired-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    fired: list[int] = []
+    try:
+        yield fired
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        fired.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")
@@ -52,6 +79,9 @@ def corpus(documents, embeddings):
 # (tools/selfcheck.py) independently replays every declared query's
 # values. Regenerate after a big suite change with:
 #   pytest tests/ -q --durations=0 -m "" | <aggregate >1.5s per function>
+# and keep these over-threshold tests fast-tier when regenerating, as the
+# core exact-dedup and simhash correctness cases (about 4 s each):
+# test_dedup.py::test_exact_dedup, test_dedup.py::test_simhash.
 # ---------------------------------------------------------------------------
 _SLOW_TESTS = frozenset({
     "test_asof.py::test_asof_events_scale",
@@ -134,7 +164,6 @@ _SLOW_TESTS = frozenset({
     "test_dedup.py::test_embedding_near_dups_between",
     "test_dedup.py::test_embedding_near_dups_lsh",
     "test_dedup.py::test_embedding_near_dups_lsh_calibrates_past_null_rows",
-    "test_dedup.py::test_exact_dedup",
     "test_dedup.py::test_fuzzy_index_build_refresh_serve_parity",
     "test_dedup.py::test_fuzzy_index_stats_report",
     "test_dedup.py::test_fuzzy_near_dups_cap_and_validation",
@@ -166,7 +195,6 @@ _SLOW_TESTS = frozenset({
     "test_dedup.py::test_signlsh_calibrated_candidates_subquadratic",
     "test_dedup.py::test_signlsh_index_served_equals_from_vectors",
     "test_dedup.py::test_signlsh_index_stats_report",
-    "test_dedup.py::test_simhash",
     "test_dedup.py::test_simhash_wide_fingerprint_scales_band_space",
     "test_dedup.py::test_split_leakage_and_holdout_is_leak_free",
     "test_dedup.py::test_winnow_between_matches_global_selection",

@@ -523,3 +523,46 @@ def test_stats_modules_never_rank_through_global_windows():
                 f"unpartitioned Window.orderBy at {path}:{line} — use "
                 "util.global_ranked for rank selection"
             )
+
+
+def _multi_split_scan(spark, tmp_path):
+    path = str(tmp_path / "multi_split.parquet")
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 40 * n).repartition(n).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+_WIDEN_INPUTS = {
+    "scan": _multi_split_scan,
+    "groupBy": lambda spark, _: spark.range(0, 400)
+    .groupBy((F.col("id") % 7).alias("k"))
+    .count(),
+    "broadcast_join": lambda spark, _: spark.range(0, 400).join(
+        F.broadcast(spark.range(0, 10)), "id"
+    ),
+    "localCheckpoint": lambda spark, _: spark.range(0, 400, numPartitions=1)
+    .localCheckpoint(eager=True),
+}
+
+
+@pytest.mark.parametrize("kind", list(_WIDEN_INPUTS))
+def test_ensure_parallelism_decides_from_plan(spark, tmp_path, kind):
+    """``ensure_parallelism`` decides from the physical plan and fires no
+    Spark job: an AQE-rooted input (groupBy, broadcast join) is widened by
+    exactly one round-robin exchange without probing its partition count,
+    which would run its upstream as a separate execution; a multi-split
+    scan is returned unchanged; a one-split checkpoint is widened."""
+    from kaer_spark.operators.util import ensure_parallelism
+    from kaer_spark.plans.inspect import executed_plan
+
+    from tests.conftest import jobs_fired
+
+    df = _WIDEN_INPUTS[kind](spark, tmp_path)
+    with jobs_fired(spark) as fired:
+        out = ensure_parallelism(df)
+        plan = executed_plan(out)
+    assert fired == [], f"{kind}: ensure_parallelism fired jobs {fired}"
+    if kind == "scan":
+        assert out is df
+    else:
+        assert plan.count("RoundRobinPartitioning") == 1, plan
