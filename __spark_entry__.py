@@ -42,6 +42,7 @@ from kaer_spark.operators.dedup import (
     simhash,
 )
 from kaer_spark.operators.knn import exact_knn, knn_join
+from kaer_spark.sources.files import read_parquet
 
 # ---------------------------------------------------------------------------
 # fixed fixture constants (identical literals on both engines)
@@ -110,7 +111,7 @@ COSINE_LSH_SEED = 7
 # shared loaders
 # ---------------------------------------------------------------------------
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1038,7 +1039,7 @@ def _q_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # the file source wants a directory; glob-filter it down to events
     stream = (
         spark.readStream.schema(schema)
@@ -1087,7 +1088,7 @@ def _q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaer_spark.streaming.ingest import sessionized_counts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1131,7 +1132,7 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kaer_spark.streaming.ingest import streaming_dedup
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1163,7 +1164,7 @@ def _q_streaming_dedup_against(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kaer_spark.streaming.ingest import streaming_dedup_against
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -3503,7 +3504,7 @@ def _q_streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_ingest_batch(batch, 0, idx, out, threshold=JACCARD_THRESHOLD)
     import os
 
-    return spark.read.parquet(os.path.join(out, "epoch=0")).select(
+    return read_parquet(spark, os.path.join(out, "epoch=0")).select(
         "doc_id", "lang", "source"
     )
 
@@ -3532,7 +3533,7 @@ def _q_streaming_embedding_ingest(
     )
     import os
 
-    return spark.read.parquet(os.path.join(out, "epoch=0")).select(
+    return read_parquet(spark, os.path.join(out, "epoch=0")).select(
         "vec_id", "label"
     )
 
@@ -4187,7 +4188,7 @@ def _q_streaming_hll_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaer_spark.operators.sketches import hll_estimate
     from kaer_spark.streaming.ingest import read_hll_state, streaming_hll_ingest
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -49,6 +49,7 @@ from kaer_spark.embeddings import (
 from kaer_spark.filters import compile_filter
 from kaer_spark.filters_json import compile_filter_json
 from kaer_spark.functions.vector import l2sq
+from kaer_spark.sources.files import read_parquet
 
 DOC_COL = "_m_doc"  # reference: db/db.go:18
 ID_COL = "_m_id"  # reference: db/db.go:19
@@ -313,12 +314,14 @@ class Collection:
             if schema is None:
                 raise CollectionNotFound(f"collection {self.name} is empty and untyped")
             return self.ctx.spark.createDataFrame([], schema)
-        # mergeSchema: inserts may add metadata fields over time (the
+        # merge_schema: inserts may add metadata fields over time (the
         # schemaless-metadata contract, SURVEY §1.1); without it Spark picks
         # one file's schema and silently DROPS the other files' columns.
         # Type conflicts are rejected at insert time (FieldTypeConflict),
-        # so the merge here always succeeds.
-        return self.ctx.spark.read.option("mergeSchema", "true").parquet(self.data_path)
+        # so the merge always succeeds. The merged schema is memoised per
+        # session (sources.files): a warm read fires no job, and the first
+        # read after an insert or rewrite re-merges.
+        return read_parquet(self.ctx.spark, self.data_path, merge_schema=True)
 
     # -- ingest (reference O4, db/db.go:60-100) --------------------------
     def insert(
@@ -994,8 +997,8 @@ class Collection:
             matched = text_top.collect()
             if len(matched) < pool:
                 have = [r["id"] for r in matched]
-                ids = self.ctx.spark.read.parquet(
-                    os.path.join(self.text_index_path, DOCLENS_DIR)
+                ids = read_parquet(
+                    self.ctx.spark, os.path.join(self.text_index_path, DOCLENS_DIR)
                 ).select("id")
                 if have:
                     ids = ids.filter(~F.col("id").isin(have))
@@ -1200,7 +1203,7 @@ class Collection:
         tmp = self.data_path + ".rewrite"
         keep.write.mode("overwrite").parquet(tmp)
         total = int(obs.get["total"])
-        kept_n = self.ctx.spark.read.parquet(tmp).count()
+        kept_n = read_parquet(self.ctx.spark, tmp).count()
         self._swap_data_dir(tmp)
         if kept_n == 0:
             self.meta["has_data"] = False
@@ -1832,7 +1835,7 @@ class Collection:
         src = self.df().observe(obs, F.count(F.lit(1)).alias("total"))
         src.coalesce(int(target_files)).write.mode("overwrite").parquet(tmp)
         before = int(obs.get["total"])
-        after = self.ctx.spark.read.parquet(tmp).count()
+        after = read_parquet(self.ctx.spark, tmp).count()
         if after != before:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kaer_spark.sources.files import read_parquet
+
 NS_PER_MICRO = 1_000
 NS_PER_SECOND = 1_000_000_000
 NS_PER_DAY = 86_400 * NS_PER_SECOND
@@ -61,4 +63,4 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     all; then normalizes whichever representation arrived.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_epoch_ns(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return normalize_epoch_ns(read_parquet(spark, f"{sf_dir}/events.parquet"))

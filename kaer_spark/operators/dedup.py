@@ -52,6 +52,7 @@ from kaer_spark.operators.util import (
     global_ranked,
     watermark_health_cols,
 )
+from kaer_spark.sources.files import read_parquet
 
 # HASH_* are defined once, in functions.fphash, and imported here. Callers
 # in this module pass them to the fphash UDFs at call time, so reassigning
@@ -347,15 +348,15 @@ def _write_shingle_hot(spark, path: str, segs: list, cap: int, hot_dir: str):
     import os as _os
     from functools import reduce
 
-    parts = [spark.read.parquet(_os.path.join(path, "df", s)) for s in segs]
+    parts = [read_parquet(spark, _os.path.join(path, "df", s)) for s in segs]
     merged = reduce(lambda a, b: a.unionByName(b), parts)
     merged.groupBy("g").agg(F.sum("cnt").alias("cnt")).filter(
         F.col("cnt") > cap
     ).select("g").write.mode("overwrite").parquet(_os.path.join(path, hot_dir))
     corr_dir = "corr/" + _os.path.basename(hot_dir)
-    hot = spark.read.parquet(_os.path.join(path, hot_dir))
+    hot = read_parquet(spark, _os.path.join(path, hot_dir))
     (
-        spark.read.parquet(_os.path.join(path, "postings"))
+        read_parquet(spark, _os.path.join(path, "postings"))
         .join(F.broadcast(hot), "g", "left_semi")
         .groupBy("id")
         .agg(F.count("*").alias("hot_cnt"))
@@ -435,7 +436,7 @@ def refresh_shingle_index(
         return meta
     # docs whose sizes row landed are fully indexed (sizes write LAST
     # among the per-id tables) — drop them from the tail entirely
-    done = spark.read.parquet(sizes_dir).select("id")
+    done = read_parquet(spark, sizes_dir).select("id")
     if wm is not None:
         done = done.filter(F.col("id") > F.lit(wm))
     tail = full_tail.join(
@@ -453,7 +454,7 @@ def refresh_shingle_index(
         .localCheckpoint(eager=False)
     )
     # ghost guard for the postings-landed/sizes-missing window
-    ghost = spark.read.parquet(post_dir).select("id")
+    ghost = read_parquet(spark, post_dir).select("id")
     if wm is not None:
         ghost = ghost.filter(F.col("id") > F.lit(wm))
     sh.select("id", F.explode("shingles").alias("g")).join(
@@ -464,7 +465,7 @@ def refresh_shingle_index(
     ).parquet(sizes_dir)
     # df segment for the committed window, from the ON-DISK postings
     seg = _shingle_seg_name(wm, new_max)
-    win = spark.read.parquet(post_dir)
+    win = read_parquet(spark, post_dir)
     if wm is not None:
         win = win.filter(F.col("id") > F.lit(wm))
     win.filter(F.col("id") <= F.lit(new_max)).groupBy("g").agg(
@@ -642,9 +643,9 @@ def shingle_index_stats(
             "legacy (v1) shingle-index artifact: stats need the uncapped "
             "v2 tables — rebuild with build_shingle_index"
         )
-    sizes = spark.read.parquet(_os.path.join(path, "sizes"))
+    sizes = read_parquet(spark, _os.path.join(path, "sizes"))
     segs = [
-        spark.read.parquet(_os.path.join(path, "df", s))
+        read_parquet(spark, _os.path.join(path, "df", s))
         for s in meta["df_segments"]
     ]
     merged = reduce(lambda a, b: a.unionByName(b), segs).groupBy("g").agg(
@@ -717,14 +718,14 @@ def _indexed_pair_counts(spark, path: str) -> DataFrame:
     import os as _os
 
     meta = read_shingle_index_meta(path)  # fail loud on a half-built artifact
-    inv = spark.read.parquet(_os.path.join(path, "postings"))
-    sizes = spark.read.parquet(_os.path.join(path, "sizes"))
+    inv = read_parquet(spark, _os.path.join(path, "postings"))
+    sizes = read_parquet(spark, _os.path.join(path, "sizes"))
     if meta.get("version", 1) >= 2 and meta.get("hot_dir"):
-        hot = spark.read.parquet(_os.path.join(path, meta["hot_dir"]))
+        hot = read_parquet(spark, _os.path.join(path, meta["hot_dir"]))
         if meta.get("corr_dir"):
             # precomputed at the watermark flip (_write_shingle_hot) —
             # no postings-wide aggregation on the serve path
-            corr = spark.read.parquet(_os.path.join(path, meta["corr_dir"]))
+            corr = read_parquet(spark, _os.path.join(path, meta["corr_dir"]))
         else:
             corr = (
                 inv.join(F.broadcast(hot), "g", "left_semi")
@@ -977,8 +978,8 @@ def _indexed_between_pair_counts(
             "build_shingle_index"
         )
     tcol = text_col or meta["text_col"]
-    inv = spark.read.parquet(_os.path.join(path, "postings"))
-    sizes = spark.read.parquet(_os.path.join(path, "sizes"))
+    inv = read_parquet(spark, _os.path.join(path, "postings"))
+    sizes = read_parquet(spark, _os.path.join(path, "sizes"))
     lsh = (
         ensure_parallelism(left)
         .select(
@@ -991,10 +992,10 @@ def _indexed_between_pair_counts(
     linv = lsh.select("id", F.explode("shingles").alias("g"))
     lsz_src = lsh.select("id", F.size("shingles").alias("sz"))
     if meta.get("hot_dir"):
-        hot = spark.read.parquet(_os.path.join(path, meta["hot_dir"]))
+        hot = read_parquet(spark, _os.path.join(path, meta["hot_dir"]))
         if meta.get("corr_dir"):
             # precomputed at the watermark flip (_write_shingle_hot)
-            corr = spark.read.parquet(_os.path.join(path, meta["corr_dir"]))
+            corr = read_parquet(spark, _os.path.join(path, meta["corr_dir"]))
         else:
             corr = (
                 inv.join(F.broadcast(hot), "g", "left_semi")
@@ -1428,7 +1429,7 @@ def refresh_fuzzy_index(
     seg_dir = _os.path.join(path, "segments")
     wm = meta.get("max_id")
     if wm is None and "max_id" not in meta:
-        wm = spark.read.parquet(seg_dir).agg(F.max("id")).collect()[0][0]
+        wm = read_parquet(spark, seg_dir).agg(F.max("id")).collect()[0][0]
     tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
     new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
     if new_max is None:
@@ -1439,7 +1440,7 @@ def refresh_fuzzy_index(
             meta["max_id"] = _json_id(stamp)
             _write_index_meta(path, "fuzzy_index.json", meta)
         return meta
-    ghost = spark.read.parquet(seg_dir).select("id")
+    ghost = read_parquet(spark, seg_dir).select("id")
     if wm is not None:
         ghost = ghost.filter(F.col("id") > F.lit(wm))
     tail = tail.join(
@@ -1502,7 +1503,7 @@ def fuzzy_index_stats(
     import os as _os
 
     meta = read_fuzzy_index_meta(path)
-    seg = spark.read.parquet(_os.path.join(path, "segments"))
+    seg = read_parquet(spark, _os.path.join(path, "segments"))
     buckets = (
         seg.groupBy("i", "seg")
         .agg(F.count("*").alias("bc"))
@@ -1576,7 +1577,7 @@ def fuzzy_dups_against_index(
     meta = read_fuzzy_index_meta(path)
     tcol = text_col or meta["text_col"]
     bounds = _fuzzy_bounds(meta["key_len"], meta["max_edits"])
-    idx = spark.read.parquet(_os.path.join(path, "segments"))
+    idx = read_parquet(spark, _os.path.join(path, "segments"))
     probe = _fuzzy_probe_rows(
         _fuzzy_keyed(left, left_id_col, tcol, meta["key_len"]),
         bounds, meta["key_len"], meta["max_edits"],
@@ -2050,7 +2051,7 @@ def refresh_minhash_index(
     sh_dir = _os.path.join(path, "shingles")
     wm = meta.get("max_id")
     if wm is None and "max_id" not in meta:
-        wm = spark.read.parquet(sh_dir).agg(F.max("id")).collect()[0][0]
+        wm = read_parquet(spark, sh_dir).agg(F.max("id")).collect()[0][0]
     tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
     new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
     if new_max is None:
@@ -2066,7 +2067,7 @@ def refresh_minhash_index(
         return meta
     # docs whose shingles row landed are fully indexed (shingles write
     # LAST in both build and refresh) — drop them from the tail entirely
-    done = spark.read.parquet(sh_dir).select("id")
+    done = read_parquet(spark, sh_dir).select("id")
     if wm is not None:
         done = done.filter(F.col("id") > F.lit(wm))
     tail = tail.join(
@@ -2090,7 +2091,7 @@ def refresh_minhash_index(
     # ghost guard for the OTHER window: bands landed, shingles did not —
     # those docs are still in the tail (no shingles row) but their band
     # rows must not land twice
-    ghost = spark.read.parquet(bands_dir).select("id")
+    ghost = read_parquet(spark, bands_dir).select("id")
     if wm is not None:
         ghost = ghost.filter(F.col("id") > F.lit(wm))
     new_bands.join(ghost.distinct(), "id", "left_anti").write.mode(
@@ -2156,8 +2157,8 @@ def minhash_index_stats(
     import os as _os
 
     meta = read_minhash_index_meta(path)
-    bands_t = spark.read.parquet(_os.path.join(path, "bands"))
-    sh = spark.read.parquet(_os.path.join(path, "shingles"))
+    bands_t = read_parquet(spark, _os.path.join(path, "bands"))
+    sh = read_parquet(spark, _os.path.join(path, "shingles"))
     buckets = (
         bands_t.groupBy("band", "key")
         .agg(F.count("*").alias("bc"))
@@ -2275,7 +2276,7 @@ def minhash_near_dups_against_index(
             .localCheckpoint(eager=False)
         )
     lb = _minhash_banded(lsig, meta["bands"], rows_per_band)
-    rb = spark.read.parquet(_os.path.join(path, "bands"))
+    rb = read_parquet(spark, _os.path.join(path, "bands"))
     cand = (
         lb.alias("a")
         .join(rb.alias("b"), on=["band", "key"])
@@ -2297,7 +2298,7 @@ def minhash_near_dups_against_index(
             _shingle_expr(tcol, meta["n"], meta["unit"]).alias("sh_a"),
         ).join(cand.select("left_id").distinct(), "left_id", "left_semi")
     sh_r = (
-        spark.read.parquet(_os.path.join(path, "shingles"))
+        read_parquet(spark, _os.path.join(path, "shingles"))
         .select(F.col("id").alias("right_id"), F.col("shingles").alias("sh_b"))
         .join(cand.select("right_id").distinct(), "right_id", "left_semi")
     )
@@ -2978,7 +2979,7 @@ def refresh_signlsh_index(
     bands_dir = _os.path.join(path, "bands")
     wm = meta.get("max_id")
     if wm is None and "max_id" not in meta:
-        wm = spark.read.parquet(bands_dir).agg(F.max("right_id")).collect()[0][0]
+        wm = read_parquet(spark, bands_dir).agg(F.max("right_id")).collect()[0][0]
     tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
     new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
     if new_max is None:
@@ -2999,7 +3000,7 @@ def refresh_signlsh_index(
             f"the index at {path!r} was built over {meta['dim']}-dim "
             "vectors — rebuilding is the only sound operation"
         )
-    ghost = spark.read.parquet(bands_dir).select("right_id")
+    ghost = read_parquet(spark, bands_dir).select("right_id")
     if wm is not None:
         ghost = ghost.filter(F.col("right_id") > F.lit(wm))
     tail = tail.join(
@@ -3070,7 +3071,7 @@ def signlsh_index_stats(
     import os as _os
 
     meta = read_signlsh_index_meta(path)
-    bands_t = spark.read.parquet(_os.path.join(path, "bands"))
+    bands_t = read_parquet(spark, _os.path.join(path, "bands"))
     buckets = (
         bands_t.groupBy("band", "key")
         .agg(F.count("*").alias("bc"))
@@ -3195,7 +3196,7 @@ def embedding_dups_against_index(
         "left_id", "vl", "nl",
         F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
     )
-    rinv = spark.read.parquet(_os.path.join(path, "bands"))
+    rinv = read_parquet(spark, _os.path.join(path, "bands"))
     denom = F.col("nl") * F.col("nr")
     cos = F.when(denom != 0.0, dot(F.col("vl"), F.col("vr")) / denom)
     return (
@@ -4246,7 +4247,7 @@ def refresh_winnow_index(
             meta["max_id"] = _json_id(stamp)
             _write_index_meta(path, "winnow_index.json", meta)
         return meta
-    ghost = spark.read.parquet(fps_dir).select("id")
+    ghost = read_parquet(spark, fps_dir).select("id")
     if wm is not None:
         ghost = ghost.filter(F.col("id") > F.lit(wm))
     tail = tail.join(
@@ -4308,7 +4309,7 @@ def winnow_index_stats(
     import os as _os
 
     meta = read_winnow_index_meta(path)
-    fps = spark.read.parquet(_os.path.join(path, "fps"))
+    fps = read_parquet(spark, _os.path.join(path, "fps"))
     buckets = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("bc"))
@@ -4404,7 +4405,7 @@ def winnow_overlap_against_index(
         left, left_id_col, tcol, meta["k"], meta["window"]
     ).select("id", "fp").distinct()
     rsel = (
-        spark.read.parquet(_os.path.join(path, "fps"))
+        read_parquet(spark, _os.path.join(path, "fps"))
         .select("id", "fp")
         .distinct()
     )

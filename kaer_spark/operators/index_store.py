@@ -40,6 +40,7 @@ from kaer_spark.functions.vector import (
     double_nested_lit,
     l2sq,
 )
+from kaer_spark.sources.files import read_parquet
 
 META_FILE = "index.json"
 DATA_DIR = "data"
@@ -68,7 +69,7 @@ def _refresh_replay_guard(tail: DataFrame, path: str, meta: dict) -> DataFrame:
     id_col = meta["id_col"]
     spark = tail.sparkSession
     existing = (
-        spark.read.parquet(os.path.join(path, DATA_DIR))
+        read_parquet(spark, os.path.join(path, DATA_DIR))
         .select(id_col)
         .filter(F.col(id_col) > meta["max_id"])
     )
@@ -328,9 +329,7 @@ def ivf_index_knn_join(
     from kaer_spark.operators.similarity import ivf_knn_join
 
     meta = read_index_meta(path)
-    corpus = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(path, DATA_DIR)
-    )
+    corpus = read_parquet(spark, os.path.join(path, DATA_DIR), merge_schema=True)
     return ivf_knn_join(
         queries,
         corpus,
@@ -378,11 +377,13 @@ def ivf_index_topk(
     ]
     order = [i for i, _ in sorted(dists, key=lambda t: (t[1], t[0]))]
     n_cells = len(order)
-    # mergeSchema: refresh appends after collection schema evolution may
+    # merge_schema: refresh appends after collection schema evolution may
     # carry fields the original build files lack (same reason Collection.df
     # merges); without it a filtered approximate query can fail to resolve
-    # the predicate column or read it inconsistently.
-    df = spark.read.option("mergeSchema", "true").parquet(os.path.join(path, DATA_DIR))
+    # the predicate column or read it inconsistently. The merged schema is
+    # memoised per session (sources.files), so only the first search after
+    # a build or refresh pays the merge job.
+    df = read_parquet(spark, os.path.join(path, DATA_DIR), merge_schema=True)
     cur = max(1, min(int(nprobe), n_cells))
     while True:
         pruned = df.filter(F.col("_cell").isin(order[:cur]))
@@ -583,7 +584,7 @@ def pq_index_topk(
     m, d = meta["m"], meta["dim"] // meta["m"]
     q = [float(x) for x in query_vector]
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    base_codes = spark.read.parquet(os.path.join(path, DATA_DIR))
+    base_codes = read_parquet(spark, os.path.join(path, DATA_DIR))
     if nprobe is not None and meta["cells"] is None:
         raise ValueError("index has no coarse cells; build with cells=")
     match_ids = None
@@ -724,7 +725,7 @@ def pq_index_knn_join(
         F.col(query_id_col).alias("__qid"),
         F.col(query_vec_col).alias("__qvec"),
     ).withColumn("__adc_table", adc_table)
-    codes = spark.read.parquet(os.path.join(path, DATA_DIR))
+    codes = read_parquet(spark, os.path.join(path, DATA_DIR))
     if pred is not None:
         codes = codes.join(
             corpus.filter(pred).select(id_col), id_col, "left_semi"
@@ -841,7 +842,7 @@ def ivf_index_stats(
     from pyspark.sql.window import Window
 
     meta = read_index_meta(path)
-    data = spark.read.parquet(os.path.join(path, DATA_DIR))
+    data = read_parquet(spark, os.path.join(path, DATA_DIR))
     cents = double_matrix_lit(meta["centroids"])
     resid = l2sq(
         meta["vec_col"],
@@ -944,7 +945,7 @@ def pq_index_stats(
     vcol = corpus_vec_col or meta["vec_col"]
     books = meta["codebooks"]
     m, d = len(books), len(books[0][0])
-    codes = spark.read.parquet(os.path.join(path, DATA_DIR))
+    codes = read_parquet(spark, os.path.join(path, DATA_DIR))
     joined = codes.join(
         corpus.select(
             F.col(icol).alias(meta["id_col"]),

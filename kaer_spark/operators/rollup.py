@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kaer_spark.functions.time import NS_PER_DAY, NS_PER_SECOND, normalize_epoch_ns
+from kaer_spark.sources.files import read_parquet
 
 SPEC_FILE = "_rollup_spec.json"
 
@@ -196,4 +197,4 @@ def sliding_rollup(
 
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:
     """Read the materialized rollup (partition column included)."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

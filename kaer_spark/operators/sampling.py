@@ -31,6 +31,12 @@ SAMPLE_MOD = 1_000_000_007
 SAMPLE_A = 2_654_435_761  # Knuth multiplicative constant
 SAMPLE_C = 40_503
 
+#: ``sampled_quantiles`` cuts samples up to this size with a top-k heap;
+#: larger ones with a bucketed rank (see there)
+_TOPK_HEAP_MAX = 1 << 16
+#: bucket width, in hash bits, of that rank: < 2**14 buckets over SAMPLE_MOD
+_RANK_BUCKET_BITS = 16
+
 
 def sample_bucket(id_col: str | F.Column, buckets: int = 1000) -> F.Column:
     """The row's deterministic sample bucket in [0, buckets): LCG hash of
@@ -423,11 +429,17 @@ def sampled_quantiles(
     puts the median within ~0.8% of corpus mass with 95% confidence,
     independent of corpus size.
 
-    Scale shape: the sample cut is ``TakeOrderedAndProject`` (per-
-    partition heap of ``sample_k``, no global sort); the rank window runs
-    over the ``sample_k``-row sample only — bounded single-partition
-    work by construction, the same envelope as collecting the sample.
-    NULL values are excluded (quantiles of the non-null population).
+    Scale shape: up to ``_TOPK_HEAP_MAX`` rows the sample cut is
+    ``TakeOrderedAndProject`` (per-partition heap of ``sample_k``, no
+    global sort). Its heap is allocated for the whole limit up front, so a
+    larger ``sample_k`` (up to "everything", e.g. ``10**9``) instead ranks
+    rows by hash bucket: bucket counts (< 2**14 rows) give each bucket's
+    offset, whole buckets below ``sample_k`` are kept, and only the one
+    bucket straddling it is row-numbered — aggregates and spillable
+    windows, memory bounded for any ``sample_k``, the same rows. The rank
+    window over the sample is single-partition work on
+    ``min(sample_k, rows)`` rows. NULL values are excluded (quantiles of
+    the non-null population).
     """
     if not probs:
         raise ValueError("probs must be non-empty")
@@ -440,17 +452,16 @@ def sampled_quantiles(
         F.col(id_col).cast("long") * F.lit(SAMPLE_A) + F.lit(SAMPLE_C),
         F.lit(SAMPLE_MOD),
     )
-    sample = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(
-            F.col(id_col).alias("__id"),
-            F.col(value_col).alias("__v"),
-            hash_col.alias("__h"),
-        )
-        .orderBy(F.col("__h").asc(), F.col("__id").asc())
-        .limit(int(sample_k))
+    rows = df.filter(F.col(value_col).isNotNull()).select(
+        F.col(id_col).alias("__id"),
+        F.col(value_col).alias("__v"),
+        hash_col.alias("__h"),
     )
-    from pyspark.sql.window import Window
+    order = [F.col("__h").asc(), F.col("__id").asc()]
+    if sample_k <= _TOPK_HEAP_MAX:
+        sample = rows.orderBy(*order).limit(int(sample_k))
+    else:
+        sample = _smallest_by_hash_bucket(rows, int(sample_k), order)
 
     ranked = sample.select(
         "__v",
@@ -475,3 +486,31 @@ def sampled_quantiles(
         .select(F.col("t.p").alias("p"), F.col("__v").alias("q"))
         .orderBy("p")
     )
+
+
+def _smallest_by_hash_bucket(rows: DataFrame, k: int, order: list) -> DataFrame:
+    """The ``k`` rows of ``rows`` first in ``order`` (``__h`` then
+    ``__id``, ascending, NULLs first) without a k-sized heap: buckets of
+    ``__h`` (NULL hashes in bucket -1, first like a NULL-first sort) are
+    counted, each bucket's offset is the running count below it, and only
+    the bucket that straddles ``k`` is row-numbered."""
+    tagged = rows.withColumn(
+        "__b", F.coalesce(F.shiftright("__h", _RANK_BUCKET_BITS), F.lit(-1))
+    )
+    below = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        tagged.groupBy("__b")
+        .agg(F.count("*").alias("__c"))
+        .withColumn("__o", F.coalesce(F.sum("__c").over(below), F.lit(0)))
+    )
+    placed = tagged.join(F.broadcast(offsets), "__b")
+    whole = placed.filter(F.col("__o") + F.col("__c") <= k)
+    edge = (
+        placed.filter((F.col("__o") < k) & (F.col("__o") + F.col("__c") > k))
+        .withColumn(
+            "__r", F.row_number().over(Window.partitionBy("__b").orderBy(*order))
+        )
+        .filter(F.col("__o") + F.col("__r") <= k)
+    )
+    cols = ["__id", "__v", "__h"]
+    return whole.select(*cols).unionByName(edge.select(*cols))

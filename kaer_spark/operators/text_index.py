@@ -53,6 +53,7 @@ from kaer_spark.operators.util import (
     global_ranked,
     watermark_health_cols,
 )
+from kaer_spark.sources.files import read_parquet
 
 META_FILE = "index.json"
 POSTINGS_DIR = "postings"
@@ -240,7 +241,7 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     acc_n, acc_sumdl, acc_maxid = 0, 0, None
     doclens_dir = os.path.join(path, DOCLENS_DIR)
     if os.path.isdir(doclens_dir):
-        already = df.sparkSession.read.parquet(doclens_dir)
+        already = read_parquet(df.sparkSession, doclens_dir)
         if meta["max_id"] is not None:
             already = already.filter(F.col("id") > meta["max_id"])
         acc = already.agg(
@@ -294,7 +295,7 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     postings_dir = os.path.join(path, POSTINGS_DIR)
     if os.path.isdir(postings_dir):
         try:
-            ghost = df.sparkSession.read.parquet(postings_dir).select("id")
+            ghost = read_parquet(df.sparkSession, postings_dir).select("id")
         except AnalysisException:
             # a build over zero rows writes a partitioned dir with no part
             # files (partitions are data-driven) — nothing to guard against
@@ -367,8 +368,8 @@ def text_index_stats(
     range-partitioned per-partition ranks + partition offsets, bit-exact,
     no single-reducer sort)."""
     meta = read_text_index_meta(path)
-    postings = spark.read.parquet(os.path.join(path, POSTINGS_DIR))
-    doclens = spark.read.parquet(os.path.join(path, DOCLENS_DIR))
+    postings = read_parquet(spark, os.path.join(path, POSTINGS_DIR))
+    doclens = read_parquet(spark, os.path.join(path, DOCLENS_DIR))
     # localCheckpoint (lazy): tdf feeds two consumers (stats, the rank
     # branch) and would otherwise re-aggregate the postings per branch
     tdf = postings.groupBy("term").agg(F.count("*").alias("df")).localCheckpoint(
@@ -481,7 +482,7 @@ def search_text_index(
         raise ValueError("terms must be non-empty")
     terms = [t.lower() for t in terms]
     meta = read_text_index_meta(path)
-    doclens = spark.read.parquet(os.path.join(path, DOCLENS_DIR))
+    doclens = read_parquet(spark, os.path.join(path, DOCLENS_DIR))
     if meta["n_docs"] == 0:
         # empty index is a supported state (build before first insert):
         # no candidates by definition — id column keeps the corpus type
@@ -490,7 +491,7 @@ def search_text_index(
         ).limit(0)
     buckets = sorted({py_term_hash(t) % meta["n_buckets"] for t in terms})
     postings = (
-        spark.read.parquet(os.path.join(path, POSTINGS_DIR))
+        read_parquet(spark, os.path.join(path, POSTINGS_DIR))
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(terms))
     )
@@ -578,13 +579,13 @@ def search_phrase(
     uterms = list(dict.fromkeys(terms))
     slot = {t: i for i, t in enumerate(uterms)}
     if meta["n_docs"] == 0:
-        doclens = spark.read.parquet(os.path.join(path, DOCLENS_DIR))
+        doclens = read_parquet(spark, os.path.join(path, DOCLENS_DIR))
         return doclens.select(
             "id", F.lit(0).cast("long").alias("n_occurrences")
         ).limit(0)
     buckets = sorted({py_term_hash(t) % meta["n_buckets"] for t in uterms})
     postings = (
-        spark.read.parquet(os.path.join(path, POSTINGS_DIR))
+        read_parquet(spark, os.path.join(path, POSTINGS_DIR))
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(uterms))
     )
@@ -665,13 +666,13 @@ def search_near(
     uterms = list(dict.fromkeys(terms))
     slot = {t: i for i, t in enumerate(uterms)}
     if meta["n_docs"] == 0:
-        doclens = spark.read.parquet(os.path.join(path, DOCLENS_DIR))
+        doclens = read_parquet(spark, os.path.join(path, DOCLENS_DIR))
         return doclens.select(
             "id", F.lit(0).cast("long").alias("n_matches")
         ).limit(0)
     buckets = sorted({py_term_hash(t) % meta["n_buckets"] for t in uterms})
     postings = (
-        spark.read.parquet(os.path.join(path, POSTINGS_DIR))
+        read_parquet(spark, os.path.join(path, POSTINGS_DIR))
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(uterms))
     )

@@ -10,7 +10,35 @@ engine's connector surface. Rules every reader here follows:
   min/max pruning);
 * writers partition by low-cardinality keys only, and compact small files
   (``coalesce``) when asked — the classic many-small-files failure mode is
-  an explicit parameter, not an accident.
+  an explicit parameter, not an accident;
+* :func:`read_parquet` is the engine's only parquet reader, and it infers a
+  table's schema at most once per session (the schema memo below).
+
+Schema memo. Inferring a parquet schema is one Spark job (a footer read,
+merged across files under ``mergeSchema``) on every read. A catalog-backed
+store knows each table's schema instead, so ``read_parquet`` keeps one:
+
+* it holds metadata only — the ``StructType`` Spark inferred — never rows;
+* an entry is keyed by the live SparkContext, the absolute path and the
+  ``mergeSchema`` flag, and it is valid while the path's listing is
+  unchanged: the relative name, size and ``st_mtime_ns`` of every file
+  under it, taken with one ``os.walk`` before the read. Any write through
+  Spark (append, overwrite, directory swap) adds or renames part files, so
+  the next read misses and re-infers;
+* a hit passes the memoised schema to ``.schema(...)``, so the read fires no
+  job and returns exactly the schema Spark inferred on the miss (column
+  order, nullability, partition columns);
+* only local paths are memoised. Remote schemes (``hdfs://``, ``s3a://``)
+  and glob patterns read uncached, because listing them would need the
+  remote filesystem client or Spark's own glob expansion.
+
+The memo is bounded (LRU), guarded by one lock, and cleared when the
+SparkContext changes — the discipline of ``functions.vector.cached_expr``.
+A rewrite that keeps every file's name, size and mtime is invisible to it;
+Spark's writers never do that (part-file names carry the write job's id).
+Session confs that change the parquet type mapping (``nanosAsLong``,
+``binaryAsString``) are not part of the key: set them before a path's first
+read in the session, as ``functions.time.read_events`` does.
 
 Delta/Iceberg/Hudi need jars not present in this environment; see
 ``open_table`` for the gated stub.
@@ -18,14 +46,96 @@ Delta/Iceberg/Hudi need jars not present in this environment; see
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+_SCHEMA_MEMO_MAX = 1024
+_schema_memo: OrderedDict[tuple, tuple[tuple, T.StructType]] = OrderedDict()
+_schema_memo_ctx: object | None = None
+_schema_memo_lock = threading.Lock()
+
+
+def _local_path(path: str) -> str | None:
+    """Absolute local path behind ``path``, or None when the memo must not
+    serve it (a remote scheme, or a glob Spark expands itself)."""
+    if any(c in path for c in "*?[{"):
+        return None
+    u = urlparse(path)
+    if u.scheme == "file":
+        return os.path.abspath(u.path)
+    if u.scheme:
+        return None
+    return os.path.abspath(path)
+
+
+def _listing(root: str) -> tuple | None:
+    """(relative name, size, st_mtime_ns) of every file under ``root``,
+    sorted; None if ``root`` does not exist."""
+    try:
+        st = os.stat(root)
+    except OSError:
+        return None
+    if not os.path.isdir(root):
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for dirpath, _dirs, names in os.walk(root, followlinks=True):
+        for n in names:
+            full = os.path.join(dirpath, n)
+            try:
+                st = os.stat(full)
+            except OSError:  # vanished mid-listing: a writer is active
+                return None
+            out.append((os.path.relpath(full, root), st.st_size, st.st_mtime_ns))
+    out.sort()
+    return tuple(out)
+
 
 def read_parquet(
-    spark: SparkSession, path: str, columns: list[str] | None = None
+    spark: SparkSession,
+    path: str,
+    columns: list[str] | None = None,
+    merge_schema: bool = False,
 ) -> DataFrame:
-    df = spark.read.parquet(path)
+    """Parquet read whose schema inference runs once per listing (see the
+    module docstring). ``merge_schema`` merges every file's footer — needed
+    where appends may add columns; otherwise Spark takes one file's schema.
+    """
+    global _schema_memo_ctx
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    local = _local_path(path)
+    listing = _listing(local) if local is not None else None
+    if listing is None:
+        df = reader.parquet(path)
+        return df.select(*columns) if columns else df
+    sc = spark.sparkContext
+    key = (local, merge_schema)
+    with _schema_memo_lock:
+        if sc is not _schema_memo_ctx:
+            _schema_memo.clear()
+            _schema_memo_ctx = sc
+        hit = _schema_memo.get(key)
+        if hit is not None and hit[0] == listing:
+            _schema_memo.move_to_end(key)
+            schema = hit[1]
+        else:
+            schema = None
+    if schema is not None:
+        df = reader.schema(schema).parquet(path)
+    else:
+        df = reader.parquet(path)
+        with _schema_memo_lock:
+            if sc is _schema_memo_ctx:
+                _schema_memo[key] = (listing, df.schema)
+                _schema_memo.move_to_end(key)
+                if len(_schema_memo) > _SCHEMA_MEMO_MAX:
+                    _schema_memo.popitem(last=False)
     return df.select(*columns) if columns else df
 
 

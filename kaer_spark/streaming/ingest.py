@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kaer_spark.context import Collection
+from kaer_spark.sources.files import read_parquet
 
 
 def _fs_committed(spark: SparkSession, path: str) -> bool:
@@ -95,7 +96,7 @@ def read_hll_state(spark: SparkSession, state_dir: str) -> DataFrame:
     first. Corruption and IO errors propagate — there is deliberately no
     empty-state fallback for an all-time distinct metric."""
     _recover_hll_state(state_dir)
-    return spark.read.parquet(state_dir)
+    return read_parquet(spark, state_dir)
 
 
 def stream_insert(
@@ -333,7 +334,7 @@ def stream_refresh_rollup(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        refresh_rollup(spark.read.parquet(source_path), rollup_path)
+        refresh_rollup(read_parquet(spark, source_path), rollup_path)
 
     writer = (
         stream_df.writeStream.outputMode("append")
@@ -448,7 +449,7 @@ def streaming_hll_ingest(
     micro-batch's register table merges (per-register max — EXACT, merge
     of batches ≡ sketch of their union bit-for-bit) into the persisted
     state at ``state_dir``, so "distinct values ever seen" is answered
-    at any moment by ``hll_estimate(spark.read.parquet(state_dir))``
+    at any moment by ``hll_estimate(read_parquet(spark, state_dir))``
     without re-scanning history.
 
     State is SKETCH-sized by construction (≤ 2^p rows — 4096 at the
@@ -489,7 +490,7 @@ def streaming_hll_ingest(
             # footer) PROPAGATES and fails the stream — swallowing it
             # would silently undercount every value seen before this
             # batch. Path-missing is the one legitimate absence.
-            for r in spark.read.parquet(state_dir).collect():
+            for r in read_parquet(spark, state_dir).collect():
                 i = int(r["idx"])
                 regs[i] = max(regs.get(i, 0), int(r["mj"]))
         if len(regs) > m:
@@ -563,7 +564,7 @@ def stream_neardup_ingest(
       epoch (ids at-or-below the flipped watermark, committed partition
       present) is NOT rewritten: the watermark flip happens after the
       corpus write, so a covered batch's partition is provably final
-      (read the corpus as ``spark.read.parquet(out_dir)``; the epoch
+      (read the corpus as ``read_parquet(spark, out_dir)``; the epoch
       partition column is incidental);
     * the index refresh is the watermark catch-up — a replayed batch is
       at-or-below the flipped watermark and no-ops, a crash between its
@@ -680,7 +681,7 @@ def neardup_ingest_batch(
         # batch, so every re-delivered doc collides with its own stored
         # signature — identical content, identical bands, Jaccard 1).
         if committed:
-            part = spark.read.parquet(epoch_path)
+            part = read_parquet(spark, epoch_path)
             mx = part.agg(F.max(F.col(id_col))).collect()[0][0]
             if mx is not None:
                 refresh_minhash_index(part, index_path, advance_to=mx)
@@ -866,7 +867,7 @@ def embedding_neardup_ingest_batch(
         # partition = final survivors, heal the index from it; duplicate
         # delivery fails safe through the cosine screen
         if committed:
-            part = spark.read.parquet(epoch_path)
+            part = read_parquet(spark, epoch_path)
             mx = part.agg(F.max(F.col(id_col))).collect()[0][0]
             if mx is not None:
                 refresh_signlsh_index(part, index_path, advance_to=mx)
@@ -1156,7 +1157,7 @@ def compact_ingest_epochs(
     n_files = max(1, -(-int(total_bytes) // int(target_bytes)))
     union = reduce(
         lambda a, b: a.unionByName(b),
-        [spark.read.parquet(epochs[e]) for e in cands],
+        [read_parquet(spark, epochs[e]) for e in cands],
     )
     into = cands[-1]
     tmp_dir = os.path.join(out_dir, ".compact_tmp")

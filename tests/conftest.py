@@ -81,7 +81,10 @@ def corpus(documents, embeddings):
 #   pytest tests/ -q --durations=0 -m "" | <aggregate >1.5s per function>
 # and keep these over-threshold tests fast-tier when regenerating, as the
 # core exact-dedup and simhash correctness cases (about 4 s each):
-# test_dedup.py::test_exact_dedup, test_dedup.py::test_simhash.
+# test_dedup.py::test_exact_dedup, test_dedup.py::test_simhash; and the
+# schema-memo guards of the parquet reader (about 4 and 14 s):
+# test_sources.py::test_read_parquet_memo_hits_until_the_listing_changes,
+# test_sources.py::test_warm_collection_reads_and_queries_fire_no_jobs.
 # ---------------------------------------------------------------------------
 _SLOW_TESTS = frozenset({
     "test_asof.py::test_asof_events_scale",
@@ -145,6 +148,7 @@ _SLOW_TESTS = frozenset({
     "test_corpus_ops.py::test_perplexity_buckets_partition_and_order",
     "test_corpus_ops.py::test_pps_heavy_row_always_selected",
     "test_corpus_ops.py::test_quota_per_group_hash_order",
+    "test_corpus_ops.py::test_sampled_quantiles_bucketed_rank_equals_heap",
     "test_corpus_ops.py::test_sampled_quantiles_matches_python_reference",
     "test_corpus_ops.py::test_shard_assign_balance_and_determinism",
     "test_corpus_ops.py::test_shard_assign_edges",
@@ -300,7 +304,10 @@ _SLOW_TESTS = frozenset({
     "test_sketches.py::test_hll_is_multiset_invariant",
     "test_sketches.py::test_hll_merge_equals_union",
     "test_sketches.py::test_hll_tokens_vs_exact",
+    "test_sources.py::test_compact_and_delete_rewrites_miss_the_memo",
+    "test_sources.py::test_insert_with_new_field_misses_the_memo",
     "test_sources.py::test_lakehouse_formats_gated",
+    "test_sources.py::test_new_spark_context_starts_with_an_empty_memo",
     "test_sources.py::test_orc_roundtrip_and_pushdown",
     "test_streaming.py::test_compact_ingest_epochs_crash_recovery",
     "test_streaming.py::test_compact_ingest_epochs_preserves_rows_and_replay",

@@ -1439,3 +1439,29 @@ def test_sampled_quantiles_matches_python_reference(spark, documents):
             ).collect()
         ]
         assert got == expect, (k, got, expect)
+
+
+def test_sampled_quantiles_bucketed_rank_equals_heap(spark):
+    """Above the heap cap, ``sampled_quantiles`` cuts its sample by a
+    bucketed rank instead of a top-k heap; it must select exactly the
+    heap's rows. Ids ``i`` and ``i + SAMPLE_MOD`` share a hash, so hash
+    buckets hold several rows and the cut lands inside one (the
+    row-numbered edge bucket); a NULL id hashes to NULL and sorts first."""
+    from kaer_spark.operators import sampling as S
+
+    rows = [(i + j * S.SAMPLE_MOD, float((i * 7 + j) % 11)) for i in range(60)
+            for j in range(3)] + [(None, 5.0)]
+    df = spark.createDataFrame(rows, "doc_id long, v double")
+    keyed = df.select(
+        F.col("doc_id").alias("__id"),
+        F.col("v").alias("__v"),
+        F.pmod(F.col("doc_id") * S.SAMPLE_A + S.SAMPLE_C, F.lit(S.SAMPLE_MOD))
+        .alias("__h"),
+    )
+    order = [F.col("__h").asc(), F.col("__id").asc()]
+    for k in (2, 38, 10**9):
+        heap = keyed.orderBy(*order).limit(min(k, len(rows)))
+        bucketed = S._smallest_by_hash_bucket(keyed, k, order)
+        assert sorted(map(tuple, bucketed.collect()), key=str) == sorted(
+            map(tuple, heap.collect()), key=str
+        ), k

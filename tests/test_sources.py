@@ -120,3 +120,201 @@ def test_text_reader_lines_and_wholefile(spark, tmp_path):
     docs = read_text(spark, str(d), whole_file=True)
     assert docs.count() == 2
     assert any("line one\nline two" in r["value"] for r in docs.collect())
+
+
+# ---------------------------------------------------------------------------
+# read_parquet's per-session schema memo
+# ---------------------------------------------------------------------------
+def _jobs(spark, fn):
+    from tests.conftest import jobs_fired
+
+    with jobs_fired(spark) as fired:
+        out = fn()
+    return out, len(fired)
+
+
+def _memo_entry(path: str, merge_schema: bool):
+    """(listing, schema) the memo holds for ``path``."""
+    from kaer_spark.sources import files
+
+    (entry,) = [
+        v for k, v in files._schema_memo.items()
+        if k[0] == os.path.abspath(path) and k[1] == merge_schema
+    ]
+    return entry
+
+
+def test_read_parquet_memo_hits_until_the_listing_changes(spark, tmp_path):
+    """A warm read fires no job and returns Spark's own inferred schema
+    (partition column included); an overwrite or an append misses and
+    re-infers; a glob is never memoised."""
+    p = str(tmp_path / "t")
+    spark.range(6).withColumn("g", F.col("id") % 2).write.partitionBy("g").parquet(p)
+    first, jobs = _jobs(spark, lambda: read_parquet(spark, p))
+    assert jobs >= 1
+    warm, jobs = _jobs(spark, lambda: read_parquet(spark, p))
+    assert jobs == 0
+    assert warm.schema == first.schema == spark.read.parquet(p).schema
+    assert warm.columns == ["id", "g"]
+    assert sorted(map(tuple, warm.collect())) == sorted(map(tuple, first.collect()))
+
+    spark.range(3).select(F.col("id").cast("string").alias("s")).write.mode(
+        "overwrite"
+    ).parquet(p)
+    rewritten, jobs = _jobs(spark, lambda: read_parquet(spark, p))
+    assert jobs >= 1 and rewritten.columns == ["s"]
+
+    spark.range(3, 5).select(
+        F.col("id").cast("string").alias("s"), F.lit(1.5).alias("x")
+    ).write.mode("append").parquet(p)
+    merged, jobs = _jobs(spark, lambda: read_parquet(spark, p, merge_schema=True))
+    assert jobs >= 1 and merged.columns == ["s", "x"]
+    warm, jobs = _jobs(spark, lambda: read_parquet(spark, p, merge_schema=True))
+    assert jobs == 0 and warm.schema == merged.schema
+    assert warm.filter(F.col("x").isNotNull()).count() == 2
+
+    glob = os.path.join(p, "*.parquet")
+    read_parquet(spark, glob)
+    _, jobs = _jobs(spark, lambda: read_parquet(spark, glob))
+    assert jobs >= 1
+
+
+def test_warm_collection_reads_and_queries_fire_no_jobs(spark, tmp_path):
+    """Constructing a warm ``Collection.df()`` and a filtered exact or
+    full-probe IVF query fires no Spark job; a partial-probe filtered IVF
+    query fires only its documented escalation ``count()``."""
+    from kaer_spark.context import KaerContext
+
+    coll = KaerContext(spark, str(tmp_path / "kaer")).create_collection("warm")
+    coll.insert([f"document {i} about topic {i % 5}" for i in range(40)],
+                [{"topic": i % 5} for i in range(40)])
+    coll.build_index(cells=4, seed=42)
+    flt = {"topic": {"$gte": 0}}
+
+    def exact():
+        return coll.query("topic 3", k=3, filter=flt)
+
+    def full_probe():
+        return coll.query("topic 3", k=3, filter=flt, approximate=True, nprobe=4)
+
+    def one_probe():
+        return coll.query("topic 3", k=1, filter=flt, approximate=True, nprobe=1)
+
+    for build in (coll.df, exact, full_probe):
+        build()  # the first read after the build infers
+        _, jobs = _jobs(spark, build)
+        assert jobs == 0, build
+    q, jobs = _jobs(spark, one_probe)
+    _, count_jobs = _jobs(spark, q.count)
+    assert jobs == count_jobs >= 1
+
+
+def test_insert_with_new_field_misses_the_memo(spark, tmp_path):
+    from kaer_spark.context import KaerContext
+
+    coll = KaerContext(spark, str(tmp_path / "kaer")).create_collection("evolve")
+    coll.insert([f"doc {i}" for i in range(6)], [{"a": i} for i in range(6)])
+    assert "b" not in coll.df().columns
+    listing, _ = _memo_entry(coll.data_path, True)
+
+    coll.insert(["fresh doc"], [{"a": 99, "b": "tagged"}])
+    df = coll.df()
+    assert "b" in df.columns
+    assert [r["a"] for r in df.filter(F.col("b") == "tagged").collect()] == [99]
+    assert df.filter(F.col("b").isNull()).count() == 6
+    new_listing, schema = _memo_entry(coll.data_path, True)
+    assert new_listing != listing and "b" in schema.fieldNames()
+
+
+def test_compact_and_delete_rewrites_miss_the_memo(spark, tmp_path):
+    from kaer_spark.context import KaerContext
+
+    coll = KaerContext(spark, str(tmp_path / "kaer")).create_collection("rewrite")
+    for batch in range(3):
+        coll.insert([f"doc {batch}-{i}" for i in range(5)],
+                    [{"batch": batch} for _ in range(5)])
+    ids = sorted(r["_m_id"] for r in coll.df().collect())
+    listing, _ = _memo_entry(coll.data_path, True)
+
+    assert coll.compact(target_files=1) == 1
+    df, jobs = _jobs(spark, coll.df)
+    assert jobs >= 1  # the swapped-in directory re-infers
+    assert sorted(r["_m_id"] for r in df.collect()) == ids
+    compacted, _ = _memo_entry(coll.data_path, True)
+    assert compacted != listing
+
+    assert coll.delete({"batch": 1}) == 5
+    df, jobs = _jobs(spark, coll.df)
+    assert jobs >= 1
+    assert sorted(r["batch"] for r in df.select("batch").distinct().collect()) == [0, 2]
+    assert _memo_entry(coll.data_path, True)[0] not in (listing, compacted)
+
+
+_NEW_CONTEXT_SCRIPT = r"""
+import json, sys
+from pyspark.sql import SparkSession
+from kaer_spark.sources import files
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.driver.memory", "512m")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+def jobs(spark, fn, n=[0]):
+    n[0] += 1
+    sc, group = spark.sparkContext, f"memo-{n[0]}"
+    sc.setJobGroup(group, group)
+    fn()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+path = sys.argv[1]
+spark = session()
+spark.range(3).write.parquet(path)
+cold = jobs(spark, lambda: files.read_parquet(spark, path))
+warm = jobs(spark, lambda: files.read_parquet(spark, path))
+spark.stop()
+spark = session()
+fresh = jobs(spark, lambda: files.read_parquet(spark, path))
+print(json.dumps({"cold": cold, "warm": warm, "fresh": fresh,
+                  "entries": len(files._schema_memo)}))
+spark.stop()
+"""
+
+
+def test_new_spark_context_starts_with_an_empty_memo(tmp_path):
+    """The memo belongs to one SparkContext: after a stop and a new
+    context, the first read infers again (run in a child process, so the
+    suite's session stays up)."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", _NEW_CONTEXT_SCRIPT, str(tmp_path / "t")],
+        capture_output=True, text=True, env=env, timeout=300, check=True,
+    ).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    assert got == {"cold": 1, "warm": 0, "fresh": 1, "entries": 1}
+
+
+def test_engine_reads_parquet_only_through_read_parquet():
+    """``kaer_spark/sources/files.py`` is the one place a parquet schema
+    read is decided: no other module in the package may call the reader
+    or set ``mergeSchema`` itself."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "kaer_spark")
+    allowed = os.path.join(pkg, "sources", "files.py")
+    offenders = []
+    for root, _dirs, names in os.walk(pkg):
+        for n in names:
+            full = os.path.join(root, n)
+            if not n.endswith(".py") or full == allowed:
+                continue
+            with open(full, encoding="utf-8") as f:
+                for i, line in enumerate(f, 1):
+                    if "read.parquet(" in line or '"mergeSchema"' in line:
+                        offenders.append(f"{os.path.relpath(full, pkg)}:{i}")
+    assert offenders == []
