@@ -28,6 +28,10 @@ store knows each table's schema instead, so ``read_parquet`` keeps one:
 * a hit passes the memoised schema to ``.schema(...)``, so the read fires no
   job and returns exactly the schema Spark inferred on the miss (column
   order, nullability, partition columns);
+* Spark lists the path again inside ``.parquet(...)``. A hit is kept only
+  if that list (``df.inputFiles()``, driver-side, no job) equals the data
+  files of the miss; a writer that lands between the two listings sends
+  the read back to inference instead of dropping its new columns;
 * only local paths are memoised. Remote schemes (``hdfs://``, ``s3a://``)
   and glob patterns read uncached, because listing them would need the
   remote filesystem client or Spark's own glob expansion.
@@ -55,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _SCHEMA_MEMO_MAX = 1024
-_schema_memo: OrderedDict[tuple, tuple[tuple, T.StructType]] = OrderedDict()
+_schema_memo: OrderedDict[tuple, tuple[tuple, frozenset, T.StructType]] = OrderedDict()
 _schema_memo_ctx: object | None = None
 _schema_memo_lock = threading.Lock()
 
@@ -106,13 +110,11 @@ def read_parquet(
     where appends may add columns; otherwise Spark takes one file's schema.
     """
     global _schema_memo_ctx
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
+    options = {"mergeSchema": "true"} if merge_schema else {}
     local = _local_path(path)
     listing = _listing(local) if local is not None else None
     if listing is None:
-        df = reader.parquet(path)
+        df = spark.read.options(**options).parquet(path)
         return df.select(*columns) if columns else df
     sc = spark.sparkContext
     key = (local, merge_schema)
@@ -123,16 +125,20 @@ def read_parquet(
         hit = _schema_memo.get(key)
         if hit is not None and hit[0] == listing:
             _schema_memo.move_to_end(key)
-            schema = hit[1]
+            _, files, schema = hit
         else:
             schema = None
     if schema is not None:
-        df = reader.schema(schema).parquet(path)
-    else:
-        df = reader.parquet(path)
+        df = spark.read.options(**options).schema(schema).parquet(path)
+        # Spark lists the path again inside .parquet(): a writer that
+        # landed in between must not be read under the old schema
+        if frozenset(df.inputFiles()) != files:
+            schema = None
+    if schema is None:
+        df = spark.read.options(**options).parquet(path)
         with _schema_memo_lock:
             if sc is _schema_memo_ctx:
-                _schema_memo[key] = (listing, df.schema)
+                _schema_memo[key] = (listing, frozenset(df.inputFiles()), df.schema)
                 _schema_memo.move_to_end(key)
                 if len(_schema_memo) > _SCHEMA_MEMO_MAX:
                     _schema_memo.popitem(last=False)

@@ -82,9 +82,8 @@ def corpus(documents, embeddings):
 # and keep these over-threshold tests fast-tier when regenerating, as the
 # core exact-dedup and simhash correctness cases (about 4 s each):
 # test_dedup.py::test_exact_dedup, test_dedup.py::test_simhash; and the
-# schema-memo guards of the parquet reader (about 4 and 14 s):
-# test_sources.py::test_read_parquet_memo_hits_until_the_listing_changes,
-# test_sources.py::test_warm_collection_reads_and_queries_fire_no_jobs.
+# schema-memo guard of the parquet reader (about 4 s):
+# test_sources.py::test_read_parquet_memo_hits_until_the_listing_changes.
 # ---------------------------------------------------------------------------
 _SLOW_TESTS = frozenset({
     "test_asof.py::test_asof_events_scale",
@@ -309,6 +308,7 @@ _SLOW_TESTS = frozenset({
     "test_sources.py::test_lakehouse_formats_gated",
     "test_sources.py::test_new_spark_context_starts_with_an_empty_memo",
     "test_sources.py::test_orc_roundtrip_and_pushdown",
+    "test_sources.py::test_warm_collection_reads_and_queries_fire_no_jobs",
     "test_streaming.py::test_compact_ingest_epochs_crash_recovery",
     "test_streaming.py::test_compact_ingest_epochs_preserves_rows_and_replay",
     "test_streaming.py::test_embedding_surrogate_mode_indexes_dropped_docs",

@@ -141,7 +141,7 @@ def _memo_entry(path: str, merge_schema: bool):
         v for k, v in files._schema_memo.items()
         if k[0] == os.path.abspath(path) and k[1] == merge_schema
     ]
-    return entry
+    return entry[0], entry[2]
 
 
 def test_read_parquet_memo_hits_until_the_listing_changes(spark, tmp_path):
@@ -177,6 +177,23 @@ def test_read_parquet_memo_hits_until_the_listing_changes(spark, tmp_path):
     read_parquet(spark, glob)
     _, jobs = _jobs(spark, lambda: read_parquet(spark, glob))
     assert jobs >= 1
+
+
+def test_read_parquet_hit_rechecks_sparks_own_listing(spark, tmp_path, monkeypatch):
+    """A file appended after the memo's listing but before Spark lists the
+    path inside ``.parquet(...)`` sends the hit back to inference, so its
+    new column is read rather than dropped."""
+    from kaer_spark.sources import files
+
+    p = str(tmp_path / "t")
+    spark.range(3).write.parquet(p)
+    read_parquet(spark, p, merge_schema=True)
+    stale = files._listing(os.path.abspath(p))
+    spark.range(3, 5).withColumn("x", F.lit(1.5)).write.mode("append").parquet(p)
+    monkeypatch.setattr(files, "_listing", lambda root: stale)
+    df, jobs = _jobs(spark, lambda: read_parquet(spark, p, merge_schema=True))
+    assert jobs >= 1 and df.columns == ["id", "x"]
+    assert df.filter(F.col("x").isNotNull()).count() == 2
 
 
 def test_warm_collection_reads_and_queries_fire_no_jobs(spark, tmp_path):
