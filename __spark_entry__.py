@@ -42,7 +42,7 @@ from kaer_spark.operators.dedup import (
     simhash,
 )
 from kaer_spark.operators.knn import exact_knn, knn_join
-from kaer_spark.sources.files import read_parquet
+from kaer_spark.sources.files import read_parquet, write_sidecar
 
 # ---------------------------------------------------------------------------
 # fixed fixture constants (identical literals on both engines)
@@ -354,7 +354,6 @@ def _ensure_shingle_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_shingle_index,
         read_shingle_index_meta,
         refresh_shingle_index,
@@ -381,7 +380,7 @@ def _ensure_shingle_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_shingle_index(docs, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "shingle_index.json", meta)
+    write_sidecar(os.path.join(path, "shingle_index.json"), meta)
     return path
 
 
@@ -691,10 +690,10 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         _t(spark, sf_dir, "embeddings"), path, cells=8, fit="deterministic"
     )
     # stamp the fixture fingerprint the same way _ensure_pq_index does
-    from kaer_spark.operators.index_store import META_FILE, _write_meta_atomic
+    from kaer_spark.operators.index_store import META_FILE
 
     meta["source_fp"] = fp
-    _write_meta_atomic(path, META_FILE, meta)
+    write_sidecar(os.path.join(path, META_FILE), meta)
     return path
 
 
@@ -860,7 +859,6 @@ def _q_pq_index_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kaer_spark.operators.index_store import (
         PQ_META_FILE,
-        _write_meta_atomic,
         build_pq_index,
         pq_index_topk,
         read_pq_meta,
@@ -888,7 +886,7 @@ def _q_pq_index_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         meta = refresh_pq_index(embs, path)
         meta["caught_up"] = True
-        _write_meta_atomic(path, PQ_META_FILE, meta)
+        write_sidecar(os.path.join(path, PQ_META_FILE), meta)
     return pq_index_topk(
         spark, path, embs, QVEC, topk=12, shortlist=40
     ).select("vec_id", F.col("_score").alias("l2sq"))
@@ -2987,7 +2985,6 @@ def _ensure_minhash_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_minhash_index,
         read_minhash_index_meta,
         refresh_minhash_index,
@@ -3015,7 +3012,7 @@ def _ensure_minhash_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_minhash_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "minhash_index.json", meta)
+    write_sidecar(os.path.join(path, "minhash_index.json"), meta)
     return path
 
 
@@ -3178,7 +3175,6 @@ def _ensure_signlsh_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_signlsh_index,
         read_signlsh_index_meta,
         refresh_signlsh_index,
@@ -3206,7 +3202,7 @@ def _ensure_signlsh_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_signlsh_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "signlsh_index.json", meta)
+    write_sidecar(os.path.join(path, "signlsh_index.json"), meta)
     return path
 
 
@@ -3246,7 +3242,6 @@ def _ensure_fuzzy_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_fuzzy_index,
         read_fuzzy_index_meta,
         refresh_fuzzy_index,
@@ -3273,7 +3268,7 @@ def _ensure_fuzzy_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_fuzzy_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "fuzzy_index.json", meta)
+    write_sidecar(os.path.join(path, "fuzzy_index.json"), meta)
     return path
 
 
@@ -4077,7 +4072,6 @@ def _ensure_winnow_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_winnow_index,
         read_winnow_index_meta,
         refresh_winnow_index,
@@ -4102,7 +4096,7 @@ def _ensure_winnow_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_winnow_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "winnow_index.json", meta)
+    write_sidecar(os.path.join(path, "winnow_index.json"), meta)
     return path
 
 

@@ -49,7 +49,7 @@ from kaer_spark.embeddings import (
 from kaer_spark.filters import compile_filter
 from kaer_spark.filters_json import compile_filter_json
 from kaer_spark.functions.vector import l2sq
-from kaer_spark.sources.files import read_parquet
+from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
 
 DOC_COL = "_m_doc"  # reference: db/db.go:18
 ID_COL = "_m_id"  # reference: db/db.go:19
@@ -244,10 +244,7 @@ class Collection:
         where neither a complete directory nor the recipe to restore one
         exists (the claim ``compact``'s docstring makes)."""
         manifest = os.path.join(self.path, SWAP_MANIFEST)
-        mtmp = manifest + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump({"tmp": os.path.basename(tmp)}, f)
-        os.replace(mtmp, manifest)
+        write_sidecar(manifest, {"tmp": os.path.basename(tmp)})
         old = self.data_path + ".old"
         if os.path.isdir(old):
             shutil.rmtree(old)
@@ -302,10 +299,7 @@ class Collection:
         return os.path.join(self.path, "winnow_index")
 
     def _save_meta(self) -> None:
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f, indent=2)
-        os.replace(tmp, self.meta_path)
+        write_sidecar(self.meta_path, self.meta)
 
     # -- data access -----------------------------------------------------
     def df(self) -> DataFrame:
@@ -1907,9 +1901,7 @@ class KaerContext:
         dest = os.path.join(self.root, name)
         if os.path.exists(os.path.join(dest, "collection.json")):
             raise ValueError(f"collection {name} already exists")
-        src_meta = os.path.join(snapshot_path, "collection.json")
-        with open(src_meta) as f:
-            meta = json.load(f)
+        meta = read_sidecar(os.path.join(snapshot_path, "collection.json"))
         os.makedirs(dest, exist_ok=True)
         if os.path.isdir(os.path.join(snapshot_path, "data")):
             shutil.copytree(
@@ -1937,9 +1929,7 @@ class KaerContext:
         path = os.path.join(self.root, name, "collection.json")
         if not os.path.exists(path):
             raise CollectionNotFound(name)
-        with open(path) as f:
-            meta = json.load(f)
-        coll = Collection(self, name, meta)
+        coll = Collection(self, name, read_sidecar(path))
         self._collections[name] = coll
         return coll
 

@@ -48,11 +48,17 @@ from kaer_spark.functions.fphash import (
 from kaer_spark.functions.text import char_shingles, tokens, word_shingles
 from kaer_spark.functions.vector import cached_expr, dot, vector_norm
 from kaer_spark.operators.util import (
+    above_watermark,
+    catch_up_tail,
     ensure_parallelism,
-    global_ranked,
+    flip_watermark,
+    floor_watermark,
+    json_id,
+    ranked_quantiles,
+    unindexed,
     watermark_health_cols,
 )
-from kaer_spark.sources.files import read_parquet
+from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
 
 # HASH_* are defined once, in functions.fphash, and imported here. Callers
 # in this module pass them to the fphash UDFs at call time, so reassigning
@@ -294,7 +300,7 @@ def build_shingle_index(
     sh.select("id", F.size("shingles").alias("sz")).write.mode(
         "overwrite"
     ).parquet(_os.path.join(path, "sizes"))
-    max_id = _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0])
+    max_id = json_id(df.agg(F.max(F.col(id_col))).collect()[0][0])
     seg = _shingle_seg_name(None, max_id)
     sh.select(F.explode("shingles").alias("g")).groupBy("g").agg(
         F.count("*").alias("cnt")
@@ -316,7 +322,7 @@ def build_shingle_index(
         "hot_dir": hot_dir,
         "corr_dir": corr_dir,
     }
-    _write_index_meta(path, "shingle_index.json", meta)
+    write_sidecar(_os.path.join(path, "shingle_index.json"), meta)
     return meta
 
 
@@ -404,7 +410,7 @@ def refresh_shingle_index(
     ``advance_to`` (optional) floors the flipped watermark — for
     screen-and-drop callers (``streaming.ingest.neardup_ingest_batch``):
     a dropped doc's id is decided but never stored. Ids must be int or
-    string (enforced at build by :func:`_json_id`) and append-only above
+    string (enforced at build by :func:`~kaer_spark.operators.util.json_id`) and append-only above
     the watermark."""
     import os as _os
     import shutil as _shutil
@@ -419,29 +425,16 @@ def refresh_shingle_index(
             "rebuild with build_shingle_index (writes refreshable v2)"
         )
     icol = meta["id_col"]
-    wm = meta["max_id"]
     post_dir = _os.path.join(path, "postings")
     sizes_dir = _os.path.join(path, "sizes")
-    full_tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = _json_id(full_tail.agg(F.max(F.col(icol))).collect()[0][0])
+    wm, tail, new_max = catch_up_tail(
+        df, path, "shingle_index.json", meta, sizes_dir, "id", advance_to
+    )
     if new_max is None:
-        # nothing above the watermark — still honor the advance_to floor
-        # (and stamp it) so dropped ids stay decided
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp):
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "shingle_index.json", meta)
         return meta
     # docs whose sizes row landed are fully indexed (sizes write LAST
     # among the per-id tables) — drop them from the tail entirely
-    done = read_parquet(spark, sizes_dir).select("id")
-    if wm is not None:
-        done = done.filter(F.col("id") > F.lit(wm))
-    tail = full_tail.join(
-        done.select(F.col("id").alias(icol)), [icol], "left_anti"
-    )
+    tail = unindexed(tail, icol, sizes_dir, wm, "id")
     sh = (
         ensure_parallelism(tail)
         .select(
@@ -454,27 +447,21 @@ def refresh_shingle_index(
         .localCheckpoint(eager=False)
     )
     # ghost guard for the postings-landed/sizes-missing window
-    ghost = read_parquet(spark, post_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
-    sh.select("id", F.explode("shingles").alias("g")).join(
-        ghost.distinct(), "id", "left_anti"
+    unindexed(
+        sh.select("id", F.explode("shingles").alias("g")), "id", post_dir, wm
     ).write.mode("append").parquet(post_dir)
     sh.select("id", F.size("shingles").alias("sz")).write.mode(
         "append"
     ).parquet(sizes_dir)
     # df segment for the committed window, from the ON-DISK postings
     seg = _shingle_seg_name(wm, new_max)
-    win = read_parquet(spark, post_dir)
-    if wm is not None:
-        win = win.filter(F.col("id") > F.lit(wm))
-    win.filter(F.col("id") <= F.lit(new_max)).groupBy("g").agg(
-        F.count("*").alias("cnt")
-    ).write.mode("overwrite").parquet(_os.path.join(path, "df", seg))
+    above_watermark(read_parquet(spark, post_dir), "id", wm).filter(
+        F.col("id") <= F.lit(new_max)
+    ).groupBy("g").agg(F.count("*").alias("cnt")).write.mode(
+        "overwrite"
+    ).parquet(_os.path.join(path, "df", seg))
     segs = list(meta["df_segments"]) + [seg]
-    wm_new = new_max
-    if advance_to is not None and advance_to > wm_new:
-        wm_new = advance_to
+    wm_new = floor_watermark(new_max, advance_to)
     hot_dir = meta.get("hot_dir")
     corr_dir = meta.get("corr_dir")
     if meta["max_doc_freq"] is not None:
@@ -482,11 +469,10 @@ def refresh_shingle_index(
         corr_dir = _write_shingle_hot(
             spark, path, segs, meta["max_doc_freq"], hot_dir
         )
-    meta["max_id"] = _json_id(wm_new)
     meta["df_segments"] = segs
     meta["hot_dir"] = hot_dir
     meta["corr_dir"] = corr_dir
-    _write_index_meta(path, "shingle_index.json", meta)
+    flip_watermark(path, "shingle_index.json", meta, wm_new)
     # sweep orphans from crashed grown-window replays (safe AFTER the
     # flip: anything not listed in the live sidecar is dead by contract)
     for sub, live in (
@@ -525,7 +511,6 @@ def write_shingle_bucketed_table(
     tests/test_dedup.py). Sizes land in ``<table>_sizes`` (id-keyed,
     broadcast-sized joins); parameters in the ``meta_path`` sidecar, same
     format as the parquet artifact so either layout serves the scorers."""
-    import json as _json
     import os as _os
 
     from kaer_spark.sources.files import write_bucketed
@@ -563,11 +548,7 @@ def write_shingle_bucketed_table(
         "table": table,
         "num_buckets": int(num_buckets),
     }
-    _os.makedirs(meta_path, exist_ok=True)
-    tmp = _os.path.join(meta_path, "shingle_index.json.tmp")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(meta_path, "shingle_index.json"))
+    write_sidecar(_os.path.join(meta_path, "shingle_index.json"), meta)
     return meta
 
 
@@ -666,24 +647,9 @@ def shingle_index_stats(
         F.sum("sz").cast("long").alias("n_postings"),
         F.max("sz").cast("long").alias("max_doc_shingles"),
     )
-    # both quantile picks in one conditional-aggregate branch (r17 — see
-    # minhash_index_stats; the single consumer needs no checkpoint)
-    t50 = F.expr("(n_docs + 1) div 2")
-    t90 = F.expr("(9 * n_docs + 9) div 10")
-    sel = (
-        global_ranked(sizes, [F.col("sz").asc(), F.col("id").asc()])
-        .crossJoin(F.broadcast(szstats))
-        .filter((F.col("_rn") == t50) | (F.col("_rn") == t90))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50, F.col("sz")))
-            .cast("long")
-            .alias("p50_doc_shingles"),
-            F.max(F.when(F.col("_rn") == t90, F.col("sz")))
-            .cast("long")
-            .alias("p90_doc_shingles"),
-        )
-        .drop("_g")
+    sel = ranked_quantiles(
+        sizes, ["sz", "id"], szstats, "n_docs",
+        "p50_doc_shingles", "p90_doc_shingles",
     )
     out = szstats.crossJoin(F.broadcast(dfstats)).crossJoin(
         F.broadcast(sel)
@@ -694,11 +660,9 @@ def shingle_index_stats(
 
 
 def read_shingle_index_meta(path: str) -> dict:
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(path, "shingle_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(_os.path.join(path, "shingle_index.json"))
 
 
 def _indexed_pair_counts(spark, path: str) -> DataFrame:
@@ -1397,9 +1361,9 @@ def build_fuzzy_index(
         "text_col": text_col,
         "max_edits": int(max_edits),
         "key_len": int(key_len),
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "fuzzy_index.json", meta)
+    write_sidecar(_os.path.join(path, "fuzzy_index.json"), meta)
     return meta
 
 
@@ -1423,46 +1387,26 @@ def refresh_fuzzy_index(
     screen-and-drop callers."""
     import os as _os
 
-    spark = df.sparkSession
     meta = read_fuzzy_index_meta(path)
     icol = meta["id_col"]
     seg_dir = _os.path.join(path, "segments")
-    wm = meta.get("max_id")
-    if wm is None and "max_id" not in meta:
-        wm = read_parquet(spark, seg_dir).agg(F.max("id")).collect()[0][0]
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
-    if new_max is None:
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "fuzzy_index.json", meta)
-        return meta
-    ghost = read_parquet(spark, seg_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
-    tail = tail.join(
-        ghost.distinct().select(F.col("id").alias(icol)), [icol], "left_anti"
+    wm, tail, new_max = catch_up_tail(
+        df, path, "fuzzy_index.json", meta, seg_dir, "id", advance_to
     )
+    if new_max is None:
+        return meta
+    tail = unindexed(tail, icol, seg_dir, wm, "id")
     bounds = _fuzzy_bounds(meta["key_len"], meta["max_edits"])
     _fuzzy_segment_rows(
         _fuzzy_keyed(tail, icol, meta["text_col"], meta["key_len"]), bounds
     ).write.mode("append").parquet(seg_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "fuzzy_index.json", meta)
-    return meta
+    return flip_watermark(path, "fuzzy_index.json", meta, new_max, advance_to)
 
 
 def read_fuzzy_index_meta(path: str) -> dict:
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(path, "fuzzy_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(_os.path.join(path, "fuzzy_index.json"))
 
 
 def fuzzy_index_stats(
@@ -1514,26 +1458,9 @@ def fuzzy_index_stats(
         F.sum("bc").cast("long").alias("n_seg_rows"),
         F.max("bc").cast("long").alias("max_bucket"),
     )
-    # both quantile picks in one conditional-aggregate branch (r17 — see
-    # minhash_index_stats; the single consumer needs no checkpoint)
-    t50_b = F.expr("(n_buckets + 1) div 2")
-    t90_b = F.expr("(9 * n_buckets + 9) div 10")
-    sel_b = (
-        global_ranked(
-            buckets, [F.col("bc").asc(), F.col("i").asc(), F.col("seg").asc()]
-        )
-        .crossJoin(F.broadcast(bstats))
-        .filter((F.col("_rn") == t50_b) | (F.col("_rn") == t90_b))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_b, F.col("bc")))
-            .cast("long")
-            .alias("p50_bucket_sz"),
-            F.max(F.when(F.col("_rn") == t90_b, F.col("bc")))
-            .cast("long")
-            .alias("p90_bucket_sz"),
-        )
-        .drop("_g")
+    sel_b = ranked_quantiles(
+        buckets, ["bc", "i", "seg"], bstats, "n_buckets",
+        "p50_bucket_sz", "p90_bucket_sz",
     )
     ndocs = seg.filter(F.col("i") == 0).agg(
         F.count("*").alias("n_docs")
@@ -1969,43 +1896,10 @@ def build_minhash_index(
         "bands": int(bands),
         "seed": int(seed),
         "unit": unit,
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "minhash_index.json", meta)
+    write_sidecar(_os.path.join(path, "minhash_index.json"), meta)
     return meta
-
-
-def _json_id(v):
-    """High-water id as stored in a sidecar (the ``text_index`` rule):
-    refreshable indexes support int and string id columns ONLY — both
-    JSON-round-trip losslessly AND order-consistently, which the
-    ``id > watermark`` refresh filters depend on. Anything else (dates,
-    decimals, binary) fails LOUD at build/refresh time instead of
-    raising a TypeError from ``json.dump`` at the sidecar write (after
-    the data tables already landed) or, worse, silently re-indexing rows
-    when the JSON form orders differently than the column."""
-    if v is None:
-        return None
-    if isinstance(v, bool) or not isinstance(v, (int, str)):
-        raise TypeError(
-            "refreshable index id columns must be int or string "
-            f"(watermark comparisons ride the JSON round-trip); got "
-            f"{type(v).__name__}: {v!r}"
-        )
-    return int(v) if isinstance(v, int) else v
-
-
-def _write_index_meta(path: str, filename: str, meta: dict) -> None:
-    """Sidecar writes are tmp + ``os.replace`` (the engine-wide rule): a
-    crash mid-write never leaves truncated JSON, and the watermark flip
-    is one atomic op."""
-    import json as _json
-    import os as _os
-
-    tmp = _os.path.join(path, filename + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(path, filename))
 
 
 def refresh_minhash_index(
@@ -2044,35 +1938,18 @@ def refresh_minhash_index(
     sidecar write covering both."""
     import os as _os
 
-    spark = df.sparkSession
     meta = read_minhash_index_meta(path)
     icol = meta["id_col"]
     bands_dir = _os.path.join(path, "bands")
     sh_dir = _os.path.join(path, "shingles")
-    wm = meta.get("max_id")
-    if wm is None and "max_id" not in meta:
-        wm = read_parquet(spark, sh_dir).agg(F.max("id")).collect()[0][0]
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
+    wm, tail, new_max = catch_up_tail(
+        df, path, "minhash_index.json", meta, sh_dir, "id", advance_to
+    )
     if new_max is None:
-        # nothing above the watermark: stamp the advance_to floor AND any
-        # watermark just derived from a pre-watermark artifact — so the
-        # next no-op refresh doesn't re-pay the derivation scan
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "minhash_index.json", meta)
         return meta
     # docs whose shingles row landed are fully indexed (shingles write
     # LAST in both build and refresh) — drop them from the tail entirely
-    done = read_parquet(spark, sh_dir).select("id")
-    if wm is not None:
-        done = done.filter(F.col("id") > F.lit(wm))
-    tail = tail.join(
-        done.select(F.col("id").alias(icol)), [icol], "left_anti"
-    )
+    tail = unindexed(tail, icol, sh_dir, wm, "id")
     rows_per_band = meta["num_hashes"] // meta["bands"]
     if presigned is not None:
         # caller-owned fast path (minhash_near_dups docstring): reuse the
@@ -2091,26 +1968,19 @@ def refresh_minhash_index(
     # ghost guard for the OTHER window: bands landed, shingles did not —
     # those docs are still in the tail (no shingles row) but their band
     # rows must not land twice
-    ghost = read_parquet(spark, bands_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
-    new_bands.join(ghost.distinct(), "id", "left_anti").write.mode(
-        "append"
-    ).parquet(bands_dir)
+    unindexed(new_bands, "id", bands_dir, wm).write.mode("append").parquet(
+        bands_dir
+    )
     sig.select("id", "shingles").write.mode("append").parquet(sh_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "minhash_index.json", meta)
-    return meta
+    return flip_watermark(
+        path, "minhash_index.json", meta, new_max, advance_to
+    )
 
 
 def read_minhash_index_meta(path: str) -> dict:
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(path, "minhash_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(_os.path.join(path, "minhash_index.json"))
 
 
 def minhash_index_stats(
@@ -2169,30 +2039,9 @@ def minhash_index_stats(
         F.sum("bc").cast("long").alias("n_band_rows"),
         F.max("bc").cast("long").alias("max_bucket"),
     )
-    # BOTH quantile picks ride one branch (r17: two filter branches per
-    # ranked frame each re-ran the rank subtree into its own broadcast —
-    # a conditional aggregate selects every target rank in one pass, and
-    # with a single consumer the ranked frame needs no checkpoint);
-    # groupBy(lit) keeps the empty-input contract: no rows → no stats row
-    t50_b = F.expr("(n_buckets + 1) div 2")
-    t90_b = F.expr("(9 * n_buckets + 9) div 10")
-    sel_b = (
-        global_ranked(
-            buckets,
-            [F.col("bc").asc(), F.col("band").asc(), F.col("key").asc()],
-        )
-        .crossJoin(F.broadcast(bstats))
-        .filter((F.col("_rn") == t50_b) | (F.col("_rn") == t90_b))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_b, F.col("bc")))
-            .cast("long")
-            .alias("p50_bucket_sz"),
-            F.max(F.when(F.col("_rn") == t90_b, F.col("bc")))
-            .cast("long")
-            .alias("p90_bucket_sz"),
-        )
-        .drop("_g")
+    sel_b = ranked_quantiles(
+        buckets, ["bc", "band", "key"], bstats, "n_buckets",
+        "p50_bucket_sz", "p90_bucket_sz",
     )
     # checkpoint the narrow (id, sz) frame: THREE consumers evaluate it
     # (the count/max aggregate, global_ranked's range-boundary sample,
@@ -2206,22 +2055,9 @@ def minhash_index_stats(
         F.count("*").alias("n_docs"),
         F.max("sz").cast("long").alias("max_doc_shingles"),
     )
-    t50_s = F.expr("(n_docs + 1) div 2")
-    t90_s = F.expr("(9 * n_docs + 9) div 10")
-    sel_s = (
-        global_ranked(sizes, [F.col("sz").asc(), F.col("id").asc()])
-        .crossJoin(F.broadcast(szstats))
-        .filter((F.col("_rn") == t50_s) | (F.col("_rn") == t90_s))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_s, F.col("sz")))
-            .cast("long")
-            .alias("p50_doc_shingles"),
-            F.max(F.when(F.col("_rn") == t90_s, F.col("sz")))
-            .cast("long")
-            .alias("p90_doc_shingles"),
-        )
-        .drop("_g")
+    sel_s = ranked_quantiles(
+        sizes, ["sz", "id"], szstats, "n_docs",
+        "p50_doc_shingles", "p90_doc_shingles",
     )
     out = (
         szstats.crossJoin(F.broadcast(bstats))
@@ -2904,9 +2740,9 @@ def build_signlsh_index(
         "bands": int(bands),
         "bits_per_band": int(bits_per_band),
         "seed": int(seed),
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "signlsh_index.json", meta)
+    write_sidecar(_os.path.join(path, "signlsh_index.json"), meta)
     return meta
 
 
@@ -2973,25 +2809,14 @@ def refresh_signlsh_index(
     dropped ids are decided but never stored."""
     import os as _os
 
-    spark = df.sparkSession
     meta = read_signlsh_index_meta(path)
     icol = meta["id_col"]
     bands_dir = _os.path.join(path, "bands")
-    wm = meta.get("max_id")
-    if wm is None and "max_id" not in meta:
-        wm = read_parquet(spark, bands_dir).agg(F.max("right_id")).collect()[0][0]
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
+    wm, tail, new_max = catch_up_tail(
+        df, path, "signlsh_index.json", meta, bands_dir, "right_id",
+        advance_to,
+    )
     if new_max is None:
-        # nothing above the watermark: stamp the advance_to floor AND any
-        # watermark just derived from a pre-watermark artifact — so the
-        # next no-op refresh doesn't re-pay the derivation scan
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "signlsh_index.json", meta)
         return meta
     tail_dim = _vec_dim(tail, meta["vec_col"])
     if tail_dim != meta["dim"]:
@@ -3000,14 +2825,7 @@ def refresh_signlsh_index(
             f"the index at {path!r} was built over {meta['dim']}-dim "
             "vectors — rebuilding is the only sound operation"
         )
-    ghost = read_parquet(spark, bands_dir).select("right_id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("right_id") > F.lit(wm))
-    tail = tail.join(
-        ghost.distinct().select(F.col("right_id").alias(icol)),
-        [icol],
-        "left_anti",
-    )
+    tail = unindexed(tail, icol, bands_dir, wm, "right_id")
     all_planes = signlsh_planes(
         meta["dim"], meta["bands"] * meta["bits_per_band"], meta["seed"]
     )
@@ -3015,19 +2833,15 @@ def refresh_signlsh_index(
         tail, icol, meta["vec_col"], meta["bands"], meta["bits_per_band"],
         all_planes,
     ).write.mode("append").parquet(bands_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "signlsh_index.json", meta)
-    return meta
+    return flip_watermark(
+        path, "signlsh_index.json", meta, new_max, advance_to
+    )
 
 
 def read_signlsh_index_meta(path: str) -> dict:
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(path, "signlsh_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(_os.path.join(path, "signlsh_index.json"))
 
 
 def signlsh_index_stats(
@@ -3082,28 +2896,9 @@ def signlsh_index_stats(
         F.sum("bc").cast("long").alias("n_band_rows"),
         F.max("bc").cast("long").alias("max_bucket"),
     )
-    # both bucket quantiles in ONE branch over the ranked frame (r17 —
-    # see minhash_index_stats: per-target filter branches re-ran the rank
-    # subtree per broadcast; the single consumer also needs no checkpoint)
-    t50_b = F.expr("(n_buckets + 1) div 2")
-    t90_b = F.expr("(9 * n_buckets + 9) div 10")
-    sel_b = (
-        global_ranked(
-            buckets,
-            [F.col("bc").asc(), F.col("band").asc(), F.col("key").asc()],
-        )
-        .crossJoin(F.broadcast(bstats))
-        .filter((F.col("_rn") == t50_b) | (F.col("_rn") == t90_b))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_b, F.col("bc")))
-            .cast("long")
-            .alias("p50_bucket_sz"),
-            F.max(F.when(F.col("_rn") == t90_b, F.col("bc")))
-            .cast("long")
-            .alias("p90_bucket_sz"),
-        )
-        .drop("_g")
+    sel_b = ranked_quantiles(
+        buckets, ["bc", "band", "key"], bstats, "n_buckets",
+        "p50_bucket_sz", "p90_bucket_sz",
     )
     # one (id, norm) row per vector: every band row carries the same
     # (vr, nr), so band 0's slice IS the vector table — no distinct over
@@ -3121,14 +2916,8 @@ def signlsh_index_stats(
         F.min("nrm").alias("min_norm"),
         F.max("nrm").alias("max_norm"),
     )
-    t50_n = F.expr("(n_vecs + 1) div 2")
-    p50_n = (
-        global_ranked(norms, [F.col("nrm").asc(), F.col("id").asc()])
-        .crossJoin(F.broadcast(nstats))
-        .filter(F.col("_rn") == t50_n)
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(F.max(F.col("nrm")).alias("p50_norm"))
-        .drop("_g")
+    p50_n = ranked_quantiles(
+        norms, ["nrm", "id"], nstats, "n_vecs", "p50_norm", cast=None,
     )
     out = (
         nstats.crossJoin(F.broadcast(bstats))
@@ -4208,9 +3997,9 @@ def build_winnow_index(
         "text_col": text_col,
         "k": int(k),
         "window": int(window),
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "winnow_index.json", meta)
+    write_sidecar(_os.path.join(path, "winnow_index.json"), meta)
     return meta
 
 
@@ -4232,43 +4021,25 @@ def refresh_winnow_index(
     callers."""
     import os as _os
 
-    spark = df.sparkSession
     meta = read_winnow_index_meta(path)
     icol = meta["id_col"]
     fps_dir = _os.path.join(path, "fps")
-    wm = meta.get("max_id")
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
-    if new_max is None:
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "winnow_index.json", meta)
-        return meta
-    ghost = read_parquet(spark, fps_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
-    tail = tail.join(
-        ghost.distinct().select(F.col("id").alias(icol)), [icol], "left_anti"
+    wm, tail, new_max = catch_up_tail(
+        df, path, "winnow_index.json", meta, fps_dir, "id", advance_to
     )
+    if new_max is None:
+        return meta
+    tail = unindexed(tail, icol, fps_dir, wm, "id")
     winnow_fingerprints(
         tail, icol, meta["text_col"], meta["k"], meta["window"]
     ).write.mode("append").parquet(fps_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "winnow_index.json", meta)
-    return meta
+    return flip_watermark(path, "winnow_index.json", meta, new_max, advance_to)
 
 
 def read_winnow_index_meta(path: str) -> dict:
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(path, "winnow_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(_os.path.join(path, "winnow_index.json"))
 
 
 def winnow_index_stats(
@@ -4320,25 +4091,9 @@ def winnow_index_stats(
         F.sum("bc").cast("long").alias("n_fp_rows"),
         F.max("bc").cast("long").alias("max_bucket"),
     )
-    # both quantile picks per ranked frame ride one conditional-aggregate
-    # branch (r17 — see minhash_index_stats; single consumers need no
-    # checkpoint)
-    t50_b = F.expr("(n_distinct_fps + 1) div 2")
-    t90_b = F.expr("(9 * n_distinct_fps + 9) div 10")
-    sel_b = (
-        global_ranked(buckets, [F.col("bc").asc(), F.col("fp").asc()])
-        .crossJoin(F.broadcast(bstats))
-        .filter((F.col("_rn") == t50_b) | (F.col("_rn") == t90_b))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_b, F.col("bc")))
-            .cast("long")
-            .alias("p50_bucket_sz"),
-            F.max(F.when(F.col("_rn") == t90_b, F.col("bc")))
-            .cast("long")
-            .alias("p90_bucket_sz"),
-        )
-        .drop("_g")
+    sel_b = ranked_quantiles(
+        buckets, ["bc", "fp"], bstats, "n_distinct_fps",
+        "p50_bucket_sz", "p90_bucket_sz",
     )
     sizes = fps.groupBy("id").agg(F.count("*").alias("sz")).localCheckpoint(
         eager=False
@@ -4347,22 +4102,8 @@ def winnow_index_stats(
         F.count("*").alias("n_docs"),
         F.max("sz").cast("long").alias("max_doc_fps"),
     )
-    t50_s = F.expr("(n_docs + 1) div 2")
-    t90_s = F.expr("(9 * n_docs + 9) div 10")
-    sel_s = (
-        global_ranked(sizes, [F.col("sz").asc(), F.col("id").asc()])
-        .crossJoin(F.broadcast(szstats))
-        .filter((F.col("_rn") == t50_s) | (F.col("_rn") == t90_s))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_s, F.col("sz")))
-            .cast("long")
-            .alias("p50_doc_fps"),
-            F.max(F.when(F.col("_rn") == t90_s, F.col("sz")))
-            .cast("long")
-            .alias("p90_doc_fps"),
-        )
-        .drop("_g")
+    sel_s = ranked_quantiles(
+        sizes, ["sz", "id"], szstats, "n_docs", "p50_doc_fps", "p90_doc_fps",
     )
     out = (
         szstats.crossJoin(F.broadcast(bstats))

@@ -28,7 +28,6 @@ clustering makes a file-pruned scan).
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Sequence
 
@@ -40,40 +39,17 @@ from kaer_spark.functions.vector import (
     double_nested_lit,
     l2sq,
 )
-from kaer_spark.sources.files import read_parquet
+from kaer_spark.operators.util import (
+    catch_up_tail,
+    flip_watermark,
+    group_ranked_quantiles,
+    unindexed,
+    watermark_health_cols,
+)
+from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
 
 META_FILE = "index.json"
 DATA_DIR = "data"
-
-
-def _write_meta_atomic(path: str, filename: str, meta: dict) -> None:
-    """Sidecar meta writes are tmp + ``os.replace`` (the
-    ``Collection._save_meta`` pattern): a crash mid-write can never leave
-    a truncated JSON, and the watermark flip is a single atomic op."""
-    os.makedirs(path, exist_ok=True)
-    target = os.path.join(path, filename)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, target)
-
-
-def _refresh_replay_guard(tail: DataFrame, path: str, meta: dict) -> DataFrame:
-    """Make a replayed catch-up harmless: a crash AFTER a successful tail
-    append but BEFORE the meta watermark update leaves rows on disk with
-    ``id > meta.max_id``; re-encoding the same tail would duplicate ids in
-    the index table (and in served top-k). Anti-join the tail against the
-    ids already present above the watermark — an id-column-only,
-    predicate-pushed scan of the index table, not the corpus — so the
-    replay appends exactly the missing rows (usually none)."""
-    id_col = meta["id_col"]
-    spark = tail.sparkSession
-    existing = (
-        read_parquet(spark, os.path.join(path, DATA_DIR))
-        .select(id_col)
-        .filter(F.col(id_col) > meta["max_id"])
-    )
-    return tail.join(existing, [id_col], "left_anti")
 
 
 def _assign_cells(
@@ -150,31 +126,30 @@ def build_ivf_index(
         "max_id": int(max_id) if max_id is not None else -1,
         "centroids": centroids,
     }
-    _write_meta_atomic(path, META_FILE, meta)
+    write_sidecar(os.path.join(path, META_FILE), meta)
     return meta
 
 
 def read_index_meta(path: str) -> dict:
-    with open(os.path.join(path, META_FILE)) as f:
-        return json.load(f)
+    return read_sidecar(os.path.join(path, META_FILE))
 
 
 def refresh_ivf_index(corpus: DataFrame, path: str) -> dict:
     """Catch-up (reference O8, ``updateIndexFromLastId``): append vectors
-    with ``id > meta.max_id`` to their cells using the stored centroids."""
+    with ``id > meta.max_id`` to their cells using the stored centroids.
+    A replay after a crash between the append and the watermark flip
+    appends nothing twice (``util.unindexed``)."""
     meta = read_index_meta(path)
-    tail = corpus.filter(F.col(meta["id_col"]) > meta["max_id"])
-    new_max = tail.agg(F.max(meta["id_col"])).collect()[0][0]
-    if new_max is None:
-        return meta  # nothing to replay
-    tail = _refresh_replay_guard(tail, path, meta)
-    assigned = _assign_cells(tail, meta["centroids"], meta["vec_col"])
-    assigned.write.mode("append").partitionBy("_cell").parquet(
-        os.path.join(path, DATA_DIR)
+    data_dir = os.path.join(path, DATA_DIR)
+    wm, tail, new_max = catch_up_tail(
+        corpus, path, META_FILE, meta, data_dir, meta["id_col"]
     )
-    meta["max_id"] = int(new_max)
-    _write_meta_atomic(path, META_FILE, meta)
-    return meta
+    if new_max is None:
+        return meta
+    tail = unindexed(tail, meta["id_col"], data_dir, wm)
+    assigned = _assign_cells(tail, meta["centroids"], meta["vec_col"])
+    assigned.write.mode("append").partitionBy("_cell").parquet(data_dir)
+    return flip_watermark(path, META_FILE, meta, new_max)
 
 
 def write_ivf_bucketed_table(
@@ -221,7 +196,7 @@ def write_ivf_bucketed_table(
         "table": table,
         "centroids": centroids,
     }
-    _write_meta_atomic(meta_path, META_FILE, meta)
+    write_sidecar(os.path.join(meta_path, META_FILE), meta)
     return meta
 
 
@@ -490,13 +465,12 @@ def build_pq_index(
     }
     if extra_meta:
         meta.update(extra_meta)
-    _write_meta_atomic(path, PQ_META_FILE, meta)
+    write_sidecar(os.path.join(path, PQ_META_FILE), meta)
     return meta
 
 
 def read_pq_meta(path: str) -> dict:
-    with open(os.path.join(path, PQ_META_FILE)) as f:
-        return json.load(f)
+    return read_sidecar(os.path.join(path, PQ_META_FILE))
 
 
 def refresh_pq_index(corpus: DataFrame, path: str) -> dict:
@@ -508,18 +482,19 @@ def refresh_pq_index(corpus: DataFrame, path: str) -> dict:
     argmin for ``deterministic``, numpy for ``kmeans``), so a refreshed
     index is row-identical to a from-scratch build over the union.
     Incremental, and idempotent against BOTH failure directions: the meta
-    watermark flips atomically (tmp + ``os.replace``), and a replayed
+    watermark flips atomically (``util.flip_watermark``), and a replayed
     refresh after a crash-between-append-and-meta anti-joins away the ids
-    already on disk (``_refresh_replay_guard``) instead of re-appending
-    them."""
+    already on disk (``util.unindexed``) instead of re-appending them."""
     from kaer_spark.operators import similarity as S
 
     meta = read_pq_meta(path)
-    tail = corpus.filter(F.col(meta["id_col"]) > meta["max_id"])
-    new_max = tail.agg(F.max(meta["id_col"])).collect()[0][0]
+    data_dir = os.path.join(path, DATA_DIR)
+    wm, tail, new_max = catch_up_tail(
+        corpus, path, PQ_META_FILE, meta, data_dir, meta["id_col"]
+    )
     if new_max is None:
-        return meta  # nothing to replay
-    tail = _refresh_replay_guard(tail, path, meta)
+        return meta
+    tail = unindexed(tail, meta["id_col"], data_dir, wm)
     if meta["fit"] == "deterministic":
         encoded = S.pq_encode_deterministic(
             tail, meta["codebooks"], meta["vec_col"]
@@ -535,10 +510,8 @@ def refresh_pq_index(corpus: DataFrame, path: str) -> dict:
     writer = encoded.select(*cols).write.mode("append")
     if meta["cells"] is not None:
         writer = writer.partitionBy("_cell")
-    writer.parquet(os.path.join(path, DATA_DIR))
-    meta["max_id"] = int(new_max)
-    _write_meta_atomic(path, PQ_META_FILE, meta)
-    return meta
+    writer.parquet(data_dir)
+    return flip_watermark(path, PQ_META_FILE, meta, new_max)
 
 
 def pq_index_topk(
@@ -839,8 +812,6 @@ def ivf_index_stats(
     describe the data — probed recall is decaying). Compare against a
     SNAPSHOT of this report taken at build time; the report is cheap
     enough to run per refresh."""
-    from pyspark.sql.window import Window
-
     meta = read_index_meta(path)
     data = read_parquet(spark, os.path.join(path, DATA_DIR))
     cents = double_matrix_lit(meta["centroids"])
@@ -848,43 +819,18 @@ def ivf_index_stats(
         meta["vec_col"],
         F.element_at(cents, F.col("_cell").cast("int") + F.lit(1)),
     )
-    ranked = (
+    per_cell = group_ranked_quantiles(
         data.select(
             F.col("_cell").cast("int").alias("cell"),
             F.col(meta["id_col"]).alias("_id"),
             resid.alias("_resid"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("cell").orderBy(
-                    F.col("_resid").asc(), F.col("_id").asc()
-                )
-            ),
-        )
-        .localCheckpoint(eager=False)  # three consumers below
+        ),
+        "cell", "_resid", "_id",
+        "n_vectors", "max_resid", "p50_resid", "p90_resid",
     )
-    counts = ranked.groupBy("cell").agg(
-        F.count("*").alias("n_vectors"), F.max("_resid").alias("max_resid")
-    )
-    marks = counts.select(
-        "cell",
-        "n_vectors",
-        "max_resid",
-        F.expr("(n_vectors + 1) div 2").alias("_r50"),
-        F.expr("(9 * n_vectors + 9) div 10").alias("_r90"),
-    )
-    p50 = ranked.join(
-        marks.select("cell", F.col("_r50").alias("_rn")), ["cell", "_rn"]
-    ).select("cell", F.col("_resid").alias("p50_resid"))
-    p90 = ranked.join(
-        marks.select("cell", F.col("_r90").alias("_rn")), ["cell", "_rn"]
-    ).select("cell", F.col("_resid").alias("p90_resid"))
-    tot = counts.agg(F.sum("n_vectors").alias("_tot"))
+    tot = per_cell.agg(F.sum("n_vectors").alias("_tot"))
     out = (
-        marks.join(p50, "cell")
-        .join(p90, "cell")
-        .crossJoin(F.broadcast(tot))
+        per_cell.crossJoin(F.broadcast(tot))
         .withColumn(
             "size_frac", F.col("n_vectors").cast("double") / F.col("_tot")
         )
@@ -894,14 +840,9 @@ def ivf_index_stats(
             / F.col("_tot"),
         )
         .withColumn("oversized", F.col("skew") > F.lit(2.0))
-        .withColumn("watermark", F.lit(int(meta["max_id"])).cast("long"))
+        .drop("_tot")
     )
-    if corpus is not None:
-        live_max = corpus.agg(F.max(meta["id_col"])).collect()[0][0]
-        lag = int(live_max) - int(meta["max_id"]) if live_max is not None else 0
-        out = out.withColumn("watermark_lag", F.lit(lag).cast("long"))
-    drop = ["_r50", "_r90", "_tot"]
-    return out.drop(*drop)
+    return watermark_health_cols(out, meta["max_id"], corpus, meta["id_col"])
 
 
 def pq_index_stats(
@@ -938,8 +879,6 @@ def pq_index_stats(
     no-cells table ranks in ONE group — a global sort, fine for the
     no-cells layout's intended size but the wrong tool at 100 TB (where
     the code table should be cell-partitioned anyway, and is)."""
-    from pyspark.sql.window import Window
-
     meta = read_pq_meta(path)
     icol = corpus_id_col or meta["id_col"]
     vcol = corpus_vec_col or meta["vec_col"]
@@ -966,44 +905,13 @@ def pq_index_stats(
         if meta.get("cells") is not None
         else F.lit(-1).cast("int")
     )
-    ranked = (
+    per_cell = group_ranked_quantiles(
         joined.select(
             cell.alias("cell"),
             F.col(meta["id_col"]).alias("_id"),
             err.alias("_err"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("cell").orderBy(
-                    F.col("_err").asc(), F.col("_id").asc()
-                )
-            ),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "cell", "_err", "_id",
+        "n_codes", "max_err", "p50_err", "p90_err",
     )
-    counts = ranked.groupBy("cell").agg(
-        F.count("*").alias("n_codes"), F.max("_err").alias("max_err")
-    )
-    marks = counts.select(
-        "cell",
-        "n_codes",
-        "max_err",
-        F.expr("(n_codes + 1) div 2").alias("_r50"),
-        F.expr("(9 * n_codes + 9) div 10").alias("_r90"),
-    )
-    p50 = ranked.join(
-        marks.select("cell", F.col("_r50").alias("_rn")), ["cell", "_rn"]
-    ).select("cell", F.col("_err").alias("p50_err"))
-    p90 = ranked.join(
-        marks.select("cell", F.col("_r90").alias("_rn")), ["cell", "_rn"]
-    ).select("cell", F.col("_err").alias("p90_err"))
-    live_max = corpus.agg(F.max(F.col(icol))).collect()[0][0]
-    lag = int(live_max) - int(meta["max_id"]) if live_max is not None else 0
-    return (
-        marks.join(p50, "cell")
-        .join(p90, "cell")
-        .withColumn("watermark", F.lit(int(meta["max_id"])).cast("long"))
-        .withColumn("watermark_lag", F.lit(lag).cast("long"))
-        .drop("_r50", "_r90")
-    )
+    return watermark_health_cols(per_cell, meta["max_id"], corpus, icol)

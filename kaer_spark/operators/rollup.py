@@ -28,7 +28,6 @@ DECIMAL accumulation for cross-engine determinism.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Mapping, Sequence
 
@@ -37,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kaer_spark.functions.time import NS_PER_DAY, NS_PER_SECOND, normalize_epoch_ns
-from kaer_spark.sources.files import read_parquet
+from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
 
 SPEC_FILE = "_rollup_spec.json"
 
@@ -118,10 +117,7 @@ def materialize_rollup(
         "lateness_ns": int(lateness_ns),
         "high_water_ns": int(high_water),
     }
-    tmp = os.path.join(path, SPEC_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(spec, f, indent=2)
-    os.replace(tmp, os.path.join(path, SPEC_FILE))
+    write_sidecar(os.path.join(path, SPEC_FILE), spec)
     return spec
 
 
@@ -133,8 +129,7 @@ def refresh_rollup(df: DataFrame, path: str) -> dict:
     overwrite so touched days are replaced atomically per-directory and
     untouched history is never rewritten — idempotent under retry.
     """
-    with open(os.path.join(path, SPEC_FILE)) as f:
-        spec = json.load(f)
+    spec = read_sidecar(os.path.join(path, SPEC_FILE))
     ts_col = spec["ts_col"]
     df = normalize_epoch_ns(df, ts_col)
     refresh_from = max(0, spec["high_water_ns"] - spec["lateness_ns"])
@@ -151,10 +146,7 @@ def refresh_rollup(df: DataFrame, path: str) -> dict:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     high_water = df.agg(F.max(F.col(ts_col).cast("long"))).collect()[0][0] or 0
     spec["high_water_ns"] = int(max(high_water, spec["high_water_ns"]))
-    tmp = os.path.join(path, SPEC_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(spec, f, indent=2)
-    os.replace(tmp, os.path.join(path, SPEC_FILE))
+    write_sidecar(os.path.join(path, SPEC_FILE), spec)
     return spec
 
 

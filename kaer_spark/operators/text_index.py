@@ -38,22 +38,24 @@ index is derived data; rebuild is one pass).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kaer_spark.functions.fphash import HASH_BASE, HASH_MOD
 from kaer_spark.functions.text import tokens
 from kaer_spark.operators.util import (
+    above_watermark,
     ensure_parallelism,
-    global_ranked,
+    flip_watermark,
+    json_id,
+    ranked_quantiles,
+    unindexed,
     watermark_health_cols,
 )
-from kaer_spark.sources.files import read_parquet
+from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
 
 META_FILE = "index.json"
 POSTINGS_DIR = "postings"
@@ -167,39 +169,14 @@ def build_text_index(
         "sum_dl": int(stats["sumdl"] or 0),
         # any orderable, JSON-serializable id type works (ints stay ints;
         # string ids round-trip as-is for the refresh high-water filter)
-        "max_id": _json_id(stats["maxid"]),
+        "max_id": json_id(stats["maxid"]),
         "n_buckets": int(n_buckets),
         "id_col": id_col,
         "text_col": text_col,
         "positional": True,
     }
-    _write_meta(path, meta)
+    write_sidecar(os.path.join(path, META_FILE), meta)
     return meta
-
-
-def _json_id(v):
-    """High-water id as stored in the sidecar: int and string id columns
-    ONLY (both JSON-round-trip losslessly AND order-consistently, which
-    the ``id > watermark`` refresh filter depends on) — anything else
-    fails loud HERE, at build/refresh time, instead of as json.dump's
-    TypeError at the sidecar write after the data tables landed (the
-    same rule as dedup's refreshable indexes)."""
-    if v is None:
-        return None
-    if isinstance(v, bool) or not isinstance(v, (int, str)):
-        raise TypeError(
-            "refreshable index id columns must be int or string "
-            f"(watermark comparisons ride the JSON round-trip); got "
-            f"{type(v).__name__}: {v!r}"
-        )
-    return int(v) if isinstance(v, int) else v
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, META_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, META_FILE))
 
 
 def refresh_text_index(df: DataFrame, path: str) -> dict:
@@ -226,14 +203,11 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     they are always current."""
     meta = read_text_index_meta(path)
     id_col, text_col = meta["id_col"], meta["text_col"]
+    wm = meta["max_id"]
     # max_id None = nothing indexed yet: index the whole DataFrame rather
     # than comparing against a numeric sentinel (which fails or silently
     # casts for non-numeric id columns build_text_index accepts)
-    tail = (
-        df
-        if meta["max_id"] is None
-        else df.filter(F.col(id_col) > meta["max_id"])
-    )
+    tail = above_watermark(df, id_col, wm)
     # Replay guard: doc-length rows with id above the watermark are docs a
     # crashed refresh already appended but never accounted — exclude them
     # from the tail (no duplicate postings) and fold their (n, dl) back
@@ -241,10 +215,9 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     acc_n, acc_sumdl, acc_maxid = 0, 0, None
     doclens_dir = os.path.join(path, DOCLENS_DIR)
     if os.path.isdir(doclens_dir):
-        already = read_parquet(df.sparkSession, doclens_dir)
-        if meta["max_id"] is not None:
-            already = already.filter(F.col("id") > meta["max_id"])
-        acc = already.agg(
+        acc = above_watermark(
+            read_parquet(df.sparkSession, doclens_dir), "id", wm
+        ).agg(
             F.count("*").alias("n"),
             F.sum("dl").alias("sumdl"),
             F.max("id").alias("maxid"),
@@ -252,11 +225,7 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
         if acc["n"]:
             acc_n, acc_sumdl = int(acc["n"]), int(acc["sumdl"] or 0)
             acc_maxid = acc["maxid"]
-            tail = tail.join(
-                already.select(F.col("id").alias(id_col)),
-                [id_col],
-                "left_anti",
-            )
+            tail = unindexed(tail, id_col, doclens_dir, wm, "id")
     toks = tail.select(
         F.col(id_col).alias("id"),
         F.transform(tokens(text_col), F.lower).alias("__toks"),
@@ -270,12 +239,13 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     ).collect()[0]
     if not stats["n"] and not acc_n:
         return meta  # nothing to replay
+    meta["n_docs"] += int(stats["n"]) + acc_n
+    meta["sum_dl"] += int(stats["sumdl"] or 0) + acc_sumdl
+    new_max = stats["maxid"]
+    if acc_maxid is not None and (new_max is None or acc_maxid > new_max):
+        new_max = acc_maxid
     if not stats["n"]:  # pure replay: everything already on disk — heal meta
-        meta["n_docs"] += acc_n
-        meta["sum_dl"] += acc_sumdl
-        meta["max_id"] = _json_id(acc_maxid)
-        _write_meta(path, meta)
-        return meta
+        return flip_watermark(path, META_FILE, meta, new_max)
     aggs = [F.count("*").cast("long").alias("tf")]
     if meta.get("positional"):
         aggs.append(
@@ -291,19 +261,8 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     # still flow through `toks`. In the no-crash case the filtered read
     # returns zero rows (row-group stats prune at id > watermark) and the
     # anti-join is a no-op.
-    toks_postings = toks
     postings_dir = os.path.join(path, POSTINGS_DIR)
-    if os.path.isdir(postings_dir):
-        try:
-            ghost = read_parquet(df.sparkSession, postings_dir).select("id")
-        except AnalysisException:
-            # a build over zero rows writes a partitioned dir with no part
-            # files (partitions are data-driven) — nothing to guard against
-            ghost = None
-        if ghost is not None:
-            if meta["max_id"] is not None:
-                ghost = ghost.filter(F.col("id") > meta["max_id"])
-            toks_postings = toks.join(ghost.distinct(), "id", "left_anti")
+    toks_postings = unindexed(toks, "id", postings_dir, wm)
     # an index built before the positional layout keeps appending the
     # (term, id, tf) shape it was built with — mixed parquet schemas in
     # one postings dir would make reads schema-dependent on file order
@@ -316,20 +275,11 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
             F.pmod(_term_hash_col(F.col("term")), F.lit(meta["n_buckets"])),
         )
     )
-    postings.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(path, POSTINGS_DIR)
-    )
+    postings.write.mode("append").partitionBy("bucket").parquet(postings_dir)
     toks.select("id", F.size("__toks").cast("long").alias("dl")).write.mode(
         "append"
-    ).parquet(os.path.join(path, DOCLENS_DIR))
-    meta["n_docs"] += int(stats["n"]) + acc_n
-    meta["sum_dl"] += int(stats["sumdl"] or 0) + acc_sumdl
-    new_max = stats["maxid"]
-    if acc_maxid is not None and (new_max is None or acc_maxid > new_max):
-        new_max = acc_maxid
-    meta["max_id"] = _json_id(new_max)
-    _write_meta(path, meta)
-    return meta
+    ).parquet(doclens_dir)
+    return flip_watermark(path, META_FILE, meta, new_max)
 
 
 def text_index_stats(
@@ -380,45 +330,14 @@ def text_index_stats(
         F.sum("df").cast("long").alias("n_postings"),
         F.max("df").cast("long").alias("max_df"),
     )
-    # both quantile picks per ranked frame ride one conditional-aggregate
-    # branch (r17 — see dedup.minhash_index_stats; the single consumers
-    # need no checkpoint)
-    t50_df = F.expr("(n_terms + 1) div 2")
-    t90_df = F.expr("(9 * n_terms + 9) div 10")
-    sel_df = (
-        global_ranked(tdf, [F.col("df").asc(), F.col("term").asc()])
-        .crossJoin(F.broadcast(dfstats))
-        .filter((F.col("_rn") == t50_df) | (F.col("_rn") == t90_df))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_df, F.col("df")))
-            .cast("long")
-            .alias("p50_df"),
-            F.max(F.when(F.col("_rn") == t90_df, F.col("df")))
-            .cast("long")
-            .alias("p90_df"),
-        )
-        .drop("_g")
+    sel_df = ranked_quantiles(
+        tdf, ["df", "term"], dfstats, "n_terms", "p50_df", "p90_df",
     )
     dlstats = doclens.agg(
         F.count("*").alias("n_docs"), F.max("dl").cast("long").alias("max_dl")
     )
-    t50_dl = F.expr("(n_docs + 1) div 2")
-    t90_dl = F.expr("(9 * n_docs + 9) div 10")
-    sel_dl = (
-        global_ranked(doclens, [F.col("dl").asc(), F.col("id").asc()])
-        .crossJoin(F.broadcast(dlstats))
-        .filter((F.col("_rn") == t50_dl) | (F.col("_rn") == t90_dl))
-        .groupBy(F.lit(True).alias("_g"))
-        .agg(
-            F.max(F.when(F.col("_rn") == t50_dl, F.col("dl")))
-            .cast("long")
-            .alias("p50_dl"),
-            F.max(F.when(F.col("_rn") == t90_dl, F.col("dl")))
-            .cast("long")
-            .alias("p90_dl"),
-        )
-        .drop("_g")
+    sel_dl = ranked_quantiles(
+        doclens, ["dl", "id"], dlstats, "n_docs", "p50_dl", "p90_dl",
     )
     bmax = (
         postings.groupBy("bucket")
@@ -445,8 +364,7 @@ def text_index_stats(
 
 
 def read_text_index_meta(path: str) -> dict:
-    with open(os.path.join(path, META_FILE)) as f:
-        return json.load(f)
+    return read_sidecar(os.path.join(path, META_FILE))
 
 
 def search_text_index(

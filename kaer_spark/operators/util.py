@@ -2,7 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
+from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from kaer_spark.sources.files import read_parquet, write_sidecar
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -36,7 +43,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 def watermark_health_cols(out: DataFrame, wm, corpus, corpus_id_col: str):
     """Staleness columns for an index-stats report, typed by the id
     column's own domain (refreshable indexes bless int AND string ids —
-    ``dedup._json_id`` — so a stats surface that ``int()``-coerces the
+    :func:`json_id` — so a stats surface that ``int()``-coerces the
     watermark raises on every string-keyed index, and ``CAST(<string> AS
     long)`` silently nulls the watermark column).
 
@@ -49,8 +56,6 @@ def watermark_health_cols(out: DataFrame, wm, corpus, corpus_id_col: str):
       ValueError — the comparison would be meaningless.
 
     ``corpus=None`` emits only the watermark column."""
-    from pyspark.sql import functions as F
-
     is_int_wm = wm is None or isinstance(wm, int)
     if is_int_wm:
         out = out.withColumn("watermark", F.lit(wm).cast("long"))
@@ -75,6 +80,122 @@ def watermark_health_cols(out: DataFrame, wm, corpus, corpus_id_col: str):
         f"{corpus_id_col!r} ({type(live_max).__name__}) live in different "
         "domains — staleness comparison would be meaningless"
     )
+
+
+# ---------------------------------------------------------------------------
+# the refresh side of the watermark contract — reference O8
+# (``updateIndexFromLastId``, ``db/db.go:191-207``) for every standing index
+# ---------------------------------------------------------------------------
+def json_id(v):
+    """High-water id as stored in a sidecar. Refreshable indexes support
+    int and string id columns ONLY: both JSON-round-trip losslessly AND
+    order-consistently, which the ``id > watermark`` refresh filters
+    depend on. Anything else (dates, decimals, binary) fails loud at
+    build/refresh time instead of raising from ``json.dump`` at the
+    sidecar write after the data tables landed, or, worse, silently
+    re-indexing rows when the JSON form orders differently than the
+    column."""
+    if v is None:
+        return None
+    if isinstance(v, bool) or not isinstance(v, (int, str)):
+        raise TypeError(
+            "refreshable index id columns must be int or string "
+            f"(watermark comparisons ride the JSON round-trip); got "
+            f"{type(v).__name__}: {v!r}"
+        )
+    return int(v) if isinstance(v, int) else v
+
+
+def above_watermark(df: DataFrame, id_col: str, wm) -> DataFrame:
+    """Rows of ``df`` with ``id_col > wm``; all of ``df`` when nothing is
+    indexed yet (``wm`` None)."""
+    return df if wm is None else df.filter(F.col(id_col) > F.lit(wm))
+
+
+def floor_watermark(wm, advance_to):
+    """``wm`` raised to ``advance_to``. Screen-and-drop callers
+    (``streaming.ingest``) pass ``advance_to``: a dropped doc's id is
+    decided but never stored, and if the watermark only covered stored
+    ids a replayed batch whose max id was dropped would look like an
+    out-of-order arrival."""
+    if advance_to is not None and (wm is None or advance_to > wm):
+        return advance_to
+    return wm
+
+
+def catch_up_tail(
+    df: DataFrame,
+    path: str,
+    meta_file: str,
+    meta: dict,
+    table_dir: str,
+    table_id_col: str,
+    advance_to=None,
+):
+    """Open a refresh: ``(wm, tail, new_max)`` for the rows of ``df`` above
+    the sidecar watermark ``meta["max_id"]``.
+
+    * Derive-once: a sidecar written before ``max_id`` was stamped derives
+      the watermark from the max ``table_id_col`` of the index table at
+      ``table_dir``, and the flip (or the no-op stamp) records it, so the
+      next refresh does not pay the derivation scan again.
+    * No-op: when nothing is above the watermark, ``new_max`` is None and
+      the sidecar is restamped only if the ``advance_to`` floor or a
+      derived watermark changes it.
+    The caller guards ``tail`` against a crashed earlier run with
+    :func:`unindexed`, appends, then calls :func:`flip_watermark`."""
+    wm = meta.get("max_id")
+    if "max_id" not in meta:
+        wm = (
+            read_parquet(df.sparkSession, table_dir)
+            .agg(F.max(table_id_col))
+            .collect()[0][0]
+        )
+    tail = above_watermark(df, meta["id_col"], wm)
+    new_max = json_id(tail.agg(F.max(F.col(meta["id_col"]))).collect()[0][0])
+    if new_max is None:
+        stamp = json_id(floor_watermark(wm, advance_to))
+        if "max_id" not in meta or meta["max_id"] != stamp:
+            meta["max_id"] = stamp
+            write_sidecar(os.path.join(path, meta_file), meta)
+    return wm, tail, new_max
+
+
+def unindexed(
+    df: DataFrame,
+    id_col: str,
+    table_dir: str,
+    wm,
+    table_id_col: str | None = None,
+) -> DataFrame:
+    """The replay guard: rows of ``df`` whose ``id_col`` is not already in
+    the index table at ``table_dir`` above the watermark. A crash after an
+    append but before the watermark flip leaves rows on disk with ids
+    above ``wm``; the replay anti-joins them away instead of appending
+    them twice. The scan reads only the id column above the watermark
+    (predicate-pushed), never the corpus. A table with no data files (a
+    partitioned build over zero rows) has nothing to guard against."""
+    table_id_col = table_id_col or id_col
+    try:
+        have = read_parquet(df.sparkSession, table_dir)
+    except AnalysisException:
+        return df
+    have = above_watermark(
+        have.select(F.col(table_id_col).alias(id_col)), id_col, wm
+    )
+    return df.join(have, [id_col], "left_anti")
+
+
+def flip_watermark(
+    path: str, meta_file: str, meta: dict, new_max, advance_to=None
+) -> dict:
+    """Close a refresh: advance ``meta["max_id"]`` to ``new_max`` (floored
+    by ``advance_to``) in one atomic sidecar write. The flip comes after
+    every append, so a crash before it leaves the old watermark and a
+    replay that :func:`unindexed` makes harmless."""
+    meta["max_id"] = json_id(floor_watermark(new_max, advance_to))
+    write_sidecar(os.path.join(path, meta_file), meta)
+    return meta
 
 
 def global_ranked(df: DataFrame, order_cols: list, rank_col: str = "_rn") -> DataFrame:
@@ -115,9 +236,6 @@ def global_ranked(df: DataFrame, order_cols: list, rank_col: str = "_rn") -> Dat
     index (deterministic given deterministic input — every call site
     ranks parquet-derived frames). A non-deterministic input (e.g. fresh
     ``rand()`` keys) is outside this function's contract."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     spark = df.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     part = (
@@ -146,4 +264,91 @@ def global_ranked(df: DataFrame, order_cols: list, rank_col: str = "_rn") -> Dat
             (F.row_number().over(w) + F.col("_gr_off")).cast("long"),
         )
         .drop("_gr_pid", "_gr_off")
+    )
+
+
+def ranked_quantiles(
+    df: DataFrame,
+    order: list[str],
+    stats: DataFrame,
+    n_col: str,
+    p50: str,
+    p90: str | None = None,
+    cast: str | None = "long",
+) -> DataFrame:
+    """One row holding the type-1 rank quantiles of column ``order[0]`` over
+    ``df``: ``p50`` at rank ``ceil(n/2)`` and, when named, ``p90`` at rank
+    ``ceil(0.9 n)``, where ``n`` is the ``n_col`` column of the one-row
+    ``stats`` frame. Ranks come from :func:`global_ranked` under the
+    ascending ``order`` (later columns break ties), so the pick is pure
+    selection and replays bit-exactly. Every pick rides one conditional
+    aggregate over the ranked frame (r17: a filter branch per target
+    re-ran the rank subtree into its own broadcast); with that single
+    consumer the ranked frame needs no checkpoint. ``groupBy(lit)`` keeps
+    the empty-input contract: no rows in, no row out."""
+    rn = F.col("_rn")
+    picks = [(F.expr(f"({n_col} + 1) div 2"), p50)]
+    if p90 is not None:
+        picks.append((F.expr(f"(9 * {n_col} + 9) div 10"), p90))
+    hit = rn == picks[0][0]
+    for t, _ in picks[1:]:
+        hit = hit | (rn == t)
+    aggs = []
+    for t, name in picks:
+        v = F.max(F.when(rn == t, F.col(order[0])))
+        aggs.append((v.cast(cast) if cast else v).alias(name))
+    return (
+        global_ranked(df, [F.col(c).asc() for c in order])
+        .crossJoin(F.broadcast(stats))
+        .filter(hit)
+        .groupBy(F.lit(True).alias("_g"))
+        .agg(*aggs)
+        .drop("_g")
+    )
+
+
+def group_ranked_quantiles(
+    rows: DataFrame,
+    group: str,
+    value: str,
+    tiebreak: str,
+    n_name: str,
+    max_name: str,
+    p50: str,
+    p90: str,
+) -> DataFrame:
+    """The per-group twin of :func:`ranked_quantiles`: one row per
+    non-empty ``group`` value with its row count ``n_name``, the max of
+    ``value`` as ``max_name``, and the type-1 rank quantiles ``p50`` /
+    ``p90`` of ``value`` (ties broken by ``tiebreak``). The rank is a
+    window inside each group, so the sort is group-bounded; the ranked
+    frame is checkpointed because the count and both rank joins read
+    it."""
+    w = Window.partitionBy(group).orderBy(
+        F.col(value).asc(), F.col(tiebreak).asc()
+    )
+    ranked = rows.withColumn("_rn", F.row_number().over(w)).localCheckpoint(
+        eager=False
+    )
+    marks = (
+        ranked.groupBy(group)
+        .agg(F.count("*").alias(n_name), F.max(value).alias(max_name))
+        .select(
+            group,
+            n_name,
+            max_name,
+            F.expr(f"({n_name} + 1) div 2").alias("_r50"),
+            F.expr(f"(9 * {n_name} + 9) div 10").alias("_r90"),
+        )
+    )
+
+    def at(mark: str, name: str) -> DataFrame:
+        return ranked.join(
+            marks.select(group, F.col(mark).alias("_rn")), [group, "_rn"]
+        ).select(group, F.col(value).alias(name))
+
+    return (
+        marks.join(at("_r50", p50), group)
+        .join(at("_r90", p90), group)
+        .drop("_r50", "_r90")
     )

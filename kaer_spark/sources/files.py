@@ -12,7 +12,17 @@ engine's connector surface. Rules every reader here follows:
   (``coalesce``) when asked — the classic many-small-files failure mode is
   an explicit parameter, not an accident;
 * :func:`read_parquet` is the engine's only parquet reader, and it infers a
-  table's schema at most once per session (the schema memo below).
+  table's schema at most once per session (the schema memo below);
+* :func:`write_sidecar` is the engine's one atomic-flip path for a local JSON
+  sidecar (index watermarks, rollup specs, the collection catalog and its
+  swap manifest), and :func:`read_sidecar` its reader.
+
+Sidecar flip. ``write_sidecar`` writes a tmp file beside the target, flushes
+and fsyncs it, then renames it over the target with ``os.replace``. A
+reader sees the old sidecar or the new one, never a part of one, and after
+a power loss the renamed file holds its full bytes instead of being
+empty. A stranded ``<name>.tmp`` is the only trace a crash can leave. The
+JSON is compact (no indentation).
 
 Schema memo. Inferring a parquet schema is one Spark job (a footer read,
 merged across files under ``mergeSchema``) on every read. A catalog-backed
@@ -50,6 +60,7 @@ Delta/Iceberg/Hudi need jars not present in this environment; see
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 from collections import OrderedDict
@@ -143,6 +154,24 @@ def read_parquet(
                 if len(_schema_memo) > _SCHEMA_MEMO_MAX:
                     _schema_memo.popitem(last=False)
     return df.select(*columns) if columns else df
+
+
+def read_sidecar(path: str):
+    """Load the JSON sidecar at ``path`` (written by :func:`write_sidecar`)."""
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_sidecar(path: str, obj) -> None:
+    """Flip the JSON sidecar at ``path`` to ``obj`` atomically and durably
+    (see the module docstring). Creates the parent directory."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def read_csv(

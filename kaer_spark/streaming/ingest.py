@@ -584,9 +584,9 @@ def stream_neardup_ingest(
     restoring the contract by construction — see
     :func:`neardup_ingest_batch`.
 
-    Placement contract: ``index_path`` must be DRIVER-LOCAL — the
-    sidecar discipline is ``open()`` + ``os.replace`` (the engine-wide
-    atomic-flip convention). ``out_dir`` and ``checkpoint_dir`` may live
+    Placement contract: ``index_path`` must be DRIVER-LOCAL — its
+    sidecar flips through ``sources.files.write_sidecar`` (a local tmp
+    file + ``os.replace``, the engine-wide atomic flip). ``out_dir`` and ``checkpoint_dir`` may live
     on any Hadoop-supported filesystem: epoch-partition existence is
     checked through the Hadoop FileSystem API against the ``_SUCCESS``
     commit marker, never ``os.path``.

@@ -2113,7 +2113,7 @@ def test_shingle_index_stats_report(spark, tmp_path):
 
 
 def test_shingle_index_stats_string_ids(spark):
-    """ADVICE r16: stats over a STRING-keyed index (blessed by _json_id)
+    """ADVICE r16: stats over a STRING-keyed index (blessed by json_id)
     must not int()-coerce the watermark — it reports the watermark in
     the id column's own type and staleness as an ordering boolean
     instead of a numeric lag."""
@@ -2516,6 +2516,8 @@ def test_winnow_index_family_contract(spark, tmp_path):
     replayed refresh is a no-op (crash idempotency), blank-tail
     refreshes still advance the watermark, and the against-index serve
     equals the from-text cross call."""
+    import os
+
     from kaer_spark.operators.dedup import (
         build_winnow_index,
         read_winnow_index_meta,
@@ -2524,6 +2526,7 @@ def test_winnow_index_family_contract(spark, tmp_path):
         winnow_overlap_against_index,
         winnow_overlap_between,
     )
+    from kaer_spark.sources.files import write_sidecar
 
     docs = spark.createDataFrame(
         [(i, f"shared long passage about spark catalyst rules {i % 4} "
@@ -2538,12 +2541,21 @@ def test_winnow_index_family_contract(spark, tmp_path):
     )
     path = str(tmp_path / "wnidx")
     build_winnow_index(docs.filter("doc_id < 6"), path, k=16, window=4)
+    built = read_winnow_index_meta(path)
     refresh_winnow_index(docs, path)
     full = str(tmp_path / "wnfull")
     build_winnow_index(docs, full, k=16, window=4)
     rows = lambda p: sorted(  # noqa: E731
         map(tuple, spark.read.parquet(f"{p}/fps").collect())
     )
+    assert rows(path) == rows(full)
+    assert read_winnow_index_meta(path)["max_id"] == 9
+
+    # crash window: the fps append landed but the sidecar flip did not —
+    # the sidecar rewound to its pre-refresh state must not make the
+    # replay append the tail twice
+    write_sidecar(os.path.join(path, "winnow_index.json"), built)
+    refresh_winnow_index(docs, path)
     assert rows(path) == rows(full)
     assert read_winnow_index_meta(path)["max_id"] == 9
 

@@ -810,3 +810,52 @@ def test_pq_index_stats_reconstruction_error(spark, tmp_path):
     assert abs(r["p90_err"] - 0.01) < 1e-15         # rank ceil(3.6)=4
     assert abs(r["max_err"] - 0.01) < 1e-15
     assert r["watermark"] == 3 and r["watermark_lag"] == 47
+
+
+def test_watermark_protocol_stamp_derive_once_and_replay(spark, tmp_path):
+    """The shared refresh protocol of every standing index
+    (``operators.util``), driven on a one-column id table. A sidecar
+    wound back after an append (the crash before the flip) makes the
+    replay append only the rows that never landed; a no-op refresh
+    stamps the ``advance_to`` floor; and a sidecar without ``max_id``
+    derives its watermark from the table once and stamps it."""
+    import os
+
+    import pandas as pd
+
+    from kaer_spark.operators.util import (
+        catch_up_tail,
+        flip_watermark,
+        unindexed,
+    )
+    from kaer_spark.sources.files import read_sidecar, write_sidecar
+
+    path = str(tmp_path / "idx")
+    table = os.path.join(path, "ids")
+    sidecar = os.path.join(path, "idx.json")
+    # from pandas: a local relation, so each protocol step is one cheap job
+    docs = spark.createDataFrame(pd.DataFrame({"id": range(7)}))
+
+    # a refresh up to id 5 appended 4 and 5, then crashed before its flip;
+    # id 3 was decided by an earlier advance_to floor and never stored
+    docs.filter("id != 3 AND id < 6").write.parquet(table)
+    write_sidecar(sidecar, {"id_col": "id", "max_id": 3})
+    meta = read_sidecar(sidecar)
+    wm, tail, new_max = catch_up_tail(docs, path, "idx.json", meta, table, "id")
+    assert (wm, new_max) == (3, 6)
+    assert [r[0] for r in unindexed(tail, "id", table, wm).collect()] == [6]
+    flip_watermark(path, "idx.json", meta, new_max)
+    assert read_sidecar(sidecar)["max_id"] == 6
+
+    meta = read_sidecar(sidecar)
+    _, _, new_max = catch_up_tail(
+        docs, path, "idx.json", meta, table, "id", advance_to=9
+    )
+    assert new_max is None and read_sidecar(sidecar)["max_id"] == 9
+
+    write_sidecar(sidecar, {"id_col": "id"})
+    _, _, new_max = catch_up_tail(
+        docs.filter("id < 6"), path, "idx.json", {"id_col": "id"}, table, "id"
+    )
+    assert new_max is None
+    assert read_sidecar(sidecar) == {"id_col": "id", "max_id": 5}

@@ -335,3 +335,62 @@ def test_engine_reads_parquet_only_through_read_parquet():
                     if "read.parquet(" in line or '"mergeSchema"' in line:
                         offenders.append(f"{os.path.relpath(full, pkg)}:{i}")
     assert offenders == []
+
+
+def test_sidecars_flip_only_through_write_sidecar():
+    """``sources.files.write_sidecar`` is the engine's one atomic-flip path for
+    a JSON sidecar: no other code in the package may ``json.dump`` or
+    ``os.replace`` itself. ``streaming.ingest._fs_write_json`` is exempt —
+    it writes through the Hadoop filesystem client, not ``os``."""
+    import ast
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "kaer_spark")
+    exempt = {
+        os.path.join(pkg, "sources", "files.py"): "write_sidecar",
+        os.path.join(pkg, "streaming", "ingest.py"): "_fs_write_json",
+    }
+    pat = re.compile(r"json\.dump\(|os\.replace\(")
+    offenders = []
+    for root, _dirs, names in os.walk(pkg):
+        for n in names:
+            full = os.path.join(root, n)
+            if not n.endswith(".py"):
+                continue
+            with open(full, encoding="utf-8") as f:
+                src = f.read()
+            allowed = set()
+            for node in ast.walk(ast.parse(src)):
+                if isinstance(node, ast.FunctionDef) and node.name == exempt.get(full):
+                    allowed.update(range(node.lineno, node.end_lineno + 1))
+            for i, line in enumerate(src.splitlines(), 1):
+                if pat.search(line) and i not in allowed:
+                    offenders.append(f"{os.path.relpath(full, pkg)}:{i}")
+    assert offenders == []
+
+
+def test_write_sidecar_fsyncs_before_the_flip(tmp_path, monkeypatch):
+    """The sidecar flip is durable: the tmp file is fsynced before
+    ``os.replace`` renames it over the target, so a power loss cannot
+    leave an empty sidecar behind the rename."""
+    import json
+
+    from kaer_spark.sources import files
+
+    calls = []
+    real_fsync, real_replace = os.fsync, os.replace
+    monkeypatch.setattr(
+        files.os, "fsync", lambda fd: calls.append("fsync") or real_fsync(fd)
+    )
+    monkeypatch.setattr(
+        files.os, "replace",
+        lambda a, b: calls.append("replace") or real_replace(a, b),
+    )
+    target = str(tmp_path / "idx" / "index.json")
+    files.write_sidecar(target, {"max_id": 7})
+    assert calls == ["fsync", "replace"]
+    assert files.read_sidecar(target) == {"max_id": 7}
+    with open(target) as f:
+        assert json.load(f) == {"max_id": 7}
+    assert os.listdir(tmp_path / "idx") == ["index.json"]
