@@ -1393,3 +1393,86 @@ def test_delete_rebuilds_pq_index(ctx):
     # and the health report stays consistent
     lag = coll.index_health()["pq"].collect()[0]["watermark_lag"]
     assert lag == 0
+
+
+def test_every_index_family_rides_the_collection_lifecycle(ctx, tmp_path):
+    """All eight standing-index families through one lifecycle, each
+    step a loop over ``INDEX_FAMILIES``: an insert leaves every health
+    report at zero lag, a snapshot carries every family, a partial delete
+    rebuilds each under identical sidecar geometry, and a delete-all
+    clears every flag and directory."""
+    import os
+
+    from kaer_spark.context import INDEX_FAMILIES
+
+    def geometries(c):
+        return {
+            f.key: f.geometry(f.read_meta(f.dir_in(c.path)), 10)
+            for f in INDEX_FAMILIES
+        }
+
+    coll = ctx.create_collection("families")
+    coll.insert(
+        [f"family doc {i} about catalyst rules" for i in range(8)],
+        [{"k": i} for i in range(8)],
+    )
+    coll.build_index(cells=2, fit="deterministic")
+    coll.build_text_index(n_buckets=2)
+    coll.build_pq_index(m=4, k=2)
+    coll.build_minhash_index(n=3, num_hashes=4, bands=2)
+    coll.build_signlsh_index(bands=2, bits_per_band=2)
+    coll.build_shingle_index(n=3)
+    coll.build_fuzzy_index(max_edits=1, key_len=4)
+    coll.build_winnow_index(k=4, window=2)
+    stats = coll.stats()
+    assert all(stats[f.flag] for f in INDEX_FAMILIES)
+
+    coll.insert(
+        [f"family doc {i} about catalyst rules" for i in (8, 9)],
+        [{"k": 8}, {"k": 9}],
+    )
+    health = coll.index_health()
+    assert set(health) == {f.key for f in INDEX_FAMILIES}
+    lags = {
+        key: {r[0] for r in df.select("watermark_lag").collect()}
+        for key, df in health.items()
+    }
+    assert lags == {f.key: {0} for f in INDEX_FAMILIES}
+
+    snap = coll.export_to(str(tmp_path / "snap"))
+    twin = KaerContext(ctx.spark, str(tmp_path / "kaer2")).import_collection(
+        "restored", snap
+    )
+    for f in INDEX_FAMILIES:
+        assert twin.meta[f.flag] and os.path.isdir(f.dir_in(twin.path))
+    assert geometries(twin) == geometries(coll)
+
+    before = geometries(coll)
+    assert coll.delete({"k": 0}) == 1
+    assert geometries(coll) == before
+    for f in INDEX_FAMILIES:
+        assert f.read_meta(f.dir_in(coll.path))["max_id"] == 9
+
+    assert coll.delete({"k": {"$gte": 0}}) == 9
+    reopened = KaerContext(ctx.spark, ctx.root).get_collection("families")
+    for c in (coll, reopened):
+        assert not c.meta["has_data"]
+        for f in INDEX_FAMILIES:
+            assert not c.meta[f.flag]
+            assert not os.path.isdir(f.dir_in(c.path))
+
+
+def test_deduplicate_against_checks_arguments_on_empty_collections(ctx):
+    """Method and threshold are checked before the empty-collection
+    shortcut, and every method that reads no threshold rejects one."""
+    a = ctx.create_collection("empty_a")
+    b = ctx.create_collection("empty_b")
+    with pytest.raises(ValueError, match="method must be"):
+        a.deduplicate_against(b, method="nope")
+    for method in ("fuzzy", "ngram", "bloom"):
+        with pytest.raises(ValueError, match="takes no threshold"):
+            a.deduplicate_against(b, method=method, threshold=0.5)
+    for method in ("minhash", "embedding", "jaccard", "winnow"):
+        assert a.deduplicate_against(b, method=method, threshold=0.5) == 0
+    for method in ("fuzzy", "ngram", "bloom"):
+        assert a.deduplicate_against(b, method=method) == 0

@@ -282,3 +282,33 @@ def test_every_index_family_has_refresh_and_stats():
         if not callable(getattr(mod, f"{stem}_index_stats", None)):
             missing.append(f"{modname}.{stem}_index_stats")
     assert not missing, missing
+
+
+def test_every_exported_index_family_has_a_table_row():
+    """Every build_*_index that dedup, index_store and text_index export
+    has a row in ``context.INDEX_FAMILIES`` — the table every Collection
+    lifecycle point loops over — and every callable a row holds is the
+    binding its module exports under that name, which is what the
+    Collection resolves at call time."""
+    import importlib
+
+    from kaer_spark.context import INDEX_FAMILIES
+
+    exported = set()
+    for modname in (
+        "kaer_spark.operators.dedup",
+        "kaer_spark.operators.index_store",
+        "kaer_spark.operators.text_index",
+    ):
+        mod = importlib.import_module(modname)
+        for name in dir(mod):
+            if name.startswith("build_") and name.endswith("_index"):
+                fn = getattr(mod, name)
+                exported.add((fn.__module__, fn.__name__))
+    rows = {(f.build.__module__, f.build.__name__) for f in INDEX_FAMILIES}
+    assert len(exported) == 8 and exported <= rows, exported - rows
+    for f in INDEX_FAMILIES:
+        for fn in (f.build, f.refresh, f.stats, f.read_meta, f.against,
+                   f.between):
+            if fn is not None:
+                assert getattr(sys.modules[fn.__module__], fn.__name__) is fn

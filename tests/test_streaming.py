@@ -168,7 +168,7 @@ def test_stream_insert_dense_ids(spark, tmp_path):
 
 
 def test_stream_insert_keeps_index_current(spark, tmp_path):
-    """refresh_index=True: the materialized IVF index catches up after each
+    """The materialized IVF index catches up after each
     micro-batch (the streaming form of the reference's inline
     HNSW-add-on-insert) — index row count and max_id track the collection."""
     from kaer_spark.operators.index_store import read_index_meta
@@ -189,7 +189,7 @@ def test_stream_insert_keeps_index_current(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    q = stream_insert(coll, stream, str(tmp_path / "ckpt_idx"), refresh_index=True)
+    q = stream_insert(coll, stream, str(tmp_path / "ckpt_idx"))
     q.processAllAvailable()
     q.stop()
 
@@ -666,7 +666,7 @@ def test_stream_insert_keeps_pq_index_current(spark, tmp_path):
     )
     q = stream_insert(
         coll, stream, str(tmp_path / "ckpt_pq"),
-        refresh_index=True, text_index_path=tix,
+        text_index_path=tix,
         pq_index_path=coll.pq_index_path,
     )
     q.processAllAvailable()
@@ -692,6 +692,50 @@ def test_stream_insert_keeps_pq_index_current(spark, tmp_path):
         for r in spark.read.parquet(f"{twin}/data").collect()
     }
     assert streamed == batch and len(streamed) == 26
+
+
+def test_stream_insert_refreshes_each_owned_index_once(
+    spark, tmp_path, monkeypatch
+):
+    """One micro-batch into a collection owning IVF and PQ, with
+    ``pq_index_path`` naming the collection's own PQ directory: the
+    insert already catches up every owned family, so each refresh runs
+    exactly once — a second pass would be a no-op that still fires the
+    tail-max job."""
+    from kaer_spark.operators import index_store
+    from kaer_spark.operators.index_store import read_index_meta, read_pq_meta
+
+    calls = []
+    for name in ("refresh_ivf_index", "refresh_pq_index"):
+        def counted(df, path, _real=getattr(index_store, name), _name=name):
+            calls.append(_name)
+            return _real(df, path)
+
+        monkeypatch.setattr(index_store, name, counted)
+
+    src = tmp_path / "src"
+    os.makedirs(src)
+    ctx = KaerContext(spark, str(tmp_path / "kaer"))
+    coll = ctx.create_collection("once")
+    coll.insert([f"seed doc {i}" for i in range(8)])
+    coll.build_index(cells=2, fit="deterministic")
+    coll.build_pq_index(m=4, k=2)
+
+    schema = "batch INT, _m_doc STRING"
+    spark.createDataFrame(
+        [(0, f"late doc {i}") for i in range(3)], schema
+    ).write.parquet(f"{src}/b0")
+    stream = spark.readStream.schema(schema).parquet(f"{src}/*")
+    q = stream_insert(
+        coll, stream, str(tmp_path / "ckpt_once"),
+        pq_index_path=coll.pq_index_path,
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    assert sorted(calls) == ["refresh_ivf_index", "refresh_pq_index"]
+    assert read_index_meta(coll.index_path)["max_id"] == 10
+    assert read_pq_meta(coll.pq_index_path)["max_id"] == 10
 
 
 def test_stream_neardup_ingest_end_to_end(spark, tmp_path):
