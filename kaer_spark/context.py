@@ -243,7 +243,7 @@ class IndexFamily:
     dirname: str  # directory under the collection root
     column: Mapping[str, str]  # the indexed column, as the operators name it
     build: Callable[..., dict]
-    refresh: Callable[[DataFrame, str], dict]
+    refresh: Callable[..., dict]  # (corpus, dir, *, batch=None)
     stats: Callable[..., DataFrame]
     read_meta: Callable[[str], dict]
     # (sidecar, rows kept by a rewrite) -> the build kwargs it rebuilds with
@@ -501,6 +501,20 @@ class Collection:
         if EMB_COL not in df.columns:
             provider = self.ctx.provider_for(self.meta)
             df = embed_column(df, text_col, provider, EMB_COL)
+        else:
+            # a caller-supplied vector of the wrong dimension (or a null)
+            # would sort first in every query as a null distance; fail the
+            # write job instead, which commits no file
+            dim = int(self.meta["dim"])
+            vec = F.col(EMB_COL)
+            df = df.withColumn(
+                EMB_COL,
+                F.when(F.size(vec) == dim, vec).otherwise(
+                    F.raise_error(
+                        F.lit(f"{EMB_COL} must be a non-null {dim}-dim vector")
+                    )
+                ),
+            )
         df.write.mode("append").parquet(self.data_path)
         self.meta["next_id"] = next_id + batch_n
         self.meta["has_data"] = True
@@ -517,11 +531,14 @@ class Collection:
         self.meta["schema"] = json.dumps(T.StructType(merged).jsonValue())
         self._save_meta()
         # the reference adds every inserted vector to its index inline
-        # (db/db.go:87-89); here each owned family catches up with an
-        # id-range append job
+        # (db/db.go:87-89); here each owned family catches up from the id
+        # range just written. No refresh has seen an id >= next_id, so a
+        # family whose watermark is next_id - 1 appends that range with no
+        # max() job and no replay guard; any other family takes the full
+        # catch-up (operators.util.open_refresh)
         for fam in INDEX_FAMILIES:
             if self.meta.get(fam.flag):
-                self._refresh(fam)
+                self._refresh(fam, batch=(next_id, next_id + batch_n))
         return next_id
 
     # -- index artifact (reference O7/O8/O10/O14, db/db.go:102-109,176-207)
@@ -534,8 +551,10 @@ class Collection:
         self._save_meta()
         return meta
 
-    def _refresh(self, fam: IndexFamily) -> dict:
-        return _live(fam.refresh)(self.df(), fam.dir_in(self.path))
+    def _refresh(self, fam: IndexFamily, batch=None) -> dict:
+        return _live(fam.refresh)(
+            self.df(), fam.dir_in(self.path), batch=batch
+        )
 
     def build_index(
         self, cells: int = 16, seed: int = 42, fit: str = "kmeans"

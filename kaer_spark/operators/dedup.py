@@ -49,13 +49,12 @@ from kaer_spark.functions.text import char_shingles, tokens, word_shingles
 from kaer_spark.functions.vector import cached_expr, dot, vector_norm
 from kaer_spark.operators.util import (
     above_watermark,
-    catch_up_tail,
     ensure_parallelism,
     flip_watermark,
     floor_watermark,
     json_id,
+    open_refresh,
     ranked_quantiles,
-    unindexed,
     watermark_health_cols,
 )
 from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
@@ -376,6 +375,8 @@ def refresh_shingle_index(
     df: DataFrame,
     path: str,
     advance_to=None,
+    *,
+    batch=None,
 ) -> dict:
     """Catch-up for the at-rest shingle inverted index — reference O8
     (``updateIndexFromLastId``, ``db/db.go:191-207``) for the LAST
@@ -411,7 +412,8 @@ def refresh_shingle_index(
     screen-and-drop callers (``streaming.ingest.neardup_ingest_batch``):
     a dropped doc's id is decided but never stored. Ids must be int or
     string (enforced at build by :func:`~kaer_spark.operators.util.json_id`) and append-only above
-    the watermark."""
+    the watermark. ``batch`` is the id range an insert just wrote
+    (:func:`~kaer_spark.operators.util.open_refresh`)."""
     import os as _os
     import shutil as _shutil
 
@@ -427,14 +429,15 @@ def refresh_shingle_index(
     icol = meta["id_col"]
     post_dir = _os.path.join(path, "postings")
     sizes_dir = _os.path.join(path, "sizes")
-    wm, tail, new_max = catch_up_tail(
-        df, path, "shingle_index.json", meta, sizes_dir, "id", advance_to
+    wm, tail, new_max, guard = open_refresh(
+        df, path, "shingle_index.json", meta, sizes_dir, "id", advance_to,
+        batch,
     )
     if new_max is None:
         return meta
     # docs whose sizes row landed are fully indexed (sizes write LAST
     # among the per-id tables) — drop them from the tail entirely
-    tail = unindexed(tail, icol, sizes_dir, wm, "id")
+    tail = guard(tail, icol, sizes_dir, "id")
     sh = (
         ensure_parallelism(tail)
         .select(
@@ -447,8 +450,8 @@ def refresh_shingle_index(
         .localCheckpoint(eager=False)
     )
     # ghost guard for the postings-landed/sizes-missing window
-    unindexed(
-        sh.select("id", F.explode("shingles").alias("g")), "id", post_dir, wm
+    guard(
+        sh.select("id", F.explode("shingles").alias("g")), "id", post_dir
     ).write.mode("append").parquet(post_dir)
     sh.select("id", F.size("shingles").alias("sz")).write.mode(
         "append"
@@ -1371,6 +1374,8 @@ def refresh_fuzzy_index(
     df: DataFrame,
     path: str,
     advance_to=None,
+    *,
+    batch=None,
 ) -> dict:
     """Catch-up for the at-rest fuzzy (PassJoin) reference index — the
     edit-distance member of the engine-wide O8 rule
@@ -1384,18 +1389,19 @@ def refresh_fuzzy_index(
     excluded by :func:`_fuzzy_keyed` exactly as at build, but still
     advance the watermark (``max_id`` covers the full batch — the
     minhash-index discipline). ``advance_to`` floors the flip for
-    screen-and-drop callers."""
+    screen-and-drop callers. ``batch`` is the id range an insert just
+    wrote (:func:`~kaer_spark.operators.util.open_refresh`)."""
     import os as _os
 
     meta = read_fuzzy_index_meta(path)
     icol = meta["id_col"]
     seg_dir = _os.path.join(path, "segments")
-    wm, tail, new_max = catch_up_tail(
-        df, path, "fuzzy_index.json", meta, seg_dir, "id", advance_to
+    _, tail, new_max, guard = open_refresh(
+        df, path, "fuzzy_index.json", meta, seg_dir, "id", advance_to, batch
     )
     if new_max is None:
         return meta
-    tail = unindexed(tail, icol, seg_dir, wm, "id")
+    tail = guard(tail, icol, seg_dir, "id")
     bounds = _fuzzy_bounds(meta["key_len"], meta["max_edits"])
     _fuzzy_segment_rows(
         _fuzzy_keyed(tail, icol, meta["text_col"], meta["key_len"]), bounds
@@ -1907,6 +1913,8 @@ def refresh_minhash_index(
     path: str,
     advance_to=None,
     presigned: DataFrame | None = None,
+    *,
+    batch=None,
 ) -> dict:
     """Catch-up for the at-rest MinHash reference index — reference O8
     (``updateIndexFromLastId``, ``db/db.go:191-207``) applied to the
@@ -1935,21 +1943,26 @@ def refresh_minhash_index(
     dropped doc's id is decided but never stored, and if the watermark
     only covered stored ids a replayed batch whose max id was dropped
     would look like an out-of-order arrival. The flip stays one atomic
-    sidecar write covering both."""
+    sidecar write covering both.
+
+    ``batch`` (keyword-only) is the id range ``[lo, hi)`` an insert just
+    wrote. With the watermark at ``lo - 1`` no ghost rows can be on disk,
+    so both guards are skipped and the range gives the new watermark
+    (:func:`~kaer_spark.operators.util.open_refresh`)."""
     import os as _os
 
     meta = read_minhash_index_meta(path)
     icol = meta["id_col"]
     bands_dir = _os.path.join(path, "bands")
     sh_dir = _os.path.join(path, "shingles")
-    wm, tail, new_max = catch_up_tail(
-        df, path, "minhash_index.json", meta, sh_dir, "id", advance_to
+    _, tail, new_max, guard = open_refresh(
+        df, path, "minhash_index.json", meta, sh_dir, "id", advance_to, batch
     )
     if new_max is None:
         return meta
     # docs whose shingles row landed are fully indexed (shingles write
     # LAST in both build and refresh) — drop them from the tail entirely
-    tail = unindexed(tail, icol, sh_dir, wm, "id")
+    tail = guard(tail, icol, sh_dir, "id")
     rows_per_band = meta["num_hashes"] // meta["bands"]
     if presigned is not None:
         # caller-owned fast path (minhash_near_dups docstring): reuse the
@@ -1968,7 +1981,7 @@ def refresh_minhash_index(
     # ghost guard for the OTHER window: bands landed, shingles did not —
     # those docs are still in the tail (no shingles row) but their band
     # rows must not land twice
-    unindexed(new_bands, "id", bands_dir, wm).write.mode("append").parquet(
+    guard(new_bands, "id", bands_dir).write.mode("append").parquet(
         bands_dir
     )
     sig.select("id", "shingles").write.mode("append").parquet(sh_dir)
@@ -2790,6 +2803,8 @@ def refresh_signlsh_index(
     df: DataFrame,
     path: str,
     advance_to=None,
+    *,
+    batch=None,
 ) -> dict:
     """Catch-up for the at-rest sign-LSH reference index — the embedding
     twin of :func:`refresh_minhash_index` (reference O8,
@@ -2806,15 +2821,16 @@ def refresh_signlsh_index(
     the watermark from the stored table once, then stamp it.
     ``advance_to`` floors the flipped watermark, exactly as in
     :func:`refresh_minhash_index` — for screen-and-drop callers whose
-    dropped ids are decided but never stored."""
+    dropped ids are decided but never stored. ``batch`` is the id range
+    an insert just wrote (:func:`~kaer_spark.operators.util.open_refresh`)."""
     import os as _os
 
     meta = read_signlsh_index_meta(path)
     icol = meta["id_col"]
     bands_dir = _os.path.join(path, "bands")
-    wm, tail, new_max = catch_up_tail(
+    _, tail, new_max, guard = open_refresh(
         df, path, "signlsh_index.json", meta, bands_dir, "right_id",
-        advance_to,
+        advance_to, batch,
     )
     if new_max is None:
         return meta
@@ -2825,7 +2841,7 @@ def refresh_signlsh_index(
             f"the index at {path!r} was built over {meta['dim']}-dim "
             "vectors — rebuilding is the only sound operation"
         )
-    tail = unindexed(tail, icol, bands_dir, wm, "right_id")
+    tail = guard(tail, icol, bands_dir, "right_id")
     all_planes = signlsh_planes(
         meta["dim"], meta["bands"] * meta["bits_per_band"], meta["seed"]
     )
@@ -4007,6 +4023,8 @@ def refresh_winnow_index(
     df: DataFrame,
     path: str,
     advance_to=None,
+    *,
+    batch=None,
 ) -> dict:
     """Catch-up for the at-rest winnow reference index — the MOSS member
     of the engine-wide O8 rule: documents with ``id > meta.max_id`` are
@@ -4018,18 +4036,19 @@ def refresh_winnow_index(
     scan). Sub-``k``-char docs select nothing but still advance the
     watermark (``max_id`` covers the full batch — the family-wide
     discipline). ``advance_to`` floors the flip for screen-and-drop
-    callers."""
+    callers. ``batch`` is the id range an insert just wrote
+    (:func:`~kaer_spark.operators.util.open_refresh`)."""
     import os as _os
 
     meta = read_winnow_index_meta(path)
     icol = meta["id_col"]
     fps_dir = _os.path.join(path, "fps")
-    wm, tail, new_max = catch_up_tail(
-        df, path, "winnow_index.json", meta, fps_dir, "id", advance_to
+    _, tail, new_max, guard = open_refresh(
+        df, path, "winnow_index.json", meta, fps_dir, "id", advance_to, batch
     )
     if new_max is None:
         return meta
-    tail = unindexed(tail, icol, fps_dir, wm, "id")
+    tail = guard(tail, icol, fps_dir, "id")
     winnow_fingerprints(
         tail, icol, meta["text_col"], meta["k"], meta["window"]
     ).write.mode("append").parquet(fps_dir)

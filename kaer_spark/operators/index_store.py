@@ -40,10 +40,9 @@ from kaer_spark.functions.vector import (
     l2sq,
 )
 from kaer_spark.operators.util import (
-    catch_up_tail,
     flip_watermark,
     group_ranked_quantiles,
-    unindexed,
+    open_refresh,
     watermark_health_cols,
 )
 from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
@@ -134,19 +133,20 @@ def read_index_meta(path: str) -> dict:
     return read_sidecar(os.path.join(path, META_FILE))
 
 
-def refresh_ivf_index(corpus: DataFrame, path: str) -> dict:
+def refresh_ivf_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     """Catch-up (reference O8, ``updateIndexFromLastId``): append vectors
     with ``id > meta.max_id`` to their cells using the stored centroids.
     A replay after a crash between the append and the watermark flip
-    appends nothing twice (``util.unindexed``)."""
+    appends nothing twice (``util.unindexed``). ``batch`` is the id range
+    an insert just wrote (``util.open_refresh``)."""
     meta = read_index_meta(path)
     data_dir = os.path.join(path, DATA_DIR)
-    wm, tail, new_max = catch_up_tail(
-        corpus, path, META_FILE, meta, data_dir, meta["id_col"]
+    _, tail, new_max, guard = open_refresh(
+        corpus, path, META_FILE, meta, data_dir, meta["id_col"], batch=batch
     )
     if new_max is None:
         return meta
-    tail = unindexed(tail, meta["id_col"], data_dir, wm)
+    tail = guard(tail, meta["id_col"], data_dir)
     assigned = _assign_cells(tail, meta["centroids"], meta["vec_col"])
     assigned.write.mode("append").partitionBy("_cell").parquet(data_dir)
     return flip_watermark(path, META_FILE, meta, new_max)
@@ -473,7 +473,7 @@ def read_pq_meta(path: str) -> dict:
     return read_sidecar(os.path.join(path, PQ_META_FILE))
 
 
-def refresh_pq_index(corpus: DataFrame, path: str) -> dict:
+def refresh_pq_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     """Catch-up (reference O8, ``updateIndexFromLastId`` — the PQ twin of
     :func:`refresh_ivf_index`): encode vectors with ``id > meta.max_id``
     under the STORED codebooks (and stored coarse centroids, if any) and
@@ -484,17 +484,19 @@ def refresh_pq_index(corpus: DataFrame, path: str) -> dict:
     Incremental, and idempotent against BOTH failure directions: the meta
     watermark flips atomically (``util.flip_watermark``), and a replayed
     refresh after a crash-between-append-and-meta anti-joins away the ids
-    already on disk (``util.unindexed``) instead of re-appending them."""
+    already on disk (``util.unindexed``) instead of re-appending them.
+    ``batch`` is the id range an insert just wrote (``util.open_refresh``)."""
     from kaer_spark.operators import similarity as S
 
     meta = read_pq_meta(path)
     data_dir = os.path.join(path, DATA_DIR)
-    wm, tail, new_max = catch_up_tail(
-        corpus, path, PQ_META_FILE, meta, data_dir, meta["id_col"]
+    _, tail, new_max, guard = open_refresh(
+        corpus, path, PQ_META_FILE, meta, data_dir, meta["id_col"],
+        batch=batch,
     )
     if new_max is None:
         return meta
-    tail = unindexed(tail, meta["id_col"], data_dir, wm)
+    tail = guard(tail, meta["id_col"], data_dir)
     if meta["fit"] == "deterministic":
         encoded = S.pq_encode_deterministic(
             tail, meta["codebooks"], meta["vec_col"]

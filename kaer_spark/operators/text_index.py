@@ -48,6 +48,7 @@ from kaer_spark.functions.fphash import HASH_BASE, HASH_MOD
 from kaer_spark.functions.text import tokens
 from kaer_spark.operators.util import (
     above_watermark,
+    batch_tail,
     ensure_parallelism,
     flip_watermark,
     json_id,
@@ -179,7 +180,7 @@ def build_text_index(
     return meta
 
 
-def refresh_text_index(df: DataFrame, path: str) -> dict:
+def refresh_text_index(df: DataFrame, path: str, *, batch=None) -> dict:
     """Catch-up (the text twin of ``index_store.refresh_ivf_index``,
     reference O8's ``updateIndexFromLastId``): index only documents with
     ``id > meta.max_id`` — postings and doc lengths APPEND (each new doc
@@ -200,21 +201,29 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     their stats (the re-derived rows are deterministic: same tokenizer,
     same text). Per-term document frequencies need no maintenance at all
     — search derives them from the pruned postings at query time, so
-    they are always current."""
+    they are always current.
+
+    ``batch`` (keyword-only) is the id range an insert just wrote. On the
+    clean path (:func:`~kaer_spark.operators.util.batch_tail`) nothing
+    above the watermark is on disk, so both replay guards are skipped."""
     meta = read_text_index_meta(path)
     id_col, text_col = meta["id_col"], meta["text_col"]
     wm = meta["max_id"]
-    # max_id None = nothing indexed yet: index the whole DataFrame rather
-    # than comparing against a numeric sentinel (which fails or silently
-    # casts for non-numeric id columns build_text_index accepts)
-    tail = above_watermark(df, id_col, wm)
+    tail = batch_tail(df, meta, batch)
+    clean = tail is not None
+    if not clean:
+        # max_id None = nothing indexed yet: index the whole DataFrame
+        # rather than comparing against a numeric sentinel (which fails or
+        # silently casts for non-numeric id columns build_text_index
+        # accepts)
+        tail = above_watermark(df, id_col, wm)
     # Replay guard: doc-length rows with id above the watermark are docs a
     # crashed refresh already appended but never accounted — exclude them
     # from the tail (no duplicate postings) and fold their (n, dl) back
     # into the stats increment (heals the understated n_docs/sum_dl).
     acc_n, acc_sumdl, acc_maxid = 0, 0, None
     doclens_dir = os.path.join(path, DOCLENS_DIR)
-    if os.path.isdir(doclens_dir):
+    if not clean and os.path.isdir(doclens_dir):
         acc = above_watermark(
             read_parquet(df.sparkSession, doclens_dir), "id", wm
         ).agg(
@@ -262,7 +271,7 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     # returns zero rows (row-group stats prune at id > watermark) and the
     # anti-join is a no-op.
     postings_dir = os.path.join(path, POSTINGS_DIR)
-    toks_postings = unindexed(toks, "id", postings_dir, wm)
+    toks_postings = toks if clean else unindexed(toks, "id", postings_dir, wm)
     # an index built before the positional layout keeps appending the
     # (term, id, tf) shape it was built with — mixed parquet schemas in
     # one postings dir would make reads schema-dependent on file order

@@ -123,6 +123,55 @@ def floor_watermark(wm, advance_to):
     return wm
 
 
+def batch_tail(df: DataFrame, meta: dict, batch) -> DataFrame | None:
+    """The one clean/lagging decision of the watermark protocol.
+
+    ``batch`` is the id range ``[lo, hi)`` an insert just wrote, after it
+    saved its cursor ``next_id = hi``; no refresh can have seen an id
+    ``>= lo``. When the sidecar watermark is exactly ``lo - 1`` (clean),
+    the tail is the rows of ``df`` in ``[lo, hi)`` and nothing above the
+    watermark can be on disk. Any other state (no ``batch``, no stamped
+    ``max_id``, a crash between an append and its flip, a rewrite that
+    deleted the top ids, an ``advance_to`` floor) is lagging: None, and
+    the caller takes the full path."""
+    if batch is None or meta.get("max_id") != batch[0] - 1:
+        return None
+    ids = F.col(meta["id_col"])
+    return df.filter((ids >= F.lit(batch[0])) & (ids < F.lit(batch[1])))
+
+
+def open_refresh(
+    df: DataFrame,
+    path: str,
+    meta_file: str,
+    meta: dict,
+    table_dir: str,
+    table_id_col: str,
+    advance_to=None,
+    batch=None,
+):
+    """Open a refresh: ``(wm, tail, new_max, guard)``.
+
+    * Clean (:func:`batch_tail`): the batch range is the tail and
+      ``hi - 1`` the new watermark, so no ``max()`` job runs, and
+      ``guard`` is the identity.
+    * Lagging: :func:`catch_up_tail`, and ``guard(frame, id_col,
+      table_dir, table_id_col=None)`` is :func:`unindexed` above ``wm``.
+    The caller guards each append with ``guard``, then calls
+    :func:`flip_watermark` when ``new_max`` is not None."""
+    tail = batch_tail(df, meta, batch)
+    if tail is not None:
+        return meta["max_id"], tail, batch[1] - 1, lambda frame, *_: frame
+    wm, tail, new_max = catch_up_tail(
+        df, path, meta_file, meta, table_dir, table_id_col, advance_to
+    )
+
+    def guard(frame, id_col, guard_dir, guard_id_col=None):
+        return unindexed(frame, id_col, guard_dir, wm, guard_id_col)
+
+    return wm, tail, new_max, guard
+
+
 def catch_up_tail(
     df: DataFrame,
     path: str,
@@ -132,8 +181,9 @@ def catch_up_tail(
     table_id_col: str,
     advance_to=None,
 ):
-    """Open a refresh: ``(wm, tail, new_max)`` for the rows of ``df`` above
-    the sidecar watermark ``meta["max_id"]``.
+    """Open a refresh on the lagging path (:func:`open_refresh`):
+    ``(wm, tail, new_max)`` for the rows of ``df`` above the sidecar
+    watermark ``meta["max_id"]``, with one ``max()`` job for ``new_max``.
 
     * Derive-once: a sidecar written before ``max_id`` was stamped derives
       the watermark from the max ``table_id_col`` of the index table at

@@ -116,9 +116,10 @@ def stream_insert(
     reference's process-local id counter, ``db/db.go:75``). That path
     catches up every index the collection owns (``Collection.insert_df``
     — the reference adds every inserted vector to its HNSW inline,
-    ``db/db.go:95-99``; here each family runs its idempotent
-    ``id > max_id`` tail append, a file-pruned scan thanks to id-block
-    clustering), so each owned index refreshes exactly once per batch.
+    ``db/db.go:95-99``; here each family appends the batch's id range, a
+    file-pruned scan thanks to id-block clustering, or runs its
+    idempotent ``id > max_id`` catch-up when its watermark lags), so each
+    owned index refreshes exactly once per batch.
 
     ``text_index_path`` / ``pq_index_path`` (optional) keep an EXTERNAL
     inverted text index (``operators.text_index``) or PQ code table

@@ -1476,3 +1476,184 @@ def test_deduplicate_against_checks_arguments_on_empty_collections(ctx):
         assert a.deduplicate_against(b, method=method, threshold=0.5) == 0
     for method in ("fuzzy", "ngram", "bloom"):
         assert a.deduplicate_against(b, method=method) == 0
+
+
+def test_insert_df_rejects_vectors_of_the_wrong_dimension(ctx, spark):
+    """A caller-supplied ``_m_embedding`` must have the collection's
+    dimension. A wrong-length or null vector would sort first in every
+    query as a null distance; instead the write fails, commits no file,
+    and leaves the catalog as it was, so the next valid insert takes the
+    next ids."""
+    coll = ctx.create_collection("dims", dim=4)
+    coll.insert(["alpha doc", "beta doc"])
+    before = dict(coll.meta)
+    schema = "_m_doc string, _m_embedding array<float>"
+    for bad in ([1.0] * 8, None):
+        with pytest.raises(Exception, match="must be a non-null 4-dim vector"):
+            coll.insert_df(spark.createDataFrame([("bad doc", bad)], schema))
+        assert coll.count() == 2
+        assert coll.meta == before
+    first = coll.insert_df(
+        spark.createDataFrame([("good doc", [0.5] * 4)], schema)
+    )
+    assert first == 2 and coll.meta["next_id"] == 3
+    rows = {r["_m_id"]: r["_m_doc"] for r in coll.df().collect()}
+    assert rows == {0: "alpha doc", 1: "beta doc", 2: "good doc"}
+
+
+def _batch(spark, lo: int, n: int):
+    """``n`` one-partition rows, so each insert adds one data file."""
+    return spark.createDataFrame(
+        [(f"pinned doc {i} about catalyst rules", i) for i in range(lo, lo + n)],
+        "_m_doc string, k long",
+    ).coalesce(1)
+
+
+def _record_paths(monkeypatch) -> list[bool]:
+    """Record, per refresh, whether the watermark protocol took the clean
+    path (``util.batch_tail`` returned a tail) or the lagging one."""
+    from kaer_spark.operators import text_index, util
+
+    taken: list[bool] = []
+    decide = util.batch_tail
+
+    def spy(df, meta, batch):
+        tail = decide(df, meta, batch)
+        taken.append(tail is not None)
+        return tail
+
+    monkeypatch.setattr(util, "batch_tail", spy)
+    monkeypatch.setattr(text_index, "batch_tail", spy)
+    return taken
+
+
+def _ivf_minhash_collection(ctx, spark):
+    coll = ctx.create_collection("pinned")
+    coll.insert_df(_batch(spark, 0, 8))
+    coll.build_index(cells=2, fit="deterministic")
+    coll.build_minhash_index(n=3, num_hashes=4, bands=2)
+    return coll
+
+
+def _assert_indexed_once(coll):
+    """Every data row sits in the IVF and MinHash tables exactly once, and
+    neither index lags."""
+    n = coll.count()
+    health = coll.index_health()
+    ivf = health["ivf"].collect()
+    assert sum(r["n_vectors"] for r in ivf) == n
+    (mh,) = health["minhash"].collect()
+    assert (mh["n_docs"], mh["n_band_rows"]) == (n, 2 * n)
+    assert {r["watermark_lag"] for r in ivf} | {mh["watermark_lag"]} == {0}
+
+
+#: Spark jobs one clean-path insert of a small batch fires into a
+#: collection owning IVF and MinHash, data write included, while the
+#: collection holds fewer data files than the session has cores (so
+#: MinHash's signature pass widens the tail). Catching up by re-deriving
+#: the batch (a max() job and a replay-guard anti-join per family) fired 18.
+INSERT_JOBS_IVF_MINHASH = 8
+
+
+def test_insert_catches_up_from_the_batch_range(ctx, spark, monkeypatch):
+    """An insert hands each owned family the id range it wrote; with the
+    watermark at ``lo - 1`` the catch-up runs no max() job and no replay
+    guard, and the insert's job count is pinned."""
+    from tests.conftest import jobs_fired
+
+    coll = _ivf_minhash_collection(ctx, spark)
+    taken = _record_paths(monkeypatch)
+    with jobs_fired(spark) as fired:
+        assert coll.insert_df(_batch(spark, 8, 2)) == 8
+    assert taken == [True, True]
+    assert len(fired) == INSERT_JOBS_IVF_MINHASH, fired
+    _assert_indexed_once(coll)
+
+
+def test_insert_after_a_rewrite_that_deleted_the_top_ids(ctx, spark, monkeypatch):
+    """A delete of the highest ids rebuilds each index with ``max_id``
+    below ``next_id - 1``. The next insert catches up on the lagging path
+    and indexes its batch once; the one after takes the clean path again
+    at the pinned job count."""
+    from kaer_spark.context import INDEX_FAMILIES
+
+    from tests.conftest import jobs_fired
+
+    coll = _ivf_minhash_collection(ctx, spark)
+    assert coll.delete({"k": {"$gte": 6}}) == 2
+    assert coll.meta["next_id"] == 8
+    for fam in INDEX_FAMILIES:
+        if coll.meta.get(fam.flag):
+            assert fam.read_meta(fam.dir_in(coll.path))["max_id"] == 5
+    taken = _record_paths(monkeypatch)
+    assert coll.insert_df(_batch(spark, 8, 2)) == 8
+    assert taken == [False, False]
+    _assert_indexed_once(coll)
+    taken.clear()
+    with jobs_fired(spark) as fired:
+        assert coll.insert_df(_batch(spark, 10, 2)) == 10
+    assert taken == [True, True]
+    assert len(fired) == INSERT_JOBS_IVF_MINHASH, fired
+    _assert_indexed_once(coll)
+
+
+def test_crash_on_the_clean_path_replays_on_the_lagging_path(
+    ctx, spark, tmp_path, monkeypatch
+):
+    """Every family appends an insert's batch but none flips its
+    watermark, as a crash between the append and the flip leaves it: the
+    flip, as each operator module binds it, records nothing and the last
+    one raises. The next insert finds every watermark below ``lo - 1``,
+    takes the lagging path, and its replay guards keep each row indexed
+    once: every family reports zero lag, and each family whose refresh
+    is row-identical to a rebuild reports the stats of a fresh build."""
+    from kaer_spark.context import ID_COL, INDEX_FAMILIES
+    from kaer_spark.operators import dedup, index_store, text_index
+
+    coll = ctx.create_collection("crashed")
+    texts = [f"family doc {i} about catalyst rules" for i in range(11)]
+    coll.insert(texts[:8], [{"k": i} for i in range(8)])
+    coll.build_index(cells=2, fit="deterministic")
+    coll.build_text_index(n_buckets=2)
+    coll.build_pq_index(m=4, k=2)
+    coll.build_minhash_index(n=3, num_hashes=4, bands=2)
+    coll.build_signlsh_index(bands=2, bits_per_band=2)
+    coll.build_shingle_index(n=3)
+    coll.build_fuzzy_index(max_edits=1, key_len=4)
+    coll.build_winnow_index(k=4, window=2)
+
+    lost: list[str] = []
+
+    def lost_flip(path, meta_file, meta, new_max, advance_to=None):
+        lost.append(meta_file)
+        if len(lost) == len(INDEX_FAMILIES):
+            raise RuntimeError("crash before the watermark flip")
+        return meta
+
+    for mod in (index_store, dedup, text_index):
+        monkeypatch.setattr(mod, "flip_watermark", lost_flip)
+    with pytest.raises(RuntimeError, match="crash before"):
+        coll.insert(texts[8:9], [{"k": 8}])
+    monkeypatch.undo()
+    assert len(lost) == len(INDEX_FAMILIES)
+
+    taken = _record_paths(monkeypatch)
+    coll.insert(texts[9:], [{"k": 9}, {"k": 10}])
+    assert taken == [False] * len(INDEX_FAMILIES)
+
+    n = coll.count()
+    assert n == 11
+    health = {k: v.collect() for k, v in coll.index_health().items()}
+    for key, rows in health.items():
+        assert {r["watermark_lag"] for r in rows} == {0}, key
+    assert sum(r["n_vectors"] for r in health["ivf"]) == n
+    assert sum(r["n_codes"] for r in health["pq"]) == n
+    data = coll.df()
+    for fam in INDEX_FAMILIES:
+        if fam.key in ("ivf", "pq"):
+            continue  # a fresh build refits its centroids and codebooks
+        fresh = str(tmp_path / f"fresh_{fam.key}")
+        geometry = fam.geometry(fam.read_meta(fam.dir_in(coll.path)), n)
+        fam.build(data, fresh, id_col=ID_COL, **fam.column, **geometry)
+        want = fam.stats(spark, fresh, corpus=data).collect()
+        assert health[fam.key] == want, fam.key

@@ -312,3 +312,18 @@ def test_every_exported_index_family_has_a_table_row():
                    f.between):
             if fn is not None:
                 assert getattr(sys.modules[fn.__module__], fn.__name__) is fn
+
+
+def test_every_index_family_refresh_takes_a_keyword_only_batch():
+    """``Collection.insert_df`` hands each owned family the id range it
+    just wrote as ``batch=(lo, hi)``; every family's refresh must take it
+    keyword-only, defaulting to None (the full catch-up)."""
+    import inspect
+
+    from kaer_spark.context import INDEX_FAMILIES
+
+    for f in INDEX_FAMILIES:
+        param = inspect.signature(f.refresh).parameters.get("batch")
+        assert param is not None, f.key
+        assert param.kind is inspect.Parameter.KEYWORD_ONLY, f.key
+        assert param.default is None, f.key

@@ -707,9 +707,10 @@ def test_stream_insert_refreshes_each_owned_index_once(
 
     calls = []
     for name in ("refresh_ivf_index", "refresh_pq_index"):
-        def counted(df, path, _real=getattr(index_store, name), _name=name):
+        def counted(df, path, _real=getattr(index_store, name), _name=name,
+                    **kw):
             calls.append(_name)
-            return _real(df, path)
+            return _real(df, path, **kw)
 
         monkeypatch.setattr(index_store, name, counted)
 
