@@ -7927,7 +7927,7 @@ def _sql_passage_windows() -> str:
     """Shared windows CTE for the passage-dedup oracle family: every
     24-char window's CONTENT with its 1-based start position. The engine
     flags by a ~60-bit paired-moduli fingerprint and then verifies
-    flagged windows by exact content (verify=True, the r10 default), so
+    flagged windows by exact content (always, since r10), so
     the oracle keys on the content itself — definitionally the verified
     semantics, with no hash replay to drift."""
     return """
@@ -9607,7 +9607,7 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN rebuilt r ON r.id = d.doc_id
         """,
         # passage removal: content-keyed (the engine verifies flagged
-        # windows by exact content before excision — verify=True), flagged
+        # windows by exact content before excision), flagged
         # spans merge via gaps-and-islands, and the rebuild concatenates
         # the surviving gaps (LAG(e) marks each gap's start) plus the tail
         "remove_duplicate_passages": f"""
@@ -9623,7 +9623,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # cross-corpus passage contamination report: even-id docs probed
         # against the odd-id corpus's distinct window CONTENTS (engine
-        # verifies fingerprint hits exactly — verify=True)
+        # verifies fingerprint hits exactly)
         "passage_overlap_between": f"""
             WITH {_sql_passage_windows()},
             lw AS (SELECT id, s, wstr FROM w WHERE id % 2 = 0),

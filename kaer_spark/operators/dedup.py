@@ -117,6 +117,12 @@ def _shingle_expr(text_col: str, n: int, unit: str) -> Column:
     raise ValueError(f"unit must be 'char' or 'word', got {unit!r}")
 
 
+# Output id columns of the self-join forms (canonical ``a < b``) and of the
+# cross-corpus forms (left corpus / right corpus or stored index).
+_SELF_IDS = ("id_a", "id_b")
+_CROSS_IDS = ("left_id", "right_id")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -142,98 +148,200 @@ def ngram_jaccard_pairs(
     values* (each needs > max_doc_freq postings), so the cap is applied as a
     broadcast ANTI join against that heavy-hitter set — the full inverted
     index is never shuffled just to filter it, and the skewed join keys are
-    gone before the self-join. The shingle arrays are persisted pre-explode
-    (MEMORY_AND_DISK) because three consumers need them; at cluster scale
-    this spills, which is still far cheaper than re-evaluating the shingle
-    expressions per consumer.
+    gone before the self-join. The shingle arrays are checkpointed
+    pre-explode because several consumers need them (see
+    :func:`_shingle_postings`). Pair kernel: :func:`_ngram_pair_counts`.
     """
+    return _ngram_jaccard(
+        _ngram_text_counts(df, id_col, text_col, n, max_doc_freq, unit),
+        threshold, _SELF_IDS,
+    )
+
+
+def _shingle_postings(
+    df: DataFrame, id_col: str, text_col: str, n: int, unit: str
+) -> DataFrame:
+    """``(id, g)`` postings of the from-text forms: one row per distinct
+    shingle of each document, ``g`` the int64 shingle hash.
+
+    [r18] The frame is projected to ``(id, text)`` BEFORE the widening
+    exchange (guide §2.3: the round-robin repartition otherwise moves
+    every column of the caller's frame; documents fixtures carry
+    lang/source/n_chars that the pair stage never reads), and the
+    inverted index shuffles/joins an int64 shingle hash, not the shingle
+    string (guide §2.3 narrower types / §6): every downstream consumer
+    (doc-freq cap, size aggregate, pair join) only needs shingle
+    IDENTITY, and xxhash64 is collision-free on the fixtures (verified:
+    distinct shingles == distinct hashes at sf0.001/0.01/0.1; a test pins
+    hashed-vs-string value equality). At web scale a 64-bit collision
+    merges two shingles' postings with probability ~n²/2⁶⁵ — the same
+    trade minhash banding already makes, and far below the doc-freq
+    cap's own semantic effect."""
+    sh = (
+        ensure_parallelism(
+            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
+        )
+        .select("id", _shingle_expr("__t", n, unit).alias("shingles"))
+        .filter(F.size("shingles") > 0)
+        # multi-consumer frame: the doc-freq cap, the size aggregate and
+        # both sides of the pair join read the shingle arrays (eager=False
+        # folds the materialization into the first consuming job)
+        .localCheckpoint(eager=False)
+    )
+    return sh.select("id", F.explode("shingles").alias("__g")).select(
+        "id", F.xxhash64("__g").alias("g")
+    )
+
+
+def _hot_shingles(inv: DataFrame, cap: int) -> DataFrame:
+    """The shingles of ``inv`` posted by more than ``cap`` documents —
+    heavy-hitter-sized by construction (each needs > cap postings), so
+    every consumer broadcasts them."""
     return (
-        _shingle_pair_counts(df, id_col, text_col, n, max_doc_freq, unit)
-        .withColumn(
+        inv.groupBy("g")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > cap)
+        .select("g")
+    )
+
+
+def _hot_counts(inv: DataFrame, hot: DataFrame) -> DataFrame:
+    """``(id, hot_cnt)``: each document's postings among the ``hot``
+    shingles — the size correction of the doc-freq cap."""
+    return (
+        inv.join(F.broadcast(hot), "g", "left_semi")
+        .groupBy("id")
+        .agg(F.count("*").alias("hot_cnt"))
+    )
+
+
+def _hot_cap(
+    inv: DataFrame,
+    hot: DataFrame | None,
+    sizes: DataFrame | None = None,
+    corr: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """One side's ``(postings, sizes)`` under the doc-freq cap — the one
+    place the cap is applied. ``hot`` (None = uncapped) broadcasts into an
+    anti-join on the postings. Without ``sizes`` the per-doc set sizes
+    are counted over the kept postings (the from-text sides); with stored
+    UNCAPPED sizes each doc's hot-shingle count (``corr`` when it was
+    precomputed at the index's watermark flip) is subtracted — exact,
+    because shingle sets are distinct per doc, and the correction touches
+    only the hot postings, a heavy-hitter-sized slice."""
+    if hot is not None and sizes is not None:
+        if corr is None:
+            corr = _hot_counts(inv, hot)
+        sizes = sizes.join(corr, "id", "left").select(
+            "id",
+            (F.col("sz") - F.coalesce(F.col("hot_cnt"), F.lit(0))).alias("sz"),
+        )
+    if hot is not None:
+        inv = inv.join(F.broadcast(hot), "g", "left_anti")
+    if sizes is None:
+        sizes = inv.groupBy("id").agg(F.count("*").alias("sz"))
+    return inv, sizes
+
+
+def _ngram_pair_counts(
+    left: tuple[DataFrame, DataFrame],
+    right: tuple[DataFrame, DataFrame] | None = None,
+) -> DataFrame:
+    """The one pair kernel of the shingle-overlap family: distinct-shingle
+    intersection counts plus both set sizes, from ONE inverted join on
+    the shingle (the candidate stage) and one count aggregate per pair.
+    Each side is a ``(postings (id, g), sizes (id, sz))`` source. With no
+    ``right`` it is the self-join — ``(id_a < id_b, inter, sz_a, sz_b)``;
+    with one, the cross join ``(left_id, right_id, inter, sz_a, sz_b)``.
+    The Jaccard and containment scorers are pure projections on top.
+
+    Pair generation stays the inverted JOIN: measured against a
+    grouped-posting-array alternative (collect_list per shingle + double
+    explode — one shuffle of the kept postings) in r13 and the join won
+    at sf0.1 (4.4s vs 5.0s min, same-canary): locally the join side
+    broadcasts (zero shuffle), and at cluster scale AQE's stat gate
+    replaces that broadcast with a shuffle join whose volume equals the
+    grouped shuffle — so the join shape is never worse, and streams
+    per-key instead of buffering posting arrays. [r14] For the RECURRING
+    regime the pre-join stages (explode, doc-freq cap, size agg) serve
+    from a standing artifact instead (:func:`build_shingle_index`),
+    measured 4× cheaper per call at sf0.1 (0.86s vs 3.41s min) with this
+    same join."""
+    linv, lsz = left
+    rinv, rsz = left if right is None else right
+    ia, ib = _SELF_IDS if right is None else _CROSS_IDS
+    j = linv.alias("a").join(rinv.alias("b"), on="g")
+    if right is None:
+        j = j.filter(F.col("a.id") < F.col("b.id"))
+    pairs = j.groupBy(F.col("a.id").alias(ia), F.col("b.id").alias(ib)).agg(
+        F.count("*").alias("inter")
+    )
+    return pairs.join(
+        lsz.select(F.col("id").alias(ia), F.col("sz").alias("sz_a")), ia
+    ).join(rsz.select(F.col("id").alias(ib), F.col("sz").alias("sz_b")), ib)
+
+
+def _ngram_jaccard(
+    counts: DataFrame, threshold: float, ids: tuple[str, str]
+) -> DataFrame:
+    """The Jaccard scorer over :func:`_ngram_pair_counts` output."""
+    return (
+        counts.withColumn(
             "jaccard",
             F.col("inter").cast("double")
             / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(*ids, "jaccard")
     )
 
 
-def _shingle_pair_counts(
-    df: DataFrame,
-    id_col: str,
+def _ngram_containment(
+    counts: DataFrame, threshold: float, ids: tuple[str, str]
+) -> DataFrame:
+    """The Broder containment scorer over :func:`_ngram_pair_counts`
+    output: both directions, named ``containment_a_in_b`` /
+    ``containment_b_in_a`` for the self-join and ``containment_l_in_r`` /
+    ``containment_r_in_l`` for the cross forms."""
+    a, b = ("a", "b") if ids == _SELF_IDS else ("l", "r")
+    ab, ba = f"containment_{a}_in_{b}", f"containment_{b}_in_{a}"
+    return (
+        counts.withColumn(ab, F.col("inter").cast("double") / F.col("sz_a"))
+        .withColumn(ba, F.col("inter").cast("double") / F.col("sz_b"))
+        .filter(F.greatest(ab, ba) >= threshold)
+        .select(*ids, ab, ba)
+    )
+
+
+def _ngram_text_counts(
+    left: DataFrame,
+    left_id_col: str,
     text_col: str,
     n: int,
     max_doc_freq: int | None,
     unit: str,
+    right: DataFrame | None = None,
+    right_id_col: str = "doc_id",
 ) -> DataFrame:
-    """Shared inverted-index core of the shingle-overlap family:
-    ``(id_a < id_b, inter, sz_a, sz_b)`` — distinct-shingle intersection
-    counts plus both set sizes, from ONE exploded index self-joined on the
-    shingle (the candidate stage) and one count aggregate per pair. The
-    resemblance (Jaccard) and containment scorers are pure projections on
-    top, so they share plan shape, the ``max_doc_freq`` heavy-hitter cap,
-    and the checkpoint discipline."""
-    # localCheckpoint, not persist(): three consumers need the shingle
-    # arrays, but a plain persist is never unpersisted (the consumer is a
-    # lazy DataFrame we return) and leaks cache until session end;
-    # localCheckpoint blocks are reclaimed by the ContextCleaner on GC.
-    # eager=False everywhere in this family: materialization folds into
-    # the first consuming job instead of an up-front blocking pass —
-    # measured ~2x faster first call, slightly faster steady-state.
-    # [r18] project to (id, text) BEFORE the widening exchange (guide
-    # §2.3: the round-robin repartition otherwise moves every column of
-    # the caller's frame; documents fixtures carry lang/source/n_chars
-    # that the pair stage never reads) and keep the keyless
-    # repartition's pre-sort payload minimal for the same reason.
-    sh = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-    ).select(
-        "id", _shingle_expr("__t", n, unit).alias("shingles")
-    ).filter(F.size("shingles") > 0).localCheckpoint(eager=False)
-    # [r18] the inverted index shuffles/joins an int64 shingle hash, not
-    # the shingle string (guide §2.3 narrower types / §6): every
-    # downstream consumer (doc-freq cap, size aggregate, pair self-join)
-    # only needs shingle IDENTITY, and xxhash64 is collision-free on the
-    # fixtures (verified: distinct shingles == distinct hashes at
-    # sf0.001/0.01/0.1; a test pins hashed-vs-string value equality).
-    # At web scale a 64-bit collision merges two shingles' postings with
-    # probability ~n²/2⁶⁵ — the same trade minhash banding already
-    # makes, and far below the doc-freq cap's own semantic effect.
-    inv = sh.select("id", F.explode("shingles").alias("__g")).select(
-        "id", F.xxhash64("__g").alias("g")
-    )
+    """:func:`_ngram_pair_counts` over from-text sources: ``left`` alone
+    (self-join) or ``left`` × ``right``. The doc-freq cap counts the
+    reference corpus — ``right`` when given, the side the screen is
+    defined against, matching the indexed form where the hot set comes
+    from the reference artifact's stored doc-freq state — and applies
+    to both sides."""
+    linv = _shingle_postings(left, left_id_col, text_col, n, unit)
+    rinv = None
+    if right is not None:
+        rinv = _shingle_postings(right, right_id_col, text_col, n, unit)
+    hot = None
     if max_doc_freq is not None:
-        hot = (
-            inv.groupBy("g")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("g")
-        )
-        inv = inv.join(F.broadcast(hot), "g", "left_anti")
-    sizes = inv.groupBy("id").agg(F.count("*").alias("sz"))
-    # pair generation stays the inverted SELF-JOIN: measured against a
-    # grouped-posting-array alternative (collect_list per shingle +
-    # double explode — one shuffle of the kept postings) in r13 and the
-    # join won at sf0.1 (4.4s vs 5.0s min, same-canary): locally the join
-    # side broadcasts (zero shuffle), and at cluster scale AQE's stat gate
-    # replaces that broadcast with a shuffle join whose volume equals the
-    # grouped shuffle — so the join shape is never worse, and streams
-    # per-key instead of buffering posting arrays. [r14] For the
-    # RECURRING regime the pre-join stages (explode, doc-freq cap, size
-    # agg) serve from a standing artifact instead: build_shingle_index +
-    # ngram_jaccard_pairs_indexed, measured 4× cheaper per call at sf0.1
-    # (0.86s vs 3.41s min) with this same join shape.
-    pairs = (
-        inv.alias("a")
-        .join(inv.alias("b"), on="g")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
+        hot = _hot_shingles(linv if rinv is None else rinv, max_doc_freq)
+        if rinv is not None:
+            # two-consumer frame: both sides' anti-joins read it
+            hot = hot.localCheckpoint(eager=False)
+    return _ngram_pair_counts(
+        _hot_cap(linv, hot), None if rinv is None else _hot_cap(rinv, hot)
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    return pairs.join(sa, "id_a").join(sb, "id_b")
 
 
 def build_shingle_index(
@@ -288,6 +396,7 @@ def build_shingle_index(
             _shingle_expr(text_col, n, unit).alias("shingles"),
         )
         .filter(F.size("shingles") > 0)
+        # multi-consumer frame: the postings, sizes and df-segment writes
         .localCheckpoint(eager=False)
     )
     sh.select("id", F.explode("shingles").alias("g")).write.mode(
@@ -347,7 +456,7 @@ def _write_shingle_hot(spark, path: str, segs: list, cap: int, hot_dir: str):
     uncapped sizes: the correction is corpus-static between watermark
     flips, so computing it here — one postings pass per flip — replaces
     an aggregation over the full postings table on EVERY serve call
-    (``_indexed_pair_counts`` / ``_indexed_between_pair_counts``). Same
+    (:func:`_ngram_index_counts`). Same
     deterministic naming and replay-overwrite property as the hot table;
     activated by the same atomic sidecar flip. Returns the corr dir."""
     import os as _os
@@ -359,15 +468,10 @@ def _write_shingle_hot(spark, path: str, segs: list, cap: int, hot_dir: str):
         F.col("cnt") > cap
     ).select("g").write.mode("overwrite").parquet(_os.path.join(path, hot_dir))
     corr_dir = "corr/" + _os.path.basename(hot_dir)
-    hot = read_parquet(spark, _os.path.join(path, hot_dir))
-    (
-        read_parquet(spark, _os.path.join(path, "postings"))
-        .join(F.broadcast(hot), "g", "left_semi")
-        .groupBy("id")
-        .agg(F.count("*").alias("hot_cnt"))
-        .write.mode("overwrite")
-        .parquet(_os.path.join(path, corr_dir))
-    )
+    _hot_counts(
+        read_parquet(spark, _os.path.join(path, "postings")),
+        read_parquet(spark, _os.path.join(path, hot_dir)),
+    ).write.mode("overwrite").parquet(_os.path.join(path, corr_dir))
     return corr_dir
 
 
@@ -447,6 +551,7 @@ def refresh_shingle_index(
             ).alias("shingles"),
         )
         .filter(F.size("shingles") > 0)
+        # two-consumer frame: the postings and sizes appends
         .localCheckpoint(eager=False)
     )
     # ghost guard for the postings-landed/sizes-missing window
@@ -525,17 +630,13 @@ def write_shingle_bucketed_table(
             _shingle_expr(text_col, n, unit).alias("shingles"),
         )
         .filter(F.size("shingles") > 0)
+        # two-consumer frame under a cap (doc-freq count + anti-join
+        # probe); a lineage cut before the bucketed write otherwise
         .localCheckpoint(eager=False)
     )
     inv = sh.select("id", F.explode("shingles").alias("g"))
     if max_doc_freq is not None:
-        hot = (
-            inv.groupBy("g")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("g")
-        )
-        inv = inv.join(F.broadcast(hot), "g", "left_anti")
+        inv, _ = _hot_cap(inv, _hot_shingles(inv, max_doc_freq))
     write_bucketed(inv, table, ["g"], num_buckets=num_buckets, sort_by=["g"])
     spark = df.sparkSession
     kept = spark.table(table)
@@ -563,28 +664,11 @@ def ngram_jaccard_table_pairs(
     (same frozen cap), with the self-join's corpus exchange gone: both
     sides of the ``g`` equi-join read the same bucketed table, so the
     join is bucket-aligned (no Exchange below it; the only shuffles left
-    are the pair aggregate and the two id-keyed size joins)."""
-    inv = spark.table(table)
-    sizes = spark.table(f"{table}_sizes")
-    pairs = (
-        inv.alias("a")
-        .join(inv.alias("b"), on="g")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    are the pair aggregate and the two id-keyed size joins). Kernel:
+    :func:`_ngram_pair_counts`."""
+    return _ngram_jaccard(
+        _ngram_pair_counts((spark.table(table), spark.table(f"{table}_sizes"))),
+        threshold, _SELF_IDS,
     )
 
 
@@ -668,52 +752,65 @@ def read_shingle_index_meta(path: str) -> dict:
     return read_sidecar(_os.path.join(path, "shingle_index.json"))
 
 
-def _indexed_pair_counts(spark, path: str) -> DataFrame:
-    """The pair stage of the shingle family served from the at-rest
-    artifact — ``(id_a < id_b, inter, sz_a, sz_b)``, the same shape
-    :func:`_shingle_pair_counts` returns (one body feeds both scorers
-    here too, mirroring the from-text core). Format v2 applies the
+def _ngram_index_counts(
+    spark,
+    path: str,
+    left: DataFrame | None = None,
+    left_id_col: str = "doc_id",
+    text_col: str | None = None,
+) -> DataFrame:
+    """:func:`_ngram_pair_counts` with the stored artifact of
+    :func:`build_shingle_index` as a source: its self-join (no ``left``)
+    or ``left`` probe documents against it. Format v2 applies the
     doc-freq cap HERE (postings are stored uncapped so refresh stays
-    append-sound): the precomputed over-cap table broadcasts into an
-    anti-join — never a corpus-wide doc-freq aggregate on the serve
-    path — and the stored UNCAPPED per-doc sizes are corrected to
-    kept-shingle counts by subtracting each doc's hot-shingle count
-    (exact, because shingle sets are distinct per doc; the correction
-    join touches only the hot postings, a heavy-hitter-sized slice).
-    Legacy v1 artifacts (pre-capped postings + capped sizes) serve on
-    the original two-table path."""
+    append-sound): the precomputed over-cap table broadcasts into
+    anti-joins on both sides — never a corpus-wide doc-freq aggregate on
+    the serve path — and stored uncapped sizes are corrected by
+    :func:`_hot_cap`. Probe documents are shingled under the SIDECAR's
+    frozen geometry, so both sides always cut alike. Legacy v1 artifacts
+    (pre-capped postings + capped sizes) serve the self-join on the
+    stored tables as they are; cross-corpus serving needs v2."""
     import os as _os
 
     meta = read_shingle_index_meta(path)  # fail loud on a half-built artifact
-    inv = read_parquet(spark, _os.path.join(path, "postings"))
-    sizes = read_parquet(spark, _os.path.join(path, "sizes"))
+    if left is not None and meta.get("version", 1) < 2:
+        raise ValueError(
+            "legacy (v1) shingle-index artifact: cross-corpus serving "
+            "needs the uncapped v2 tables — rebuild with "
+            "build_shingle_index"
+        )
+    hot = corr = None
     if meta.get("version", 1) >= 2 and meta.get("hot_dir"):
         hot = read_parquet(spark, _os.path.join(path, meta["hot_dir"]))
         if meta.get("corr_dir"):
             # precomputed at the watermark flip (_write_shingle_hot) —
             # no postings-wide aggregation on the serve path
             corr = read_parquet(spark, _os.path.join(path, meta["corr_dir"]))
-        else:
-            corr = (
-                inv.join(F.broadcast(hot), "g", "left_semi")
-                .groupBy("id")
-                .agg(F.count("*").alias("hot_cnt"))
-            )
-        sizes = sizes.join(corr, "id", "left").select(
-            "id",
-            (F.col("sz") - F.coalesce(F.col("hot_cnt"), F.lit(0))).alias("sz"),
-        )
-        inv = inv.join(F.broadcast(hot), "g", "left_anti")
-    pairs = (
-        inv.alias("a")
-        .join(inv.alias("b"), on="g")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
+    index_side = _hot_cap(
+        read_parquet(spark, _os.path.join(path, "postings")),
+        hot,
+        read_parquet(spark, _os.path.join(path, "sizes")),
+        corr,
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    return pairs.join(sa, "id_a").join(sb, "id_b")
+    if left is None:
+        return _ngram_pair_counts(index_side)
+    tcol = text_col or meta["text_col"]
+    lsh = (
+        ensure_parallelism(left)
+        .select(
+            F.col(left_id_col).alias("id"),
+            _shingle_expr(tcol, meta["n"], meta["unit"]).alias("shingles"),
+        )
+        .filter(F.size("shingles") > 0)
+        # two-consumer frame: the postings explode and the size column
+        .localCheckpoint(eager=False)
+    )
+    probe_side = _hot_cap(
+        lsh.select("id", F.explode("shingles").alias("g")),
+        hot,
+        lsh.select("id", F.size("shingles").alias("sz")),
+    )
+    return _ngram_pair_counts(probe_side, index_side)
 
 
 def ngram_jaccard_pairs_indexed(
@@ -721,23 +818,14 @@ def ngram_jaccard_pairs_indexed(
 ) -> DataFrame:
     """:func:`ngram_jaccard_pairs` served from the at-rest artifact of
     :func:`build_shingle_index` — value-identical to the from-text
-    operator over the built corpus with the built parameters (the cap was
-    applied at build with the same doc frequencies; intersection counts
-    and kept-set sizes are pure integer arithmetic either way). The call
-    pays only the pair stage: inverted self-join on the already-capped
-    postings, one count aggregate per pair, two broadcast-sized size
-    joins. Output ``(id_a < id_b, jaccard)``, same as the fresh
-    operator."""
-    return (
-        _indexed_pair_counts(spark, path)
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    operator over the built corpus with the built parameters (the cap
+    uses the same doc frequencies; intersection counts and kept-set
+    sizes are pure integer arithmetic either way). The call pays only
+    the pair stage: inverted self-join on the stored postings, one count
+    aggregate per pair, two broadcast-sized size joins — the pair kernel
+    :func:`_ngram_pair_counts` fed by :func:`_ngram_index_counts`.
+    Output ``(id_a < id_b, jaccard)``, same as the fresh operator."""
+    return _ngram_jaccard(_ngram_index_counts(spark, path), threshold, _SELF_IDS)
 
 
 def ngram_containment_pairs_indexed(
@@ -747,18 +835,10 @@ def ngram_containment_pairs_indexed(
     artifact as :func:`ngram_jaccard_pairs_indexed` (one build feeds both
     scorers — resemblance and containment are projections over the same
     (inter, sz_a, sz_b) counts, Broder 1997): pair stage only, value-
-    identical to the from-text operator over the built corpus."""
-    counts = _indexed_pair_counts(spark, path)
-    c_ab = F.col("inter").cast("double") / F.col("sz_a")
-    c_ba = F.col("inter").cast("double") / F.col("sz_b")
-    return (
-        counts.withColumn("containment_a_in_b", c_ab)
-        .withColumn("containment_b_in_a", c_ba)
-        .filter(
-            F.greatest("containment_a_in_b", "containment_b_in_a")
-            >= threshold
-        )
-        .select("id_a", "id_b", "containment_a_in_b", "containment_b_in_a")
+    identical to the from-text operator over the built corpus. Kernel:
+    :func:`_ngram_pair_counts`."""
+    return _ngram_containment(
+        _ngram_index_counts(spark, path), threshold, _SELF_IDS
     )
 
 
@@ -786,99 +866,13 @@ def ngram_containment_pairs(
     in a salvage pipeline is usually the superset).
 
     Same single-inverted-index plan, heavy-hitter cap, and checkpoint
-    discipline as the Jaccard scorer (shared ``_shingle_pair_counts``);
-    with a cap the semantics become containment over kept shingles, with
-    sizes recomputed over the same kept sets."""
-    counts = _shingle_pair_counts(df, id_col, text_col, n, max_doc_freq, unit)
-    c_ab = F.col("inter").cast("double") / F.col("sz_a")
-    c_ba = F.col("inter").cast("double") / F.col("sz_b")
-    return (
-        counts.withColumn("containment_a_in_b", c_ab)
-        .withColumn("containment_b_in_a", c_ba)
-        .filter(
-            F.greatest("containment_a_in_b", "containment_b_in_a")
-            >= threshold
-        )
-        .select("id_a", "id_b", "containment_a_in_b", "containment_b_in_a")
-    )
-
-
-def _between_pair_counts(
-    left: DataFrame,
-    right: DataFrame,
-    left_id_col: str,
-    right_id_col: str,
-    text_col: str,
-    n: int,
-    max_doc_freq: int | None,
-    unit: str,
-) -> DataFrame:
-    """CROSS-corpus twin of :func:`_shingle_pair_counts`:
-    ``(left_id, right_id, inter, sz_a, sz_b)`` from one inverted join
-    strictly across corpora. The doc-freq cap is computed on the RIGHT
-    (reference) corpus only — the side the screen is defined against,
-    matching the indexed twin where the hot set comes from the
-    reference artifact's stored doc-freq state — and both sides' set
-    sizes are recomputed over the kept shingles so intersection and
-    union agree."""
-    # [r18] same two §2.3 narrowings as _shingle_pair_counts: project to
-    # (id, text) before the widening exchange, and join on the int64
-    # shingle hash instead of the string (collision-free on the
-    # fixtures; equality pinned by test).
-    lsh = (
-        ensure_parallelism(
-            left.select(
-                F.col(left_id_col).alias("id"),
-                F.col(text_col).alias("__t"),
-            )
-        )
-        .select("id", _shingle_expr("__t", n, unit).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-        .localCheckpoint(eager=False)
-    )
-    rsh = (
-        ensure_parallelism(
-            right.select(
-                F.col(right_id_col).alias("id"),
-                F.col(text_col).alias("__t"),
-            )
-        )
-        .select("id", _shingle_expr("__t", n, unit).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-        .localCheckpoint(eager=False)
-    )
-    linv = lsh.select("id", F.explode("shingles").alias("__g")).select(
-        "id", F.xxhash64("__g").alias("g")
-    )
-    rinv = rsh.select("id", F.explode("shingles").alias("__g")).select(
-        "id", F.xxhash64("__g").alias("g")
-    )
-    if max_doc_freq is not None:
-        hot = (
-            rinv.groupBy("g")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("g")
-            .localCheckpoint(eager=False)  # three anti-join consumers
-        )
-        linv = linv.join(F.broadcast(hot), "g", "left_anti")
-        rinv = rinv.join(F.broadcast(hot), "g", "left_anti")
-    lsz = linv.groupBy("id").agg(F.count("*").alias("sz"))
-    rsz = rinv.groupBy("id").agg(F.count("*").alias("sz"))
-    pairs = (
-        linv.alias("a")
-        .join(rinv.alias("b"), on="g")
-        .groupBy(
-            F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    return pairs.join(
-        lsz.select(F.col("id").alias("left_id"), F.col("sz").alias("sz_a")),
-        "left_id",
-    ).join(
-        rsz.select(F.col("id").alias("right_id"), F.col("sz").alias("sz_b")),
-        "right_id",
+    discipline as the Jaccard scorer (shared pair kernel
+    :func:`_ngram_pair_counts`); with a cap the semantics become
+    containment over kept shingles, with sizes recomputed over the same
+    kept sets."""
+    return _ngram_containment(
+        _ngram_text_counts(df, id_col, text_col, n, max_doc_freq, unit),
+        threshold, _SELF_IDS,
     )
 
 
@@ -897,7 +891,8 @@ def ngram_jaccard_between(
     jaccard)`` — the deterministic decontamination screen next to the
     probabilistic :func:`minhash_near_dups_between` (same contract, no
     sampling: Jaccard is computed from distinct-shingle intersection
-    counts rather than estimated from signatures).
+    counts rather than estimated from signatures). Kernel:
+    :func:`_ngram_pair_counts`, strictly across corpora.
 
     Exactness bound: both sides join on ``xxhash64(shingle)``, so two
     different shingles whose 64-bit hashes collide count as shared. By
@@ -908,98 +903,15 @@ def ngram_jaccard_between(
     fixture scale the values match the oracle exactly.
 
     ``max_doc_freq`` caps on the RIGHT (reference) corpus's doc
-    frequencies — see :func:`_between_pair_counts`. The
+    frequencies — see :func:`_ngram_text_counts`. The
     recurring regime serves the same values from a standing reference
     artifact via :func:`ngram_jaccard_against_index`."""
-    return (
-        _between_pair_counts(
-            left, right, left_id_col, right_id_col, text_col, n,
-            max_doc_freq, unit,
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "jaccard")
-    )
-
-
-def _indexed_between_pair_counts(
-    spark, path: str, left: DataFrame, left_id_col: str, text_col: str | None
-) -> DataFrame:
-    """The cross-corpus pair stage served from the at-rest artifact of
-    :func:`build_shingle_index`: probe documents are shingled under the
-    SIDECAR's frozen geometry (so both sides always cut alike), the
-    stored hot table broadcasts into anti-joins on BOTH sides, and the
-    stored uncapped per-doc sizes are corrected to kept-shingle counts
-    exactly as :func:`_indexed_pair_counts` does for the self-join."""
-    import os as _os
-
-    meta = read_shingle_index_meta(path)
-    if meta.get("version", 1) < 2:
-        raise ValueError(
-            "legacy (v1) shingle-index artifact: cross-corpus serving "
-            "needs the uncapped v2 tables — rebuild with "
-            "build_shingle_index"
-        )
-    tcol = text_col or meta["text_col"]
-    inv = read_parquet(spark, _os.path.join(path, "postings"))
-    sizes = read_parquet(spark, _os.path.join(path, "sizes"))
-    lsh = (
-        ensure_parallelism(left)
-        .select(
-            F.col(left_id_col).alias("id"),
-            _shingle_expr(tcol, meta["n"], meta["unit"]).alias("shingles"),
-        )
-        .filter(F.size("shingles") > 0)
-        .localCheckpoint(eager=False)
-    )
-    linv = lsh.select("id", F.explode("shingles").alias("g"))
-    lsz_src = lsh.select("id", F.size("shingles").alias("sz"))
-    if meta.get("hot_dir"):
-        hot = read_parquet(spark, _os.path.join(path, meta["hot_dir"]))
-        if meta.get("corr_dir"):
-            # precomputed at the watermark flip (_write_shingle_hot)
-            corr = read_parquet(spark, _os.path.join(path, meta["corr_dir"]))
-        else:
-            corr = (
-                inv.join(F.broadcast(hot), "g", "left_semi")
-                .groupBy("id")
-                .agg(F.count("*").alias("hot_cnt"))
-            )
-        sizes = sizes.join(corr, "id", "left").select(
-            "id",
-            (F.col("sz") - F.coalesce(F.col("hot_cnt"), F.lit(0))).alias("sz"),
-        )
-        inv = inv.join(F.broadcast(hot), "g", "left_anti")
-        lcorr = (
-            linv.join(F.broadcast(hot), "g", "left_semi")
-            .groupBy("id")
-            .agg(F.count("*").alias("hot_cnt"))
-        )
-        lsz_src = lsz_src.join(lcorr, "id", "left").select(
-            "id",
-            (F.col("sz") - F.coalesce(F.col("hot_cnt"), F.lit(0))).alias("sz"),
-        )
-        linv = linv.join(F.broadcast(hot), "g", "left_anti")
-    pairs = (
-        linv.alias("a")
-        .join(inv.alias("b"), on="g")
-        .groupBy(
-            F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    return pairs.join(
-        lsz_src.select(
-            F.col("id").alias("left_id"), F.col("sz").alias("sz_a")
+    return _ngram_jaccard(
+        _ngram_text_counts(
+            left, left_id_col, text_col, n, max_doc_freq, unit,
+            right, right_id_col,
         ),
-        "left_id",
-    ).join(
-        sizes.select(F.col("id").alias("right_id"), F.col("sz").alias("sz_b")),
-        "right_id",
+        threshold, _CROSS_IDS,
     )
 
 
@@ -1017,18 +929,13 @@ def ngram_jaccard_against_index(
     parameters (``n``/``unit``/``max_doc_freq`` all come from the
     sidecar; intersection and kept-set sizes are pure integer arithmetic
     either way). The call pays only the probe side's shingling plus the
-    cross inverted join — the reference's postings, sizes, and hot table
-    read straight off parquet, which is the whole economics of the
-    recurring screen (reference O8 family, ``db/db.go:176-207``)."""
-    return (
-        _indexed_between_pair_counts(spark, path, left, left_id_col, text_col)
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "jaccard")
+    cross inverted join (kernel :func:`_ngram_pair_counts`) — the
+    reference's postings, sizes, and hot table read straight off
+    parquet, which is the whole economics of the recurring screen
+    (reference O8 family, ``db/db.go:176-207``)."""
+    return _ngram_jaccard(
+        _ngram_index_counts(spark, path, left, left_id_col, text_col),
+        threshold, _CROSS_IDS,
     )
 
 
@@ -1049,26 +956,15 @@ def ngram_containment_between(
     document has tiny cross-Jaccard (union is document-sized) but
     containment ≈ 1, which is exactly the decontamination case
     :func:`ngram_jaccard_between` structurally under-weights. Same
-    shared pair core (one cross inverted join, reference-side doc-freq
-    cap), both directions reported so the caller knows which side is
-    the subset."""
-    counts = _between_pair_counts(
-        left, right, left_id_col, right_id_col, text_col, n,
-        max_doc_freq, unit,
-    )
-    c_lr = F.col("inter").cast("double") / F.col("sz_a")
-    c_rl = F.col("inter").cast("double") / F.col("sz_b")
-    return (
-        counts.withColumn("containment_l_in_r", c_lr)
-        .withColumn("containment_r_in_l", c_rl)
-        .filter(
-            F.greatest("containment_l_in_r", "containment_r_in_l")
-            >= threshold
-        )
-        .select(
-            "left_id", "right_id", "containment_l_in_r",
-            "containment_r_in_l",
-        )
+    pair kernel (:func:`_ngram_pair_counts`: one cross inverted join,
+    reference-side doc-freq cap), both directions reported so the caller
+    knows which side is the subset."""
+    return _ngram_containment(
+        _ngram_text_counts(
+            left, left_id_col, text_col, n, max_doc_freq, unit,
+            right, right_id_col,
+        ),
+        threshold, _CROSS_IDS,
     )
 
 
@@ -1084,23 +980,11 @@ def ngram_containment_against_index(
     artifact as :func:`ngram_jaccard_against_index` — one build feeds
     both cross-corpus scorers (resemblance and containment are
     projections over the same ``(inter, sz_a, sz_b)`` counts, Broder
-    1997), exactly as the self-join family shares its artifact."""
-    counts = _indexed_between_pair_counts(
-        spark, path, left, left_id_col, text_col
-    )
-    c_lr = F.col("inter").cast("double") / F.col("sz_a")
-    c_rl = F.col("inter").cast("double") / F.col("sz_b")
-    return (
-        counts.withColumn("containment_l_in_r", c_lr)
-        .withColumn("containment_r_in_l", c_rl)
-        .filter(
-            F.greatest("containment_l_in_r", "containment_r_in_l")
-            >= threshold
-        )
-        .select(
-            "left_id", "right_id", "containment_l_in_r",
-            "containment_r_in_l",
-        )
+    1997), exactly as the self-join family shares its artifact. Kernel:
+    :func:`_ngram_pair_counts`."""
+    return _ngram_containment(
+        _ngram_index_counts(spark, path, left, left_id_col, text_col),
+        threshold, _CROSS_IDS,
     )
 
 
@@ -1197,6 +1081,7 @@ def _fuzzy_keyed(
             F.col(id_col).alias("id"),
             _fuzzy_key(text_col, key_len).alias("key"),
         )
+        # two-consumer frame in the self-join: segment and probe explodes
         .localCheckpoint(eager=False)
     )
 
@@ -1457,6 +1342,7 @@ def fuzzy_index_stats(
     buckets = (
         seg.groupBy("i", "seg")
         .agg(F.count("*").alias("bc"))
+        # three-consumer frame: the aggregate, the rank sample and its shuffle
         .localCheckpoint(eager=False)
     )
     bstats = buckets.agg(
@@ -1499,7 +1385,8 @@ def fuzzy_dups_against_index(
     the at-rest artifact of :func:`build_fuzzy_index` — value-identical
     to the from-text cross call with the built reference as the
     segmented side (geometry from the sidecar, segment/probe/verify
-    bodies shared, so the two paths cannot cut or verify differently).
+    bodies shared, so the two paths cannot cut or verify differently —
+    kernel :func:`_fuzzy_join_verify`, cross form).
     Returns ``(left_id, right_id, edit_distance)`` with ``left`` as the
     probe/query corpus and the stored reference on the right; the call
     pays only the probe side's keying + shifted-substring explode plus
@@ -1588,7 +1475,8 @@ def minhash_near_dups(
     Candidates: pairs agreeing on at least one band (rows/band =
     num_hashes/bands). Verification computes true Jaccard on the distinct
     shingle sets, so the output is exact *given* the candidate set —
-    identical to what the oracle computes with the same banding.
+    identical to what the oracle computes with the same banding. Kernel:
+    :func:`_minhash_probe`, self-join form.
 
     ``presigned`` (internal fast path — the streaming ingest batch body):
     a ``(id, sig, shingles)`` DataFrame already computed by
@@ -1599,67 +1487,122 @@ def minhash_near_dups(
     (the batch chain otherwise signs the same documents three times:
     screen, self-dedup, refresh).
     """
-    rows_per_band = num_hashes // bands
-    # signatures checkpoint WITHOUT the shingle column: banding needs only
-    # (id, sig), so the corpus-wide shingle-string arrays are pruned out
-    # of the plan entirely; exact-Jaccard verification recomputes shingles
-    # ONLY for docs that appear in a candidate pair (LEFT SEMI bounded —
-    # candidate mass, not corpus). The checkpoint still serves its two
-    # consumers (banding + the candidate self-join) with GC-reclaimed
-    # blocks.
-    if presigned is not None:
-        sigs = presigned.select("id", "sig")
-    else:
-        sigs = (
-            minhash_signatures(df, id_col, text_col, n, num_hashes, seed, unit)
-            .select("id", "sig")
-            .localCheckpoint(eager=False)
-        )
-    banded = _minhash_banded(sigs, bands, rows_per_band)
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), on=["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    side = _minhash_side(
+        df, id_col, text_col, n, num_hashes, bands, seed, unit, presigned
+    )
+    return _minhash_probe(side, threshold)
+
+
+def _minhash_sigs(
+    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int,
+    seed: int, unit: str,
+) -> DataFrame:
+    """``(id, sig)`` signatures of a corpus side WITHOUT the shingle
+    column: banding needs only the signature, so the corpus-wide
+    shingle-string arrays are pruned out of the plan entirely; exact
+    verification recomputes shingles only for candidate docs."""
+    return (
+        minhash_signatures(df, id_col, text_col, n, num_hashes, seed, unit)
+        .select("id", "sig")
+        # two-consumer frame in the self-join (both band-join sides) and a
+        # lineage cut before the band explode in the cross forms
         .localCheckpoint(eager=False)
     )
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .union(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
+
+
+def _minhash_side(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    seed: int,
+    unit: str,
+    presigned: DataFrame | None = None,
+):
+    """A corpus as a :func:`_minhash_probe` source: its ``(id, band,
+    key)`` rows and its shingle source. ``presigned`` (see
+    :func:`minhash_near_dups`) supplies both from the caller's one
+    signature pass."""
     if presigned is not None:
-        sh = presigned.select("id", "shingles").join(
-            cand_ids, "id", "left_semi"
-        )
-    else:
+        return _minhash_banded(
+            presigned.select("id", "sig"), bands, num_hashes // bands
+        ), _minhash_stored(presigned)
+    sigs = _minhash_sigs(df, id_col, text_col, n, num_hashes, seed, unit)
+
+    def shingles(ids: DataFrame, name: str, sh: str) -> DataFrame:
         # ensure_parallelism (r17 item 12): without it the candidate
         # re-shingling runs ON the raw scan — one task for a single-split
         # bench/test input (measured 2.3s serialized in
-        # dedup_cluster_build's profile) — while the signature pass above
-        # was already widened. No-op on many-split production scans.
-        sh = (
+        # dedup_cluster_build's profile) — while the signature pass was
+        # already widened. No-op on many-split production scans.
+        return (
             ensure_parallelism(df)
             .select(
-                F.col(id_col).alias("id"),
-                _shingle_expr(text_col, n, unit).alias("shingles"),
+                F.col(id_col).alias(name),
+                _shingle_expr(text_col, n, unit).alias(sh),
             )
-            .join(cand_ids, "id", "left_semi")
-            .localCheckpoint(eager=False)
+            .join(ids.distinct(), name, "left_semi")
         )
-    verified = (
-        cand.join(sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
+
+    return _minhash_banded(sigs, bands, num_hashes // bands), shingles
+
+
+def _minhash_stored(frame: DataFrame):
+    """The shingle source over an ``(id, shingles)`` frame already at
+    hand: presigned rows or the stored index table."""
+    return lambda ids, name, sh: frame.select(
+        F.col("id").alias(name), F.col("shingles").alias(sh)
+    ).join(ids.distinct(), name, "left_semi")
+
+
+def _minhash_probe(left, threshold: float, right=None) -> DataFrame:
+    """The one MinHash kernel: band equi-join → distinct candidates →
+    shingles semi-joined to the candidate ids → exact Jaccard. Each side
+    is a ``(bands, shingles)`` source (:func:`_minhash_side`, or the
+    stored tables of :func:`build_minhash_index`): ``(id, band, key)``
+    rows, and a function ``(ids, name, sh)`` that returns the ``(name,
+    sh)`` shingle rows of the distinct ids in the one-column frame
+    ``ids`` (named ``name``). With no ``right`` it is the self-join:
+    the ``a.id < b.id`` rule, one candidate-id set and ONE shingle frame
+    feeding both verify sides → ``(id_a, id_b, jaccard)``. With one, the
+    join is strictly left × right, each side's shingles bounded to its
+    own candidate ids → ``(left_id, right_id, jaccard)``."""
+    lb, lsh = left
+    rb, rsh = left if right is None else right
+    ia, ib = _SELF_IDS if right is None else _CROSS_IDS
+    j = lb.alias("a").join(rb.alias("b"), on=["band", "key"])
+    if right is None:
+        j = j.filter(F.col("a.id") < F.col("b.id"))
+    cand = (
+        j.select(F.col("a.id").alias(ia), F.col("b.id").alias(ib))
+        .distinct()
+        # two-consumer frame: the candidate-id projections and the verify
+        .localCheckpoint(eager=False)
+    )
+    if right is None:
+        ids = cand.select(F.col(ia).alias("id")).union(
+            cand.select(F.col(ib).alias("id"))
+        )
+        # two-consumer frame: both verify sides read it
+        sh = lsh(ids, "id", "shingles").localCheckpoint(eager=False)
+        sh_a = sh.select(F.col("id").alias(ia), F.col("shingles").alias("sh_a"))
+        sh_b = sh.select(F.col("id").alias(ib), F.col("shingles").alias("sh_b"))
+    else:
+        sh_a = lsh(cand.select(ia), ia, "sh_a")
+        sh_b = rsh(cand.select(ib), ib, "sh_b")
+    return (
+        cand.join(sh_a, ia)
+        .join(sh_b, ib)
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
             / F.size(F.array_union("sh_a", "sh_b")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(ia, ib, "jaccard")
     )
-    return verified
 
 
 def _minhash_banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -1775,74 +1718,28 @@ def minhash_near_dups_between(
     :func:`minhash_near_dups` with identical seeds on both sides, so a
     doc and its copy collide regardless of which corpus holds them; the
     band join is left-corpus × right-corpus only (no within-corpus
-    pairs), shuffle O((|L|+|R|) × bands) plus collisions.
+    pairs), shuffle O((|L|+|R|) × bands) plus collisions. Kernel:
+    :func:`_minhash_probe`, cross form.
     """
-    rows_per_band = num_hashes // bands
-    # same shape as minhash_near_dups: (id, sig)-only signatures (shingle
-    # strings pruned from the banding plan), exact-Jaccard verification
-    # over shingles recomputed LEFT SEMI bounded to each side's candidate
-    # ids; lazy checkpoints keep lineage truncation without up-front
-    # blocking jobs
-    lsig = (
-        minhash_signatures(
-            left, left_id_col, text_col, n, num_hashes, seed, unit
-        )
-        .select("id", "sig")
-        .localCheckpoint(eager=False)
-    )
-    rsig = (
-        minhash_signatures(
-            right, right_id_col, text_col, n, num_hashes, seed, unit
-        )
-        .select("id", "sig")
-        .localCheckpoint(eager=False)
-    )
-    lb = _minhash_banded(lsig, bands, rows_per_band)
-    rb = _minhash_banded(rsig, bands, rows_per_band)
-    cand = (
-        lb.alias("a")
-        .join(rb.alias("b"), on=["band", "key"])
-        .select(F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # ensure_parallelism on both verify sides (r17 item 12): the exact-
-    # Jaccard re-shingling otherwise runs serialized on the raw scans'
-    # single split at bench/test scale (same fix as minhash_near_dups).
-    # [r18, ADVICE] The candidate semi-join prunes BEFORE the widening
-    # exchange, so only surviving rows (not the whole corpus text) ride
-    # the round-robin repartition — on a mid-size single-split input the
-    # old order shuffled every text row just to drop most of them.
-    sh_l = ensure_parallelism(
-        left.join(
-            cand.select(F.col("left_id").alias(left_id_col)).distinct(),
-            [left_id_col],
-            "left_semi",
-        )
-    ).select(
-        F.col(left_id_col).alias("left_id"),
-        _shingle_expr(text_col, n, unit).alias("sh_a"),
-    )
-    sh_r = ensure_parallelism(
-        right.join(
-            cand.select(F.col("right_id").alias(right_id_col)).distinct(),
-            [right_id_col],
-            "left_semi",
-        )
-    ).select(
-        F.col(right_id_col).alias("right_id"),
-        _shingle_expr(text_col, n, unit).alias("sh_b"),
-    )
-    return (
-        cand.join(sh_l, "left_id")
-        .join(sh_r, "right_id")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "jaccard")
+
+    def side(df: DataFrame, id_col: str):
+        def shingles(ids: DataFrame, name: str, sh: str) -> DataFrame:
+            # [r18, ADVICE] The candidate semi-join prunes BEFORE the
+            # widening exchange (r17 item 12), so only surviving rows (not
+            # the whole corpus text) ride the round-robin repartition.
+            bound = ids.select(F.col(name).alias(id_col)).distinct()
+            return ensure_parallelism(
+                df.join(bound, [id_col], "left_semi")
+            ).select(
+                F.col(id_col).alias(name),
+                _shingle_expr(text_col, n, unit).alias(sh),
+            )
+
+        sigs = _minhash_sigs(df, id_col, text_col, n, num_hashes, seed, unit)
+        return _minhash_banded(sigs, bands, num_hashes // bands), shingles
+
+    return _minhash_probe(
+        side(left, left_id_col), threshold, side(right, right_id_col)
     )
 
 
@@ -1885,6 +1782,7 @@ def build_minhash_index(
     import os as _os
 
     rows_per_band = num_hashes // bands
+    # two-consumer frame: the bands and shingles writes
     sig = minhash_signatures(
         df, id_col, text_col, n, num_hashes, seed, unit
     ).localCheckpoint(eager=False)
@@ -1971,6 +1869,7 @@ def refresh_minhash_index(
             tail.select(F.col(icol).alias("id")), "id", "left_semi"
         )
     else:
+        # two-consumer frame: the bands and shingles appends
         sig = minhash_signatures(
             tail, icol, meta["text_col"], meta["n"], meta["num_hashes"],
             meta["seed"], meta["unit"],
@@ -2045,6 +1944,7 @@ def minhash_index_stats(
     buckets = (
         bands_t.groupBy("band", "key")
         .agg(F.count("*").alias("bc"))
+        # three-consumer frame: the aggregate, the rank sample and its shuffle
         .localCheckpoint(eager=False)
     )
     bstats = buckets.agg(
@@ -2105,62 +2005,24 @@ def minhash_near_dups_against_index(
     Returns ``(left_id, right_id, jaccard)``. The call pays: one
     signature pass over ``left``, the band equi-join against stored keys,
     and the exact verify against stored shingle sets (semi-bounded to
-    candidates on both sides). ``presigned``: ``(id, sig, shingles)``
-    for ``left``'s rows computed under the SIDECAR's params — the
-    caller-owned fast path documented on :func:`minhash_near_dups`."""
+    candidates on both sides) — kernel :func:`_minhash_probe`, cross
+    form. ``presigned``: ``(id, sig, shingles)`` for ``left``'s rows
+    computed under the SIDECAR's params — the caller-owned fast path
+    documented on :func:`minhash_near_dups`."""
     import os as _os
 
     meta = read_minhash_index_meta(path)
-    tcol = text_col or meta["text_col"]
-    rows_per_band = meta["num_hashes"] // meta["bands"]
-    if presigned is not None:
-        lsig = presigned.select("id", "sig")
-    else:
-        lsig = (
-            minhash_signatures(
-                left, left_id_col, tcol, meta["n"], meta["num_hashes"],
-                meta["seed"], meta["unit"],
-            )
-            .select("id", "sig")
-            .localCheckpoint(eager=False)
-        )
-    lb = _minhash_banded(lsig, meta["bands"], rows_per_band)
-    rb = read_parquet(spark, _os.path.join(path, "bands"))
-    cand = (
-        lb.alias("a")
-        .join(rb.alias("b"), on=["band", "key"])
-        .select(F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    if presigned is not None:
-        sh_l = presigned.select(
-            F.col("id").alias("left_id"), F.col("shingles").alias("sh_a")
-        ).join(cand.select("left_id").distinct(), "left_id", "left_semi")
-    else:
-        # widened for the same single-split reason as minhash_near_dups
-        # (r17 item 12); the stored-shingle side below stays as-read —
-        # its decode feeds a shuffle join, and the artifact's file count
-        # grows with the corpus.
-        sh_l = ensure_parallelism(left).select(
-            F.col(left_id_col).alias("left_id"),
-            _shingle_expr(tcol, meta["n"], meta["unit"]).alias("sh_a"),
-        ).join(cand.select("left_id").distinct(), "left_id", "left_semi")
-    sh_r = (
-        read_parquet(spark, _os.path.join(path, "shingles"))
-        .select(F.col("id").alias("right_id"), F.col("shingles").alias("sh_b"))
-        .join(cand.select("right_id").distinct(), "right_id", "left_semi")
-    )
-    return (
-        cand.join(sh_l, "left_id")
-        .join(sh_r, "right_id")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "jaccard")
+    return _minhash_probe(
+        _minhash_side(
+            left, left_id_col, text_col or meta["text_col"], meta["n"],
+            meta["num_hashes"], meta["bands"], meta["seed"], meta["unit"],
+            presigned,
+        ),
+        threshold,
+        (
+            read_parquet(spark, _os.path.join(path, "bands")),
+            _minhash_stored(read_parquet(spark, _os.path.join(path, "shingles"))),
+        ),
     )
 
 
@@ -2175,7 +2037,9 @@ def dedup_against_index(
     """:func:`dedup_against` served from the at-rest reference artifact:
     ``left`` minus every document near-duplicating something in the BUILT
     reference corpus — the steady-state decontamination filter a training
-    pipeline runs per batch. Anti-join end to end, nothing collected."""
+    pipeline runs per batch. Anti-join end to end, nothing collected.
+    Kernel: :func:`_minhash_probe`, through
+    :func:`minhash_near_dups_against_index`."""
     hits = (
         minhash_near_dups_against_index(
             spark, path, left, left_id_col, text_col, threshold
@@ -2460,51 +2324,14 @@ def signlsh_candidate_pairs(
 
     The banding stage of :func:`embedding_near_dups_lsh`, exposed so scale
     probes and custom verifiers can measure/consume the candidate set
-    directly. Output columns: ``id_a``, ``id_b`` (distinct pairs).
+    directly. Output columns: ``id_a``, ``id_b`` (distinct pairs). Kernel:
+    :func:`_signlsh_probe` with no verify; the rows carry band keys only,
+    no vectors.
     """
-    all_planes = signlsh_planes(_vec_dim(df, vec_col), bands * bits_per_band, seed)
-    base = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    keyed = _signlsh_keyed(
+        df, id_col, vec_col, _vec_dim(df, vec_col), bands, bits_per_band, seed
     )
-    return _signlsh_candidates(base, all_planes, bands, bits_per_band)
-
-
-def _signlsh_candidates(
-    base: DataFrame, all_planes: list[list[float]], bands: int, bits_per_band: int
-) -> DataFrame:
-    """Banding core over a prepared ``(id, v)`` frame — shared so the full
-    near-dup operator prepares the base/planes ONCE (a single dim-probe
-    job) for both the candidate and verify stages."""
-    keys = [
-        signlsh_band_key("v", all_planes[b * bits_per_band : (b + 1) * bits_per_band])
-        for b in range(bands)
-    ]
-    # Materialize (id, band keys) ONCE before the self-join: both join
-    # sides would otherwise re-evaluate every plane-dot fold — the
-    # dominant expression cost — over the full corpus. The checkpointed
-    # frame is bands+1 longs per row (no vectors), so this is the cheap
-    # side of the trade at any scale; localCheckpoint (not persist) so the
-    # ContextCleaner reclaims the blocks (same rationale as
-    # ngram_jaccard_pairs' shingle checkpoint above).
-    keyed = base.select(
-        "id",
-        F.array(
-            *[
-                F.struct(F.lit(b).alias("band"), k.alias("key"))
-                for b, k in enumerate(keys)
-            ]
-        ).alias("__bks"),
-    ).localCheckpoint(eager=False)
-    inv = keyed.select("id", F.explode("__bks").alias("bk")).select(
-        "id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    a, b = inv.alias("a"), inv.alias("b")
-    return (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return _signlsh_probe(keyed.select("id", "__bks"), None)
 
 
 def embedding_near_dups_lsh(
@@ -2525,7 +2352,8 @@ def embedding_near_dups_lsh(
     ``dim``: the vector dimensionality when the caller already knows it
     (e.g. from an index sidecar) — skips the one-row probe job that
     would otherwise re-run ``df``'s lineage. Ignored under calibration,
-    whose counting aggregate yields the dimension for free.
+    whose counting aggregate yields the dimension for free. A non-null
+    vector of any other length fails the query (:func:`_signlsh_keyed`).
 
     Scale shape (the fix for blocking on something like ``label``, which is
     quadratic within block): each vector gets ``bands`` bucket keys, each
@@ -2539,6 +2367,7 @@ def embedding_near_dups_lsh(
     ``1 - (1 - p^bits)^bands`` with ``p = 1 - θ/π`` — tune bands/bits to
     the threshold. Deterministic and oracle-replayable end-to-end: the
     planes are seeded literals and the dot folds match IEEE-exactly.
+    Kernel: :func:`_signlsh_probe`, self-join form.
 
     ``target_bucket_rows`` switches on corpus-size-adaptive calibration:
     one bounded ``count()`` job, then :func:`calibrate_signlsh` derives
@@ -2565,71 +2394,8 @@ def embedding_near_dups_lsh(
         dim = int(nrow["d"])
     else:
         dim = int(dim) if dim is not None else _vec_dim(df, vec_col)
-    all_planes = signlsh_planes(dim, bands * bits_per_band, seed)
-    base = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    ).withColumn("nrm", vector_norm("v"))
-    # [r17] vectors + norms RIDE the inverted band index and the exact
-    # cosine verifies INSIDE the band self-join — the r11
-    # embedding_near_dups_between shape (measured 2.3× faster there)
-    # applied to the within-corpus operator, which had kept the old
-    # candidates-then-rejoin plan: distinct over the (larger) candidate
-    # pair table plus TWO vector joins. Here only the SURVIVING pairs
-    # (post-threshold) reach the distinct, and the two joins are gone;
-    # the trade is the band index carrying vec_bytes per row and the
-    # cosine evaluating once per colliding band instead of once per
-    # candidate pair — the same economics the between variant documents
-    # (ride wins when bucket_rows × 16 > vec_bytes). Values identical:
-    # the cosine expression is deterministic per pair (same na×nb denom
-    # order, same dot fold), so band-duplicated survivors collapse
-    # exactly in the final distinct.
-    keys = [
-        signlsh_band_key("v", all_planes[b * bits_per_band : (b + 1) * bits_per_band])
-        for b in range(bands)
-    ]
-    # one checkpoint materializes the plane folds (the dominant
-    # expression cost) for BOTH join sides; it now carries the vectors
-    # the verify needs, so nothing re-derives from the scan
-    keyed = base.select(
-        "id", "v", "nrm",
-        F.array(
-            *[
-                F.struct(F.lit(b).alias("band"), k.alias("key"))
-                for b, k in enumerate(keys)
-            ]
-        ).alias("__bks"),
-    ).localCheckpoint(eager=False)
-    inv = keyed.select("id", "v", "nrm", F.explode("__bks").alias("bk")).select(
-        "id", "v", "nrm",
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
-    )
-    a = inv.select(
-        F.col("band"), F.col("key"),
-        F.col("id").alias("id_a"), F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = inv.select(
-        F.col("band"), F.col("key"),
-        F.col("id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    denom = F.col("na") * F.col("nb")
-    # HOF dot, deliberately: the flat 64-term unroll (dot_fixed) measured
-    # 2.7× SLOWER here in the full bench session (11.4s vs 4.4s min) —
-    # inside this fused join+project stage the expanded chain pushes the
-    # generated method over the JIT/codegen limits and the whole stage
-    # drops to interpreted eval, which costs more than the compact HOF
-    # loop ever did. Same lesson as the PQ ADC unroll note in
-    # operators/similarity.py: unrolls win only in small stages.
-    cos = F.when(denom != 0.0, dot(F.col("va"), F.col("vb")) / denom)
-    return (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-        .distinct()
-    )
+    keyed = _signlsh_keyed(df, id_col, vec_col, dim, bands, bits_per_band, seed)
+    return _signlsh_probe(keyed, threshold)
 
 
 def embedding_near_dups_between(
@@ -2649,7 +2415,10 @@ def embedding_near_dups_between(
     decontamination / incremental-crawl dedup where lexical overlap is
     paraphrased away). Both corpora hash through the SAME seeded planes,
     so a vector and its copy collide whichever side holds them; the band
-    join is strictly left × right, then exact-cosine verification.
+    join is strictly left × right, then exact-cosine verification —
+    kernel :func:`_signlsh_probe`, cross form. The planes are drawn for
+    the LEFT side's dimension; a right vector of any other length fails
+    the query instead of silently matching nothing.
 
     Shape (r11): vectors + norms ride the inverted band index, so the
     exact-cosine verify runs INSIDE the band join — co-located with the
@@ -2663,57 +2432,12 @@ def embedding_near_dups_between(
     ``B × 16 > vec_bytes`` (already at B=1024, d=64), and it measured
     2.3× faster at the fixture scale where banding prunes least."""
     dim = _vec_dim(left, vec_col)
-    all_planes = signlsh_planes(dim, bands * bits_per_band, seed)
-
-    def prep(df: DataFrame, id_col: str, side: str) -> DataFrame:
-        p = side[0]
-        base = ensure_parallelism(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        ).withColumn("nrm", vector_norm("v"))
-        keys = [
-            signlsh_band_key(
-                "v", all_planes[b * bits_per_band : (b + 1) * bits_per_band]
-            )
-            for b in range(bands)
-        ]
-        keyed = base.select(
-            "id",
-            "v",
-            "nrm",
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), k.alias("key"))
-                    for b, k in enumerate(keys)
-                ]
-            ).alias("__bks"),
-        )
-        return keyed.select(
-            F.col("id").alias(f"{side}_id"),
-            F.col("v").alias(f"v{p}"),
-            F.col("nrm").alias(f"n{p}"),
-            F.explode("__bks").alias("bk"),
-        ).select(
-            f"{side}_id",
-            f"v{p}",
-            f"n{p}",
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("key"),
-        )
-
-    linv = prep(left, left_id_col, "left")
-    rinv = prep(right, right_id_col, "right")
-    denom = F.col("nl") * F.col("nr")
-    # HOF dot here too — the flat unroll regressed the full-bench min
-    # (see embedding_near_dups_lsh's note; as a JOIN CONDITION the
-    # expanded chain is re-parsed per BroadcastHashJoin match and lost
-    # to the HOF by ~6% in-session despite winning in isolated probes)
-    cos = F.when(denom != 0.0, dot(F.col("vl"), F.col("vr")) / denom)
-    return (
-        linv.join(rinv, on=["band", "key"])
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("left_id", "right_id", "cosine")
-        .distinct()
+    return _signlsh_probe(
+        _signlsh_keyed(left, left_id_col, vec_col, dim, bands, bits_per_band, seed),
+        threshold,
+        _signlsh_inverted(
+            right, right_id_col, vec_col, dim, bands, bits_per_band, seed
+        ),
     )
 
 
@@ -2743,9 +2467,9 @@ def build_signlsh_index(
     import os as _os
 
     dim = _vec_dim(df, vec_col)
-    all_planes = signlsh_planes(dim, bands * bits_per_band, seed)
-    inv = _signlsh_inverted(df, id_col, vec_col, bands, bits_per_band, all_planes)
-    inv.write.mode("overwrite").parquet(_os.path.join(path, "bands"))
+    _signlsh_inverted(
+        df, id_col, vec_col, dim, bands, bits_per_band, seed
+    ).write.mode("overwrite").parquet(_os.path.join(path, "bands"))
     meta = {
         "id_col": id_col,
         "vec_col": vec_col,
@@ -2759,27 +2483,41 @@ def build_signlsh_index(
     return meta
 
 
-def _signlsh_inverted(
+def _signlsh_keyed(
     df: DataFrame,
     id_col: str,
     vec_col: str,
+    dim: int,
     bands: int,
     bits_per_band: int,
-    all_planes: list[list[float]],
+    seed: int,
 ) -> DataFrame:
-    """The vector-carrying inverted band rows ``(right_id, vr, nr, band,
-    key)`` — ONE body shared by build and refresh so the two can never
-    hash differently (the ``ivf_scored_candidates`` shared-body rule)."""
+    """The one sign-LSH band-row builder: ``(id, v, nrm, __bks)``, one
+    array of ``(band, key)`` structs per vector under the seeded planes
+    for ``dim``. Every form — the self-join, both cross sides, the
+    stored index's build and refresh — keys its vectors here, so no two
+    can hash differently. A non-null vector whose length is not ``dim``
+    fails the query: zip-padding would otherwise collapse every band key
+    to 0 and null every cosine, so a mismatched corpus would silently
+    match nothing. Null vectors pass (they drop out at the cosine, as
+    calibration expects)."""
+    planes = signlsh_planes(dim, bands * bits_per_band, seed)
+    v = F.col(vec_col)
+    checked = F.when(v.isNull() | (F.size(v) == dim), v).otherwise(
+        F.raise_error(
+            F.lit(f"sign-LSH: a {vec_col!r} vector is not {dim}-dimensional")
+        )
+    )
     base = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        df.select(F.col(id_col).alias("id"), checked.alias("v"))
     ).withColumn("nrm", vector_norm("v"))
     keys = [
         signlsh_band_key(
-            "v", all_planes[b * bits_per_band : (b + 1) * bits_per_band]
+            "v", planes[b * bits_per_band : (b + 1) * bits_per_band]
         )
         for b in range(bands)
     ]
-    keyed = base.select(
+    return base.select(
         "id", "v", "nrm",
         F.array(
             *[
@@ -2788,14 +2526,94 @@ def _signlsh_inverted(
             ]
         ).alias("__bks"),
     )
+
+
+def _signlsh_rows(keyed: DataFrame, side: str) -> DataFrame:
+    """Explode :func:`_signlsh_keyed` rows into one row per band, named
+    for ``side`` (``a``/``b`` of the self-join, ``l``/``r`` of the cross
+    forms): ``(id_a, va, na, band, key)`` … ``(right_id, vr, nr, band,
+    key)`` — the last being the stored index's layout. Vectors and norms
+    ride along when ``keyed`` carries them."""
+    ids = dict(zip("ablr", _SELF_IDS + _CROSS_IDS))
+    names = {"id": ids[side], "v": f"v{side}", "nrm": f"n{side}"}
+    carried = [c for c in keyed.columns if c != "__bks"]
     return keyed.select(
-        F.col("id").alias("right_id"),
-        F.col("v").alias("vr"),
-        F.col("nrm").alias("nr"),
+        *[F.col(c).alias(names[c]) for c in carried],
         F.explode("__bks").alias("bk"),
     ).select(
-        "right_id", "vr", "nr",
+        *[names[c] for c in carried],
         F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
+    )
+
+
+def _signlsh_inverted(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    bands: int,
+    bits_per_band: int,
+    seed: int,
+) -> DataFrame:
+    """The vector-carrying inverted band rows ``(right_id, vr, nr, band,
+    key)`` — the stored index layout, shared by build, refresh and the
+    right side of :func:`embedding_near_dups_between`."""
+    return _signlsh_rows(
+        _signlsh_keyed(df, id_col, vec_col, dim, bands, bits_per_band, seed),
+        "r",
+    )
+
+
+def _signlsh_probe(
+    left: DataFrame, threshold: float | None, right: DataFrame | None = None
+) -> DataFrame:
+    """The one sign-LSH kernel: band equi-join → exact cosine → distinct.
+    ``left`` is a :func:`_signlsh_keyed` frame; ``right`` the ``(right_id,
+    vr, nr, band, key)`` rows of a second corpus or of the stored index.
+    With no ``right`` it is the self-join: ``left`` is checkpointed once
+    for both join sides and the ``id_a < id_b`` rule applies →
+    ``(id_a, id_b, cosine)``; with one → ``(left_id, right_id, cosine)``.
+    ``threshold=None`` skips the verify and returns the distinct
+    candidate pairs (:func:`signlsh_candidate_pairs`).
+
+    [r17] Vectors + norms RIDE the inverted band index and the exact
+    cosine verifies INSIDE the band join (the r11 cross-corpus shape,
+    measured 2.3× faster there): only the SURVIVING pairs
+    (post-threshold) reach the distinct, with no candidate-pair table and
+    no vector re-joins; the trade is the band index carrying vec_bytes
+    per row and the cosine evaluating once per colliding band instead of
+    once per candidate pair (ride wins when bucket_rows × 16 >
+    vec_bytes). Values are identical: the cosine expression is
+    deterministic per pair (same na×nb denom order, same dot fold), so
+    band-duplicated survivors collapse exactly in the final distinct."""
+    self_join = right is None
+    a, b = ("a", "b") if self_join else ("l", "r")
+    ia, ib = _SELF_IDS if self_join else _CROSS_IDS
+    if self_join:
+        # two-consumer frame: materializes the plane folds (the dominant
+        # expression cost) once for both join sides
+        left = left.localCheckpoint(eager=False)
+        right = _signlsh_rows(left, b)
+    j = _signlsh_rows(left, a).join(right, on=["band", "key"])
+    if self_join:
+        j = j.filter(F.col(ia) < F.col(ib))
+    if threshold is None:
+        return j.select(ia, ib).distinct()
+    denom = F.col(f"n{a}") * F.col(f"n{b}")
+    # HOF dot, deliberately: the flat 64-term unroll (dot_fixed) measured
+    # 2.7× SLOWER in the self-join in the full bench session (11.4s vs
+    # 4.4s min) — inside this fused join+project stage the expanded chain
+    # pushes the generated method over the JIT/codegen limits and the
+    # whole stage drops to interpreted eval; as a cross-form JOIN
+    # CONDITION it is re-parsed per BroadcastHashJoin match and lost by
+    # ~6% in-session. Same lesson as the PQ ADC unroll note in
+    # operators/similarity.py: unrolls win only in small stages.
+    cos = F.when(denom != 0.0, dot(F.col(f"v{a}"), F.col(f"v{b}")) / denom)
+    return (
+        j.withColumn("cosine", cos)
+        .filter(F.col("cosine") >= threshold)
+        .select(ia, ib, "cosine")
+        .distinct()
     )
 
 
@@ -2842,12 +2660,9 @@ def refresh_signlsh_index(
             "vectors — rebuilding is the only sound operation"
         )
     tail = guard(tail, icol, bands_dir, "right_id")
-    all_planes = signlsh_planes(
-        meta["dim"], meta["bands"] * meta["bits_per_band"], meta["seed"]
-    )
     _signlsh_inverted(
-        tail, icol, meta["vec_col"], meta["bands"], meta["bits_per_band"],
-        all_planes,
+        tail, icol, meta["vec_col"], meta["dim"], meta["bands"],
+        meta["bits_per_band"], meta["seed"],
     ).write.mode("append").parquet(bands_dir)
     return flip_watermark(
         path, "signlsh_index.json", meta, new_max, advance_to
@@ -2905,6 +2720,7 @@ def signlsh_index_stats(
     buckets = (
         bands_t.groupBy("band", "key")
         .agg(F.count("*").alias("bc"))
+        # three-consumer frame: the aggregate, the rank sample and its shuffle
         .localCheckpoint(eager=False)
     )
     bstats = buckets.agg(
@@ -2969,47 +2785,18 @@ def embedding_dups_against_index(
     re-derived from the sidecar geometry, so the two sides cannot hash
     differently). Returns ``(left_id, right_id, cosine)``; the call pays
     the query side's banding plus the band equi-join, with the exact
-    verify co-located in the join as in the fresh operator."""
+    verify co-located in the join as in the fresh operator — kernel
+    :func:`_signlsh_probe`, cross form. A probe vector that is not
+    ``dim``-dimensional (the sidecar's) fails the query."""
     import os as _os
 
     meta = read_signlsh_index_meta(path)
-    vcol = vec_col or meta["vec_col"]
-    bands, bits = meta["bands"], meta["bits_per_band"]
-    all_planes = signlsh_planes(meta["dim"], bands * bits, meta["seed"])
-    base = ensure_parallelism(
-        left.select(F.col(left_id_col).alias("id"), F.col(vcol).alias("v"))
-    ).withColumn("nrm", vector_norm("v"))
-    keys = [
-        signlsh_band_key("v", all_planes[b * bits : (b + 1) * bits])
-        for b in range(bands)
-    ]
-    keyed = base.select(
-        "id", "v", "nrm",
-        F.array(
-            *[
-                F.struct(F.lit(b).alias("band"), k.alias("key"))
-                for b, k in enumerate(keys)
-            ]
-        ).alias("__bks"),
+    keyed = _signlsh_keyed(
+        left, left_id_col, vec_col or meta["vec_col"], meta["dim"],
+        meta["bands"], meta["bits_per_band"], meta["seed"],
     )
-    linv = keyed.select(
-        F.col("id").alias("left_id"),
-        F.col("v").alias("vl"),
-        F.col("nrm").alias("nl"),
-        F.explode("__bks").alias("bk"),
-    ).select(
-        "left_id", "vl", "nl",
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
-    )
-    rinv = read_parquet(spark, _os.path.join(path, "bands"))
-    denom = F.col("nl") * F.col("nr")
-    cos = F.when(denom != 0.0, dot(F.col("vl"), F.col("vr")) / denom)
-    return (
-        linv.join(rinv, on=["band", "key"])
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("left_id", "right_id", "cosine")
-        .distinct()
+    return _signlsh_probe(
+        keyed, threshold, read_parquet(spark, _os.path.join(path, "bands"))
     )
 
 
@@ -3068,6 +2855,7 @@ def dedup_clusters(
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        # multi-consumer frame: symmetric edges, seed labels, every round
         .localCheckpoint(eager=False)
     )
     if int(max_driver_edges) > 0:
@@ -3108,6 +2896,7 @@ def dedup_clusters(
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
         .withColumn("label", F.col("id"))
+        # lineage cut: each round joins the previous round's labels
         .localCheckpoint(eager=False)
     )
     def label_sum(frame: DataFrame) -> int:
@@ -3128,6 +2917,7 @@ def dedup_clusters(
             .union(neighbor_labels)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
+            # lineage cut: bounds the plan of the iterative label propagation
             .localCheckpoint(eager=False)
         )
         cur_sum = label_sum(labels)
@@ -3883,20 +3673,39 @@ def winnow_overlap_pairs(
     passage report (the inverted-index join cost scales with postings²
     per key, so the density cut is the whole point at corpus scale).
 
-    Output: ``(id_a < id_b, n_shared)``, descending share count.
+    Output: ``(id_a < id_b, n_shared)``, descending share count. Kernel:
+    :func:`_winnow_overlap`, self-join form.
 
     (The ``(id, pos0, fp)`` distinct inside :func:`winnow_fingerprints`
     does NOT cost this path a second exchange: Catalyst's
     RemoveRedundantAggregates folds it into the ``(id, fp)`` distinct —
     plan-verified r17, one aggregate pair per side.)"""
-    sel = winnow_fingerprints(df, id_col, text_col, k, window).select(
-        "id", "fp"
-    ).distinct()
+    return _winnow_overlap(
+        _winnow_fps(winnow_fingerprints(df, id_col, text_col, k, window)),
+        min_shared,
+    )
+
+
+def _winnow_fps(fps: DataFrame) -> DataFrame:
+    """Distinct ``(id, fp)`` of winnowed selections — one side of
+    :func:`_winnow_overlap`."""
+    return fps.select("id", "fp").distinct()
+
+
+def _winnow_overlap(
+    left: DataFrame, min_shared: int, right: DataFrame | None = None
+) -> DataFrame:
+    """The one winnow kernel: ``fp`` equi-join → per-pair count →
+    ``n_shared >= min_shared``. Each side is a distinct ``(id, fp)``
+    frame (:func:`_winnow_fps`). With no ``right`` it is the self-join
+    (``id_a < id_b``); with one, strictly left × right
+    (``left_id, right_id``)."""
+    ia, ib = _SELF_IDS if right is None else _CROSS_IDS
+    j = left.alias("a").join((left if right is None else right).alias("b"), "fp")
+    if right is None:
+        j = j.filter(F.col("a.id") < F.col("b.id"))
     return (
-        sel.alias("a")
-        .join(sel.alias("b"), "fp")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        j.groupBy(F.col("a.id").alias(ia), F.col("b.id").alias(ib))
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= int(min_shared))
     )
@@ -3920,7 +3729,8 @@ def fuzzy_near_dups_between(
     shingle screens but not this one. Same complete segment blocking as
     :func:`fuzzy_near_dups` (left = index side, right = probe side —
     the pigeonhole lemma needs only ONE side segmented), joined strictly
-    across corpora, exact ``levenshtein`` verify. With the default
+    across corpora, exact ``levenshtein`` verify (kernel
+    :func:`_fuzzy_pairs`, cross form). With the default
     ``max_key_df=None`` the result equals the brute-force cross product,
     which is what the oracle runs."""
     if max_edits < 1:
@@ -3953,21 +3763,12 @@ def winnow_overlap_between(
     guarantee still detects every shared passage of ``k + window − 1``+
     chars. The eval-decontamination screen you can afford to run against
     the FULL training corpus on every refresh; escalate flagged pairs to
-    the exact passage report when byte accounting matters."""
-    lsel = winnow_fingerprints(left, left_id_col, text_col, k, window).select(
-        "id", "fp"
-    ).distinct()
-    rsel = winnow_fingerprints(right, right_id_col, text_col, k, window).select(
-        "id", "fp"
-    ).distinct()
-    return (
-        lsel.alias("a")
-        .join(rsel.alias("b"), "fp")
-        .groupBy(
-            F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id")
-        )
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= int(min_shared))
+    the exact passage report when byte accounting matters. Kernel:
+    :func:`_winnow_overlap`, cross form."""
+    return _winnow_overlap(
+        _winnow_fps(winnow_fingerprints(left, left_id_col, text_col, k, window)),
+        min_shared,
+        _winnow_fps(winnow_fingerprints(right, right_id_col, text_col, k, window)),
     )
 
 
@@ -4103,6 +3904,7 @@ def winnow_index_stats(
     buckets = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("bc"))
+        # three-consumer frame: the aggregate, the rank sample and its shuffle
         .localCheckpoint(eager=False)
     )
     bstats = buckets.agg(
@@ -4114,6 +3916,7 @@ def winnow_index_stats(
         buckets, ["bc", "fp"], bstats, "n_distinct_fps",
         "p50_bucket_sz", "p90_bucket_sz",
     )
+    # three-consumer frame: the aggregate, the rank sample and its shuffle
     sizes = fps.groupBy("id").agg(F.count("*").alias("sz")).localCheckpoint(
         eager=False
     )
@@ -4155,28 +3958,18 @@ def winnow_overlap_against_index(
     (geometry from the sidecar, selection body shared, so the two paths
     cannot select differently). Returns ``(left_id, right_id,
     n_shared)``; the call pays only the probe side's winnowing plus the
-    fingerprint equi-join — the reference's selections read straight off
-    parquet."""
+    fingerprint equi-join (kernel :func:`_winnow_overlap`, cross form) —
+    the reference's selections read straight off parquet."""
     import os as _os
 
     meta = read_winnow_index_meta(path)
-    tcol = text_col or meta["text_col"]
     lsel = winnow_fingerprints(
-        left, left_id_col, tcol, meta["k"], meta["window"]
-    ).select("id", "fp").distinct()
-    rsel = (
-        read_parquet(spark, _os.path.join(path, "fps"))
-        .select("id", "fp")
-        .distinct()
+        left, left_id_col, text_col or meta["text_col"], meta["k"], meta["window"]
     )
-    return (
-        lsel.alias("a")
-        .join(rsel.alias("b"), "fp")
-        .groupBy(
-            F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id")
-        )
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= int(min_shared))
+    return _winnow_overlap(
+        _winnow_fps(lsel),
+        min_shared,
+        _winnow_fps(read_parquet(spark, _os.path.join(path, "fps"))),
     )
 
 
@@ -4186,52 +3979,34 @@ def remove_duplicate_passages(
     text_col: str = "text",
     length: int = 24,
     min_docs: int = 2,
-    verify: bool = True,
 ) -> DataFrame:
     """Rewrite each document with its corpus-duplicated PASSAGES excised —
     the transform completing :func:`duplicate_passages`' report (Lee et
     al. 2022 §3: remove one exact-substring occurrence class, here at
-    fixed window granularity). Every ``length``-char window whose poly
-    fingerprint occurs in ``min_docs``+ distinct documents marks its span
-    for removal; overlapping/adjacent flagged spans merge per document
+    fixed window granularity). Every ``length``-char window whose CONTENT
+    occurs in ``min_docs``+ distinct documents marks its span for
+    removal; overlapping/adjacent flagged spans merge per document
     (:func:`_excise_spans`), and the surviving gaps reassemble in order.
     Output: ``(id_col, text_clean, n_spans, n_chars_removed)`` — docs
     with nothing flagged (or shorter than ``length``) pass through with
     ``text_clean = text``.
 
-    ``verify`` (default True — this transform DESTROYS text) re-checks
-    every fingerprint-flagged window by exact content equality before
-    excision, so a fingerprint collision can never delete non-duplicate
-    text: the result is exactly "windows whose content occurs in
-    ``min_docs``+ distinct documents". ``verify=False`` keeps the pure
-    fingerprint path (~2^-60 false-positive rate per pair with the
-    paired-moduli fold) when the verification joins must be skipped.
+    This transform DESTROYS text, so every fingerprint-flagged window is
+    re-checked by exact content equality before excision
+    (:func:`_flagged_verified_self`): a fingerprint collision can never
+    delete non-duplicate text.
 
     Scale shape: the window fingerprints explode once (O(chars) rows,
     same envelope as the report), duplicated fps come from the same
     map-side-combined distinct count (single-distinct — no Expand, see
     duplicate_passages), flagged spans join back LEFT SEMI on fp, the
-    optional verification recounts only the candidate mass by content,
-    and the merge/rebuild runs on the id partitioning with no UDF and no
+    verification recounts only the candidate mass by content, and the
+    merge/rebuild runs on the id partitioning with no UDF and no
     collect.
     """
     if length <= 0:
         raise ValueError("length must be positive")
-    if verify:
-        flagged = _flagged_verified_self(
-            df, id_col, text_col, length, min_docs
-        )
-    else:
-        exploded = _window_fp_explode(df, id_col, text_col, length)
-        dup_fps = (
-            exploded.groupBy("fp")
-            .agg(F.countDistinct("id").alias("n_docs"))
-            .filter(F.col("n_docs") >= int(min_docs))
-            .select("fp")
-        )
-        flagged = exploded.join(dup_fps, "fp", "left_semi").select(
-            "id", "pos0"
-        )
+    flagged = _flagged_verified_self(df, id_col, text_col, length, min_docs)
     return _excise_spans(df, flagged, id_col, text_col, length)
 
 
@@ -4245,7 +4020,6 @@ def passage_overlap_between(
     right_id_col: str = "doc_id",
     text_col: str = "text",
     length: int = 24,
-    verify: bool = True,
 ) -> DataFrame:
     """Per LEFT document: what fraction of its ``length``-char windows
     appears VERBATIM somewhere in the RIGHT corpus →
@@ -4258,11 +4032,11 @@ def passage_overlap_between(
     window appear (the report is per analyzable doc, matching
     duplicate_passages' skip rule).
 
-    ``verify`` (default True) re-checks fingerprint hits by exact window
-    content, so "verbatim" means verbatim — the count can never inflate
-    from fingerprint collisions (the paired-moduli fold makes those
-    ~2^-60-rate per pair, but a contamination REPORT should not carry a
-    caveat). ``verify=False`` keeps the fingerprint-only probe.
+    Fingerprint hits are re-checked by exact window content
+    (:func:`_flagged_verified_against`), so "verbatim" means verbatim —
+    the count can never inflate from fingerprint collisions (the
+    paired-moduli fold makes those ~2^-60-rate per pair, but a
+    contamination REPORT should not carry a caveat).
 
     Scale shape: both corpora explode their window fingerprints once;
     the RIGHT side collapses to DISTINCT fps (map-side combined) before
@@ -4278,18 +4052,9 @@ def passage_overlap_between(
         F.col(left_id_col).alias("id"),
         (F.length(text_col) - L + 1).cast("long").alias("n_windows"),
     )
-    if verify:
-        hits = _flagged_verified_against(
-            left, right, left_id_col, right_id_col, text_col, length
-        )
-    else:
-        lw = _window_fp_explode(left, left_id_col, text_col, length)
-        rf = (
-            _window_fp_explode(right, right_id_col, text_col, length)
-            .select("fp")
-            .distinct()
-        )
-        hits = lw.join(rf, "fp", "left_semi")
+    hits = _flagged_verified_against(
+        left, right, left_id_col, right_id_col, text_col, length
+    )
     flagged = hits.groupBy("id").agg(F.count("*").alias("n_flagged"))
     return (
         totals.join(flagged, "id", "left")
@@ -4312,7 +4077,6 @@ def remove_duplicate_passages_against(
     right_id_col: str = "doc_id",
     text_col: str = "text",
     length: int = 24,
-    verify: bool = True,
 ) -> DataFrame:
     """Rewrite LEFT documents with every passage that appears verbatim in
     the RIGHT corpus excised — passage-level decontamination (strip eval
@@ -4322,9 +4086,10 @@ def remove_duplicate_passages_against(
     Output: ``(left_id_col, text_clean, n_spans, n_chars_removed)`` over
     every LEFT row.
 
-    ``verify`` (default True — destructive) re-checks every fingerprint
-    hit by exact window content before excision, so a collision can
-    never cut text that is not literally present in the right corpus.
+    Destructive, so every fingerprint hit is re-checked by exact window
+    content before excision (:func:`_flagged_verified_against`): a
+    collision can never cut text that is not literally present in the
+    right corpus.
 
     Same scale envelope as the report plus the shared gaps-and-islands
     excision (:func:`_excise_spans`): linear explodes, DISTINCT-collapsed
@@ -4332,18 +4097,9 @@ def remove_duplicate_passages_against(
     bounded to candidate fingerprints), merge/rebuild on the id
     partitioning.
     """
-    if verify:
-        flagged = _flagged_verified_against(
-            left, right, left_id_col, right_id_col, text_col, length
-        )
-    else:
-        lw = _window_fp_explode(left, left_id_col, text_col, length)
-        rf = (
-            _window_fp_explode(right, right_id_col, text_col, length)
-            .select("fp")
-            .distinct()
-        )
-        flagged = lw.join(rf, "fp", "left_semi").select("id", "pos0")
+    flagged = _flagged_verified_against(
+        left, right, left_id_col, right_id_col, text_col, length
+    )
     return _excise_spans(left, flagged, left_id_col, text_col, length)
 
 

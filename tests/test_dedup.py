@@ -545,12 +545,13 @@ def test_duplicate_passages_finds_shared_windows(spark):
 
 
 def test_passage_verify_rejects_fingerprint_collisions(spark):
-    """verify=True re-checks flagged windows by exact content: with a
-    deliberately degenerate fingerprint (monkeypatched single modulus of
-    7 — almost everything collides), the verified transform still removes
-    ONLY truly duplicated passages, while verify=False excises collided
-    text. This is the advice-r9 failure mode (1e12 windows vs 1e9 buckets
-    at 100 TB) reproduced in miniature."""
+    """The passage transform re-checks flagged windows by exact content:
+    with a deliberately degenerate fingerprint (monkeypatched moduli 7
+    and 5 — almost everything collides), a window of the unrelated doc 3
+    provably shares a fingerprint with doc 1 or doc 2, yet the transform
+    still removes ONLY truly duplicated passages. This is the advice-r9
+    failure mode (1e12 windows vs 1e9 buckets at 100 TB) reproduced in
+    miniature."""
     import kaer_spark.operators.dedup as dd
 
     rows = [
@@ -562,25 +563,22 @@ def test_passage_verify_rejects_fingerprint_collisions(spark):
     saved = (dd.HASH_MOD, dd.HASH_MOD2)
     dd.HASH_MOD, dd.HASH_MOD2 = 7, 5  # 35 fingerprint values total
     try:
+        fps: dict[int, set] = {}
+        for r in dd._window_fp_explode(df, "doc_id", "text", 10).collect():
+            fps.setdefault(r["id"], set()).add(r["fp"])
         verified = {
             r["doc_id"]: r
             for r in dd.remove_duplicate_passages(
-                df, length=10, min_docs=2, verify=True
-            ).collect()
-        }
-        unverified = {
-            r["doc_id"]: r
-            for r in dd.remove_duplicate_passages(
-                df, length=10, min_docs=2, verify=False
+                df, length=10, min_docs=2
             ).collect()
         }
     finally:
         dd.HASH_MOD, dd.HASH_MOD2 = saved
+    # the degenerate hash DOES collide a doc-3 window into the flag set
+    assert fps[3] & (fps[1] | fps[2])
     # doc 3 shares no real window: verification must leave it untouched
     assert verified[3]["text_clean"] == rows[2][1]
     assert verified[3]["n_chars_removed"] == 0
-    # the degenerate hash DOES collide doc 3 into the flag set unverified
-    assert unverified[3]["n_chars_removed"] > 0
     # the true duplicate passage is still excised from docs 1 and 2
     assert verified[1]["n_chars_removed"] > 0
     assert verified[2]["n_chars_removed"] > 0
@@ -2675,3 +2673,196 @@ def test_minhash_signature_and_band_keys_match_expressions(spark, documents):
         ).alias("bk"),
     ).select("id", "bk.band", "bk.key")
     assert nb.sameSemantics(ob), "parsed _minhash_banded drifted"
+
+
+# ---------------------------------------------------------------------------
+# one probe kernel per family: the self, between and against-index forms
+# ---------------------------------------------------------------------------
+_FORM_RIGHT = [
+    (101, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (102, "machine learning models need clean training data without duplicates"),
+    (103, "a completely unrelated sentence about cooking pasta with tomatoes"),
+    (104, "spark joins shuffle rows across executors when the keys do not match"),
+    (105, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (106, "weather report: sunny skies and light winds expected for the weekend"),
+]
+_FORM_LEFT = [
+    (1, "machine learning models need clean training data without duplicates"),
+    (2, "the quick brown fox jumped over the lazy dog near the river bank today"),
+    (3, "spark joins shufle rows across executors when the keys do not match"),
+    (4, "weather report: sunny skies and light winds expected for the weekend, "
+        "then rain"),
+    (5, "an essay on medieval castle architecture and stone masonry techniques"),
+    (6, "an essay on medieval castle architecture and stone masonry technique"),
+]
+
+
+def _form_vectors():
+    """Six right vectors and six left ones: two exact copies, one small
+    perturbation, an unrelated vector and a within-left copy pair."""
+    import random
+
+    rnd = random.Random(11)
+    right = [(100 + i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(1, 7)]
+    v1, v2 = right[0][1], right[1][1]
+    other = [rnd.uniform(-1, 1) for _ in range(8)]
+    left = [
+        (1, list(v1)),
+        (2, [x + 1e-3 for x in v2]),
+        (3, list(right[4][1])),
+        (4, [-x for x in right[2][1]]),
+        (5, other),
+        (6, list(other)),
+    ]
+    return left, right
+
+
+def _form_case(name):
+    """(self, between, build, against, swap) of one family; ``swap`` says
+    the value columns are directional and flip with the pair."""
+    import kaer_spark.operators.dedup as D
+
+    return {
+        "minhash": (
+            D.minhash_near_dups,
+            D.minhash_near_dups_between,
+            D.build_minhash_index,
+            D.minhash_near_dups_against_index,
+            False,
+        ),
+        "signlsh": (
+            lambda u: D.embedding_near_dups_lsh(u, threshold=0.9),
+            lambda l, r: D.embedding_near_dups_between(l, r, threshold=0.9),
+            D.build_signlsh_index,
+            lambda s, p, l: D.embedding_dups_against_index(s, p, l, threshold=0.9),
+            False,
+        ),
+        "ngram_jaccard": (
+            lambda u: D.ngram_jaccard_pairs(u, threshold=0.3),
+            lambda l, r: D.ngram_jaccard_between(l, r, threshold=0.3),
+            D.build_shingle_index,
+            lambda s, p, l: D.ngram_jaccard_against_index(s, p, l, threshold=0.3),
+            False,
+        ),
+        "ngram_containment": (
+            lambda u: D.ngram_containment_pairs(u, threshold=0.6),
+            lambda l, r: D.ngram_containment_between(l, r, threshold=0.6),
+            D.build_shingle_index,
+            lambda s, p, l: D.ngram_containment_against_index(
+                s, p, l, threshold=0.6
+            ),
+            True,
+        ),
+        "winnow": (
+            lambda u: D.winnow_overlap_pairs(u, k=8, window=4),
+            lambda l, r: D.winnow_overlap_between(l, r, k=8, window=4),
+            lambda r, p: D.build_winnow_index(r, p, k=8, window=4),
+            D.winnow_overlap_against_index,
+            False,
+        ),
+        "fuzzy": (
+            D.fuzzy_near_dups,
+            D.fuzzy_near_dups_between,
+            D.build_fuzzy_index,
+            D.fuzzy_dups_against_index,
+            False,
+        ),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "family",
+    ["minhash", "signlsh", "ngram_jaccard", "ngram_containment", "winnow", "fuzzy"],
+)
+def test_forms_agree_on_cross_pairs(spark, tmp_path, family):
+    """Per family, the three forms run one kernel and agree:
+    ``between(L, R)`` == ``against_index(build(R), L)`` == the cross
+    pairs of ``self(L ∪ R)`` oriented (left, right), values included."""
+    import pandas as pd
+
+    self_fn, between_fn, build_fn, against_fn, swap = _form_case(family)
+    if family == "signlsh":
+        lrows, rrows = _form_vectors()
+        cols, schema = ["vec_id", "embedding"], "vec_id long, embedding array<double>"
+    else:
+        lrows, rrows = _FORM_LEFT, _FORM_RIGHT
+        cols, schema = ["doc_id", "text"], "doc_id long, text string"
+    left = spark.createDataFrame(pd.DataFrame(lrows, columns=cols), schema)
+    right = spark.createDataFrame(pd.DataFrame(rrows, columns=cols), schema)
+    left_ids = {r[0] for r in lrows}
+
+    between = {tuple(r) for r in between_fn(left, right).collect()}
+    path = str(tmp_path / family)
+    build_fn(right, path)
+    against = {tuple(r) for r in against_fn(spark, path, left).collect()}
+    crossed = set()
+    for a, b, *vals in (tuple(r) for r in self_fn(left.unionByName(right)).collect()):
+        if (a in left_ids) == (b in left_ids):
+            continue
+        if a not in left_ids:
+            a, b = b, a
+            vals = vals[::-1] if swap else vals
+        crossed.add((a, b, *vals))
+    assert between, f"{family}: the fixture plants cross-corpus pairs"
+    assert between == against == crossed
+
+
+def test_signlsh_forms_fail_on_a_dimension_mismatch(spark, tmp_path):
+    """A left corpus cut to 8 of the right's 16 dims: every sign-LSH form
+    fails the query instead of silently returning no pairs (zip-padding
+    used to zero every band key and null every cosine)."""
+    import random
+
+    import kaer_spark.operators.dedup as D
+
+    rnd = random.Random(3)
+    vecs = [[rnd.uniform(-1, 1) for _ in range(16)] for _ in range(3)]
+    schema = "vec_id long, embedding array<double>"
+    right = spark.createDataFrame([(100 + i, v) for i, v in enumerate(vecs)], schema)
+    left16 = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], schema)
+    left8 = spark.createDataFrame([(i, v[:8]) for i, v in enumerate(vecs)], schema)
+    assert D.embedding_near_dups_between(left16, right).count() == 3
+    with pytest.raises(Exception, match="not 8-dimensional"):
+        D.embedding_near_dups_between(left8, right).collect()
+    with pytest.raises(Exception, match="not 16-dimensional"):
+        D.embedding_near_dups_between(right, left8).collect()
+    path = str(tmp_path / "signlsh")
+    D.build_signlsh_index(right, path)
+    assert D.embedding_dups_against_index(spark, path, left16).count() == 3
+    with pytest.raises(Exception, match="not 16-dimensional"):
+        D.embedding_dups_against_index(spark, path, left8).collect()
+
+
+def test_each_probe_body_lives_in_one_kernel():
+    """The band equi-join, the pair joins and the Jaccard / containment
+    projections of ``operators/dedup.py`` are written once per family:
+    inside its kernel or scorer, never again in a self, between or
+    against-index form."""
+    import ast
+    import os
+    import re
+
+    import kaer_spark.operators.dedup as D
+
+    src = open(D.__file__, encoding="utf-8").read()
+    only_in = {
+        r'on=\["band","key"\]': {
+            "_minhash_probe", "_signlsh_probe", "simhash_near_dups",
+        },
+        r'on="g"': {"_ngram_pair_counts"},
+        r'F\.col\("sz_a"\)\+F\.col\("sz_b"\)-F\.col\("inter"\)': {"_ngram_jaccard"},
+        r'/F\.col\("sz_[ab]"\)': {"_ngram_containment"},
+        r"F\.array_union\(": {"_minhash_probe"},
+        r'alias\("n_shared"\)': {"_winnow_overlap"},
+        r"F\.levenshtein\(": {"_fuzzy_join_verify"},
+    }
+    lines = src.splitlines()
+    found = {pat: set() for pat in only_in}
+    for node in ast.parse(src).body:
+        if not isinstance(node, ast.FunctionDef):
+            continue
+        body = re.sub(r"\s+", "", "".join(lines[node.lineno - 1:node.end_lineno]))
+        for pat in only_in:
+            if re.search(pat, body):
+                found[pat].add(node.name)
+    assert found == only_in, os.path.basename(D.__file__)
