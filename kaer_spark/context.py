@@ -50,7 +50,6 @@ from kaer_spark.embeddings import (
 )
 from kaer_spark.filters import compile_filter
 from kaer_spark.filters_json import compile_filter_json
-from kaer_spark.functions.vector import l2sq
 from kaer_spark.operators import (
     contamination,
     dedup,
@@ -897,11 +896,8 @@ class Collection:
                 self.ctx.spark, self.index_path, list(query_vector), k,
                 nprobe=nprobe, pred=pred,
             ).withColumnRenamed("_score", "_dist").drop("_cell")
-        df = self.df().filter(pred)
-        return (
-            df.withColumn("_dist", l2sq(EMB_COL, list(query_vector)))
-            .orderBy(F.col("_dist").asc(), F.col(ID_COL).asc())
-            .limit(k)
+        return knn.exact_knn(
+            self.df(), list(query_vector), k, pred=pred, keep_dist=True
         )
 
     def query_hybrid(

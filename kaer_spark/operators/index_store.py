@@ -39,6 +39,8 @@ from kaer_spark.functions.vector import (
     double_nested_lit,
     l2sq,
 )
+from kaer_spark.operators import similarity as S
+from kaer_spark.operators.knn import _per_query_topk
 from kaer_spark.operators.util import (
     flip_watermark,
     group_ranked_quantiles,
@@ -49,23 +51,6 @@ from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
 
 META_FILE = "index.json"
 DATA_DIR = "data"
-
-
-def _assign_cells(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-) -> DataFrame:
-    """Nearest-centroid id per row as a narrow expression: build the
-    (distance, cell) struct array and take ``array_min`` (struct ordering
-    compares distance first, then cell — deterministic ties)."""
-    pairs = F.array(
-        *[
-            F.struct(l2sq(vec_col, c).alias("d"), F.lit(i).alias("c"))
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return df.withColumn("_cell", F.array_min(pairs)["c"])
 
 
 def build_ivf_index(
@@ -89,28 +74,11 @@ def build_ivf_index(
     ingestion order for better cell balance). Search and refresh are fit-agnostic: both read the
     stored centroid literals from the sidecar.
     """
-    if fit == "deterministic":
-        from kaer_spark.operators.similarity import ivf_fit_deterministic
-
-        centroids = ivf_fit_deterministic(
-            corpus, vec_col=vec_col, id_col=id_col, cells=cells
-        )
-    elif fit == "spread":
-        from kaer_spark.operators.similarity import ivf_fit_spread
-
-        centroids = ivf_fit_spread(
-            corpus, vec_col=vec_col, id_col=id_col, cells=cells
-        )
-    elif fit == "kmeans":
-        from kaer_spark.operators.similarity import ivf_fit
-
-        model = ivf_fit(corpus, vec_col=vec_col, cells=cells, seed=seed)
-        centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-    else:
-        raise ValueError(
-            f"unknown fit {fit!r}: use 'kmeans', 'deterministic', or 'spread'"
-        )
-    assigned = _assign_cells(corpus, centroids, vec_col)
+    centroids = S._fit_centroids(
+        corpus, fit, ("kmeans", "deterministic", "spread"), vec_col, id_col,
+        cells, seed,
+    )
+    assigned = S.ivf_assign_deterministic(corpus, centroids, vec_col)
     assigned.write.mode("overwrite").partitionBy("_cell").parquet(
         os.path.join(path, DATA_DIR)
     )
@@ -147,7 +115,7 @@ def refresh_ivf_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     if new_max is None:
         return meta
     tail = guard(tail, meta["id_col"], data_dir)
-    assigned = _assign_cells(tail, meta["centroids"], meta["vec_col"])
+    assigned = S.ivf_assign_deterministic(tail, meta["centroids"], meta["vec_col"])
     assigned.write.mode("append").partitionBy("_cell").parquet(data_dir)
     return flip_watermark(path, META_FILE, meta, new_max)
 
@@ -173,19 +141,12 @@ def write_ivf_bucketed_table(
     the (small) query side shuffles. Centroids and geometry go to the
     ``meta_path`` sidecar, same format as the path index.
     """
-    from kaer_spark.operators.similarity import (
-        ivf_fit_deterministic,
-        ivf_fit_spread,
-    )
     from kaer_spark.sources.files import write_bucketed
 
-    if fit == "spread":
-        centroids = ivf_fit_spread(corpus, vec_col, id_col, cells)
-    elif fit == "deterministic":
-        centroids = ivf_fit_deterministic(corpus, vec_col, id_col, cells)
-    else:
-        raise ValueError(f"unknown fit {fit!r}: use 'spread' or 'deterministic'")
-    assigned = _assign_cells(corpus, centroids, vec_col)
+    centroids = S._fit_centroids(
+        corpus, fit, ("spread", "deterministic"), vec_col, id_col, cells
+    )
+    assigned = S.ivf_assign_deterministic(corpus, centroids, vec_col)
     write_bucketed(assigned, table, ["_cell"], num_buckets=cells, sort_by=[id_col])
     meta = {
         "cells": cells,
@@ -216,10 +177,8 @@ def ivf_table_knn_join(
     equi-join carries no exchange (bucket-aligned scan) even when the
     query side is too large to broadcast — plan-asserted in
     ``tests/test_index_store.py``."""
-    from kaer_spark.operators.similarity import ivf_knn_join
-
     meta = read_index_meta(meta_path)
-    return ivf_knn_join(
+    return S.ivf_knn_join(
         queries,
         spark.table(table),
         k,
@@ -301,11 +260,9 @@ def ivf_index_knn_join(
     ``ivf_knn_join`` built with the same centroids exactly. ``pred``
     applies the metadata pre-filter inside the probed corpus (filtered
     batch ANN, same semantics as :func:`ivf_index_topk`)."""
-    from kaer_spark.operators.similarity import ivf_knn_join
-
     meta = read_index_meta(path)
     corpus = read_parquet(spark, os.path.join(path, DATA_DIR), merge_schema=True)
-    return ivf_knn_join(
+    return S.ivf_knn_join(
         queries,
         corpus,
         k,
@@ -319,6 +276,31 @@ def ivf_index_knn_join(
     )
 
 
+def _escalating(
+    centroids: list[list[float]],
+    query_vector: Sequence[float],
+    nprobe: int,
+    k: int,
+    filtered: bool,
+    search,
+) -> DataFrame:
+    """The one probe-doubling loop. ``search(cells)`` returns ``(result,
+    filled)`` over the probed cells (``similarity.ivf_probe_cells`` order).
+    A filtered search whose ``filled`` holds fewer than ``k`` rows doubles
+    ``nprobe`` until it fills or every cell is probed (full probe ≡ the
+    exact filtered query) — the reference's "k nearest among matches"
+    (``db/db.go:111-143``) under selective filters. Each round costs one
+    bounded count; unfiltered searches keep the fixed-``nprobe`` recall
+    trade."""
+    order = S.ivf_probe_cells(centroids, query_vector, len(centroids))
+    cur = max(1, min(int(nprobe), len(order)))
+    while True:
+        out, filled = search(order[:cur])
+        if not filtered or cur >= len(order) or filled.count() >= k:
+            return out
+        cur = min(cur * 2, len(order))
+
+
 def ivf_index_topk(
     spark: SparkSession,
     path: str,
@@ -326,32 +308,20 @@ def ivf_index_topk(
     k: int,
     nprobe: int = 4,
     pred=None,
-    escalate: bool = True,
 ) -> DataFrame:
     """Search the materialized index: prune to the ``nprobe`` nearest cell
     partitions, exact-rank inside them (ascending l2sq, id tie-break).
     ``pred`` (a boolean Column) applies the metadata pre-filter inside the
     probed cells — the reference's filtered-ANN semantics.
 
-    ``escalate`` (default True) upholds the reference's "k nearest among
-    matches" contract (``db/db.go:111-143``) under SELECTIVE filters: when
-    the filtered probe set fills fewer than ``k`` rows, ``nprobe`` doubles
-    until ``k`` rows match or every cell is probed (full probe ≡ the exact
-    filtered query over the index table) — without it a selective filter
-    silently under-fills even when k matches exist in unprobed cells.
-    Each escalation check is one bounded count over the pruned scan; the
+    Filtered searches escalate (:func:`_escalating`): when the filtered
+    probe set fills fewer than ``k`` rows, ``nprobe`` doubles until ``k``
+    rows match or every cell is probed — without it a selective filter
+    silently under-fills even when k matches exist in unprobed cells. The
     common case (filter matches ≥ k in the first probe set) pays exactly
-    one such check. Unfiltered queries keep the classic fixed-``nprobe``
-    recall trade (escalation would only trigger when the probed cells
-    hold fewer than k rows outright)."""
+    one bounded count over the pruned scan."""
     meta = read_index_meta(path)
     q = [float(x) for x in query_vector]
-    dists = [
-        (i, sum((a - b) * (a - b) for a, b in zip(c, q)))
-        for i, c in enumerate(meta["centroids"])
-    ]
-    order = [i for i, _ in sorted(dists, key=lambda t: (t[1], t[0]))]
-    n_cells = len(order)
     # merge_schema: refresh appends after collection schema evolution may
     # carry fields the original build files lack (same reason Collection.df
     # merges); without it a filtered approximate query can fail to resolve
@@ -359,21 +329,14 @@ def ivf_index_topk(
     # memoised per session (sources.files), so only the first search after
     # a build or refresh pays the merge job.
     df = read_parquet(spark, os.path.join(path, DATA_DIR), merge_schema=True)
-    cur = max(1, min(int(nprobe), n_cells))
-    while True:
-        pruned = df.filter(F.col("_cell").isin(order[:cur]))
-        if pred is not None:
-            pruned = pruned.filter(pred)
-        out = (
-            pruned.withColumn("_score", l2sq(meta["vec_col"], q))
-            .orderBy(F.col("_score").asc(), F.col(meta["id_col"]).asc())
-            .limit(k)
+
+    def search(cells):
+        out = S._probed_topk(
+            df, cells, q, k, meta["vec_col"], meta["id_col"], pred
         )
-        if pred is None or not escalate or cur >= n_cells:
-            return out
-        if out.count() >= k:
-            return out
-        cur = min(cur * 2, n_cells)
+        return out, out
+
+    return _escalating(meta["centroids"], q, nprobe, k, pred is not None, search)
 
 
 # ---------------------------------------------------------------------------
@@ -419,35 +382,21 @@ def build_pq_index(
     ``extra_meta`` entries (e.g. a source fingerprint) are stored
     verbatim for the caller's own staleness checks.
     """
-    from kaer_spark.operators import similarity as S
-
     if fit == "deterministic":
         books = S.pq_fit_deterministic(corpus, vec_col, id_col, m, k)
-        encoded = S.pq_encode_deterministic(corpus, books, vec_col)
     elif fit == "kmeans":
         books = S.pq_fit(corpus, vec_col, m=m, k=k, seed=seed)
-        encoded = S.pq_encode(corpus, books, vec_col)
     else:
         raise ValueError(f"unknown fit {fit!r}: use 'deterministic' or 'kmeans'")
-
-    centroids: list[list[float]] | None = None
-    cols = [id_col, "pq_code"]
+    centroids = None
     if cells is not None:
-        if fit == "deterministic":
-            centroids = S.ivf_fit_deterministic(
-                corpus, vec_col=vec_col, id_col=id_col, cells=cells
-            )
-        else:
-            model = S.ivf_fit(corpus, vec_col=vec_col, cells=cells, seed=seed)
-            centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-        encoded = S.ivf_assign_deterministic(encoded, centroids, vec_col)
-        cols.append("_cell")
-
-    writer = encoded.select(*cols).write.mode("overwrite")
-    if cells is not None:
-        writer = writer.partitionBy("_cell")
-    writer.parquet(os.path.join(path, DATA_DIR))
-
+        centroids = S._fit_centroids(
+            corpus, fit, ("deterministic", "kmeans"), vec_col, id_col, cells, seed
+        )
+    _write_codes(
+        corpus, books, fit, centroids, id_col, vec_col,
+        os.path.join(path, DATA_DIR), "overwrite",
+    )
     max_id = corpus.agg(F.max(id_col)).collect()[0][0]
     meta = {
         "kind": "pq",
@@ -469,6 +418,33 @@ def build_pq_index(
     return meta
 
 
+def _write_codes(
+    rows: DataFrame,
+    books: list[list[list[float]]],
+    fit: str,
+    centroids: list[list[float]] | None,
+    id_col: str,
+    vec_col: str,
+    data_dir: str,
+    mode: str,
+) -> None:
+    """Encode ``rows`` with the encoder of ``fit`` (the Catalyst argmin for
+    ``deterministic``, numpy for ``kmeans``), cell-assign them when the
+    index has coarse ``centroids``, and write ``(id, pq_code[, _cell])`` —
+    build and refresh both write through here, so a refreshed table is
+    row-identical to a rebuild."""
+    encode = S.pq_encode_deterministic if fit == "deterministic" else S.pq_encode
+    encoded = encode(rows, books, vec_col)
+    cols = [id_col, "pq_code"]
+    if centroids is not None:
+        encoded = S.ivf_assign_deterministic(encoded, centroids, vec_col)
+        cols.append("_cell")
+    writer = encoded.select(*cols).write.mode(mode)
+    if centroids is not None:
+        writer = writer.partitionBy("_cell")
+    writer.parquet(data_dir)
+
+
 def read_pq_meta(path: str) -> dict:
     return read_sidecar(os.path.join(path, PQ_META_FILE))
 
@@ -486,8 +462,6 @@ def refresh_pq_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     refresh after a crash-between-append-and-meta anti-joins away the ids
     already on disk (``util.unindexed``) instead of re-appending them.
     ``batch`` is the id range an insert just wrote (``util.open_refresh``)."""
-    from kaer_spark.operators import similarity as S
-
     meta = read_pq_meta(path)
     data_dir = os.path.join(path, DATA_DIR)
     _, tail, new_max, guard = open_refresh(
@@ -497,22 +471,10 @@ def refresh_pq_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     if new_max is None:
         return meta
     tail = guard(tail, meta["id_col"], data_dir)
-    if meta["fit"] == "deterministic":
-        encoded = S.pq_encode_deterministic(
-            tail, meta["codebooks"], meta["vec_col"]
-        )
-    else:
-        encoded = S.pq_encode(tail, meta["codebooks"], meta["vec_col"])
-    cols = [meta["id_col"], "pq_code"]
-    if meta["cells"] is not None:
-        encoded = S.ivf_assign_deterministic(
-            encoded, meta["centroids"], meta["vec_col"]
-        )
-        cols.append("_cell")
-    writer = encoded.select(*cols).write.mode("append")
-    if meta["cells"] is not None:
-        writer = writer.partitionBy("_cell")
-    writer.parquet(data_dir)
+    _write_codes(
+        tail, meta["codebooks"], meta["fit"], meta["centroids"],
+        meta["id_col"], meta["vec_col"], data_dir, "append",
+    )
     return flip_watermark(path, PQ_META_FILE, meta, new_max)
 
 
@@ -525,7 +487,6 @@ def pq_index_topk(
     shortlist: int = 50,
     nprobe: int | None = None,
     pred=None,
-    escalate: bool = True,
 ) -> DataFrame:
     """Two-stage search over the MATERIALIZED code table: ADC shortlist
     from stored codes, exact re-rank against ``corpus``'s raw vectors —
@@ -549,14 +510,12 @@ def pq_index_topk(
     scan — SEMI-JOIN the code table BEFORE the ADC cut, so the shortlist
     ranks only matches ("k nearest among matches", never an under-filled
     top-k-minus-nonmatches). With cells + ``nprobe``, matches can still
-    live outside the probed cells, so ``escalate`` (default True) doubles
-    ``nprobe`` until ``topk`` rows fill or every cell is probed — the
-    :func:`ivf_index_topk` recipe; each escalation check is one bounded
-    count, and the common case pays exactly one."""
-    from kaer_spark.operators.similarity import ivf_probe_cells, py_l2sq
-
+    live outside the probed cells, so the search escalates
+    (:func:`_escalating`, the :func:`ivf_index_topk` loop): ``nprobe``
+    doubles until ``topk`` rows fill or every cell is probed; each
+    escalation check is one bounded count, and the common case pays
+    exactly one."""
     meta = read_pq_meta(path)
-    m, d = meta["m"], meta["dim"] // meta["m"]
     q = [float(x) for x in query_vector]
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     base_codes = read_parquet(spark, os.path.join(path, DATA_DIR))
@@ -565,23 +524,12 @@ def pq_index_topk(
     match_ids = None
     if pred is not None:
         match_ids = corpus.filter(pred).select(id_col)
-    tables = [
-        [py_l2sq(q[j * d : (j + 1) * d], c) for c in meta["codebooks"][j]]
-        for j in range(m)
-    ]
-    tables_lit = double_matrix_lit(tables)
-    adc = F.aggregate(
-        F.zip_with(F.col("pq_code"), tables_lit, lambda c, t: t[c]),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n_cells = meta["cells"] or 0
-    cur = None if nprobe is None else max(1, min(int(nprobe), n_cells))
-    while True:
+    adc = S._adc_score(S._adc_tables(meta["codebooks"], q))
+
+    def search(cells):
         codes = base_codes
-        if cur is not None:
-            probe = ivf_probe_cells(meta["centroids"], q, cur)
-            codes = codes.filter(F.col("_cell").isin(probe))
+        if cells is not None:
+            codes = codes.filter(F.col("_cell").isin(cells))
         if match_ids is not None:
             codes = codes.join(match_ids, id_col, "left_semi")
         short = (
@@ -590,30 +538,21 @@ def pq_index_topk(
             .limit(int(shortlist))
             .select(id_col)
         )
-        out = (
-            corpus.join(F.broadcast(short), id_col)
-            .withColumn("_score", l2sq(vec_col, q))
-            .orderBy(F.col("_score").asc(), F.col(id_col).asc())
-            .limit(int(topk))
-            .select(id_col, "_score")
-        )
-        if (
-            pred is None
-            or not escalate
-            or cur is None
-            or cur >= n_cells
-        ):
-            return out
-        # Escalation check counts the SHORTLIST, not the re-ranked result:
+        out = S._l2_topk(
+            corpus.join(F.broadcast(short), id_col), q, int(topk), vec_col, id_col
+        ).select(id_col, "_score")
+        # the fill check counts the SHORTLIST, not the re-ranked result:
         # every shortlist id joins the corpus by construction (codes derive
         # from it), so |out| = min(topk, |short|) and the two counts answer
         # identically — but the shortlist plan stops before the re-rank
-        # join, and the returned `out` is uncached, so counting `out` here
-        # executed the full two-stage plan TWICE per call even in the
-        # common no-escalation case (r13 advice).
-        if short.count() >= int(topk):
-            return out
-        cur = min(cur * 2, n_cells)
+        # join, so the check does not run the two-stage plan a second time
+        return out, short
+
+    if nprobe is None:
+        return search(None)[0]
+    return _escalating(
+        meta["centroids"], q, nprobe, int(topk), pred is not None, search
+    )
 
 
 def pq_index_knn_join(
@@ -669,12 +608,8 @@ def pq_index_knn_join(
     then explodes nprobe× onto a cell EQUI-join and never crosses the
     corpus — or raise the knob deliberately). The count costs one bounded
     scan of the query table, paid only on the unprobed branch."""
-    from pyspark.sql.window import Window
-
-    from kaer_spark.operators.similarity import ivf_probe_cells  # noqa: F401
-
     meta = read_pq_meta(path)
-    m, d = meta["m"], meta["dim"] // meta["m"]
+    d = meta["dim"] // meta["m"]
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     books = meta["codebooks"]
     cb_lit = double_nested_lit(books)
@@ -696,10 +631,11 @@ def pq_index_knn_join(
             ),
         ),
     )
-    qtab = queries.select(
+    qside = queries.select(
         F.col(query_id_col).alias("__qid"),
         F.col(query_vec_col).alias("__qvec"),
-    ).withColumn("__adc_table", adc_table)
+    )
+    qtab = qside.withColumn("__adc_table", adc_table)
     codes = read_parquet(spark, os.path.join(path, DATA_DIR))
     if pred is not None:
         codes = codes.join(
@@ -708,18 +644,7 @@ def pq_index_knn_join(
     if nprobe is not None:
         if meta["cells"] is None:
             raise ValueError("index has no coarse cells; build with cells=")
-        cents = meta["centroids"]
-        cdists = F.array(
-            *[
-                F.struct(
-                    l2sq("__qvec", c).alias("dist"), F.lit(j).alias("j")
-                )
-                for j, c in enumerate(cents)
-            ]
-        )
-        probe = F.transform(
-            F.slice(F.array_sort(cdists), 1, int(nprobe)), lambda s: s["j"]
-        )
+        probe = S._probe("__qvec", meta["centroids"], nprobe)
         qtab = qtab.withColumn("_cell", F.explode(probe))
         scored = codes.join(F.broadcast(qtab), "_cell")
     else:
@@ -734,46 +659,19 @@ def pq_index_knn_join(
                 "or raise max_unprobed_queries deliberately."
             )
         scored = codes.crossJoin(F.broadcast(qtab))
-    adc = F.aggregate(
-        F.zip_with(F.col("pq_code"), F.col("__adc_table"), lambda c, t: t[c]),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w1 = Window.partitionBy("__qid").orderBy(
-        F.col("_adc").asc(), F.col(id_col).asc()
-    )
-    short = (
-        scored.withColumn("_adc", adc)
-        .select("__qid", id_col, "_adc")
-        .withColumn("__r", F.row_number().over(w1))
-        .filter(F.col("__r") <= int(shortlist))
-        .select("__qid", id_col)
-    )
+    adc = S._adc_score(F.col("__adc_table")).alias("_adc")
+    short = _per_query_topk(
+        scored.select("__qid", id_col, adc),
+        [F.col("_adc").asc(), F.col(id_col).asc()], shortlist, "__qid", id_col,
+    ).drop("rank")
     rerank = (
         corpus.join(F.broadcast(short), id_col)
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(query_id_col).alias("__qid"),
-                    F.col(query_vec_col).alias("__qvec"),
-                )
-            ),
-            "__qid",
-        )
+        .join(F.broadcast(qside), "__qid")
         .withColumn("_score", l2sq(vec_col, F.col("__qvec")))
     )
-    w2 = Window.partitionBy("__qid").orderBy(
-        F.col("_score").asc(), F.col(id_col).asc()
-    )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= int(topk))
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col(id_col),
-            F.col("_score"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return _per_query_topk(
+        rerank, [F.col("_score").asc(), F.col(id_col).asc()], topk,
+        query_id_col, id_col, F.col("_score"),
     )
 
 

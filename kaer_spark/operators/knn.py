@@ -18,10 +18,12 @@ Physical plans (verified via ``.explain``):
   (SPARK-37099) whose *Partial* node runs map-side, below the exchange —
   each input partition forwards at most its local per-query top-k, so the
   shuffle carries ≤ n_partitions × n_queries × k rows instead of
-  corpus × queries. Plan-asserted in ``tests/test_knn.py``. The legacy
-  Arrow ``mapInPandas`` fold (``prune_candidates=True``) is kept only as
-  an opt-in fallback for engines without the rewrite; it is bit-identical
-  but pays a Python crossing in the widest stage.
+  corpus × queries. Plan-asserted in ``tests/test_knn.py``.
+
+Every join-shaped form here and in ``similarity``/``index_store``
+(broadcast, IVF cell join, bucketed table, standing index) scores its
+pairs with :func:`_score_pairs` — one metric table, cosine norms once per
+side below the join — and ranks them with :func:`_per_query_topk`.
 """
 
 from __future__ import annotations
@@ -87,6 +89,88 @@ def exact_knn(
     return out if keep_dist else out.drop(dist_col)
 
 
+def _cosine_from_norms(v: Column) -> Column:
+    # bit-identical to cosine_similarity: same denom product order (corpus
+    # norm × query norm), same NULL-safe zero guard
+    denom = F.col("__cn") * F.col("__qn")
+    return F.when(denom != 0.0, dot(v, F.col("__qvec")) / denom)
+
+
+#: metric -> (score of a corpus vector against the joined ``__qvec``,
+#: whether rank 1 is the smallest score)
+_PAIR_SCORES = {
+    "l2sq": (lambda v: l2sq(v, F.col("__qvec")), True),
+    "cosine": (_cosine_from_norms, False),
+    "dot": (lambda v: dot(v, F.col("__qvec")), False),
+}
+
+
+def _broadcast_cross(q: DataFrame, corpus_side: DataFrame) -> DataFrame:
+    return corpus_side.crossJoin(F.broadcast(q))
+
+
+def _score_pairs(
+    q: DataFrame,
+    corpus_side: DataFrame,
+    join,
+    corpus_vec_col: str,
+    corpus_id_col: str,
+    metric: str,
+    score_col: str = "__score",
+) -> tuple[DataFrame, list]:
+    """The one query/corpus pair scorer. ``q`` carries ``(__qid, __qvec)``
+    and ``join(q, corpus_side)`` pairs the two sides (broadcast cross or
+    cell equi-join). Returns ``(scored, order)``: the narrow ``(__qid,
+    corpus_id_col, score_col)`` triple and the metric's rank order, ties by
+    corpus id.
+
+    Cosine norms are computed once per side BELOW the join: the join
+    boundary stops CollapseProject from inlining them into the per-pair
+    expression (the r13 mining profile showed the naive form evaluating
+    three interpreted 64-element folds per joined pair; with the per-pair
+    work reduced to the one dot fold it is ~3× less)."""
+    if metric not in _PAIR_SCORES:
+        raise ValueError(
+            f"metric must be 'l2sq', 'cosine' or 'dot', got {metric!r}"
+        )
+    score, ascending = _PAIR_SCORES[metric]
+    if metric == "cosine":
+        q = q.withColumn("__qn", vector_norm("__qvec"))
+        corpus_side = corpus_side.withColumn("__cn", vector_norm(corpus_vec_col))
+    scored = (
+        join(q, corpus_side)
+        .withColumn(score_col, score(F.col(corpus_vec_col)).cast("double"))
+        .select("__qid", corpus_id_col, score_col)
+    )
+    s = F.col(score_col)
+    return scored, [s.asc() if ascending else s.desc(), F.col(corpus_id_col).asc()]
+
+
+def _per_query_topk(
+    scored: DataFrame,
+    order: list,
+    k: int,
+    query_id_col: str,
+    corpus_id_col: str,
+    *extra: Column,
+) -> DataFrame:
+    """Rank 1..k per ``__qid`` → ``(query_id_col, corpus_id_col, *extra,
+    rank)``. The ``row_number() <= k`` filter triggers Spark's
+    WindowGroupLimit rewrite, whose Partial node keeps each input
+    partition's local per-query top-k map-side, below the exchange."""
+    w = Window.partitionBy("__qid").orderBy(*order)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= int(k))
+        .select(
+            F.col("__qid").alias(query_id_col),
+            F.col(corpus_id_col),
+            *extra,
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -96,12 +180,11 @@ def knn_join(
     query_id_col: str = "query_id",
     corpus_id_col: str = "doc_id",
     metric: str = "l2sq",
-    prune_candidates: bool = False,
 ) -> DataFrame:
     """For every query row, the k nearest corpus rows.
 
     Returns ``(query_id, doc_id, rank)`` with rank 1..k (ascending distance
-    for l2sq, descending similarity for cosine; ties by corpus id).
+    for l2sq, descending similarity for cosine and dot; ties by corpus id).
 
     Shape: broadcast-nested-loop of the (small) query side against the
     corpus — the corpus stays put; distances are evaluated JVM-side in the
@@ -112,12 +195,8 @@ def knn_join(
     local per-query top-k map-side, below the exchange — the shuffle
     carries at most ``n_partitions × n_queries × k`` rows instead of
     ``n_corpus × n_queries``, entirely JVM-side (plan-asserted in
-    ``tests/test_knn.py``). ``prune_candidates=True`` opts into the legacy
-    explicit fold (Arrow ``mapInPandas`` over the narrow
-    ``(qid, doc_id, score)`` triple) for engines without the rewrite; the
-    fold keeps a superset of every global top-k with window-identical tie
-    breaks, so both modes are bit-identical. For huge query sides, chunk
-    the queries and union.
+    ``tests/test_knn.py``). For huge query sides, chunk the queries and
+    union, or use ``similarity.ivf_knn_join``.
     """
     q = queries.select(
         F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
@@ -127,71 +206,10 @@ def knn_join(
     # arrives as one partition, serializing that work onto one core; a
     # multi-TB scan already has hundreds of splits (no-op — util.py)
     corpus_side = ensure_parallelism(corpus)
-    if metric == "cosine":
-        # norms once per side BELOW the join (see similarity.
-        # ivf_scored_candidates — the join boundary keeps them out of the
-        # per-pair expression); bit-identical to cosine_similarity
-        q = q.withColumn("__qn", vector_norm("__qvec"))
-        corpus_side = corpus_side.withColumn("__cn", vector_norm(corpus_vec_col))
-    joined = corpus_side.crossJoin(F.broadcast(q))
-    ascending = metric == "l2sq"
-    if metric == "l2sq":
-        score = l2sq(F.col(corpus_vec_col), F.col("__qvec"))
-        order = [F.col("__score").asc(), F.col(corpus_id_col).asc()]
-    elif metric == "cosine":
-        denom = F.col("__cn") * F.col("__qn")
-        score = F.when(
-            denom != 0.0, dot(F.col(corpus_vec_col), F.col("__qvec")) / denom
-        )
-        order = [F.col("__score").desc(), F.col(corpus_id_col).asc()]
-    elif metric == "dot":
-        score = dot(F.col(corpus_vec_col), F.col("__qvec"))
-        order = [F.col("__score").desc(), F.col(corpus_id_col).asc()]
-    else:
-        raise ValueError(f"unknown metric {metric}")
-    scored = joined.withColumn("__score", score.cast("double")).select(
-        "__qid", corpus_id_col, "__score"
+    scored, order = _score_pairs(
+        q, corpus_side, _broadcast_cross, corpus_vec_col, corpus_id_col, metric
     )
-    if prune_candidates:
-        scored = scored.mapInPandas(
-            _local_topk_fold(k, corpus_id_col, ascending), scored.schema
-        )
-    w = Window.partitionBy("__qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col(corpus_id_col),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
-def _local_topk_fold(k: int, id_col: str, ascending: bool):
-    """Per-partition bounded top-k fold for :func:`knn_join`.
-
-    Maintains at most ``k`` rows per query id across the partition's Arrow
-    batches (state never exceeds ``n_qids_seen × k`` rows — that bound, not
-    the partition size, is the executor memory cost). Ties are broken by
-    ascending ``id_col`` exactly like the final window, so pruning can
-    never drop a row the global rank would keep.
-    """
-
-    def fold(batches):
-        import pandas as pd
-
-        state: pd.DataFrame | None = None
-        for pdf in batches:
-            cur = pdf if state is None else pd.concat((state, pdf), ignore_index=True)
-            cur = cur.sort_values(
-                ["__qid", "__score", id_col], ascending=[True, ascending, True]
-            )
-            state = cur.groupby("__qid", sort=False).head(k)
-        if state is not None and len(state):
-            yield state
-
-    return fold
+    return _per_query_topk(scored, order, k, query_id_col, corpus_id_col)
 
 
 def hard_negatives(
@@ -247,29 +265,9 @@ def hard_negatives(
     # single-split guard before the per-row |q|-fold distance work (see
     # knn_join above; no-op on a many-split production scan)
     corpus_side = ensure_parallelism(corpus_side)
-    if metric == "cosine":
-        # per-side norm precompute (see knn_join / ivf_scored_candidates)
-        q = q.withColumn("__qn", vector_norm("__qvec"))
-        corpus_side = corpus_side.withColumn(
-            "__cn", vector_norm(corpus_vec_col)
-        )
-    joined = corpus_side.crossJoin(F.broadcast(q))
-    if metric == "l2sq":
-        score = l2sq(F.col(corpus_vec_col), F.col("__qvec"))
-        order = [F.col("score").asc(), F.col(corpus_id_col).asc()]
-    elif metric == "cosine":
-        denom = F.col("__cn") * F.col("__qn")
-        score = F.when(
-            denom != 0.0, dot(F.col(corpus_vec_col), F.col("__qvec")) / denom
-        )
-        order = [F.col("score").desc(), F.col(corpus_id_col).asc()]
-    elif metric == "dot":
-        score = dot(F.col(corpus_vec_col), F.col("__qvec"))
-        order = [F.col("score").desc(), F.col(corpus_id_col).asc()]
-    else:
-        raise ValueError(f"unknown metric {metric}")
-    scored = joined.withColumn("score", score.cast("double")).select(
-        "__qid", corpus_id_col, "score"
+    scored, order = _score_pairs(
+        q, corpus_side, _broadcast_cross, corpus_vec_col, corpus_id_col,
+        metric, "score",
     )
     scored = _negative_exclusions(
         scored,
@@ -281,7 +279,10 @@ def hard_negatives(
         exclude_self,
         dup_ceiling,
     )
-    return _negative_topk(scored, "score", order, k, query_id_col, corpus_id_col)
+    return _per_query_topk(
+        scored, order, k, query_id_col, corpus_id_col,
+        F.col("score").alias("score"),
+    )
 
 
 def _negative_exclusions(
@@ -312,27 +313,6 @@ def _negative_exclusions(
         )
         scored = scored.join(ex, ["__qid", corpus_id_col], "left_anti")
     return scored
-
-
-def _negative_topk(
-    scored: DataFrame,
-    score_col: str,
-    order: list,
-    k: int,
-    query_id_col: str,
-    corpus_id_col: str,
-) -> DataFrame:
-    w = Window.partitionBy("__qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col(corpus_id_col),
-            F.col(score_col).alias("score"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
 
 
 def contrastive_triplets(
@@ -476,6 +456,7 @@ def ivf_hard_negatives(
         exclude_self,
         dup_ceiling,
     )
-    return _negative_topk(
-        scored, "__score", order, k, query_id_col, corpus_id_col
+    return _per_query_topk(
+        scored, order, k, query_id_col, corpus_id_col,
+        F.col("__score").alias("score"),
     )

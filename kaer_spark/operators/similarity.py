@@ -10,6 +10,14 @@
   written partitioned by cell id, so a query touches ``nprobe`` partitions
   instead of the full table (partition pruning on the cell column).
 
+Each vector-search stage has one kernel here, shared by the in-memory
+forms below, the bucketed cell table and the standing indexes
+(``index_store``): :func:`_nearest` (argmin cell / codeword),
+:func:`ivf_probe_cells` (driver probe order) and :func:`_probe` (in-plan
+probe), :func:`_fit_centroids` (coarse fit by name), :func:`_adc_tables`
++ :func:`_adc_score` (PQ asymmetric distance) and :func:`_l2_topk` (exact
+rank). Pairs are scored by ``knn._score_pairs``.
+
 The reference's ANN is a single in-RAM HNSW graph (``/root/reference/
 db/hnsw.go``) which cannot exceed one machine's memory; these paths are its
 distributed replacement with explicit recall/latency knobs.
@@ -19,19 +27,17 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kaer_spark.functions.vector import (
     cosine_similarity,
-    dot,
     double_array_lit,
     double_matrix_lit,
     l2sq,
 )
-from kaer_spark.operators.knn import knn_join
-from kaer_spark.operators.util import ensure_parallelism
+from kaer_spark.operators.knn import _per_query_topk, _score_pairs
+from kaer_spark.operators.util import ensure_parallelism, vec_dim
 
 
 def brute_force_topk(
@@ -43,13 +49,23 @@ def brute_force_topk(
     metric: str = "cosine",
 ) -> DataFrame:
     """Exact top-k for one query vector (TakeOrderedAndProject plan)."""
-    if metric == "cosine":
-        score = cosine_similarity(vec_col, list(query_vector))
-        order = [F.col("_score").desc(), F.col(id_col).asc()]
-    else:
-        score = l2sq(vec_col, list(query_vector))
-        order = [F.col("_score").asc(), F.col(id_col).asc()]
+    if metric != "cosine":
+        return _l2_topk(corpus, query_vector, k, vec_col, id_col)
+    score = cosine_similarity(vec_col, list(query_vector))
+    order = [F.col("_score").desc(), F.col(id_col).asc()]
     return corpus.withColumn("_score", score).orderBy(*order).limit(k)
+
+
+def _l2_topk(
+    df: DataFrame, query_vector: Sequence[float], k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """Exact l2sq top-k as ``_score`` (ascending, ties by id): the one
+    exact rank every IVF/PQ form ends in (TakeOrderedAndProject)."""
+    return (
+        df.withColumn("_score", l2sq(vec_col, list(query_vector)))
+        .orderBy(F.col("_score").asc(), F.col(id_col).asc())
+        .limit(k)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -143,23 +159,17 @@ def ivf_topk(
 ) -> DataFrame:
     """Probe the nprobe nearest cells, exact-rank inside them.
 
-    Driver computes cell distances from the (tiny) centroid set; the scan
-    then prunes on ``_cell IN (...)`` — partition pruning when the corpus
-    is stored partitioned by cell.
+    Driver computes the probe order from the (tiny) centroid set
+    (:func:`ivf_probe_cells`); the scan then prunes on ``_cell IN (...)``
+    — partition pruning when the corpus is stored partitioned by cell.
     """
-    import numpy as np
+    probe = ivf_probe_cells(_centers(model), query_vector, nprobe)
+    return _probed_topk(assigned_corpus, probe, query_vector, k, vec_col, id_col)
 
-    q = np.asarray([float(x) for x in query_vector])
-    dists = [(i, float(((c - q) ** 2).sum())) for i, c in enumerate(model.clusterCenters())]
-    # (dist, cell-id) sort: same deterministic tie-break as the materialized
-    # index path (operators.index_store.ivf_index_topk)
-    probe = [i for i, _ in sorted(dists, key=lambda t: (t[1], t[0]))[:nprobe]]
-    pruned = assigned_corpus.filter(F.col("_cell").isin(probe))
-    return (
-        pruned.withColumn("_score", l2sq(vec_col, list(query_vector)))
-        .orderBy(F.col("_score").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+
+def _centers(model) -> list[list[float]]:
+    """A fitted MLlib k-means model's centroids as plain float lists."""
+    return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
 # ---------------------------------------------------------------------------
@@ -237,21 +247,39 @@ def ivf_fit_spread(
     return [[float(x) for x in r[vec_col]] for r in rows]
 
 
+def _dist_structs(vec, points, dist, tag: str) -> Column:
+    # (distance, index) structs: lexicographic struct ordering IS the
+    # (dist, index) tie-break
+    return F.array(
+        *[
+            F.struct(dist(vec, p).alias("d"), F.lit(i).alias(tag))
+            for i, p in enumerate(points)
+        ]
+    )
+
+
+def _nearest(vec, points: list[list[float]], dist=l2sq) -> Column:
+    """Index of the nearest of ``points`` (ties → smaller index):
+    ``array_min`` over (distance, index) structs, wholly in codegen. The
+    one argmin behind cell assignment and PQ encoding; ``dist`` builds the
+    distance-like expression (the cosine assigner passes negated cosine
+    similarity — argmin over -cos IS argmax cos)."""
+    return F.array_min(_dist_structs(vec, points, dist, "c"))["c"]
+
+
+def _probe(vec, centroids: list[list[float]], nprobe: int, dist=l2sq) -> Column:
+    """In-plan probe: the ``nprobe`` nearest cell ids of a vector column,
+    nearest first (``array_sort`` + ``slice`` over the same structs)."""
+    nearest_first = F.array_sort(_dist_structs(vec, centroids, dist, "j"))
+    return F.transform(F.slice(nearest_first, 1, int(nprobe)), lambda s: s["j"])
+
+
 def ivf_assign_deterministic(
     corpus: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
-    """Tag rows with argmin-distance cell (ties → smaller cell id).
-
-    ``array_min`` over (distance, cell-id) structs: lexicographic struct
-    ordering IS the (dist, j) tie-break, evaluated wholly in codegen.
-    """
-    arr = F.array(
-        *[
-            F.struct(l2sq(vec_col, c).alias("d"), F.lit(j).alias("j"))
-            for j, c in enumerate(centroids)
-        ]
-    )
-    return corpus.withColumn("_cell", F.array_min(arr)["j"])
+    """Tag rows with argmin-distance cell (ties → smaller cell id) — the
+    :func:`_nearest` kernel, as every cell-assigned table stores it."""
+    return corpus.withColumn("_cell", _nearest(vec_col, centroids))
 
 
 def py_l2sq(a: Sequence[float], b: Sequence[float]) -> float:
@@ -268,8 +296,48 @@ def py_l2sq(a: Sequence[float], b: Sequence[float]) -> float:
 def ivf_probe_cells(
     centroids: list[list[float]], query_vector: Sequence[float], nprobe: int
 ) -> list[int]:
+    """The one driver-side probe order: the ``nprobe`` nearest cells by
+    (:func:`py_l2sq`, cell id), nearest first."""
     dists = [(py_l2sq(c, query_vector), j) for j, c in enumerate(centroids)]
     return [j for _, j in sorted(dists)[:nprobe]]
+
+
+def _probed_topk(
+    df: DataFrame,
+    cells: list[int],
+    query_vector: Sequence[float],
+    k: int,
+    vec_col: str,
+    id_col: str,
+    pred=None,
+) -> DataFrame:
+    """Exact top-k inside the probed cells of a cell-assigned table."""
+    probed = df.filter(F.col("_cell").isin(cells))
+    if pred is not None:
+        probed = probed.filter(pred)
+    return _l2_topk(probed, query_vector, k, vec_col, id_col)
+
+
+def _fit_centroids(
+    corpus: DataFrame,
+    fit: str,
+    fits: tuple[str, ...],
+    vec_col: str,
+    id_col: str,
+    cells: int,
+    seed: int = 42,
+) -> list[list[float]]:
+    """Coarse centroids from the fit named ``fit`` — ``"kmeans"``
+    (:func:`ivf_fit`), ``"deterministic"`` or ``"spread"`` — which must be
+    one of the caller's ``fits``."""
+    if fit not in fits:
+        raise ValueError(
+            f"unknown fit {fit!r}: use " + ", ".join(repr(f) for f in fits)
+        )
+    if fit == "kmeans":
+        return _centers(ivf_fit(corpus, vec_col=vec_col, cells=cells, seed=seed))
+    sample = ivf_fit_spread if fit == "spread" else ivf_fit_deterministic
+    return sample(corpus, vec_col, id_col, cells)
 
 
 def ivf_topk_deterministic(
@@ -288,12 +356,7 @@ def ivf_topk_deterministic(
     cents = ivf_fit_deterministic(corpus, vec_col, id_col, cells)
     assigned = ivf_assign_deterministic(corpus, cents, vec_col)
     probe = ivf_probe_cells(cents, query_vector, nprobe)
-    return (
-        assigned.filter(F.col("_cell").isin(probe))
-        .withColumn("_score", l2sq(vec_col, list(query_vector)))
-        .orderBy(F.col("_score").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _probed_topk(assigned, probe, query_vector, k, vec_col, id_col)
 
 
 def ivf_scored_candidates(
@@ -320,13 +383,9 @@ def ivf_scored_candidates(
     if metric not in ("l2sq", "cosine"):
         raise ValueError(f"metric must be 'l2sq' or 'cosine', got {metric!r}")
 
-    def cell_dist(vec_col, c):
-        # "distance" used for assignment + probing: l2sq, or negated cosine
-        # (argmin over -cos IS argmax cosine; struct ties break on cell id)
-        if metric == "cosine":
-            return -cosine_similarity(vec_col, c)
-        return l2sq(vec_col, c)
-
+    # "distance" used for assignment + probing: l2sq, or negated cosine
+    # (argmin over -cos IS argmax cosine; struct ties break on cell id)
+    cell_dist = l2sq if metric == "l2sq" else lambda v, c: -cosine_similarity(v, c)
     if "_cell" in corpus.columns:
         # pre-assigned corpus (e.g. the materialized index_store table):
         # reuse the stored assignment — no per-row argmin over `cells`
@@ -343,31 +402,16 @@ def ivf_scored_candidates(
             centroids = ivf_fit_spread(
                 corpus, corpus_vec_col, corpus_id_col, cells
             )
-        arr = F.array(
-            *[
-                F.struct(cell_dist(corpus_vec_col, c).alias("d"), F.lit(j).alias("j"))
-                for j, c in enumerate(centroids)
-            ]
-        )
         # widen BEFORE the per-row argmin over `cells` centroid distances:
         # a small parquet corpus arrives as one split and the whole
         # expression-heavy assignment stage runs on a single core (r17
         # profile: an 8s one-task stage under contrastive_triplets_mine);
         # on a multi-TB scan this is a no-op (operators/util.py)
         assigned = ensure_parallelism(corpus).withColumn(
-            "_cell", F.array_min(arr)["j"]
+            "_cell", _nearest(corpus_vec_col, centroids, cell_dist)
         )
     if corpus_pred is not None:
         assigned = assigned.filter(corpus_pred)
-    qdists = F.array(
-        *[
-            F.struct(cell_dist(query_vec_col, c).alias("d"), F.lit(j).alias("j"))
-            for j, c in enumerate(centroids)
-        ]
-    )
-    probe = F.transform(
-        F.slice(F.array_sort(qdists), 1, nprobe), lambda s: s["j"]
-    )
     # same single-split guard for the query side: mining-shaped callers
     # (contrastive_triplets) pass corpus-derived anchor tables that arrive
     # on one partition, and the nprobe explode + per-query centroid ranks
@@ -375,35 +419,14 @@ def ivf_scored_candidates(
     qa = ensure_parallelism(queries).select(
         F.col(query_id_col).alias("__qid"),
         F.col(query_vec_col).alias("__qvec"),
-        F.explode(probe).alias("_cell"),
+        F.explode(_probe(query_vec_col, centroids, nprobe, cell_dist)).alias(
+            "_cell"
+        ),
     )
-    if metric == "cosine":
-        # norms precompute ONCE PER SIDE below the join (a join boundary
-        # stops CollapseProject from inlining them into the per-pair
-        # expression — the r13 mining profile showed the naive form
-        # evaluating THREE interpreted 64-element folds per joined pair,
-        # 108s for 1.7k queries × 5k corpus at full probe; with the
-        # per-pair work reduced to the one dot fold it's ~3× less).
-        # Bit-identical to cosine_similarity: same denom product order
-        # (corpus norm × query norm), same NULL-safe zero guard.
-        from kaer_spark.functions.vector import vector_norm
-
-        assigned = assigned.withColumn("__cn", vector_norm(corpus_vec_col))
-        qa = qa.withColumn("__qn", vector_norm("__qvec"))
-        denom = F.col("__cn") * F.col("__qn")
-        score = F.when(
-            denom != 0.0, dot(F.col(corpus_vec_col), F.col("__qvec")) / denom
-        )
-        order = [F.col("__score").desc(), F.col(corpus_id_col).asc()]
-    else:
-        score = l2sq(F.col(corpus_vec_col), F.col("__qvec"))
-        order = [F.col("__score").asc(), F.col(corpus_id_col).asc()]
-    scored = (
-        qa.join(assigned, "_cell")
-        .withColumn("__score", score.cast("double"))
-        .select("__qid", corpus_id_col, "__score")
+    return _score_pairs(
+        qa, assigned, lambda q, c: q.join(c, "_cell"), corpus_vec_col,
+        corpus_id_col, metric,
     )
-    return scored, order
 
 
 def ivf_knn_join(
@@ -467,16 +490,7 @@ def ivf_knn_join(
         metric=metric,
         corpus_pred=corpus_pred,
     )
-    w = Window.partitionBy("__qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col(corpus_id_col),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _per_query_topk(scored, order, k, query_id_col, corpus_id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -571,7 +585,7 @@ def pq_fit(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    dim = len(corpus.select(vec_col).first()[0])
+    dim = vec_dim(corpus, vec_col)
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
@@ -590,8 +604,7 @@ def pq_fit(
             k=k, seed=seed + j, featuresCol="_vec", predictionCol="_c",
             maxIter=max_iter,
         )
-        model = km.fit(sl)
-        books.append([[float(x) for x in c] for c in model.clusterCenters()])
+        books.append(_centers(km.fit(sl)))
     return books
 
 
@@ -636,6 +649,32 @@ def pq_encode(
     return df.mapInPandas(encode, schema)
 
 
+def _adc_tables(
+    codebooks: list[list[list[float]]], query_vector: Sequence[float]
+) -> Column:
+    """The driver ADC lookup table as a literal: per subspace, the
+    :func:`py_l2sq` of the query slice to every codeword — the same
+    left-assoc ``(x - c) * (x - c)`` fold as every engine-side distance."""
+    d = len(codebooks[0][0])
+    q = [float(x) for x in query_vector]
+    return double_matrix_lit(
+        [
+            [py_l2sq(q[j * d : (j + 1) * d], c) for c in book]
+            for j, book in enumerate(codebooks)
+        ]
+    )
+
+
+def _adc_score(table: Column, code_col: str = "pq_code") -> Column:
+    """Per-row ADC distance: gather each subspace's table entry at the
+    row's code and sum from 0.0 (``zip_with`` + ``aggregate``)."""
+    return F.aggregate(
+        F.zip_with(F.col(code_col), table, lambda c, t: t[c]),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def pq_topk(
     encoded: DataFrame,
     codebooks: list[list[list[float]]],
@@ -651,22 +690,7 @@ def pq_topk(
     as a pure Catalyst expression (zip_with + aggregate) inside codegen.
     No vector column is read at query time: the scan touches only the
     id + m-int code columns."""
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    q = [float(x) for x in query_vector]
-    tables = [
-        [
-            sum((q[j * d + i] - c[i]) ** 2 for i in range(d))
-            for c in codebooks[j]
-        ]
-        for j in range(m)
-    ]
-    tables_lit = double_matrix_lit(tables)
-    dist = F.aggregate(
-        F.zip_with(F.col(code_col), tables_lit, lambda c, t: t[c]),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = _adc_score(_adc_tables(codebooks, query_vector), code_col)
     return (
         encoded.withColumn("_score", dist)
         .orderBy(F.col("_score").asc(), F.col(id_col).asc())
@@ -709,7 +733,7 @@ def pq_encode_deterministic(
     code_col: str = "pq_code",
 ) -> DataFrame:
     """Attach the m-byte code as a pure Catalyst expression: per subspace,
-    ``array_min`` over (distance, centroid) structs — the same direct
+    the :func:`_nearest` argmin over (distance, centroid) structs — the same direct
     (x-c)² left-assoc fold the oracle unrolls (NOT the numpy expanded form
     ``x·x - 2x·c + c·c``, whose different rounding could flip an argmin).
     Stays in codegen; nothing leaves the JVM.
@@ -719,18 +743,11 @@ def pq_encode_deterministic(
     is 2.5× SLOWER here: m·k·d ≈ 1024 terms per row blows past
     the codegen method limits and the whole expression falls back to
     interpreted eval. The zip_with/aggregate HOF stays."""
-    m, d = len(codebooks), len(codebooks[0][0])
+    d = len(codebooks[0][0])
     v = F.col(vec_col).cast("array<double>")
-    codes = []
-    for j in range(m):
-        sl = F.slice(v, j * d + 1, d)
-        arr = F.array(
-            *[
-                F.struct(l2sq(sl, c).alias("d"), F.lit(ci).alias("c"))
-                for ci, c in enumerate(codebooks[j])
-            ]
-        )
-        codes.append(F.array_min(arr)["c"])
+    codes = [
+        _nearest(F.slice(v, j * d + 1, d), book) for j, book in enumerate(codebooks)
+    ]
     return df.withColumn(code_col, F.array(*codes))
 
 
@@ -743,32 +760,17 @@ def pq_topk_deterministic(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Deterministic-PQ ADC top-k: fit → Catalyst encode → m table lookups
-    + adds per row (the tables are driver-computed with the same left-assoc
-    fold — ``py_l2sq`` — as every engine-side distance). For a codebook row
-    itself the ADC distance is the true slice-grouped l2sq (codes hit
-    distance-0 centroids) — bit-equal to the same Python fold, and equal to
-    the flat 64-term l2sq only within last-ulp association error, which is
-    why the oracle replays the SLICE grouping, not a flat sum."""
+    """Deterministic-PQ ADC top-k: fit → Catalyst encode → :func:`pq_topk`
+    (m table lookups + adds per row; the tables are driver-computed with
+    the same left-assoc fold — ``py_l2sq`` — as every engine-side
+    distance). For a codebook row itself the ADC distance is the true
+    slice-grouped l2sq (codes hit distance-0 centroids) — bit-equal to the
+    same Python fold, and equal to the flat 64-term l2sq only within
+    last-ulp association error, which is why the oracle replays the SLICE
+    grouping, not a flat sum."""
     books = pq_fit_deterministic(corpus, vec_col, id_col, m, k)
-    d = len(books[0][0])
-    q = [float(x) for x in query_vector]
-    tables = [
-        [py_l2sq(q[j * d : (j + 1) * d], c) for c in books[j]] for j in range(m)
-    ]
     encoded = pq_encode_deterministic(corpus, books, vec_col)
-    tables_lit = double_matrix_lit(tables)
-    dist = F.aggregate(
-        F.zip_with(F.col("pq_code"), tables_lit, lambda c, t: t[c]),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        encoded.withColumn("_score", dist)
-        .orderBy(F.col("_score").asc(), F.col(id_col).asc())
-        .limit(topk)
-        .select(id_col, "_score")
-    )
+    return pq_topk(encoded, books, query_vector, topk, id_col)
 
 
 def pq_topk_refined(
@@ -821,28 +823,14 @@ def _pq_adc_refine(
     """Shared refine tail: Catalyst argmin encode of ``rows`` under
     ``books``, driver-computed ADC tables (engine-shared left-assoc fold),
     ADC heap shortlist, exact-l2sq re-rank → ``(id, _score)``."""
-    m, d = len(books), len(books[0][0])
-    q = [float(x) for x in query_vector]
-    tables = [
-        [py_l2sq(q[j * d : (j + 1) * d], c) for c in books[j]] for j in range(m)
-    ]
-    encoded = pq_encode_deterministic(rows, books, vec_col)
-    tables_lit = double_matrix_lit(tables)
-    adc = F.aggregate(
-        F.zip_with(F.col("pq_code"), tables_lit, lambda c, t: t[c]),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     short = (
-        encoded.withColumn("_adc", adc)
+        pq_encode_deterministic(rows, books, vec_col)
+        .withColumn("_adc", _adc_score(_adc_tables(books, query_vector)))
         .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
         .limit(int(shortlist))
     )
-    return (
-        short.withColumn("_score", l2sq(vec_col, q))
-        .orderBy(F.col("_score").asc(), F.col(id_col).asc())
-        .limit(topk)
-        .select(id_col, "_score")
+    return _l2_topk(short, query_vector, topk, vec_col, id_col).select(
+        id_col, "_score"
     )
 
 
@@ -993,7 +981,7 @@ def sq_fit(
     Exact min/max (not quantiles), so results are deterministic and a SQL
     oracle recomputes identical bits.
     """
-    dim = len(corpus.select(vec_col).first()[0])
+    dim = vec_dim(corpus, vec_col)
     arr = corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
     if sample_fraction is not None:
         arr = arr.sample(fraction=sample_fraction, seed=seed)

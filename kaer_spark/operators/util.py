@@ -40,6 +40,20 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df.repartition(target)
 
 
+def vec_dim(df: DataFrame, vec_col: str) -> int:
+    """Dimensionality of the first non-null vector in ``vec_col``: one
+    limit-1 lookup, so a null vector in the first-scanned row cannot fail
+    it while valid vectors follow (``size(null)`` is null under ANSI)."""
+    row = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("d"))
+        .first()
+    )
+    if row is None:
+        raise ValueError(f"cannot infer dimension of empty/null {vec_col!r}")
+    return int(row["d"])
+
+
 def watermark_health_cols(out: DataFrame, wm, corpus, corpus_id_col: str):
     """Staleness columns for an index-stats report, typed by the id
     column's own domain (refreshable indexes bless int AND string ids —

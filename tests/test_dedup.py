@@ -2833,6 +2833,30 @@ def test_signlsh_forms_fail_on_a_dimension_mismatch(spark, tmp_path):
         D.embedding_dups_against_index(spark, path, left8).collect()
 
 
+def test_vector_dim_skips_a_null_first_row(spark, tmp_path):
+    """A null vector in the first-scanned row does not hide the dimension
+    of the valid vectors after it: every dimension probe (``util.vec_dim``)
+    reads the first NON-null vector."""
+    import kaer_spark.operators.dedup as D
+    from kaer_spark.operators.similarity import sq_fit
+    from kaer_spark.operators.util import vec_dim
+
+    vec = [1.0, 0.0, 0.5, 0.2]
+    schema = "vec_id long, embedding array<double>"
+    left = spark.createDataFrame([(1, None), (2, vec)], schema).coalesce(1)
+    right = spark.createDataFrame([(10, vec)], schema)
+    assert vec_dim(left, "embedding") == 4
+    pairs = D.embedding_near_dups_between(left, right).collect()
+    assert [(r["left_id"], r["right_id"]) for r in pairs] == [(2, 10)]
+    assert D.embedding_near_dups_lsh(left).count() == 0
+    assert D.signlsh_candidate_pairs(left).count() == 0
+    assert D.build_signlsh_index(left, str(tmp_path / "signlsh"))["dim"] == 4
+    assert sq_fit(left) == (vec, vec)
+    empty = spark.createDataFrame([(1, None)], schema)
+    with pytest.raises(ValueError, match="cannot infer dimension"):
+        sq_fit(empty)
+
+
 def test_each_probe_body_lives_in_one_kernel():
     """The band equi-join, the pair joins and the Jaccard / containment
     projections of ``operators/dedup.py`` are written once per family:

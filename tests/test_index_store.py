@@ -3,6 +3,8 @@ incremental refresh (the reference's save / search / catch-up cycle)."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from kaer_spark.operators.index_store import (
@@ -11,7 +13,11 @@ from kaer_spark.operators.index_store import (
     read_index_meta,
     refresh_ivf_index,
 )
-from kaer_spark.operators.similarity import brute_force_topk, recall_at_k
+from kaer_spark.operators.similarity import (
+    brute_force_topk,
+    ivf_probe_cells,
+    recall_at_k,
+)
 from kaer_spark.plans.inspect import formatted_plan
 
 QVEC = [((i * 37) % 19 - 9) / 10.0 for i in range(64)]
@@ -266,11 +272,10 @@ def test_filtered_query_escalates_nprobe(spark, embeddings, tmp_path):
         ).collect()
     )
     assert [r["vec_id"] for r in rows] == [r["vec_id"] for r in exact]
-    # escalation off reproduces the old under-filling probe
-    off = ivf_index_topk(
-        spark, path, QVEC, k=k, nprobe=1, pred=pred, escalate=False
-    )
-    assert off.count() <= len(rows)
+    # the 1-cell probe alone holds fewer than k matches: escalation ran
+    first = ivf_probe_cells(read_index_meta(path)["centroids"], QVEC, 1)
+    data = spark.read.parquet(f"{path}/data")
+    assert data.filter(F.col("_cell").isin(first) & pred).count() < k
 
 
 # ---------------------------------------------------------------------------
@@ -501,7 +506,11 @@ def test_pq_index_topk_filtered_escalates_nprobe(spark, embeddings, tmp_path):
     """Celled index + selective pred: a 1-cell probe can't fill k, so
     nprobe doubles until k rows match (the ivf_index_topk recipe) — and
     at full escalation the result equals the unprobed filtered search."""
-    from kaer_spark.operators.index_store import build_pq_index, pq_index_topk
+    from kaer_spark.operators.index_store import (
+        build_pq_index,
+        pq_index_topk,
+        read_pq_meta,
+    )
 
     path = str(tmp_path / "pq")
     build_pq_index(embeddings, path, m=8, k=16, cells=8)
@@ -509,7 +518,7 @@ def test_pq_index_topk_filtered_escalates_nprobe(spark, embeddings, tmp_path):
     k = 8
     esc = pq_index_topk(
         spark, path, embeddings, QVEC, topk=k, shortlist=200,
-        nprobe=1, pred=pred, escalate=True,
+        nprobe=1, pred=pred,
     ).collect()
     assert len(esc) == k
     assert all(r["vec_id"] % 50 == 0 for r in esc)
@@ -520,12 +529,11 @@ def test_pq_index_topk_filtered_escalates_nprobe(spark, embeddings, tmp_path):
     assert [(r["vec_id"], r["_score"]) for r in esc] == [
         (r["vec_id"], r["_score"]) for r in flat
     ]
-    # without escalation the 1-cell probe under-fills
-    une = pq_index_topk(
-        spark, path, embeddings, QVEC, topk=k, shortlist=200,
-        nprobe=1, pred=pred, escalate=False,
-    ).collect()
-    assert len(une) < k
+    # the 1-cell probe alone holds fewer than k matches: escalation ran
+    first = ivf_probe_cells(read_pq_meta(path)["centroids"], QVEC, 1)
+    codes = spark.read.parquet(f"{path}/data").filter(F.col("_cell").isin(first))
+    matches = embeddings.filter(pred).select("vec_id")
+    assert codes.join(matches, "vec_id", "left_semi").count() < k
 
 
 def test_collection_query_pq_filtered(spark, tmp_path):
@@ -859,3 +867,83 @@ def test_watermark_protocol_stamp_derive_once_and_replay(spark, tmp_path):
     )
     assert new_max is None
     assert read_sidecar(sidecar) == {"id_col": "id", "max_id": 5}
+
+
+# ---------------------------------------------------------------------------
+# Form agreement on 24 pandas-backed vectors (fast tier): the standing-index,
+# in-memory and join forms of each vector-search stage answer alike
+# ---------------------------------------------------------------------------
+def _local_vectors(spark, n, first_id, seed, id_col="vec_id"):
+    import random
+
+    import pandas as pd
+
+    rnd = random.Random(seed)
+    rows = [(first_id + i, [rnd.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(n)]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=[id_col, "embedding"]),
+        f"{id_col} long, embedding array<double>",
+    )
+
+
+def _ranks(df, qcol="query_id"):
+    return sorted((r[qcol], r["vec_id"], r["rank"]) for r in df.collect())
+
+
+@pytest.mark.parametrize(
+    "form", ["ivf_index", "pq_flat", "pq_cells", "l2sq", "cosine", "dot"]
+)
+def test_vector_search_forms_agree(spark, tmp_path, form):
+    """``ivf_index_topk`` per query == ``ivf_index_knn_join`` at partial
+    probe (driver probe order vs in-plan probe); ``pq_index_topk`` ==
+    ``pq_topk_refined`` (no cells) and == ``ivf_pq_topk`` (cells);
+    ``knn_join`` == ``hard_negatives(exclude_self=False)`` ranks for every
+    metric, and == ``ivf_knn_join`` at full probe for l2sq and cosine."""
+    from kaer_spark.operators import index_store as I
+    from kaer_spark.operators import knn as K
+    from kaer_spark.operators import similarity as S
+
+    corpus = _local_vectors(spark, 21, 0, 5)
+    queries = _local_vectors(spark, 3, 100, 6, "query_id")
+    qrows = queries.collect()
+    path = str(tmp_path / form)
+    if form == "ivf_index":
+        I.build_ivf_index(corpus, path, cells=4, fit="deterministic")
+        per_query = sorted(
+            (r["query_id"], row["vec_id"], rank)
+            for r in qrows
+            for rank, row in enumerate(
+                I.ivf_index_topk(spark, path, r["embedding"], 3, nprobe=2).collect(), 1
+            )
+        )
+        assert per_query == _ranks(
+            I.ivf_index_knn_join(spark, path, queries, 3, nprobe=2)
+        )
+        return
+    if form.startswith("pq"):
+        cells = 4 if form == "pq_cells" else None
+        I.build_pq_index(corpus, path, m=2, k=4, cells=cells)
+        for r in qrows:
+            served = I.pq_index_topk(
+                spark, path, corpus, r["embedding"], topk=3, shortlist=6,
+                nprobe=2 if cells else None,
+            )
+            if cells:
+                fresh = S.ivf_pq_topk(
+                    corpus, r["embedding"], topk=3, cells=4, nprobe=2,
+                    shortlist=6, m=2, codebook_k=4,
+                )
+            else:
+                fresh = S.pq_topk_refined(
+                    corpus, r["embedding"], topk=3, shortlist=6, m=2, k=4
+                )
+            assert _rows(served) == _rows(fresh)
+        return
+    kw = dict(query_id_col="query_id", corpus_id_col="vec_id", metric=form)
+    want = _ranks(K.knn_join(queries, corpus, 3, **kw))
+    assert len(want) == 9
+    negatives = K.hard_negatives(queries, corpus, 3, exclude_self=False, **kw)
+    assert _ranks(negatives) == want
+    if form != "dot":
+        full_probe = S.ivf_knn_join(queries, corpus, 3, cells=4, nprobe=4, **kw)
+        assert _ranks(full_probe) == want

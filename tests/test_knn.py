@@ -128,33 +128,36 @@ def test_cached_expr_is_thread_safe(spark, monkeypatch):
 
 def test_knn_join_matches_per_query_exact(corpus, embeddings):
     queries = embeddings.select("vec_id", "embedding").filter(F.col("vec_id") < 3)
-    out = knn_join(
-        queries,
-        corpus,
-        k=4,
-        query_id_col="vec_id",
-        corpus_id_col="doc_id",
-        metric="l2sq",
-    )
-    got = {
-        (r["vec_id"], r["rank"]): r["doc_id"] for r in out.collect()
-    }
-    for qid in range(3):
-        qvec = (
-            embeddings.filter(F.col("vec_id") == qid).select("embedding").collect()
-        )[0][0]
-        expected = [
-            r[0]
-            for r in exact_knn(
-                corpus, list(qvec), 4, vec_col="embedding", id_col="doc_id"
-            )
-            .select("doc_id")
-            .collect()
-        ]
-        assert [got[(qid, rank)] for rank in range(1, 5)] == expected
-    # rank 1 of each query is the query row itself (distance 0)
-    for qid in range(3):
-        assert got[(qid, 1)] == qid
+    for metric in ("l2sq", "cosine"):
+        out = knn_join(
+            queries,
+            corpus,
+            k=4,
+            query_id_col="vec_id",
+            corpus_id_col="doc_id",
+            metric=metric,
+        )
+        got = {
+            (r["vec_id"], r["rank"]): r["doc_id"] for r in out.collect()
+        }
+        for qid in range(3):
+            qvec = (
+                embeddings.filter(F.col("vec_id") == qid).select("embedding").collect()
+            )[0][0]
+            expected = [
+                r[0]
+                for r in exact_knn(
+                    corpus, list(qvec), 4, vec_col="embedding", id_col="doc_id",
+                    metric=metric,
+                )
+                .select("doc_id")
+                .collect()
+            ]
+            assert [got[(qid, rank)] for rank in range(1, 5)] == expected, metric
+        # rank 1 of each query is the query row itself (distance 0)
+        if metric == "l2sq":
+            for qid in range(3):
+                assert got[(qid, 1)] == qid
 
 
 def test_knn_plan_is_top_k_not_global_sort(corpus):
@@ -190,19 +193,6 @@ def test_exact_knn_cosine_metric(corpus):
     assert all(out[i]["cos"] >= out[i + 1]["cos"] for i in range(len(out) - 1))
 
 
-def test_knn_join_pruned_equals_unpruned(corpus, embeddings):
-    """Candidate pruning is a pure optimization: bit-identical results."""
-    queries = embeddings.select("vec_id", "embedding").filter(F.col("vec_id") < 3)
-    kw = dict(query_id_col="vec_id", corpus_id_col="doc_id")
-    for metric in ("l2sq", "cosine"):
-        pruned = knn_join(queries, corpus, k=4, metric=metric, **kw)
-        full = knn_join(
-            queries, corpus, k=4, metric=metric, prune_candidates=False, **kw
-        )
-        snap = lambda df: sorted(tuple(r) for r in df.collect())
-        assert snap(pruned) == snap(full)
-
-
 def test_knn_join_prunes_before_exchange_jvm(corpus, embeddings):
     """Default plan: the pre-exchange bound comes from Catalyst's
     WindowGroupLimit rewrite (SPARK-37099) — a Partial group-limit node
@@ -228,27 +218,6 @@ def test_knn_join_prunes_before_exchange_jvm(corpus, embeddings):
     assert len(exchanges) == 1
     partial_node = plan.index(", Partial")
     assert exchanges[0] < partial_node
-
-
-def test_knn_join_legacy_fold_prunes_before_exchange(corpus, embeddings):
-    """Opt-in legacy fold (prune_candidates=True): the MapInPandas fold
-    must still sit below the qid Exchange."""
-    queries = embeddings.select("vec_id", "embedding").filter(F.col("vec_id") < 3)
-    plan = (
-        knn_join(
-            queries, corpus, k=4, query_id_col="vec_id", corpus_id_col="doc_id",
-            prune_candidates=True,
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInPandas" in plan
-    exchanges = [
-        i for i in range(len(plan)) if plan.startswith("Exchange hashpartitioning", i)
-    ]
-    assert len(exchanges) == 1
-    assert exchanges[0] < plan.index("MapInPandas")
 
 
 def test_exact_knn_dot_metric(spark):

@@ -98,7 +98,6 @@ def test_pq_adc_self_exactness_and_shape(spark, embeddings):
     row = enc.collect()[0]
     assert len(row["pq_code"]) == 8
     assert all(0 <= c < 16 for c in row["pq_code"])
-    assert row["pq_code"][3] == 3 or True  # code content checked via score:
     top = pq_topk(enc, books, syn, k=1).collect()[0]
     assert top["vec_id"] == 7 and top["_score"] == 0.0
 
@@ -652,3 +651,56 @@ def test_ivf_pq_partial_probe_recall_and_exact_scores(spark, embeddings):
     )
     assert r3 <= r6 <= r8
     assert r8 >= 0.8
+
+
+def test_pq_topk_adc_table_squares_by_product(spark):
+    """``pq_topk`` builds its ADC table with the ``py_l2sq`` fold, which
+    squares by product like the engine's ``l2sq``: for this ``x``,
+    ``x ** 2`` and ``x * x`` differ in the last place."""
+    from kaer_spark.operators.similarity import pq_topk, py_l2sq
+
+    x = -1.818447760617123
+    assert x ** 2 != x * x
+    books = [[[0.0, 0.0], [1.0, 1.0]], [[0.0, 0.0], [1.0, 1.0]]]
+    q = [x, 0.0, 0.0, 0.0]
+    codes = [0, 1]
+    enc = spark.createDataFrame([(1, codes)], "vec_id long, pq_code array<int>")
+    got = pq_topk(enc, books, q, k=1).collect()[0]["_score"]
+    want = 0.0
+    for j, c in enumerate(codes):
+        want = want + py_l2sq(q[2 * j : 2 * j + 2], books[j][c])
+    assert got == want
+
+
+def test_each_vector_stage_lives_in_one_kernel():
+    """The argmin, the in-plan probe, the ADC gather, the cosine norm
+    precompute and the k-means centroid read are each written once across
+    ``similarity``, ``index_store`` and ``knn``: inside their kernel, never
+    again in a public form."""
+    import ast
+    import re
+
+    import kaer_spark.operators.index_store as I
+    import kaer_spark.operators.knn as K
+    import kaer_spark.operators.similarity as S
+
+    only_in = {
+        r"F\.array_min\(": {"similarity._nearest"},
+        r"F\.array_sort\(": {"similarity._probe"},
+        r"lambdac,t:t\[c\]": {"similarity._adc_score"},
+        r"vector_norm\(": {"knn._score_pairs"},
+        r"\.clusterCenters\(\)": {"similarity._centers"},
+    }
+    found = {pat: set() for pat in only_in}
+    for mod in (S, I, K):
+        src = open(mod.__file__, encoding="utf-8").read()
+        lines = src.splitlines()
+        short = mod.__name__.rsplit(".", 1)[1]
+        for node in ast.parse(src).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            body = re.sub(r"\s+", "", "".join(lines[node.lineno - 1:node.end_lineno]))
+            for pat in only_in:
+                if re.search(pat, body):
+                    found[pat].add(f"{short}.{node.name}")
+    assert found == only_in

@@ -7,6 +7,21 @@ the evidence that the declared 100 TB design (pushdown, pruning,
 broadcast-over-shuffle, no global sorts) is what Catalyst actually planned.
 
 Usage: python tools/plan_report.py [sf_dir] > PLANS.md
+
+Rows can differ between two runs of the same commit. Every query runs in
+one shared session, and the digest reads the FINAL adaptive plan, so a
+row's runtime choices (join strategy, broadcast or sort-merge, coalesced
+exchanges, codegen spans) can depend on what the queries before it left
+in the session. A row that differs between two commits is therefore
+compared by running its query alone in a fresh session on each commit,
+for example::
+
+    python -c 'import sys; sys.path.insert(0, ".")
+    import __spark_entry__ as e
+    from kaer_spark.plans.inspect import explain_summary
+    from kaer_spark.session import get_spark
+    df = e.queries()[sys.argv[1]](get_spark(), sys.argv[2])
+    print(explain_summary(df, materialize=True))' hard_negatives <sf_dir>
 """
 
 from __future__ import annotations
