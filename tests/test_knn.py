@@ -193,6 +193,35 @@ def test_exact_knn_cosine_metric(corpus):
     assert all(out[i]["cos"] >= out[i + 1]["cos"] for i in range(len(out) - 1))
 
 
+def test_knn_join_pruned_equals_unpruned(corpus, embeddings):
+    """Candidate pruning is a pure optimization: bit-identical results.
+    The pruned plan is the default (Catalyst's map-side WindowGroupLimit
+    below the qid exchange); the unpruned one turns that rewrite off, so
+    every scored pair crosses the exchange."""
+    queries = embeddings.select("vec_id", "embedding").filter(F.col("vec_id") < 3)
+    kw = dict(query_id_col="vec_id", corpus_id_col="doc_id")
+    conf = corpus.sparkSession.conf
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    snap = lambda df: sorted(tuple(r) for r in df.collect())
+    for metric in ("l2sq", "cosine"):
+        pruned = knn_join(queries, corpus, k=4, metric=metric, **kw)
+        assert "WindowGroupLimit" in (
+            pruned._jdf.queryExecution().executedPlan().toString()
+        )
+        want = snap(pruned)
+        old = conf.get(key)
+        conf.set(key, "-1")
+        try:
+            full = knn_join(queries, corpus, k=4, metric=metric, **kw)
+            assert "WindowGroupLimit" not in (
+                full._jdf.queryExecution().executedPlan().toString()
+            )
+            got = snap(full)
+        finally:
+            conf.set(key, old)
+        assert got == want, metric
+
+
 def test_knn_join_prunes_before_exchange_jvm(corpus, embeddings):
     """Default plan: the pre-exchange bound comes from Catalyst's
     WindowGroupLimit rewrite (SPARK-37099) — a Partial group-limit node
