@@ -2975,8 +2975,8 @@ def _ensure_minhash_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     """The catch-up twin of :func:`_ensure_minhash_index` (the
     pq_index_catchup recipe): BUILD over the odd-id prefix (doc_id <
     MH_CATCHUP_CUT), then REFRESH with the full odd-id reference —
-    dedup.refresh_minhash_index appends the tail's band keys and shingle
-    sets under the sidecar-frozen hashing, no rebuild. A refresh bug
+    dedup.refresh_minhash_index appends the tail's band keys and text
+    rows under the sidecar-frozen hashing, no rebuild. A refresh bug
     (missed/duplicated tail rows, drifted hashing) surfaces as a value
     mismatch in the served pairs, because the oracle replays the
     from-scratch build over the UNION."""

@@ -426,7 +426,14 @@ class Collection:
         # so the merge always succeeds. The merged schema is memoised per
         # session (sources.files): a warm read fires no job, and the first
         # read after an insert or rewrite re-merges.
-        return read_parquet(self.ctx.spark, self.data_path, merge_schema=True)
+        df = read_parquet(self.ctx.spark, self.data_path, merge_schema=True)
+        if not self.meta.get("schema"):
+            return df
+        # the merged order varies run to run; every read (and so every
+        # index catch-up written from one) takes the catalog's order
+        catalog = T.StructType.fromJson(json.loads(self.meta["schema"]))
+        order = [f.name for f in catalog.fields if f.name in df.columns]
+        return df.select(*order, *[c for c in df.columns if c not in order])
 
     # -- ingest (reference O4, db/db.go:60-100) --------------------------
     def insert(

@@ -1440,7 +1440,7 @@ def minhash_signatures(
     coeffs = minhash_coeffs(num_hashes, seed)
     if unit == "char":
         N = int(n)
-        base = ensure_parallelism(df.filter(F.length(text_col) >= N))
+        base = ensure_parallelism(df.filter(_signed(text_col, N, unit)))
         sig = minhash_sig_col(text_col, N, coeffs, HASH_BASE, HASH_MOD)
         return base.select(
             F.col(id_col).alias("id"),
@@ -1457,6 +1457,24 @@ def minhash_signatures(
 
     sig = F.array(*[slot(a, b) for a, b in coeffs])
     return sh.withColumn("sig", sig)
+
+
+def _signed(text_col: str, n: int, unit: str) -> Column:
+    """The rows :func:`minhash_signatures` signs: those with at least one
+    shingle (``length >= n`` is the char-unit form of that test)."""
+    if unit == "char":
+        return F.length(text_col) >= int(n)
+    return F.size(_shingle_expr(text_col, n, unit)) > 0
+
+
+def _minhash_docs(
+    df: DataFrame, id_col: str, text_col: str, n: int, unit: str
+) -> DataFrame:
+    """``(id, text)`` of the rows :func:`minhash_signatures` signs — the
+    stored index's ``docs/`` table, the exact verify's text side."""
+    return df.filter(_signed(text_col, n, unit)).select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("text")
+    )
 
 
 def minhash_near_dups(
@@ -1529,7 +1547,9 @@ def _minhash_side(
     if presigned is not None:
         return _minhash_banded(
             presigned.select("id", "sig"), bands, num_hashes // bands
-        ), _minhash_stored(presigned)
+        ), lambda ids, name, sh: presigned.select(
+            F.col("id").alias(name), F.col("shingles").alias(sh)
+        ).join(ids.distinct(), name, "left_semi")
     sigs = _minhash_sigs(df, id_col, text_col, n, num_hashes, seed, unit)
 
     def shingles(ids: DataFrame, name: str, sh: str) -> DataFrame:
@@ -1550,12 +1570,26 @@ def _minhash_side(
     return _minhash_banded(sigs, bands, num_hashes // bands), shingles
 
 
-def _minhash_stored(frame: DataFrame):
-    """The shingle source over an ``(id, shingles)`` frame already at
-    hand: presigned rows or the stored index table."""
-    return lambda ids, name, sh: frame.select(
-        F.col("id").alias(name), F.col("shingles").alias(sh)
-    ).join(ids.distinct(), name, "left_semi")
+def _minhash_text_source(
+    df: DataFrame, id_col: str, text_col: str, n: int, unit: str
+):
+    """The shingle source over a frame holding the text (a corpus, or the
+    stored ``docs/`` table): the candidate ids are semi-joined first, so
+    only their rows are re-shingled."""
+
+    def shingles(ids: DataFrame, name: str, sh: str) -> DataFrame:
+        # [r18, ADVICE] The candidate semi-join prunes BEFORE the
+        # widening exchange (r17 item 12), so only surviving rows (not
+        # the whole corpus text) ride the round-robin repartition.
+        bound = ids.select(F.col(name).alias(id_col)).distinct()
+        return ensure_parallelism(
+            df.join(bound, [id_col], "left_semi")
+        ).select(
+            F.col(id_col).alias(name),
+            _shingle_expr(text_col, n, unit).alias(sh),
+        )
+
+    return shingles
 
 
 def _minhash_probe(left, threshold: float, right=None) -> DataFrame:
@@ -1724,20 +1758,10 @@ def minhash_near_dups_between(
     """
 
     def side(df: DataFrame, id_col: str):
-        def shingles(ids: DataFrame, name: str, sh: str) -> DataFrame:
-            # [r18, ADVICE] The candidate semi-join prunes BEFORE the
-            # widening exchange (r17 item 12), so only surviving rows (not
-            # the whole corpus text) ride the round-robin repartition.
-            bound = ids.select(F.col(name).alias(id_col)).distinct()
-            return ensure_parallelism(
-                df.join(bound, [id_col], "left_semi")
-            ).select(
-                F.col(id_col).alias(name),
-                _shingle_expr(text_col, n, unit).alias(sh),
-            )
-
         sigs = _minhash_sigs(df, id_col, text_col, n, num_hashes, seed, unit)
-        return _minhash_banded(sigs, bands, num_hashes // bands), shingles
+        return _minhash_banded(
+            sigs, bands, num_hashes // bands
+        ), _minhash_text_source(df, id_col, text_col, n, unit)
 
     return _minhash_probe(
         side(left, left_id_col), threshold, side(right, right_id_col)
@@ -1760,39 +1784,47 @@ def build_minhash_index(
     decontamination regime: every new crawl / training batch screens
     against the SAME fixed reference corpus (eval benchmarks, the
     existing training set), yet :func:`minhash_near_dups_between`
-    recomputes the reference's signatures, band keys, and shingle sets on
-    every call. Build once writes
+    recomputes the reference's signatures and band keys on every call.
+    Build once writes
 
-    ``<path>/bands/``     (id, band, key) — the reference's LSH band keys,
-    ``<path>/shingles/``  (id, shingles) — its distinct n-gram sets (the
-                          exact-verify side), and
+    ``<path>/bands/``  (id, band, key) — the reference's LSH band keys,
+    ``<path>/docs/``   (id, text) — the text of every signed document
+                       (``length(text) >= n`` for char shingles, at least
+                       one word shingle for word shingles): the exact
+                       verify re-shingles only the candidate ids from it,
+                       so the artifact is self-contained (no source path)
+                       and stores no shingle arrays, and
     ``<path>/minhash_index.json``  the frozen (n, num_hashes, bands,
-                          seed, unit) — the query side derives ITS keys
-                          from these, so both sides always hash alike.
+                       seed, unit) — the query side derives ITS keys
+                       from these, so both sides always hash alike.
+
+    Bands are written from ``(id, sig)`` alone and ``docs/`` straight
+    from ``df``, so the corpus-wide shingle strings are never built. A
+    rebuild over an artifact of the older ``shingles/`` layout (which
+    :func:`read_minhash_index_meta` refuses) removes that table once the
+    new ``docs/`` has landed.
 
     :func:`minhash_near_dups_against_index` /
     :func:`dedup_against_index` then pay only the query side's signature
-    pass plus the band join — value-identical to the from-text cross
-    call by construction (same seeded math, same banding, same exact
-    Jaccard verify). Growable reference sets: band keys are per-doc
-    independent (no corpus-global state, unlike the shingle index's
-    doc-freq cap), so :func:`refresh_minhash_index` appends new docs'
-    rows under the frozen hashing — reference O8 catch-up
-    (``updateIndexFromLastId``, ``db/db.go:191-207``) for the
-    decontamination artifact."""
+    pass, the band join, and the candidates' re-shingling —
+    value-identical to the from-text cross call by construction (same
+    seeded math, same banding, same exact Jaccard verify). Growable
+    reference sets: band keys are per-doc independent (no corpus-global
+    state, unlike the shingle index's doc-freq cap), so
+    :func:`refresh_minhash_index` appends new docs' rows under the frozen
+    hashing — reference O8 catch-up (``updateIndexFromLastId``,
+    ``db/db.go:191-207``) for the decontamination artifact."""
     import os as _os
+    import shutil
 
-    rows_per_band = num_hashes // bands
-    # two-consumer frame: the bands and shingles writes
-    sig = minhash_signatures(
-        df, id_col, text_col, n, num_hashes, seed, unit
-    ).localCheckpoint(eager=False)
-    _minhash_banded(sig.select("id", "sig"), bands, rows_per_band).write.mode(
+    sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed, unit)
+    _minhash_banded(
+        sig.select("id", "sig"), bands, num_hashes // bands
+    ).write.mode("overwrite").parquet(_os.path.join(path, "bands"))
+    _minhash_docs(df, id_col, text_col, n, unit).write.mode(
         "overwrite"
-    ).parquet(_os.path.join(path, "bands"))
-    sig.select("id", "shingles").write.mode("overwrite").parquet(
-        _os.path.join(path, "shingles")
-    )
+    ).parquet(_os.path.join(path, "docs"))
+    shutil.rmtree(_os.path.join(path, "shingles"), ignore_errors=True)
     meta = {
         "id_col": id_col,
         "text_col": text_col,
@@ -1820,7 +1852,7 @@ def refresh_minhash_index(
     decontamination artifact, completing the engine-wide rule that every
     standing index refreshes instead of rebuilding (IVF/text/PQ
     precedent, r13). Sound here because the artifact holds NO
-    corpus-global state: every ``(id, band, key)`` and ``(id, shingles)``
+    corpus-global state: every ``(id, band, key)`` and ``(id, text)``
     row derives from its document alone under the sidecar-frozen
     ``(n, num_hashes, bands, seed, unit)``, so appending the tail is
     row-identical to a from-scratch build over the union (pytest-pinned).
@@ -1829,13 +1861,18 @@ def refresh_minhash_index(
     over the cap (see :func:`build_shingle_index`).
 
     Idempotent against BOTH crash windows (the ``refresh_text_index``
-    discipline — bands append lands first, shingles second, watermark
+    discipline — bands append lands first, docs second, watermark
     last): a replay anti-joins each append against ITS OWN table's ids
     above the watermark (id-column-only, predicate-pushed scans of the
     index, not the corpus), so crash-after-bands re-appends only the
-    missing shingles rows and crash-after-both only flips the watermark.
+    missing docs rows and crash-after-both only flips the watermark.
     Pre-watermark artifacts (built before ``max_id`` was stamped) derive
-    the watermark from the stored shingles table once, then stamp it.
+    the watermark from the stored docs table once, then stamp it.
+
+    ``df`` carries the tail's text under the sidecar's ``text_col`` and
+    its ids under ``id_col`` — also with ``presigned``, whose signatures
+    give the band keys while the ``docs/`` append takes the text from
+    ``df``.
 
     ``advance_to`` (optional) floors the flipped watermark — for callers
     that SCREEN-and-drop (``streaming.ingest.neardup_ingest_batch``): a
@@ -1851,18 +1888,17 @@ def refresh_minhash_index(
     import os as _os
 
     meta = read_minhash_index_meta(path)
-    icol = meta["id_col"]
+    icol, tcol = meta["id_col"], meta["text_col"]
     bands_dir = _os.path.join(path, "bands")
-    sh_dir = _os.path.join(path, "shingles")
+    docs_dir = _os.path.join(path, "docs")
     _, tail, new_max, guard = open_refresh(
-        df, path, "minhash_index.json", meta, sh_dir, "id", advance_to, batch
+        df, path, "minhash_index.json", meta, docs_dir, "id", advance_to, batch
     )
     if new_max is None:
         return meta
-    # docs whose shingles row landed are fully indexed (shingles write
-    # LAST in both build and refresh) — drop them from the tail entirely
-    tail = guard(tail, icol, sh_dir, "id")
-    rows_per_band = meta["num_hashes"] // meta["bands"]
+    # docs whose docs row landed are fully indexed (docs write LAST in
+    # both build and refresh) — drop them from the tail entirely
+    tail = guard(tail, icol, docs_dir, "id")
     if presigned is not None:
         # caller-owned fast path (minhash_near_dups docstring): reuse the
         # batch's one signature pass, restricted to the guarded tail
@@ -1870,29 +1906,42 @@ def refresh_minhash_index(
             tail.select(F.col(icol).alias("id")), "id", "left_semi"
         )
     else:
-        # two-consumer frame: the bands and shingles appends
         sig = minhash_signatures(
-            tail, icol, meta["text_col"], meta["n"], meta["num_hashes"],
-            meta["seed"], meta["unit"],
-        ).localCheckpoint(eager=False)
+            tail, icol, tcol, meta["n"], meta["num_hashes"], meta["seed"],
+            meta["unit"],
+        )
     new_bands = _minhash_banded(
-        sig.select("id", "sig"), meta["bands"], rows_per_band
+        sig.select("id", "sig"), meta["bands"],
+        meta["num_hashes"] // meta["bands"],
     )
-    # ghost guard for the OTHER window: bands landed, shingles did not —
-    # those docs are still in the tail (no shingles row) but their band
-    # rows must not land twice
+    # ghost guard for the OTHER window: bands landed, docs did not —
+    # those docs are still in the tail (no docs row) but their band rows
+    # must not land twice
     guard(new_bands, "id", bands_dir).write.mode("append").parquet(
         bands_dir
     )
-    sig.select("id", "shingles").write.mode("append").parquet(sh_dir)
+    _minhash_docs(tail, icol, tcol, meta["n"], meta["unit"]).write.mode(
+        "append"
+    ).parquet(docs_dir)
     return flip_watermark(
         path, "minhash_index.json", meta, new_max, advance_to
     )
 
 
 def read_minhash_index_meta(path: str) -> dict:
+    """The sidecar of a :func:`build_minhash_index` artifact. An artifact
+    of the older layout (per-document ``shingles/`` arrays, no ``docs/``)
+    raises ``ValueError``: it cannot serve this verify, so it is rebuilt,
+    never read."""
     import os as _os
 
+    if _os.path.isdir(_os.path.join(path, "shingles")) and not _os.path.isdir(
+        _os.path.join(path, "docs")
+    ):
+        raise ValueError(
+            f"MinHash index at {path!r} has the older shingles/ layout; "
+            "rebuild it with build_minhash_index"
+        )
     return read_sidecar(_os.path.join(path, "minhash_index.json"))
 
 
@@ -1909,7 +1958,7 @@ def minhash_index_stats(
     index tables alone, answering what a recurring-decontamination
     operator asks before trusting the screen —
 
-    * ``n_docs`` / ``n_band_rows`` — indexed documents (one shingle-set
+    * ``n_docs`` / ``n_band_rows`` — indexed documents (one ``docs/``
       row each) and stored band keys (``n_docs × num_bands`` when
       healthy; drift between the two tables is a crash-replay bug);
     * ``n_buckets`` / ``max_bucket`` / ``bucket_skew`` /
@@ -1920,8 +1969,10 @@ def minhash_index_stats(
       ``bucket_skew`` = max vs the uniform design point
       (``max_bucket × n_buckets / n_band_rows``);
     * ``p50_doc_shingles`` / ``p90_doc_shingles`` / ``max_doc_shingles``
-      — the exact-verify side's per-doc payload (rank-based type-1
-      quantiles, bit-exact replayable, like every stats operator here);
+      — the exact-verify side's per-doc distinct shingle count, from
+      the stored text under the sidecar's ``(n, unit)`` (rank-based
+      type-1 quantiles, bit-exact replayable, like every stats operator
+      here);
     * ``num_hashes`` / ``num_bands`` — sidecar geometry echo;
     * ``watermark`` (+ ``watermark_lag`` / ``is_stale`` with
       ``corpus``, typed by the id domain — see
@@ -1941,7 +1992,7 @@ def minhash_index_stats(
 
     meta = read_minhash_index_meta(path)
     bands_t = read_parquet(spark, _os.path.join(path, "bands"))
-    sh = read_parquet(spark, _os.path.join(path, "shingles"))
+    docs = read_parquet(spark, _os.path.join(path, "docs"))
     buckets = (
         bands_t.groupBy("band", "key")
         .agg(F.count("*").alias("bc"))
@@ -1960,11 +2011,11 @@ def minhash_index_stats(
     # checkpoint the narrow (id, sz) frame: THREE consumers evaluate it
     # (the count/max aggregate, global_ranked's range-boundary sample,
     # and the range shuffle itself), and without the barrier each one
-    # re-decodes the heavy array<string> shingles column from parquet —
-    # the dominant scan cost of this report (r17 profile)
-    sizes = sh.select("id", F.size("shingles").alias("sz")).localCheckpoint(
-        eager=False
-    )
+    # re-reads the text and re-shingles every document
+    sizes = docs.select(
+        "id",
+        F.size(_shingle_expr("text", meta["n"], meta["unit"])).alias("sz"),
+    ).localCheckpoint(eager=False)
     szstats = sizes.agg(
         F.count("*").alias("n_docs"),
         F.max("sz").cast("long").alias("max_doc_shingles"),
@@ -2005,11 +2056,11 @@ def minhash_near_dups_against_index(
     come from the sidecar, so the query side cannot hash differently).
     Returns ``(left_id, right_id, jaccard)``. The call pays: one
     signature pass over ``left``, the band equi-join against stored keys,
-    and the exact verify against stored shingle sets (semi-bounded to
-    candidates on both sides) — kernel :func:`_minhash_probe`, cross
-    form. ``presigned``: ``(id, sig, shingles)`` for ``left``'s rows
-    computed under the SIDECAR's params — the caller-owned fast path
-    documented on :func:`minhash_near_dups`."""
+    and the exact verify, re-shingling the stored text of the candidate
+    ids only (semi-bounded to candidates on both sides) — kernel
+    :func:`_minhash_probe`, cross form. ``presigned``: ``(id, sig,
+    shingles)`` for ``left``'s rows computed under the SIDECAR's params —
+    the caller-owned fast path documented on :func:`minhash_near_dups`."""
     import os as _os
 
     meta = read_minhash_index_meta(path)
@@ -2022,7 +2073,10 @@ def minhash_near_dups_against_index(
         threshold,
         (
             read_parquet(spark, _os.path.join(path, "bands")),
-            _minhash_stored(read_parquet(spark, _os.path.join(path, "shingles"))),
+            _minhash_text_source(
+                read_parquet(spark, _os.path.join(path, "docs")),
+                "id", "text", meta["n"], meta["unit"],
+            ),
         ),
     )
 

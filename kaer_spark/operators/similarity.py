@@ -37,7 +37,7 @@ from kaer_spark.functions.vector import (
     l2sq,
 )
 from kaer_spark.operators.knn import _per_query_topk, _score_pairs
-from kaer_spark.operators.util import ensure_parallelism, vec_dim
+from kaer_spark.operators.util import ensure_parallelism, vec_dim, vec_sample
 
 
 def brute_force_topk(
@@ -181,8 +181,9 @@ def ivf_fit_deterministic(
     id_col: str = "vec_id",
     cells: int = 8,
 ) -> list[list[float]]:
-    """Centroids = the ``cells`` smallest-id vectors (deterministic sample
-    fit — the degenerate k-means with zero Lloyd iterations).
+    """Centroids = the ``cells`` smallest-id non-null vectors
+    (deterministic sample fit — the degenerate k-means with zero Lloyd
+    iterations; the sample is :func:`~kaer_spark.operators.util.vec_sample`).
 
     Why no iterations: iterated means sum floats in engine-dependent order,
     so a k-means centroid can never replay bit-exactly in a SQL oracle. The
@@ -193,10 +194,9 @@ def ivf_fit_deterministic(
     verifiability (the same trade ``sq_fit`` makes vs ``pq_fit``). Use
     ``ivf_fit`` (MLlib k-means) when recall matters more than replay.
     """
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(cells).collect()
-    if len(rows) < cells:
-        raise ValueError(f"corpus has {len(rows)} rows < cells={cells}")
-    return [[float(x) for x in r[vec_col]] for r in rows]
+    return vec_sample(
+        corpus, vec_col, cells, F.col(id_col).asc(), what=f"cells={cells}"
+    )
 
 
 #: fixed universal-hash constants for the spread sample (same family as
@@ -212,8 +212,8 @@ def ivf_fit_spread(
     id_col: str = "vec_id",
     cells: int = 8,
 ) -> list[list[float]]:
-    """Centroids = the ``cells`` vectors with smallest ``(a·id + b) mod P``
-    — the deterministic fit with a SPREAD sample.
+    """Centroids = the ``cells`` non-null vectors with smallest
+    ``(a·id + b) mod P`` — the deterministic fit with a SPREAD sample.
 
     :func:`ivf_fit_deterministic` takes the ``cells`` smallest-id vectors;
     if ingestion order correlates with content (time-ordered crawls,
@@ -236,15 +236,10 @@ def ivf_fit_spread(
         F.col(id_col).cast("long") * F.lit(_SPREAD_A) + F.lit(_SPREAD_B),
         F.lit(_SPREAD_P),
     )
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(hkey.asc(), F.col(id_col).asc())
-        .limit(cells)
-        .collect()
+    return vec_sample(
+        corpus, vec_col, cells, hkey.asc(), F.col(id_col).asc(),
+        what=f"cells={cells}",
     )
-    if len(rows) < cells:
-        raise ValueError(f"corpus has {len(rows)} rows < cells={cells}")
-    return [[float(x) for x in r[vec_col]] for r in rows]
 
 
 def _dist_structs(vec, points, dist, tag: str) -> Column:
@@ -710,20 +705,16 @@ def pq_fit_deterministic(
     m: int = 8,
     k: int = 16,
 ) -> list[list[list[float]]]:
-    """Codebooks = slices of the ``k`` smallest-id vectors (deterministic
-    sample fit, zero Lloyd iterations — same verifiability trade as
-    ``ivf_fit_deterministic``; use ``pq_fit`` when recall > replay)."""
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    if len(rows) < k:
-        raise ValueError(f"corpus has {len(rows)} rows < k={k}")
-    dim = len(rows[0][vec_col])
+    """Codebooks = slices of the ``k`` smallest-id non-null vectors
+    (deterministic sample fit, zero Lloyd iterations — same verifiability
+    trade as ``ivf_fit_deterministic``; use ``pq_fit`` when recall >
+    replay)."""
+    rows = vec_sample(corpus, vec_col, k, F.col(id_col).asc(), what=f"k={k}")
+    dim = len(rows[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
-    return [
-        [[float(x) for x in r[vec_col][j * d : (j + 1) * d]] for r in rows]
-        for j in range(m)
-    ]
+    return [[r[j * d : (j + 1) * d] for r in rows] for j in range(m)]
 
 
 def pq_encode_deterministic(

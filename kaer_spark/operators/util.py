@@ -54,6 +54,26 @@ def vec_dim(df: DataFrame, vec_col: str) -> int:
     return int(row["d"])
 
 
+def vec_sample(
+    df: DataFrame, vec_col: str, n: int, *order: Column, what: str
+) -> list[list[float]]:
+    """The first ``n`` non-null vectors of ``vec_col`` by ``order``, as
+    float lists: the one sample behind the deterministic fits, so a null
+    vector among the first rows cannot fail a fit while valid vectors
+    follow. Fewer than ``n`` raises ``ValueError`` (``what`` names the
+    fit's parameter, e.g. ``"cells=8"``)."""
+    rows = (
+        df.filter(F.col(vec_col).isNotNull())
+        .orderBy(*order)
+        .limit(n)
+        .select(vec_col)
+        .collect()
+    )
+    if len(rows) < n:
+        raise ValueError(f"corpus has {len(rows)} non-null vectors < {what}")
+    return [[float(x) for x in r[0]] for r in rows]
+
+
 def watermark_health_cols(out: DataFrame, wm, corpus, corpus_id_col: str):
     """Staleness columns for an index-stats report, typed by the id
     column's own domain (refreshable indexes bless int AND string ids —

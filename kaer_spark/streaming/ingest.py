@@ -662,6 +662,18 @@ def neardup_ingest_batch(
     spark = batch_df.sparkSession
     meta = read_minhash_index_meta(index_path)
     wm = meta.get("max_id")
+
+    def refresh(frame: DataFrame, **kw) -> dict:
+        # the index's docs/ append reads ids and text under the SIDECAR's
+        # names, which this sink's id_col/text_col need not match
+        return refresh_minhash_index(
+            frame.select(
+                F.col(id_col).alias(meta["id_col"]),
+                F.col(text_col).alias(meta["text_col"]),
+            ),
+            index_path, **kw,
+        )
+
     epoch_path = os.path.join(out_dir, f"epoch={int(epoch_id)}")
     committed = _fs_committed(spark, epoch_path)
     if assign_ids:
@@ -677,7 +689,7 @@ def neardup_ingest_batch(
             part = read_parquet(spark, epoch_path)
             mx = part.agg(F.max(F.col(id_col))).collect()[0][0]
             if mx is not None:
-                refresh_minhash_index(part, index_path, advance_to=mx)
+                refresh(part, advance_to=mx)
             return
         batch_df = _assign_surrogate_ids(
             batch_df, id_col, wm, order_col or text_col
@@ -767,10 +779,7 @@ def neardup_ingest_batch(
     # above): dropped docs' signatures must stay in the screen or a
     # transitively-dropped doc's re-delivery slips through. `sig` already
     # covers the whole batch, so the refresh pays no extra signing.
-    refresh_minhash_index(
-        batch if assign_ids else survivors,
-        index_path, advance_to=hi, presigned=sig,
-    )
+    refresh(batch if assign_ids else survivors, advance_to=hi, presigned=sig)
 
 
 def stream_embedding_neardup_ingest(

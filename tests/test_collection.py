@@ -1058,6 +1058,97 @@ def test_collection_dedup_indexes_health_and_serving(ctx):
     assert sl2["n_vecs"] == n_before - 1
 
 
+def test_minhash_index_stores_text_and_serves_from_it(ctx):
+    """The collection-owned MinHash index keeps only band keys, the
+    signed documents' text and its sidecar, also after an insert's
+    catch-up; the screen served from it equals the from-text cross pairs,
+    values included, and its doc-shingle quantiles equal those of
+    ``_m_doc``."""
+    import os
+
+    from kaer_spark.operators.dedup import (
+        minhash_near_dups_against_index,
+        minhash_near_dups_between,
+    )
+
+    ref = ctx.create_collection("reference")
+    base = [
+        f"reference document number {i} on spark catalyst and parquet "
+        f"pushdown with a {'long ' * (i % 3)}shared boilerplate tail"
+        for i in range(6)
+    ]
+    ref.insert(base + ["short"], [{"k": i} for i in range(7)])
+    ref.build_index(cells=2, fit="deterministic")
+    ref.build_minhash_index(n=8, num_hashes=16, bands=4, seed=42)
+    ref.insert(["a late reference arrival about shuffle planning"],
+               [{"k": 99}])
+    path = os.path.join(ref.path, "minhash_index")
+    assert sorted(os.listdir(path)) == ["bands", "docs", "minhash_index.json"]
+
+    crawl = ctx.create_collection("crawl")
+    crawl.insert(
+        [base[2], base[4] + " with an edit", "a novel text about watermarks"],
+        [{"k": 0}, {"k": 1}, {"k": 2}],
+    )
+    served = sorted(map(tuple, minhash_near_dups_against_index(
+        ctx.spark, path, crawl.df(), left_id_col="_m_id"
+    ).collect()))
+    fresh = sorted(map(tuple, minhash_near_dups_between(
+        crawl.df(), ref.df(), "_m_id", "_m_id", text_col="_m_doc",
+        n=8, num_hashes=16, bands=4, seed=42,
+    ).collect()))
+    assert served == fresh and fresh
+    assert crawl.deduplicate_against(ref, method="minhash") == len(
+        {left for left, _, _ in fresh}
+    )
+
+    sizes = sorted(
+        len({t[i:i + 8] for i in range(len(t) - 7)})
+        for t in (r["_m_doc"] for r in ref.df().collect())
+        if len(t) >= 8
+    )
+    n = len(sizes)
+    mh = ref.index_health()["minhash"].collect()[0]
+    assert (mh["n_docs"], mh["max_doc_shingles"]) == (n, sizes[-1])
+    assert mh["p50_doc_shingles"] == sizes[(n + 1) // 2 - 1]
+    assert mh["p90_doc_shingles"] == sizes[(9 * n + 9) // 10 - 1]
+
+    # tools/storage_report.py: one row per family and sub-table
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "storage_report",
+        os.path.join(os.path.dirname(__file__), "..", "tools",
+                     "storage_report.py"),
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    rows = {label: (b, f) for b, f, label in tool.report(ref.path)}
+    assert [k for k in rows if k.startswith("  minhash_index/")] == [
+        "  minhash_index/bands/", "  minhash_index/docs/"
+    ]
+    assert rows["minhash_index/"][1] == sum(
+        rows[k][1] for k in ("  minhash_index/bands/", "  minhash_index/docs/")
+    )
+    assert rows["total"] == tool.tree_bytes(ref.path)
+
+
+def test_df_columns_follow_the_catalog_order(ctx):
+    """Every collection read takes the catalog schema's column order,
+    also after an insert that adds a field (the merged parquet schema's
+    order is not stable between runs)."""
+    import json
+
+    from pyspark.sql import types as T
+
+    coll = ctx.create_collection("evolving")
+    coll.insert(["first doc", "second doc"], [{"k": 1}, {"k": 2}])
+    coll.insert(["third doc"], [{"k": 3, "added": "x"}])
+    catalog = T.StructType.fromJson(json.loads(coll.meta["schema"]))
+    assert coll.df().columns == [f.name for f in catalog.fields]
+    assert "added" in coll.df().columns
+
+
 def test_compact_data_preserves_rows_and_indexes(ctx):
     """[r16] compact_data(): per-insert parquet splinters collapse to
     ceil(bytes/target) files; rows/ids/schema unchanged, so attached

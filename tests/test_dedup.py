@@ -1884,11 +1884,11 @@ def _mh_rows(spark, path):
     bands = sorted(
         map(tuple, spark.read.parquet(os.path.join(path, "bands")).collect())
     )
-    sh = sorted(
-        (r["id"], tuple(sorted(r["shingles"])))
-        for r in spark.read.parquet(os.path.join(path, "shingles")).collect()
+    docs = sorted(
+        (r["id"], r["text"])
+        for r in spark.read.parquet(os.path.join(path, "docs")).collect()
     )
-    return bands, sh
+    return bands, docs
 
 
 def _mh_docs(spark):
@@ -1902,7 +1902,7 @@ def _mh_docs(spark):
 
 def test_refresh_minhash_index_equals_rebuild(spark, tmp_path):
     """O8 catch-up for the decontamination artifact: build on the id
-    prefix, refresh with the full reference — bands and shingles tables
+    prefix, refresh with the full reference — bands and docs tables
     row-identical to a from-scratch build over the union (band keys are
     per-doc independent, so the append is exact, not approximate), and
     the served screening is value-identical too."""
@@ -1943,10 +1943,10 @@ def test_refresh_minhash_index_equals_rebuild(spark, tmp_path):
 def test_refresh_minhash_index_replay_both_windows(spark, tmp_path):
     """Crash-replay idempotence, BOTH windows (the refresh_text_index
     discipline): (a) both appends landed but the watermark did not —
-    replay flips the watermark only; (b) bands landed, shingles did not
-    (bands write first) — replay heals shingles without duplicating band
+    replay flips the watermark only; (b) bands landed, docs did not
+    (bands write first) — replay heals docs without duplicating band
     rows. Also covers the pre-watermark artifact: a sidecar with no
-    max_id derives the watermark from the stored shingles table."""
+    max_id derives the watermark from the stored docs table."""
     import glob
     import json
     import os
@@ -1965,7 +1965,7 @@ def test_refresh_minhash_index_replay_both_windows(spark, tmp_path):
     )
     build_minhash_index(ref, full, n=8, num_hashes=16, bands=4, seed=42)
     stale = read_minhash_index_meta(inc)
-    sh_glob = os.path.join(inc, "shingles", "*")
+    sh_glob = os.path.join(inc, "docs", "*")
     pre_refresh_sh = set(glob.glob(sh_glob))
 
     # window (a): both appends landed, watermark stale
@@ -1976,7 +1976,7 @@ def test_refresh_minhash_index_replay_both_windows(spark, tmp_path):
     assert replayed["max_id"] == 101
     assert _mh_rows(spark, inc) == _mh_rows(spark, full)
 
-    # window (b): bands landed, shingles did not — delete the shingle
+    # window (b): bands landed, docs did not — delete the docs
     # files the refresh added and wind the meta back WITHOUT max_id
     # (pre-watermark artifact shape)
     for f_ in set(glob.glob(sh_glob)) - pre_refresh_sh:
@@ -1989,6 +1989,46 @@ def test_refresh_minhash_index_replay_both_windows(spark, tmp_path):
     assert _mh_rows(spark, inc) == _mh_rows(spark, full)
     bands = spark.read.parquet(os.path.join(inc, "bands"))
     assert bands.count() == bands.select("id", "band", "key").distinct().count()
+
+
+def test_minhash_index_old_layout_raises_and_rebuilds(spark, tmp_path):
+    """An artifact of the older layout (per-document shingle arrays under
+    shingles/, no docs/) is refused loudly by every reader, never served;
+    a rebuild over the same path removes the stale table and serves the
+    pairs of the from-text cross call, values included."""
+    import os
+    import shutil
+
+    from kaer_spark.functions.text import char_shingles
+    from kaer_spark.operators.dedup import (
+        build_minhash_index,
+        minhash_near_dups_against_index,
+        minhash_near_dups_between,
+        read_minhash_index_meta,
+    )
+
+    docs = _mh_docs(spark)
+    ref, new = docs.filter("doc_id % 2 = 1"), docs.filter("doc_id % 2 = 0")
+    path = str(tmp_path / "mh")
+    build_minhash_index(ref, path, n=8, num_hashes=16, bands=4, seed=42)
+    shutil.rmtree(os.path.join(path, "docs"))
+    ref.select(
+        F.col("doc_id").alias("id"), char_shingles("text", n=8).alias("shingles")
+    ).write.parquet(os.path.join(path, "shingles"))
+    with pytest.raises(ValueError, match="build_minhash_index"):
+        read_minhash_index_meta(path)
+    with pytest.raises(ValueError, match="build_minhash_index"):
+        minhash_near_dups_against_index(spark, path, new, threshold=0.4)
+
+    build_minhash_index(ref, path, n=8, num_hashes=16, bands=4, seed=42)
+    assert sorted(os.listdir(path)) == ["bands", "docs", "minhash_index.json"]
+    served = sorted(map(tuple, minhash_near_dups_against_index(
+        spark, path, new, threshold=0.4
+    ).collect()))
+    fresh = sorted(map(tuple, minhash_near_dups_between(
+        new, ref, n=8, num_hashes=16, bands=4, seed=42, threshold=0.4
+    ).collect()))
+    assert served == fresh and fresh
 
 
 def test_refresh_signlsh_index_equals_rebuild_and_replay(

@@ -704,3 +704,26 @@ def test_each_vector_stage_lives_in_one_kernel():
                 if re.search(pat, body):
                     found[pat].add(f"{short}.{node.name}")
     assert found == only_in
+
+
+def test_deterministic_fits_skip_null_vectors(spark):
+    """The sample fits read only non-null vectors: a null vector in the
+    first-scanned row neither fails a fit nor takes a centroid slot, and
+    too few non-null vectors still raises."""
+    from kaer_spark.operators.similarity import (
+        ivf_fit_deterministic,
+        ivf_fit_spread,
+        pq_fit_deterministic,
+    )
+
+    a, b = [1.0, 0.0, 0.5, 0.2], [0.0, 1.0, 0.5, 0.2]
+    df = spark.createDataFrame(
+        [(1, None), (2, a), (3, b)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    assert ivf_fit_deterministic(df, cells=2) == [a, b]
+    assert sorted(ivf_fit_spread(df, cells=2)) == sorted([a, b])
+    assert pq_fit_deterministic(df, m=2, k=2) == [
+        [a[:2], b[:2]], [a[2:], b[2:]]
+    ]
+    with pytest.raises(ValueError, match="cells=3"):
+        ivf_fit_deterministic(df, cells=3)

@@ -827,6 +827,37 @@ def test_stream_neardup_ingest_end_to_end(spark, tmp_path):
         )
 
 
+def test_neardup_ingest_batch_text_col_other_than_the_index(spark, tmp_path):
+    """A sink whose text column is not the index's: the survivors' text
+    lands in the index's docs/ under the index's own column names, and
+    the next batch is screened against it."""
+    from kaer_spark.operators.dedup import build_minhash_index
+    from kaer_spark.streaming.ingest import neardup_ingest_batch
+
+    ta = "the quick brown fox jumps over the lazy dog while spark shuffles data"
+    tc = "a third document concerning catalyst optimizers and adaptive execution"
+    idx, out = str(tmp_path / "mh_idx"), str(tmp_path / "corpus")
+    build_minhash_index(
+        spark.createDataFrame([(1, ta)], "doc_id long, text string"),
+        idx, n=8, num_hashes=16, bands=4, seed=42,
+    )
+    schema = "doc_id long, body string"
+    neardup_ingest_batch(
+        spark.createDataFrame([(10, ta), (11, tc)], schema),
+        0, idx, out, text_col="body",
+    )
+    docs = spark.read.parquet(os.path.join(idx, "docs"))
+    assert docs.columns == ["id", "text"]
+    assert sorted(map(tuple, docs.collect())) == [(1, ta), (11, tc)]
+    neardup_ingest_batch(
+        spark.createDataFrame([(20, tc + " again")], schema),
+        1, idx, out, text_col="body",
+    )
+    assert sorted(
+        r["doc_id"] for r in spark.read.parquet(out).collect()
+    ) == [11]
+
+
 def test_stream_embedding_neardup_ingest_end_to_end(spark, tmp_path):
     """The embedding twin: batches of vectors screened against the
     at-rest sign-LSH index (exact-cosine verify), survivors advance the
@@ -1059,7 +1090,7 @@ def test_surrogate_mode_indexes_dropped_docs_transitive_redelivery(
     # the index must hold ALL THREE screened signatures, not just A's
     indexed = {
         r["id"]
-        for r in spark.read.parquet(os.path.join(idx, "shingles")).collect()
+        for r in spark.read.parquet(os.path.join(idx, "docs")).collect()
     }
     assert indexed == {1, 2, 3, 4}
 
