@@ -368,14 +368,14 @@ def build_pq_index(
     pre-r12 ``pq_knn_refined`` bench row).
 
     ``fit``: ``"deterministic"`` — codebooks are slices of the ``k``
-    smallest-id vectors and the encode is the Catalyst slice-grouped
-    argmin (``similarity.pq_encode_deterministic``), so a SQL oracle
-    re-derives the exact stored codes from the source corpus alone;
-    ``"kmeans"`` — MLlib subspace k-means + Arrow-batched numpy encode
-    (recall-first, rows-only checkable). ``cells``: also coarse-quantize
-    (deterministic smallest-id centroids) and PARTITION the code table by
-    ``_cell`` so a probed search scans ``nprobe/cells`` of the codes —
-    the IVFADC layout (Jégou et al. 2011 §V).
+    smallest-id vectors, so a SQL oracle re-derives the exact stored
+    codes from the source corpus alone; ``"kmeans"`` — MLlib subspace
+    k-means (recall-first, rows-only checkable). Either way the encode is
+    the Catalyst slice-grouped argmin (``similarity.pq_encode``).
+    ``cells``: also coarse-quantize (deterministic smallest-id
+    centroids) and PARTITION the code table by ``_cell`` so a probed
+    search scans ``nprobe/cells`` of the codes — the IVFADC layout
+    (Jégou et al. 2011 §V).
 
     The sidecar records geometry + codebooks + centroids + the id
     high-water mark for the O8-style :func:`refresh_pq_index` catch-up.
@@ -394,7 +394,7 @@ def build_pq_index(
             corpus, fit, ("deterministic", "kmeans"), vec_col, id_col, cells, seed
         )
     _write_codes(
-        corpus, books, fit, centroids, id_col, vec_col,
+        corpus, books, centroids, id_col, vec_col,
         os.path.join(path, DATA_DIR), "overwrite",
     )
     max_id = corpus.agg(F.max(id_col)).collect()[0][0]
@@ -421,20 +421,17 @@ def build_pq_index(
 def _write_codes(
     rows: DataFrame,
     books: list[list[list[float]]],
-    fit: str,
     centroids: list[list[float]] | None,
     id_col: str,
     vec_col: str,
     data_dir: str,
     mode: str,
 ) -> None:
-    """Encode ``rows`` with the encoder of ``fit`` (the Catalyst argmin for
-    ``deterministic``, numpy for ``kmeans``), cell-assign them when the
-    index has coarse ``centroids``, and write ``(id, pq_code[, _cell])`` —
-    build and refresh both write through here, so a refreshed table is
-    row-identical to a rebuild."""
-    encode = S.pq_encode_deterministic if fit == "deterministic" else S.pq_encode
-    encoded = encode(rows, books, vec_col)
+    """Encode ``rows`` under ``books`` (``similarity.pq_encode``, whatever
+    the fit), cell-assign them when the index has coarse ``centroids``,
+    and write ``(id, pq_code[, _cell])`` — build and refresh both write
+    through here, so a refreshed table is row-identical to a rebuild."""
+    encoded = S.pq_encode(rows, books, vec_col)
     cols = [id_col, "pq_code"]
     if centroids is not None:
         encoded = S.ivf_assign_deterministic(encoded, centroids, vec_col)
@@ -454,9 +451,9 @@ def refresh_pq_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     :func:`refresh_ivf_index`): encode vectors with ``id > meta.max_id``
     under the STORED codebooks (and stored coarse centroids, if any) and
     append their codes. No refit — codes stay comparable across the whole
-    table, and the encode matches the build's encoder exactly (Catalyst
-    argmin for ``deterministic``, numpy for ``kmeans``), so a refreshed
-    index is row-identical to a from-scratch build over the union.
+    table, and the encode is the build's one Catalyst argmin, so a
+    refreshed index is row-identical to a from-scratch build over the
+    union.
     Incremental, and idempotent against BOTH failure directions: the meta
     watermark flips atomically (``util.flip_watermark``), and a replayed
     refresh after a crash-between-append-and-meta anti-joins away the ids
@@ -472,7 +469,7 @@ def refresh_pq_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
         return meta
     tail = guard(tail, meta["id_col"], data_dir)
     _write_codes(
-        tail, meta["codebooks"], meta["fit"], meta["centroids"],
+        tail, meta["codebooks"], meta["centroids"],
         meta["id_col"], meta["vec_col"], data_dir, "append",
     )
     return flip_watermark(path, PQ_META_FILE, meta, new_max)

@@ -609,39 +609,26 @@ def pq_encode(
     vec_col: str = "embedding",
     code_col: str = "pq_code",
 ) -> DataFrame:
-    """Attach the m-byte PQ code: per subspace, the argmin-distance
-    centroid index. Arrow-batched ``mapInPandas`` (numpy argmin over the
-    k×d codebook per batch — same slow-path budget as the embedding
-    stage); at rest only the codes need to be stored/shuffled."""
-    import numpy as np
+    """Attach the m-byte PQ code as a pure Catalyst expression: per
+    subspace, the :func:`_nearest` argmin over (distance, centroid)
+    structs — the same direct (x-c)² left-assoc fold the oracle unrolls
+    and the ADC tables use (NOT the numpy expanded form
+    ``x·x - 2x·c + c·c``, whose different rounding could flip an argmin),
+    so a code depends on the codebooks only, never on how they were fit.
+    Stays in codegen; nothing leaves the JVM, and at rest only the codes
+    need to be stored/shuffled.
 
-    from pyspark.sql import types as T
-
-    m = len(codebooks)
+    Measured dead end (r11): unrolling these folds into literal
+    element_at sums — a trick that won for 16–24-term hash windows —
+    is 2.5× SLOWER here: m·k·d ≈ 1024 terms per row blows past
+    the codegen method limits and the whole expression falls back to
+    interpreted eval. The zip_with/aggregate HOF stays."""
     d = len(codebooks[0][0])
-    books = [np.asarray(b) for b in codebooks]  # m × k × d
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(code_col, T.ArrayType(T.IntegerType()))]
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((mat.shape[0], m), dtype=np.int32)
-            for j in range(m):
-                sl = mat[:, j * d : (j + 1) * d]  # batch × d
-                # ||x - c||² argmin via the expanded form; batch × k
-                d2 = (
-                    (sl * sl).sum(axis=1, keepdims=True)
-                    - 2.0 * sl @ books[j].T
-                    + (books[j] * books[j]).sum(axis=1)
-                )
-                codes[:, j] = d2.argmin(axis=1)
-            pdf[code_col] = [row.tolist() for row in codes]
-            yield pdf
-
-    return df.mapInPandas(encode, schema)
+    v = F.col(vec_col).cast("array<double>")
+    codes = [
+        _nearest(F.slice(v, j * d + 1, d), book) for j, book in enumerate(codebooks)
+    ]
+    return df.withColumn(code_col, F.array(*codes))
 
 
 def _adc_tables(
@@ -695,8 +682,8 @@ def pq_topk(
 
 
 # ---------------------------------------------------------------------------
-# Deterministic PQ: sample-fit codebooks, Catalyst argmin encode — the
-# product-quantization twin of ivf_*_deterministic, fully oracle-checkable
+# Deterministic PQ: sample-fit codebooks — the product-quantization twin
+# of ivf_*_deterministic, fully oracle-checkable with the one encoder
 # ---------------------------------------------------------------------------
 def pq_fit_deterministic(
     corpus: DataFrame,
@@ -717,31 +704,6 @@ def pq_fit_deterministic(
     return [[r[j * d : (j + 1) * d] for r in rows] for j in range(m)]
 
 
-def pq_encode_deterministic(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Attach the m-byte code as a pure Catalyst expression: per subspace,
-    the :func:`_nearest` argmin over (distance, centroid) structs — the same direct
-    (x-c)² left-assoc fold the oracle unrolls (NOT the numpy expanded form
-    ``x·x - 2x·c + c·c``, whose different rounding could flip an argmin).
-    Stays in codegen; nothing leaves the JVM.
-
-    Measured dead end (r11): unrolling these folds into literal
-    element_at sums — a trick that won for 16–24-term hash windows —
-    is 2.5× SLOWER here: m·k·d ≈ 1024 terms per row blows past
-    the codegen method limits and the whole expression falls back to
-    interpreted eval. The zip_with/aggregate HOF stays."""
-    d = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-    codes = [
-        _nearest(F.slice(v, j * d + 1, d), book) for j, book in enumerate(codebooks)
-    ]
-    return df.withColumn(code_col, F.array(*codes))
-
-
 def pq_topk_deterministic(
     corpus: DataFrame,
     query_vector: Sequence[float],
@@ -760,7 +722,7 @@ def pq_topk_deterministic(
     last-ulp association error, which is why the oracle replays the SLICE
     grouping, not a flat sum."""
     books = pq_fit_deterministic(corpus, vec_col, id_col, m, k)
-    encoded = pq_encode_deterministic(corpus, books, vec_col)
+    encoded = pq_encode(corpus, books, vec_col)
     return pq_topk(encoded, books, query_vector, topk, id_col)
 
 
@@ -815,7 +777,7 @@ def _pq_adc_refine(
     ``books``, driver-computed ADC tables (engine-shared left-assoc fold),
     ADC heap shortlist, exact-l2sq re-rank → ``(id, _score)``."""
     short = (
-        pq_encode_deterministic(rows, books, vec_col)
+        pq_encode(rows, books, vec_col)
         .withColumn("_adc", _adc_score(_adc_tables(books, query_vector)))
         .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
         .limit(int(shortlist))

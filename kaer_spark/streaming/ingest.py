@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kaer_spark.context import INDEX_FAMILIES, Collection
-from kaer_spark.operators import index_store, text_index
+from kaer_spark.operators import dedup, index_store, text_index
 from kaer_spark.sources.files import read_parquet
 
 
@@ -43,7 +44,6 @@ def _fs_committed(spark: SparkSession, path: str) -> bool:
     uncommitted, so a genuine checkpoint replay would raise "duplicate
     delivery" on every retry and permanently wedge the stream — fail
     fast HERE instead, before any replay decision rides the marker."""
-    jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()  # type: ignore
     markers = conf.get(
         "mapreduce.fileoutputcommitter.marksuccessfuljobs", "true"
@@ -56,10 +56,8 @@ def _fs_committed(spark: SparkSession, path: str) -> bool:
             "in this session's Hadoop conf — re-enable markers for the "
             "ingest output filesystem or route out_dir elsewhere"
         )
-    p = jvm.org.apache.hadoop.fs.Path(  # type: ignore[union-attr]
-        os.path.join(path, "_SUCCESS")
-    )
-    return p.getFileSystem(conf).exists(p)
+    fs, marker, _ = _hadoop_fs(spark, os.path.join(path, "_SUCCESS"))
+    return fs.exists(marker)
 
 
 def _assign_surrogate_ids(
@@ -98,6 +96,22 @@ def read_hll_state(spark: SparkSession, state_dir: str) -> DataFrame:
     empty-state fallback for an all-time distinct metric."""
     _recover_hll_state(state_dir)
     return read_parquet(spark, state_dir)
+
+
+def _start(
+    stream_df: DataFrame, sink, checkpoint_dir: str, trigger, mode="append"
+) -> StreamingQuery:
+    """Start ``sink`` as the ``foreachBatch`` body of ``stream_df``: the
+    streaming checkpoint at ``checkpoint_dir`` is the recovery cursor,
+    ``trigger`` (keywords of ``DataStreamWriter.trigger``) the cadence."""
+    writer = (
+        stream_df.writeStream.outputMode(mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
 
 
 def stream_insert(
@@ -149,14 +163,7 @@ def stream_insert(
             if path is not None and os.path.realpath(path) not in owned:
                 refresh(collection.df(), path)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, sink, checkpoint_dir, trigger)
 
 
 def windowed_event_counts(
@@ -329,14 +336,7 @@ def stream_refresh_rollup(
         spark = batch_df.sparkSession
         refresh_rollup(read_parquet(spark, source_path), rollup_path)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, sink, checkpoint_dir, trigger)
 
 
 def streaming_dedup_against(
@@ -505,14 +505,144 @@ def streaming_hll_ingest(
         os.rename(tmp, state_dir)
         shutil.rmtree(old, ignore_errors=True)
 
-    writer = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, sink, checkpoint_dir, trigger, "update")
+
+
+def _screen_and_append(
+    batch_df: DataFrame,
+    epoch_id: int,
+    out_dir: str,
+    *,
+    meta: dict,
+    sink: str,
+    id_col: str,
+    order_col: str,
+    self_dedup: bool,
+    assign_ids: bool,
+    sign,
+    screen,
+    self_pairs,
+    refresh,
+) -> None:
+    """One near-dup ingest micro-batch, whatever the index family: screen
+    the batch against the at-rest index, self-dedup the survivors, append
+    them to ``out_dir/epoch=<id>`` and advance the index. The family
+    enters only through its sidecar ``meta`` (``max_id`` is the
+    watermark), ``sink`` (the name the refusals carry) and four
+    callables: ``sign(batch)`` → a signature frame shared by the other
+    three, or None; ``screen(batch, sig)`` → ``(left_id, right_id, …)``
+    hits against the index; ``self_pairs(survivors, sig)`` → in-batch
+    ``(id_a, id_b, …)`` pairs; ``refresh(frame, advance_to, sig)`` → the
+    index catch-up.
+
+    Crash/replay safety, by construction rather than epoch bookkeeping:
+
+    * the screen's reference side is restricted to ``right_id <
+      min(batch ids)`` — under the engine's monotone-id ingest contract
+      (the reference's process-local id counter, ``db/db.go:75``) that
+      is exactly "everything ingested before this batch", and it stays
+      exactly that on a replay whose index refresh already landed, so
+      survivors recompute identically;
+    * the corpus write PRECEDES the index refresh, so a COMMITTED
+      partition (``_SUCCESS`` marker, through the Hadoop FileSystem API)
+      is what distinguishes a checkpoint replay from duplicate delivery.
+      A replayed epoch (ids at-or-below the flipped watermark, committed
+      partition present) is NOT rewritten: wm >= hi proves the refresh
+      flipped, which proves the corpus write completed before it, and an
+      overwrite would reopen a crash window — it deletes the partition
+      first, and a crash before the rewrite finishes leaves the watermark
+      covering a batch with no partition on disk, so every later replay
+      would read as duplicate delivery and wedge the stream;
+    * the index refresh is the watermark catch-up with ``advance_to=hi``:
+      dropped docs are DECIDED even though never stored, so without the
+      floor a replayed batch whose max id was dropped would straddle the
+      watermark. A replayed batch is at-or-below the flipped watermark
+      and no-ops; a crash between the refresh's appends heals via the
+      per-append anti-joins.
+
+    Out-of-order ids violate the monotone contract and are REFUSED
+    loudly (a silent skip would fail open: the doc would land in the
+    corpus unscreened-against forever). The discriminator is structural:
+    a batch straddling the watermark mixes replayed and new rows —
+    always refused; a batch entirely at-or-below it is either a
+    checkpoint replay (committed partition) or duplicate source delivery
+    under a fresh epoch (no committed partition — refused).
+
+    ``assign_ids=True`` is the surrogate-id recipe for sources without
+    monotone ids (hash-keyed corpora): ``id_col`` is ASSIGNED here as
+    ``watermark + row_number`` over ``order_col``, so the monotone
+    contract holds by construction; epoch replay is then discriminated
+    by the committed partition alone (a committed partition heals the
+    index from itself and is never recomputed), and duplicate source
+    delivery fails safe through the content screen instead of the id
+    check. To make that screen airtight the index in surrogate mode
+    advances with the FULL batch — survivors AND dropped docs — because
+    a doc dropped as a non-adjacent member of a transitive self-dedup
+    cluster near-dups nothing among the survivors: were only survivors
+    indexed, its re-delivery would re-ingest it under a fresh id.
+    Indexing every screened signature means any re-delivered doc
+    collides with its own prior signature (identical content ⟹
+    identical bands ⟹ similarity 1). In surrogate mode the index is
+    therefore a SEEN-CONTENT screen, not a corpus mirror — by contract,
+    since this mode exists precisely for content-keyed sources. One
+    narrow residual window: a crash between the corpus write and the
+    index refresh heals the index from the committed partition, which
+    holds only survivors, so THAT epoch's dropped-doc signatures are
+    lost and its transitively-dropped members degrade to
+    direct-duplicate screening on later re-delivery."""
+    spark = batch_df.sparkSession
+    wm = meta.get("max_id")
+    epoch_path = os.path.join(out_dir, f"epoch={int(epoch_id)}")
+    committed = _fs_committed(spark, epoch_path)
+    if assign_ids:
+        if committed:
+            part = read_parquet(spark, epoch_path)
+            mx = part.agg(F.max(F.col(id_col))).collect()[0][0]
+            if mx is not None:
+                refresh(part, mx, None)
+            return
+        batch_df = _assign_surrogate_ids(batch_df, id_col, wm, order_col)
+    bounds = batch_df.agg(
+        F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
+    ).collect()[0]
+    lo, hi = bounds["lo"], bounds["hi"]
+    if lo is None:
+        # empty batch — the bounds aggregate doubles as the emptiness
+        # guard (one batch scan instead of a separate isEmpty pass)
+        return
+    if wm is not None and lo <= wm:
+        if hi > wm:
+            raise ValueError(
+                f"{sink}: batch ids [{lo}, {hi}] straddle the index "
+                f"watermark {wm} — the monotone-id ingest contract is "
+                "violated (or two writers share one index)"
+            )
+        if not committed:
+            raise ValueError(
+                f"{sink}: batch ids [{lo}, {hi}] are all at-or-below the "
+                f"index watermark {wm} but epoch {int(epoch_id)} has no "
+                f"committed partition at {epoch_path!r} — duplicate "
+                "delivery, not a checkpoint replay"
+            )
+        return  # genuine replay: the partition is final, rewrite nothing
+    # signing, screen, anti-join and refresh share one source scan (and id sort)
+    batch = batch_df.localCheckpoint(eager=False)
+    sig = sign(batch)
+    hits = screen(batch, sig).filter(F.col("right_id") < F.lit(lo))
+    # the screen chain runs once, not once per survivors reader (pairs, write)
+    survivors = batch.join(
+        hits.select(F.col("left_id").alias(id_col)).distinct(),
+        [id_col],
+        "left_anti",
+    ).localCheckpoint(eager=False)
+    if self_dedup:
+        # the write and the survivors-only refresh share one components loop
+        survivors = dedup.dedup_representatives(
+            survivors, dedup.dedup_clusters(self_pairs(survivors, sig)),
+            id_col=id_col,
+        ).localCheckpoint(eager=False)
+    survivors.write.mode("overwrite").parquet(epoch_path)
+    refresh(batch if assign_ids else survivors, hi, sig)
 
 
 def stream_neardup_ingest(
@@ -531,51 +661,27 @@ def stream_neardup_ingest(
     """Online NEAR-dup corpus ingest — the streaming composition the two
     r14 pieces exist for: every micro-batch is screened against the
     at-rest MinHash index (``dedup.build_minhash_index``), the survivors
-    are appended to the corpus at ``out_dir``, and the index is advanced
-    with exactly those survivors (``dedup.refresh_minhash_index``) so the
-    NEXT batch screens against everything ingested so far. The exact
-    fingerprint twin (:func:`streaming_dedup_against`) catches only
-    byte-identical re-crawls; this catches boilerplate re-wraps and
-    near-copies at the Jaccard ``threshold``, with the exact verify
-    inside the band join as in the batch operator.
+    are appended to the corpus at ``out_dir`` (read it as
+    ``read_parquet(spark, out_dir)``; the epoch partition column is
+    incidental), and the index is advanced with exactly those survivors
+    (``dedup.refresh_minhash_index``) so the NEXT batch screens against
+    everything ingested so far. The exact fingerprint twin
+    (:func:`streaming_dedup_against`) catches only byte-identical
+    re-crawls; this catches boilerplate re-wraps and near-copies at the
+    Jaccard ``threshold``, with the exact verify inside the band join as
+    in the batch operator.
 
     Per-batch semantics (deterministic, batch-replayable — pinned
     stream ≡ batch in tests): a doc survives iff (a) it has no near-dup
     among PREVIOUSLY ingested docs, and (b) under ``self_dedup``, it is
     the min-id representative of its within-batch near-dup cluster
-    (``dedup.dedup_representatives`` closure).
-
-    Crash/replay safety, by construction rather than epoch bookkeeping:
-
-    * the screen's reference side is restricted to ``right_id <
-      min(batch ids)`` — under the engine's monotone-id ingest contract
-      (the reference's process-local id counter, ``db/db.go:75``) that
-      is exactly "everything ingested before this batch", and it stays
-      exactly that on a replay whose index refresh already landed, so
-      survivors recompute identically;
-    * the corpus append goes to ``out_dir/epoch=<id>`` — and a replayed
-      epoch (ids at-or-below the flipped watermark, committed partition
-      present) is NOT rewritten: the watermark flip happens after the
-      corpus write, so a covered batch's partition is provably final
-      (read the corpus as ``read_parquet(spark, out_dir)``; the epoch
-      partition column is incidental);
-    * the index refresh is the watermark catch-up — a replayed batch is
-      at-or-below the flipped watermark and no-ops, a crash between its
-      two appends heals via the per-append anti-joins.
-
-    Out-of-order ids violate the monotone contract and are REFUSED
-    loudly (a silent skip would fail open: the doc would land in the
-    corpus unscreened-against forever). The discriminator is structural:
-    a batch straddling the watermark mixes replayed and new rows —
-    always refused; a batch entirely at-or-below it is either a
-    checkpoint replay (its epoch partition is committed, because the
-    corpus write PRECEDES the index refresh) or duplicate source
-    delivery under a fresh epoch (no committed partition — refused).
-    Sources WITHOUT monotone ids (hash-keyed corpora) opt into
-    ``assign_ids=True``: ``id_col`` is assigned in the batch body as
-    ``watermark + row_number`` over ``order_col`` (default ``text_col``),
-    restoring the contract by construction — see
-    :func:`neardup_ingest_batch`.
+    (``dedup.dedup_representatives`` closure). Ids must be monotone
+    across batches; out-of-order, straddling and duplicate-delivery
+    batches are refused loudly, and sources WITHOUT monotone ids
+    (hash-keyed corpora) opt into ``assign_ids=True`` (ids assigned as
+    ``watermark + row_number`` over ``order_col``, default
+    ``text_col``). See :func:`_screen_and_append` for the crash/replay
+    analysis and the surrogate-id contract.
 
     Placement contract: ``index_path`` must be DRIVER-LOCAL — its
     sidecar flips through ``sources.files.write_sidecar`` (a local tmp
@@ -588,23 +694,17 @@ def stream_neardup_ingest(
     id-pruned scans), NOT the streaming state store — the per-batch cost
     is the query side's signature pass plus band equi-joins, and the
     reference side grows only by survivors."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        neardup_ingest_batch(
-            batch_df, epoch_id, index_path, out_dir,
+    return _start(
+        stream_df,
+        partial(
+            neardup_ingest_batch, index_path=index_path, out_dir=out_dir,
             id_col=id_col, text_col=text_col, threshold=threshold,
             self_dedup=self_dedup, assign_ids=assign_ids,
             order_col=order_col,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
+        ),
+        checkpoint_dir, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+
 
 def neardup_ingest_batch(
     batch_df: DataFrame,
@@ -620,166 +720,57 @@ def neardup_ingest_batch(
 ) -> None:
     """One :func:`stream_neardup_ingest` micro-batch — module-level so the
     replay paths are directly testable and so a user-owned
-    ``foreachBatch`` can compose it with other sinks. See the streaming
-    wrapper's docstring for the semantics and the crash-window analysis;
-    the load-bearing ordering here is corpus write BEFORE index refresh
-    (a COMMITTED partition is what distinguishes a replay from duplicate
-    delivery — and a replayed epoch is never rewritten, because wm >= hi
-    proves the partition final and an overwrite would reopen the
-    delete-then-crash window).
+    ``foreachBatch`` can compose it with other sinks. The MinHash family
+    row of :func:`_screen_and_append`, which holds the steps and the
+    crash-window analysis: ONE signature pass per batch, shared by the
+    screen's band keys and exact verify, the in-batch self-dedup and the
+    index refresh (the naive composition signs the same documents three
+    times, and the signature pass is the dominant per-batch CPU). All
+    three consumers hash under the sidecar's params by construction, so
+    the shared pass cannot drift. ``assign_ids=True`` orders surrogate
+    ids by ``order_col`` (default ``text_col``)."""
+    meta = dedup.read_minhash_index_meta(index_path)
+    shingling = {k: meta[k] for k in ("n", "num_hashes", "seed", "unit")}
 
-    ``assign_ids=True`` is the surrogate-id recipe for sources without
-    monotone ids (hash-keyed corpora): ``id_col`` is ASSIGNED in the
-    batch body as ``watermark + row_number`` over ``order_col`` (default
-    ``text_col``), so the monotone contract holds by construction; epoch
-    replay is then discriminated by the committed partition alone, and
-    duplicate source delivery fails safe through the content screen
-    instead of the id check. To make that screen airtight the index in
-    surrogate mode advances with the FULL batch — survivors AND dropped
-    docs — because a doc dropped as a non-adjacent member of a
-    transitive self-dedup cluster near-dups nothing among the survivors:
-    were only survivors indexed, its re-delivery would re-ingest it
-    under a fresh id. Indexing every screened signature means any
-    re-delivered doc collides with its own prior signature (identical
-    content ⟹ identical bands ⟹ Jaccard 1). In surrogate mode the
-    index is therefore a SEEN-CONTENT screen, not a corpus mirror — by
-    contract, since this mode exists precisely for content-keyed
-    sources. One narrow residual window: a crash between the corpus
-    write and the index refresh heals the index from the committed
-    partition, which holds only survivors, so THAT epoch's dropped-doc
-    signatures are lost and its transitively-dropped members degrade to
-    direct-duplicate screening on later re-delivery."""
-    from kaer_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_representatives,
-        minhash_near_dups,
-        minhash_near_dups_against_index,
-        minhash_signatures,
-        read_minhash_index_meta,
-        refresh_minhash_index,
-    )
+    def sign(batch: DataFrame) -> DataFrame:
+        # the screen, self-dedup and refresh share the one signature pass
+        return dedup.minhash_signatures(
+            batch, id_col, text_col, **shingling
+        ).localCheckpoint(eager=False)
 
-    spark = batch_df.sparkSession
-    meta = read_minhash_index_meta(index_path)
-    wm = meta.get("max_id")
+    def screen(batch: DataFrame, sig: DataFrame) -> DataFrame:
+        return dedup.minhash_near_dups_against_index(
+            batch.sparkSession, index_path, batch, left_id_col=id_col,
+            text_col=text_col, threshold=threshold, presigned=sig,
+        )
 
-    def refresh(frame: DataFrame, **kw) -> dict:
+    def self_pairs(survivors: DataFrame, sig: DataFrame) -> DataFrame:
+        ssig = sig.join(
+            survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
+        )
+        return dedup.minhash_near_dups(
+            survivors, id_col=id_col, text_col=text_col,
+            bands=meta["bands"], threshold=threshold, presigned=ssig,
+            **shingling,
+        )
+
+    def refresh(frame: DataFrame, advance_to, sig) -> dict:
         # the index's docs/ append reads ids and text under the SIDECAR's
         # names, which this sink's id_col/text_col need not match
-        return refresh_minhash_index(
+        return dedup.refresh_minhash_index(
             frame.select(
                 F.col(id_col).alias(meta["id_col"]),
                 F.col(text_col).alias(meta["text_col"]),
             ),
-            index_path, **kw,
+            index_path, advance_to=advance_to, presigned=sig,
         )
 
-    epoch_path = os.path.join(out_dir, f"epoch={int(epoch_id)}")
-    committed = _fs_committed(spark, epoch_path)
-    if assign_ids:
-        # surrogate-id mode (hash-keyed sources): replay is discriminated
-        # by the COMMITTED epoch partition alone. A committed partition
-        # means the survivors are final — heal the index from it (no-op
-        # if the refresh also landed) and never recompute; a duplicate
-        # source delivery gets fresh ids and fails SAFE through the
-        # content screen itself (the original delivery indexed the FULL
-        # batch, so every re-delivered doc collides with its own stored
-        # signature — identical content, identical bands, Jaccard 1).
-        if committed:
-            part = read_parquet(spark, epoch_path)
-            mx = part.agg(F.max(F.col(id_col))).collect()[0][0]
-            if mx is not None:
-                refresh(part, advance_to=mx)
-            return
-        batch_df = _assign_surrogate_ids(
-            batch_df, id_col, wm, order_col or text_col
-        )
-    bounds = batch_df.agg(
-        F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-    ).collect()[0]
-    lo, hi = bounds["lo"], bounds["hi"]
-    if lo is None:
-        # empty batch — the bounds aggregate doubles as the emptiness
-        # guard (one batch scan instead of a separate isEmpty pass)
-        return
-    if wm is not None and lo <= wm:
-        if hi > wm:
-            # a true replay sits ENTIRELY at-or-below the watermark; a
-            # batch straddling it mixes replayed and out-of-order rows —
-            # refuse rather than half-screen it
-            raise ValueError(
-                f"stream_neardup_ingest: batch ids [{lo}, {hi}] straddle "
-                f"the index watermark {wm} — the monotone-id ingest "
-                "contract is violated (or two writers share one index)"
-            )
-        if not committed:
-            # all-below + no committed epoch partition: the corpus write
-            # precedes the refresh, so a genuine replay would have left
-            # the committed partition behind — this is duplicate source
-            # delivery under a fresh epoch, which would re-ingest
-            # already-indexed docs
-            raise ValueError(
-                f"stream_neardup_ingest: batch ids [{lo}, {hi}] are all "
-                f"at-or-below the index watermark {wm} but epoch "
-                f"{int(epoch_id)} has no committed partition at "
-                f"{epoch_path!r} — duplicate delivery, not a checkpoint "
-                "replay"
-            )
-        # genuine replay: wm >= hi proves the refresh flipped, which
-        # proves the corpus write COMPLETED before it — the partition is
-        # final, so rewrite nothing. (Rewriting here would reopen a crash
-        # window: overwrite deletes the partition first, and a crash
-        # before the rewrite finishes leaves the watermark covering a
-        # batch with no partition on disk — every later replay would then
-        # read as duplicate delivery and wedge the stream.)
-        return
-    batch = batch_df.localCheckpoint(eager=False)
-    # ONE signature pass per batch, shared by the screen's band keys and
-    # exact verify, the in-batch self-dedup, and the index refresh — the
-    # naive composition signs the same documents three times, and the
-    # signature pass (shingle fingerprints over full text) is the
-    # dominant per-batch CPU. All three consumers hash under the
-    # sidecar's params by construction, so the shared pass cannot drift.
-    sig = minhash_signatures(
-        batch, id_col, text_col, meta["n"], meta["num_hashes"],
-        meta["seed"], meta["unit"],
-    ).localCheckpoint(eager=False)
-    hits = minhash_near_dups_against_index(
-        spark, index_path, batch, left_id_col=id_col,
-        text_col=text_col, threshold=threshold, presigned=sig,
-    ).filter(F.col("right_id") < F.lit(lo))
-    # checkpoint the POST-SCREEN survivors: without the barrier the whole
-    # screen chain (band equi-join against the at-rest index + exact
-    # verify + anti-join) is recomputed by every downstream consumer —
-    # the self-dedup semi-join, the pair generation, the representatives
-    # anti-join, and the final write each replay it from the scan
-    survivors = batch.join(
-        hits.select(F.col("left_id").alias(id_col)).distinct(),
-        [id_col],
-        "left_anti",
-    ).localCheckpoint(eager=False)
-    if self_dedup:
-        ssig = sig.join(
-            survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
-        )
-        pairs = minhash_near_dups(
-            survivors, id_col=id_col, text_col=text_col,
-            n=meta["n"], num_hashes=meta["num_hashes"],
-            bands=meta["bands"], threshold=threshold,
-            seed=meta["seed"], unit=meta["unit"], presigned=ssig,
-        )
-        survivors = dedup_representatives(
-            survivors, dedup_clusters(pairs), id_col=id_col
-        ).localCheckpoint(eager=False)
-    survivors.write.mode("overwrite").parquet(epoch_path)
-    # advance_to=hi: dropped docs are DECIDED even though never stored —
-    # without the floor, a replayed batch whose max id was dropped would
-    # straddle the watermark and read as an out-of-order arrival.
-    # Surrogate mode indexes the FULL batch (see the assign_ids contract
-    # above): dropped docs' signatures must stay in the screen or a
-    # transitively-dropped doc's re-delivery slips through. `sig` already
-    # covers the whole batch, so the refresh pays no extra signing.
-    refresh(batch if assign_ids else survivors, advance_to=hi, presigned=sig)
+    _screen_and_append(
+        batch_df, epoch_id, out_dir, meta=meta, sink="stream_neardup_ingest",
+        id_col=id_col, order_col=order_col or text_col,
+        self_dedup=self_dedup, assign_ids=assign_ids, sign=sign,
+        screen=screen, self_pairs=self_pairs, refresh=refresh,
+    )
 
 
 def stream_embedding_neardup_ingest(
@@ -807,26 +798,19 @@ def stream_embedding_neardup_ingest(
     of straddling/duplicate-delivery batches, the same ``assign_ids``
     surrogate-id mode, and the same placement contract (``index_path``
     driver-local; ``out_dir``/``checkpoint_dir`` any Hadoop FS) as the
-    text twin — see :func:`neardup_ingest_batch` for the crash-window
-    analysis; the logic lives in
+    text twin — see :func:`_screen_and_append` for the crash-window
+    analysis; the family row is
     :func:`embedding_neardup_ingest_batch`."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        embedding_neardup_ingest_batch(
-            batch_df, epoch_id, index_path, out_dir,
-            id_col=id_col, vec_col=vec_col, threshold=threshold,
-            self_dedup=self_dedup, assign_ids=assign_ids,
-            order_col=order_col,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        stream_df,
+        partial(
+            embedding_neardup_ingest_batch, index_path=index_path,
+            out_dir=out_dir, id_col=id_col, vec_col=vec_col,
+            threshold=threshold, self_dedup=self_dedup,
+            assign_ids=assign_ids, order_col=order_col,
+        ),
+        checkpoint_dir, trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def embedding_neardup_ingest_batch(
@@ -842,107 +826,39 @@ def embedding_neardup_ingest_batch(
     order_col: str | None = None,
 ) -> None:
     """One :func:`stream_embedding_neardup_ingest` micro-batch — the
-    vector mirror of :func:`neardup_ingest_batch` (same ordering: corpus
-    write BEFORE index refresh; same discriminators, including the
+    sign-LSH family row of :func:`_screen_and_append` (same ordering:
+    corpus write BEFORE index refresh; same discriminators, including the
     no-rewrite replay path and the ``assign_ids`` surrogate-id mode for
     sources without monotone ids — surrogate ordering defaults to the
     vector column itself, which Spark orders lexicographically).
     Within-batch self-dedup runs ``embedding_near_dups_lsh`` through the
-    SIDECAR's plane geometry, so the in-batch candidates and the index
-    screen can never hash differently."""
-    from kaer_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_representatives,
-        embedding_dups_against_index,
-        embedding_near_dups_lsh,
-        read_signlsh_index_meta,
-        refresh_signlsh_index,
-    )
+    SIDECAR's plane geometry and dimension, so the in-batch candidates
+    and the index screen can never hash differently, and an all-dropped
+    batch (no survivors) needs no dimension probe."""
+    meta = dedup.read_signlsh_index_meta(index_path)
 
-    spark = batch_df.sparkSession
-    meta = read_signlsh_index_meta(index_path)
-    wm = meta.get("max_id")
-    epoch_path = os.path.join(out_dir, f"epoch={int(epoch_id)}")
-    committed = _fs_committed(spark, epoch_path)
-    if assign_ids:
-        # surrogate-id mode — see neardup_ingest_batch: committed
-        # partition = final survivors, heal the index from it; duplicate
-        # delivery fails safe through the cosine screen
-        if committed:
-            part = read_parquet(spark, epoch_path)
-            mx = part.agg(F.max(F.col(id_col))).collect()[0][0]
-            if mx is not None:
-                refresh_signlsh_index(part, index_path, advance_to=mx)
-            return
-        batch_df = _assign_surrogate_ids(
-            batch_df, id_col, wm, order_col or vec_col
+    def screen(batch: DataFrame, sig) -> DataFrame:
+        return dedup.embedding_dups_against_index(
+            batch.sparkSession, index_path, batch, left_id_col=id_col,
+            vec_col=vec_col, threshold=threshold,
         )
-    bounds = batch_df.agg(
-        F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-    ).collect()[0]
-    lo, hi = bounds["lo"], bounds["hi"]
-    if lo is None:
-        # empty batch — the bounds aggregate doubles as the emptiness
-        # guard (one batch scan instead of a separate isEmpty pass)
-        return
-    if wm is not None and lo <= wm:
-        if hi > wm:
-            raise ValueError(
-                f"stream_embedding_neardup_ingest: batch ids [{lo}, {hi}] "
-                f"straddle the index watermark {wm} — the monotone-id "
-                "ingest contract is violated (or two writers share one "
-                "index)"
-            )
-        if not committed:
-            raise ValueError(
-                f"stream_embedding_neardup_ingest: batch ids [{lo}, {hi}] "
-                f"are all at-or-below the index watermark {wm} but epoch "
-                f"{int(epoch_id)} has no committed partition at "
-                f"{epoch_path!r} — duplicate delivery, not a checkpoint "
-                "replay"
-            )
-        # genuine replay: partition proved final (wm >= hi ⟹ refresh
-        # flipped ⟹ corpus write completed) — rewrite nothing
-        return
-    batch = batch_df.localCheckpoint(eager=False)
-    hits = embedding_dups_against_index(
-        spark, index_path, batch, left_id_col=id_col,
-        vec_col=vec_col, threshold=threshold,
-    ).filter(F.col("right_id") < F.lit(lo))
-    # checkpoint the POST-SCREEN survivors: the screen chain (band
-    # equi-join against the at-rest index + exact-cosine verify +
-    # anti-join) is the dominant per-batch cost, and without the barrier
-    # it is recomputed by every downstream consumer — the isEmpty guard,
-    # the self-dedup candidate join (which references survivors three
-    # times: band keys + both verify sides), the representatives
-    # anti-join, and the final write each replay it from the scan
-    survivors = batch.join(
-        hits.select(F.col("left_id").alias(id_col)).distinct(),
-        [id_col],
-        "left_anti",
-    ).localCheckpoint(eager=False)
-    # empty-survivor guard: a batch the screen drops ENTIRELY (every
-    # vector near-dups the index — routine under duplicate re-delivery
-    # in surrogate mode) must still commit its empty epoch partition and
-    # advance the watermark, but self-dedup would try to infer the
-    # vector dimension from zero rows and raise
-    if self_dedup and not survivors.isEmpty():
-        pairs = embedding_near_dups_lsh(
-            survivors, id_col=id_col, vec_col=vec_col,
-            threshold=threshold, bands=meta["bands"],
-            bits_per_band=meta["bits_per_band"], seed=meta["seed"],
-            dim=meta["dim"],
+
+    def self_pairs(survivors: DataFrame, sig) -> DataFrame:
+        return dedup.embedding_near_dups_lsh(
+            survivors, id_col=id_col, vec_col=vec_col, threshold=threshold,
+            bands=meta["bands"], bits_per_band=meta["bits_per_band"],
+            seed=meta["seed"], dim=meta["dim"],
         )
-        survivors = dedup_representatives(
-            survivors, dedup_clusters(pairs), id_col=id_col
-        ).localCheckpoint(eager=False)
-    survivors.write.mode("overwrite").parquet(epoch_path)
-    # surrogate mode indexes the FULL batch (seen-content screen, not a
-    # corpus mirror — see neardup_ingest_batch's assign_ids contract):
-    # a vector dropped as a transitive cluster member near-dups no
-    # survivor, so only its own stored signature can catch re-delivery
-    refresh_signlsh_index(
-        batch if assign_ids else survivors, index_path, advance_to=hi
+
+    def refresh(frame: DataFrame, advance_to, sig) -> dict:
+        return dedup.refresh_signlsh_index(frame, index_path, advance_to=advance_to)
+
+    _screen_and_append(
+        batch_df, epoch_id, out_dir, meta=meta,
+        sink="stream_embedding_neardup_ingest", id_col=id_col,
+        order_col=order_col or vec_col, self_dedup=self_dedup,
+        assign_ids=assign_ids, sign=lambda batch: None, screen=screen,
+        self_pairs=self_pairs, refresh=refresh,
     )
 
 

@@ -344,9 +344,9 @@ def test_pq_refresh_catches_up_row_identical(spark, embeddings, tmp_path):
 
     # appended codes use the STORED (prefix-fit) codebooks: re-encoding the
     # tail fresh under those codebooks reproduces the stored rows exactly
-    from kaer_spark.operators.similarity import pq_encode_deterministic
+    from kaer_spark.operators.similarity import pq_encode
 
-    tail_fresh = pq_encode_deterministic(
+    tail_fresh = pq_encode(
         embeddings.filter(F.col("vec_id") >= 300), meta["codebooks"]
     ).select("vec_id", "pq_code")
     stored_tail = codes.filter(F.col("vec_id") >= 300)

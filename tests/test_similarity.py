@@ -674,9 +674,10 @@ def test_pq_topk_adc_table_squares_by_product(spark):
 
 def test_each_vector_stage_lives_in_one_kernel():
     """The argmin, the in-plan probe, the ADC gather, the cosine norm
-    precompute and the k-means centroid read are each written once across
-    ``similarity``, ``index_store`` and ``knn``: inside their kernel, never
-    again in a public form."""
+    precompute, the k-means centroid read and the per-subspace PQ encode
+    are each written once across ``similarity``, ``index_store`` and
+    ``knn``: inside their kernel, never again in a public form — and no
+    vector stage leaves the JVM for a Python worker."""
     import ast
     import re
 
@@ -690,6 +691,8 @@ def test_each_vector_stage_lives_in_one_kernel():
         r"lambdac,t:t\[c\]": {"similarity._adc_score"},
         r"vector_norm\(": {"knn._score_pairs"},
         r"\.clusterCenters\(\)": {"similarity._centers"},
+        r"_nearest\(F\.slice\(": {"similarity.pq_encode"},
+        r"\.mapInPandas\(": set(),
     }
     found = {pat: set() for pat in only_in}
     for mod in (S, I, K):

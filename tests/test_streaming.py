@@ -1162,6 +1162,90 @@ def test_embedding_surrogate_mode_indexes_dropped_docs(spark, tmp_path):
     assert spark.read.parquet(out).count() == 1
 
 
+@pytest.mark.parametrize("family", ["minhash", "signlsh"])
+def test_ingest_batch_replay_refusals_and_all_dropped(spark, tmp_path, family):
+    """The shared screen-and-append body, per index family, on 2-3 row
+    batches: a replayed epoch leaves its committed partition untouched,
+    a batch straddling the watermark and an all-below batch under a
+    fresh epoch are refused, and a batch the screen drops ENTIRELY still
+    commits its empty epoch partition and advances the watermark to its
+    max id."""
+    from kaer_spark.operators import dedup
+    from kaer_spark.streaming import ingest
+
+    if family == "minhash":
+        a = "the quick brown fox jumps over the lazy dog while spark shuffles data"
+        b = "a third document concerning catalyst optimizers and adaptive execution"
+        schema, id_col = "doc_id long, text string", "doc_id"
+        build, read_meta = dedup.build_minhash_index, dedup.read_minhash_index_meta
+        geometry = dict(n=8, num_hashes=16, bands=4, seed=42)
+        run = ingest.neardup_ingest_batch
+    else:
+        a, b = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]
+        schema, id_col = "vec_id long, embedding array<double>", "vec_id"
+        build, read_meta = dedup.build_signlsh_index, dedup.read_signlsh_index_meta
+        geometry = dict(bands=4, bits_per_band=2, seed=7)
+        run = ingest.embedding_neardup_ingest_batch
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "corpus")
+    build(spark.createDataFrame([(1, a)], schema), idx, **geometry)
+
+    def ingest_rows(rows, epoch):
+        run(spark.createDataFrame(rows, schema), epoch, idx, out)
+
+    def files(epoch):
+        d = os.path.join(out, f"epoch={epoch}")
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+    # 10 dups the reference, 12 dups 11 in-batch
+    ingest_rows([(10, a), (11, b), (12, b)], 0)
+    assert [r[id_col] for r in spark.read.parquet(out).collect()] == [11]
+    assert read_meta(idx)["max_id"] == 12
+    before = files(0)
+    ingest_rows([(10, a), (11, b), (12, b)], 0)
+    assert files(0) == before
+
+    with pytest.raises(ValueError, match="straddle"):
+        ingest_rows([(12, b), (13, a)], 1)
+    with pytest.raises(ValueError, match="duplicate delivery"):
+        ingest_rows([(11, b), (12, b)], 1)
+
+    # 20 dups the reference, 21 the ingested survivor 11
+    ingest_rows([(20, a), (21, b)], 1)
+    assert os.path.exists(os.path.join(out, "epoch=1", "_SUCCESS"))
+    assert spark.read.parquet(os.path.join(out, "epoch=1")).count() == 0
+    assert read_meta(idx)["max_id"] == 21
+    assert [r[id_col] for r in spark.read.parquet(out).collect()] == [11]
+
+
+def test_each_ingest_step_lives_in_one_function():
+    """The committed-epoch check, the surrogate-id assignment and the
+    straddle refusal are written once, in the near-dup sinks' shared
+    body, and every streaming sink starts through the one
+    ``foreachBatch`` writer."""
+    import ast
+    import re
+
+    import kaer_spark.streaming.ingest as I
+
+    only_in = {
+        r"(?<!def)_fs_committed\(": {"_screen_and_append"},
+        r"(?<!def)_assign_surrogate_ids\(": {"_screen_and_append"},
+        r"\]straddle": {"_screen_and_append"},
+        r"\.writeStream\.": {"_start"},
+    }
+    found = {pat: set() for pat in only_in}
+    src = open(I.__file__, encoding="utf-8").read()
+    lines = src.splitlines()
+    for node in ast.parse(src).body:
+        if not isinstance(node, ast.FunctionDef):
+            continue
+        body = re.sub(r"\s+", "", "".join(lines[node.lineno - 1:node.end_lineno]))
+        for pat in only_in:
+            if re.search(pat, body):
+                found[pat].add(node.name)
+    assert found == only_in
+
+
 def test_fs_committed_requires_success_markers(spark, tmp_path):
     """marksuccessfuljobs=false (common S3 tuning) would make every
     committed epoch read as uncommitted — every genuine replay would
