@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 from collections.abc import Iterator, Sequence
 
 import numpy as np
@@ -32,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kaer_spark.operators.util import ensure_package_shipped
 
 
 class EmbeddingProvider:
@@ -119,35 +120,6 @@ class HTTPEmbedder(EmbeddingProvider):
         return [[float(x) for x in e] for e in payload["embeddings"]]
 
 
-def _ensure_package_shipped(spark) -> None:
-    """Ship the ``kaer_spark`` package to executors (addPyFile zip).
-
-    Python workers deserialize provider objects by importing ``kaer_spark``;
-    on a real cluster (and whenever the driver's cwd isn't the repo) the
-    package must travel with the job — the same ``--py-files`` mechanics a
-    1000-executor deployment uses. Idempotent per SparkContext.
-    """
-    sc = spark.sparkContext
-    if getattr(sc, "_kaer_spark_shipped", False):
-        return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.mkdtemp(prefix="kaer_spark_ship"), "kaer_spark.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "kaer_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    sc.addPyFile(zpath)
-    sc._kaer_spark_shipped = True
-
-
 def embed_column(
     df: DataFrame,
     text_col: str,
@@ -159,7 +131,7 @@ def embed_column(
     The provider object is pickled once into the task closure (small); each
     Arrow batch makes ⌈batch/max_batch⌉ provider calls. No shuffle.
     """
-    _ensure_package_shipped(df.sparkSession)
+    ensure_package_shipped(df.sparkSession)
     fields = df.schema.fields + [
         T.StructField(out_col, T.ArrayType(T.FloatType()), True)
     ]

@@ -49,12 +49,14 @@ from kaer_spark.functions.text import char_shingles, tokens, word_shingles
 from kaer_spark.functions.vector import cached_expr, dot, vector_norm
 from kaer_spark.operators.util import (
     above_watermark,
+    ensure_package_shipped,
     ensure_parallelism,
     flip_watermark,
     floor_watermark,
     json_id,
     open_refresh,
     ranked_quantiles,
+    size_python_stage,
     vec_dim,
     watermark_health_cols,
 )
@@ -1440,7 +1442,7 @@ def minhash_signatures(
     coeffs = minhash_coeffs(num_hashes, seed)
     if unit == "char":
         N = int(n)
-        base = ensure_parallelism(df.filter(_signed(text_col, N, unit)))
+        base = size_python_stage(df.filter(_signed(text_col, N, unit)))
         sig = minhash_sig_col(text_col, N, coeffs, HASH_BASE, HASH_MOD)
         return base.select(
             F.col(id_col).alias("id"),
@@ -3350,14 +3352,12 @@ def duplicate_passages(
     collisions find them. Downstream, join ``fp`` back to re-locate spans
     or feed ``rep_doc`` exemplars to a reviewer.
 
-    Mechanics: the text's codepoint array is materialized ONCE per row
-    (``split``), each window hashes by folding an O(length) array slice —
-    O(chars × length) total work, never the O(chars²) of per-window
-    ``substring`` rescans — with the corpus-wide poly-hash (base 31 mod
-    1e9+7, int64-exact), so a SQL oracle replays every fingerprint. One
-    narrow explode (chars per row) and one hash aggregate; ``min_docs``
-    filters AFTER the map-side-combined counts, so ubiquitous windows
-    never fan out beyond their counts.
+    Mechanics: each row's windows hash in one Arrow UDF pass
+    (:func:`~kaer_spark.functions.fphash.window_fps_col`, int64-exact
+    paired poly-hash folds, so a SQL oracle replays every fingerprint).
+    One narrow explode (chars per row) and one hash aggregate;
+    ``min_docs`` filters AFTER the map-side-combined counts, so
+    ubiquitous windows never fan out beyond their counts.
 
     Scale honesty: compute AND shuffle are LINEAR in corpus chars (never
     quadratic — no pair join exists), but the constant is real: one
@@ -3381,12 +3381,12 @@ def duplicate_passages(
     if length <= 0:
         raise ValueError("length must be positive")
     L = int(length)
-    # ensure_parallelism: the fixture-scale single-file scan would
-    # otherwise run the whole O(chars × length) hash in ONE task (measured
-    # 63s -> ~3s at sf0.1); at real scale the input has partitions and
-    # this is a no-op
+    # size_python_stage: the hash is one Arrow UDF pass (~0.3 s of numpy
+    # for a 3,000-document corpus) and each Python-worker round costs
+    # ~0.25-0.37 CPU-s whatever it holds, so a small input hashes in one
+    # round and a large one in up to defaultParallelism
     exploded = (
-        ensure_parallelism(df.filter(F.length(text_col) >= L))
+        size_python_stage(df.filter(F.length(text_col) >= L))
         .select(
             F.col(id_col).alias("id"),
             F.explode(
@@ -3424,7 +3424,7 @@ def _window_fp_explode(
     and one narrow posexplode carries the 0-based start position."""
     L = int(length)
     return (
-        ensure_parallelism(df.filter(F.length(text_col) >= L))
+        size_python_stage(df.filter(F.length(text_col) >= L))
         .select(
             F.col(id_col).alias("id"),
             F.posexplode(
@@ -3444,6 +3444,26 @@ def _window_str(text_col_name: str, pos0_col: str, length: int) -> Column:
     )
 
 
+def _in_min_distinct(
+    rows: DataFrame, key: str | list[str], n: int, of: str = "id"
+) -> DataFrame:
+    """The rows whose ``key`` value occurs with ``n``+ distinct values of
+    ``of``: a dense rank by ``of`` and its max over the ``key``
+    partition. One exchange on ``key`` and no aggregate joined back, so
+    the frame's upstream (the window-fingerprint UDF) runs once, where a
+    count joined back to its rows runs it per consumer. The price is that
+    each key's rows are buffered as one window group (spilling past
+    ``spark.sql.windowExec.buffer.spill.threshold``), so a fingerprint
+    shared by very many documents costs buffer space a streamed semi-join
+    would not."""
+    by_key = Window.partitionBy(key)
+    return (
+        rows.withColumn("__r", F.dense_rank().over(by_key.orderBy(of)))
+        .withColumn("__n", F.max("__r").over(by_key))
+        .filter(F.col("__n") >= int(n))
+    )
+
+
 def _flagged_verified_self(
     df: DataFrame,
     id_col: str,
@@ -3456,11 +3476,10 @@ def _flagged_verified_self(
     distinct documents — a fingerprint collision can never flag
     non-duplicate text.
 
-    The r12 shape: the COUNTING stage is byte-for-byte the unverified
-    path (int64 fingerprints only — no window string is ever built
-    corpus-wide), and content materializes ONLY for candidate rows, by
-    joining the flagged ``(id, pos0)`` positions back to the original
-    text and slicing there:
+    The counting stage is int64 fingerprints only (no window string is
+    ever built corpus-wide), and content materializes ONLY for
+    candidate rows, by joining the flagged ``(id, pos0)`` positions back
+    to the original text and slicing there:
 
     * ``fp``-level distinct-doc count ≥ ``min_docs`` → candidate rows
       (a content's fp-count is ≥ its content-count, so no qualifying
@@ -3471,43 +3490,24 @@ def _flagged_verified_self(
     * a content-level distinct-doc recount over the candidate-sized rows
       keeps exactly the contents in ``min_docs``+ docs — identical
       contents always share an fp, so the recount is complete per
-      content and grouping by ``wstr`` alone is sound.
+      content and partitioning by ``wstr`` alone is sound.
 
-    The candidate subtree is deliberately NOT checkpointed: its double
-    evaluation re-runs int64 window hashing (codegen-cached, scan-shaped
-    — the cheap part), while a localCheckpoint pays a full plan compile
-    plus block materialization per call (measured 2.9s vs 1.2s min at
-    sf0.1). On a cluster where the recompute is the dominant cost,
-    ``.persist()`` the input instead.
-
-    (The r11 design instead carried min/max-``wstr`` agreement partials
-    through the counting aggregate — correct, but it built every window
-    string twice corpus-wide; measured 2.2s vs the 0.9s unverified floor
-    at sf0.1. This shape restores the unverified counting cost.)
+    Both counts are windows over their rows (:func:`_in_min_distinct`),
+    so the plan is one chain and the fingerprint UDF runs once per call.
+    A Python-worker round costs ~0.25-0.37 CPU-s on a 4-vCPU VM whatever
+    it holds; the count-joined-back shape re-ran the explode for each of
+    its three consumers.
     """
     L = int(length)
-    exploded = _window_fp_explode(df, id_col, text_col, length)
-    dup_fps = (
-        exploded.groupBy("fp")
-        .agg(F.countDistinct("id").alias("n_docs"))
-        .filter(F.col("n_docs") >= int(min_docs))
-        .select("fp")
-    )
-    cand = exploded.join(dup_fps, "fp", "left_semi")
+    cand = _in_min_distinct(
+        _window_fp_explode(df, id_col, text_col, length), "fp", min_docs
+    ).select("id", "pos0")
     cand_w = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
         .join(cand, "id")
         .select("id", "pos0", _window_str("__t", "pos0", L).alias("wstr"))
     )
-    ok_contents = (
-        cand_w.groupBy("wstr", "id")
-        .agg(F.count("*").alias("occ"))
-        .groupBy("wstr")
-        .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") >= int(min_docs))
-        .select("wstr")
-    )
-    return cand_w.join(ok_contents, "wstr", "left_semi").select("id", "pos0")
+    return _in_min_distinct(cand_w, "wstr", min_docs).select("id", "pos0")
 
 
 def _flagged_verified_against(
@@ -3522,36 +3522,43 @@ def _flagged_verified_against(
     cross-corpus transforms: exactly the left windows whose CONTENT
     appears verbatim somewhere in the RIGHT corpus.
 
-    Same r12 shape as :func:`_flagged_verified_self`: BOTH explodes stay
-    int64-only (no corpus-wide window strings); candidate left positions
-    and the right positions sharing their fps each join back to their
-    own corpus's text once, slice content in the projection (string work
-    ∝ candidate mass on both sides), and the final LEFT SEMI on
-    ``(fp, wstr)`` keeps exactly the left windows whose content exists
-    verbatim on the right — identical content always yields an identical
-    fp, so the fp-candidate set is complete for every qualifying
-    content and a collision can never verify."""
+    Same shape as :func:`_flagged_verified_self`, over one tagged union
+    of both corpora, so the fingerprint UDF runs once per call: each row
+    carries ``id = (side, left id, right id)``, with ``side`` 0 on the
+    left and 1 on the right. The explode stays int64-only; windows whose
+    fp occurs on both sides are the candidates; each joins its own
+    corpus's text once and slices its content in the projection (string
+    work ∝ candidate mass on both sides), and a left window is kept
+    when some right window shares its ``(fp, wstr)`` — identical content
+    always yields an identical fp, so the fp-candidate set is complete
+    for every qualifying content and a collision can never verify."""
     L = int(length)
-    rexp = _window_fp_explode(right, right_id_col, text_col, length)
-    lexp = _window_fp_explode(left, left_id_col, text_col, length)
-    lcand = lexp.join(rexp.select("fp").distinct(), "fp", "left_semi")
-    lcand_w = (
-        left.select(F.col(left_id_col).alias("id"), F.col(text_col).alias("__t"))
-        .join(lcand, "id")
-        .select("id", "pos0", "fp", _window_str("__t", "pos0", L).alias("wstr"))
-    )
-    cand_fps = lcand_w.select("fp").distinct()
-    rcand = rexp.join(cand_fps, "fp", "left_semi")
-    rcand_w = (
-        right.select(
-            F.col(right_id_col).alias("id"), F.col(text_col).alias("__t")
+    lt = left.schema[left_id_col].dataType
+    rt = right.schema[right_id_col].dataType
+
+    def tagged(df: DataFrame, side: int, lid: Column, rid: Column) -> DataFrame:
+        key = F.struct(
+            F.lit(side).alias("side"), lid.cast(lt).alias("l"), rid.cast(rt).alias("r")
         )
-        .join(rcand, "id")
-        .select("fp", _window_str("__t", "pos0", L).alias("wstr"))
-        .distinct()
+        return df.select(key.alias("id"), F.col(text_col))
+
+    both = tagged(left, 0, F.col(left_id_col), F.lit(None)).unionByName(
+        tagged(right, 1, F.lit(None), F.col(right_id_col))
     )
-    return lcand_w.join(rcand_w, ["fp", "wstr"], "left_semi").select(
-        "id", "pos0"
+    cand = _in_min_distinct(
+        _window_fp_explode(both, "id", text_col, length), "fp", 2, "id.side"
+    )
+    cand_w = (
+        both.select("id", F.col(text_col).alias("__t"))
+        .join(cand.select("id", "pos0", "fp"), "id")
+        .select(
+            "id", "pos0", "fp", _window_str("__t", "pos0", L).alias("wstr")
+        )
+    )
+    return (
+        _in_min_distinct(cand_w, ["fp", "wstr"], 2, "id.side")
+        .filter(F.col("id.side") == 0)
+        .select(F.col("id.l").alias("id"), "pos0")
     )
 
 
@@ -3681,14 +3688,15 @@ def winnow_fingerprints(
     if k < 1 or window < 1:
         raise ValueError("k and window must be positive")
     K, w = int(k), int(window)
-    # no checkpoint needed: the UDF output is a single struct of
-    # parallel (pos0, fp) arrays, exploded once
+    # sized (and the package shipped) before the UDF is built; no
+    # checkpoint needed: the UDF output is a single struct of parallel
+    # (pos0, fp) arrays, exploded once
+    base = size_python_stage(df.filter(F.length(text_col) >= K))
     sel = winnow_selections_col(
         text_col, K, w, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
     )
     return (
-        ensure_parallelism(df.filter(F.length(text_col) >= K))
-        .select(F.col(id_col).alias("id"), sel.alias("__s"))
+        base.select(F.col(id_col).alias("id"), sel.alias("__s"))
         .select(
             "id",
             F.explode(F.arrays_zip(F.col("__s.p"), F.col("__s.f"))).alias(
@@ -4044,12 +4052,11 @@ def remove_duplicate_passages(
     delete non-duplicate text.
 
     Scale shape: the window fingerprints explode once (O(chars) rows,
-    same envelope as the report), duplicated fps come from the same
-    map-side-combined distinct count (single-distinct — no Expand, see
-    duplicate_passages), flagged spans join back LEFT SEMI on fp, the
-    verification recounts only the candidate mass by content, and the
-    merge/rebuild runs on the id partitioning with no UDF and no
-    collect.
+    same envelope as the report, and one evaluation of the fingerprint
+    UDF), duplicated fps are a distinct-doc count windowed over the fp
+    partitioning (no Expand, no aggregate joined back), the verification
+    recounts only the candidate mass by content, and the merge/rebuild
+    runs on the id partitioning with no UDF and no collect.
     """
     if length <= 0:
         raise ValueError("length must be positive")
@@ -4085,13 +4092,12 @@ def passage_overlap_between(
     paired-moduli fold makes those ~2^-60-rate per pair, but a
     contamination REPORT should not carry a caveat).
 
-    Scale shape: both corpora explode their window fingerprints once;
-    the RIGHT side collapses to DISTINCT fps (map-side combined) before
-    a LEFT SEMI probe — the training corpus is never broadcast and never
-    carried past its distinct set; verification re-explodes the right
-    side bounded LEFT SEMI to candidate fingerprints. Two hash
-    aggregates on the left id finish the rates. Everything linear in
-    corpus chars.
+    Scale shape: both corpora explode their window fingerprints once,
+    in one UDF pass over their tagged union; a window on the fp
+    partitioning keeps the fps seen on both sides, so neither corpus is
+    broadcast or joined pairwise, and verification slices content only
+    for those candidates. Two hash aggregates on the left id finish the
+    rates. Everything linear in corpus chars.
     """
     L = int(length)
     # per-doc window totals are pure arithmetic — no explode needed
@@ -4139,10 +4145,9 @@ def remove_duplicate_passages_against(
     right corpus.
 
     Same scale envelope as the report plus the shared gaps-and-islands
-    excision (:func:`_excise_spans`): linear explodes, DISTINCT-collapsed
-    right side probed LEFT SEMI (verification re-explodes the right side
-    bounded to candidate fingerprints), merge/rebuild on the id
-    partitioning.
+    excision (:func:`_excise_spans`): one linear explode of both sides,
+    the both-sides test windowed on the fp partitioning, merge/rebuild
+    on the id partitioning.
     """
     flagged = _flagged_verified_against(
         left, right, left_id_col, right_id_col, text_col, length
@@ -4321,6 +4326,7 @@ def cdc_chunks(
     W, D = int(w), int(divisor)
     if W < 2 or D < 2:
         raise ValueError("w and divisor must be >= 2")
+    ensure_package_shipped(df.sparkSession)
     fps = window_fps_col(
         text_col, W, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
     )
@@ -4334,6 +4340,8 @@ def cdc_chunks(
     bounds = F.array_distinct(
         F.concat(F.array(F.lit(0).cast("long")), cuts, F.array(n))
     )
+    # ensure_parallelism, not size_python_stage: the interpreted
+    # per-character chunk fold runs in this stage beside the UDF
     base = ensure_parallelism(df.filter(F.length(text_col) > 0)).select(
         F.col(id_col).alias("id"), codes.alias("__codes"), bounds.alias("__b")
     )

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kaer_spark.embeddings import _ensure_package_shipped
+from kaer_spark.operators.util import ensure_package_shipped
 
 #: typed metadata carried beside every media blob
 MEDIA_META_SCHEMA = T.StructType(
@@ -92,7 +92,7 @@ def extract_media_features(
     if decode != "fake":
         raise ValueError(f"decode must be 'real' or 'fake', got {decode!r}")
 
-    _ensure_package_shipped(df.sparkSession)
+    ensure_package_shipped(df.sparkSession)
     out_schema = T.StructType(
         [df.schema[id_col]] + _FEATURE_FIELDS
     )
@@ -155,7 +155,7 @@ def resize_images(
     elif decode != "fake":
         raise ValueError(f"decode must be 'real' or 'fake', got {decode!r}")
 
-    _ensure_package_shipped(df.sparkSession)
+    ensure_package_shipped(df.sparkSession)
     out_schema = T.StructType(
         [
             df.schema[id_col],
@@ -238,7 +238,7 @@ def image_dhash(
             )
     elif decode != "fake":
         raise ValueError(f"decode must be 'real' or 'fake', got {decode!r}")
-    _ensure_package_shipped(df.sparkSession)
+    ensure_package_shipped(df.sparkSession)
     out_schema = T.StructType(
         [
             df.schema[id_col],

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import tempfile
+import zipfile
 
 from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame
@@ -16,7 +18,12 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     """Round-robin repartition if the input may have too few partitions.
 
     A small parquet table arrives as one split, which serializes
-    expression-heavy narrow stages (shingling, hashing) onto a single core.
+    expression-heavy JVM stages (quality scores, shingle strings,
+    interpreted higher-order folds) onto a single core. A stage whose
+    work is a Python worker is sized by :func:`size_python_stage`
+    instead: each Python-worker round costs ~0.25-0.37 CPU-s on a 4-vCPU
+    VM whatever it holds, so spreading a small input over every core
+    buys nothing there.
 
     Never executes anything: the decision is read from the physical plan.
 
@@ -38,6 +45,81 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if root != "AdaptiveSparkPlan" and df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+#: Catalyst's size estimate of a plan it cannot size (``Long.MaxValue``,
+#: e.g. a frame built from a Python RDD)
+_UNKNOWN_SIZE = 2**63 - 1
+
+
+def size_python_stage(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned for a stage whose work is a Python worker (the
+    ``fphash`` Arrow UDFs), sized by its input. Fires no job.
+
+    A Python-worker round costs ~0.25-0.37 CPU-s on a 4-vCPU VM (worker
+    hand-off, Arrow framing, the zipimport cache invalidation of each
+    task), with 400 rows or with none, while hashing a 3,000-document
+    corpus costs ~0.3 s of numpy in total. So the stage gets one round
+    per ``spark.sql.files.openCostInBytes`` of Catalyst's size estimate
+    (``optimizedPlan().stats().sizeInBytes``), clamped to ``[1,
+    defaultParallelism]``: the open cost is Spark's own byte-equivalent
+    of a unit of work's fixed cost, the same figure that packs small
+    files into one scan split.
+
+    * A wider input is coalesced to the target and a narrower one is
+      widened by round-robin. An AQE-rooted input, whose partition
+      count is only known once its shuffles have run, is coalesced when
+      the target is one round and round-robin repartitioned otherwise.
+    * An estimate Catalyst does not know (``Long.MaxValue``) keeps the
+      :func:`ensure_parallelism` widening.
+
+    Every stage sized here also ships ``kaer_spark`` to the workers
+    (:func:`ensure_package_shipped`), because the UDFs it feeds import it.
+    """
+    spark = df.sparkSession
+    ensure_package_shipped(spark)
+    qe = df._jdf.queryExecution()
+    est = int(str(qe.optimizedPlan().stats().sizeInBytes()))
+    if est >= _UNKNOWN_SIZE:
+        return ensure_parallelism(df)
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    cap = spark.sparkContext.defaultParallelism
+    target = max(1, min(cap, -(-est // max(int(open_cost), 1))))
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return df.coalesce(1) if target == 1 else df.repartition(target)
+    have = df.rdd.getNumPartitions()
+    if have > target:
+        return df.coalesce(target)
+    if have < target:
+        return df.repartition(target)
+    return df
+
+
+def ensure_package_shipped(spark) -> None:
+    """Ship the ``kaer_spark`` package to executors (addPyFile zip).
+
+    Python workers deserialize provider objects and UDF closures by
+    importing ``kaer_spark``; on a real cluster (and whenever the
+    driver's cwd isn't the checkout) the package must travel with the
+    job — the same ``--py-files`` mechanics a 1000-executor deployment
+    uses. Idempotent per SparkContext.
+    """
+    sc = spark.sparkContext
+    if getattr(sc, "_kaer_spark_shipped", False):
+        return
+    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    zpath = os.path.join(tempfile.mkdtemp(prefix="kaer_spark_ship"), "kaer_spark.zip")
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    rel = os.path.join(
+                        "kaer_spark", os.path.relpath(full, pkg_dir)
+                    )
+                    zf.write(full, rel)
+    sc.addPyFile(zpath)
+    sc._kaer_spark_shipped = True
 
 
 def vec_dim(df: DataFrame, vec_col: str) -> int:

@@ -42,6 +42,29 @@ def jobs_fired(spark):
         fired.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@contextlib.contextmanager
+def tasks_fired(spark):
+    """Yield a list that, once the block exits, holds one number: the
+    tasks run by the stages of the Spark jobs this thread fired inside
+    it (:func:`jobs_fired`). A stage AQE skipped, because its shuffle
+    output already existed, ran no task and adds none."""
+    sc = spark.sparkContext
+    tasks: list[int] = []
+    with jobs_fired(spark) as jobs:
+        yield tasks
+    # the status store is fed by the listener bus, which can lag the
+    # action that fired the job
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    total = 0
+    for job in jobs:
+        for sid in tracker.getJobInfo(job).stageIds:
+            stage = tracker.getStageInfo(sid)
+            if stage is not None:
+                total += stage.numCompletedTasks
+    tasks.append(total)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -319,6 +319,35 @@ def test_ingest_job_budget(spark, tmp_path):
     assert coll.count() == 1  # the warm-up row survived
 
 
+def test_minhash_catch_up_signs_in_one_round(spark, tmp_path, monkeypatch):
+    """An insert into a MinHash-indexed collection signs its three-row
+    catch-up tail in one Python-worker round: the tail is far below one
+    ``openCostInBytes``, so its signature stage runs one task instead of
+    one per core."""
+    import kaer_spark.operators.dedup as D
+    from kaer_spark.context import KaerContext
+
+    from tests.conftest import tasks_fired
+
+    ctx = KaerContext(spark, str(tmp_path / "kaer"))
+    coll = ctx.create_collection("mh_rounds")
+    coll.insert([f"warm document {i} about spark stages" for i in range(8)])
+    coll.build_minhash_index(n=3, num_hashes=4, bands=2)
+    signed = []
+    sign = D.minhash_signatures
+
+    def recording(*args, **kwargs):
+        signed.append(sign(*args, **kwargs))
+        return signed[-1]
+
+    monkeypatch.setattr(D, "minhash_signatures", recording)
+    coll.insert(["one new text", "another new text", "a third new text"])
+    assert len(signed) == 1
+    with tasks_fired(spark) as tasks:
+        signed[0].select("id", "sig").write.format("noop").mode("overwrite").save()
+    assert tasks == [1]
+
+
 def test_query_batch_exact_and_approximate(spark, tmp_path):
     """Batch retrieval parity: exact mode ranks like per-query query();
     approximate mode joins the IVF index with the metadata filter applied
@@ -1639,11 +1668,12 @@ def _assert_indexed_once(coll):
 
 
 #: Spark jobs one clean-path insert of a small batch fires into a
-#: collection owning IVF and MinHash, data write included, while the
-#: collection holds fewer data files than the session has cores (so
-#: MinHash's signature pass widens the tail). Catching up by re-deriving
-#: the batch (a max() job and a replay-guard anti-join per family) fired 18.
-INSERT_JOBS_IVF_MINHASH = 8
+#: collection owning IVF and MinHash, data write included. MinHash's
+#: signature pass runs the small tail in one round
+#: (``util.size_python_stage``); widening it over every core fired 8.
+#: Catching up by re-deriving the batch (a max() job and a replay-guard
+#: anti-join per family) fired 18.
+INSERT_JOBS_IVF_MINHASH = 7
 
 
 def test_insert_catches_up_from_the_batch_range(ctx, spark, monkeypatch):

@@ -2930,3 +2930,121 @@ def test_each_probe_body_lives_in_one_kernel():
             if re.search(pat, body):
                 found[pat].add(node.name)
     assert found == only_in, os.path.basename(D.__file__)
+
+
+@pytest.mark.parametrize("form", ["self", "against"])
+def test_passage_removal_fingerprints_once(spark, documents, form):
+    """``remove_duplicate_passages`` and ``remove_duplicate_passages_against``
+    hash each passage once: their final plans hold one ``ArrowEvalPython``,
+    where counts joined back to the exploded rows re-ran the fingerprint
+    UDF for each consumer."""
+    from kaer_spark.operators.dedup import (
+        remove_duplicate_passages,
+        remove_duplicate_passages_against,
+    )
+    from kaer_spark.plans.inspect import final_executed_plan
+
+    docs = documents.select("doc_id", "text")
+    if form == "self":
+        out = remove_duplicate_passages(docs, length=24)
+    else:
+        out = remove_duplicate_passages_against(
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+            length=24,
+        )
+    final = final_executed_plan(out).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("ArrowEvalPython") == 1, final
+
+
+def test_fphash_stages_are_sized_by_their_input():
+    """Every ``fphash`` UDF builder's input is sized by
+    ``util.size_python_stage``, never widened by ``ensure_parallelism``.
+    ``cdc_chunks`` is the one exception: its interpreted per-character
+    chunk fold runs in the same stage as its UDF. The check reads the
+    innermost block around each builder call."""
+    import ast
+    import os
+
+    import kaer_spark
+
+    builders = {"window_fps_col", "minhash_sig_col", "winnow_selections_col"}
+    pkg = os.path.dirname(kaer_spark.__file__)
+    sized, widened = set(), set()
+    for root, _dirs, names in os.walk(pkg):
+        for name in sorted(n for n in names if n.endswith(".py")):
+            with open(os.path.join(root, name), encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            for fn in tree.body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                blocks = [
+                    block
+                    for node in ast.walk(fn)
+                    for block in (getattr(node, "body", None), getattr(node, "orelse", None))
+                    if isinstance(block, list) and block and isinstance(block[0], ast.stmt)
+                ]
+                for call in ast.walk(fn):
+                    if not (
+                        isinstance(call, ast.Call)
+                        and isinstance(call.func, ast.Name)
+                        and call.func.id in builders
+                    ):
+                        continue
+                    block = min(
+                        (
+                            b for b in blocks
+                            if b[0].lineno <= call.lineno <= b[-1].end_lineno
+                        ),
+                        key=lambda b: b[-1].end_lineno - b[0].lineno,
+                    )
+                    code = "\n".join(ast.unparse(stmt) for stmt in block)
+                    where = f"{name[:-3]}.{fn.name}"
+                    if "size_python_stage(" in code:
+                        sized.add(where)
+                    if "ensure_parallelism(" in code:
+                        widened.add(where)
+    assert widened == {"dedup.cdc_chunks"}
+    assert sized == {
+        "dedup.minhash_signatures",
+        "dedup.duplicate_passages",
+        "dedup._window_fp_explode",
+        "dedup.winnow_fingerprints",
+    }
+
+
+_OUTSIDE_CHECKOUT_SCRIPT = r"""
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from kaer_spark.operators.dedup import build_minhash_index
+from kaer_spark.session import get_spark
+
+spark = get_spark(app_name="ship-check", master="local[1]", shuffle_partitions=1)
+doc = spark.sql("SELECT 1L AS doc_id, 'one document long enough to sign' AS text")
+build_minhash_index(doc, sys.argv[2])
+spark.stop()
+print("built")
+"""
+
+
+def test_fphash_stage_ships_the_package(tmp_path):
+    """A driver script run from outside the checkout, with the checkout on
+    ``sys.path`` and no ``PYTHONPATH``, builds a MinHash index: the
+    signature stage ships ``kaer_spark`` to the Python workers, whose
+    import of the ``fphash`` UDFs otherwise fails with
+    ``ModuleNotFoundError``. Run in a child process from a temporary
+    working directory, so the suite's session and cwd play no part."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    done = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_CHECKOUT_SCRIPT, repo, str(tmp_path / "mh")],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300,
+    )
+    assert done.returncode == 0 and "built" in done.stdout, done.stderr[-3000:]

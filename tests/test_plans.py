@@ -378,16 +378,18 @@ def test_remove_duplicate_lines_plan_shape(documents):
 
 
 def test_remove_duplicate_passages_plan_shape(documents):
-    """Passage removal keeps the report's linear envelope: explodes of the
-    window fingerprints, a LeftSemi back-join on fp, the gaps-and-islands
-    windows on the id partitioning — no pair join, no cartesian, no
-    Python, no single-reducer stage."""
+    """Passage removal keeps the report's linear envelope: one explode of
+    the window fingerprints, the fp and content counts as windows on the
+    fp and content partitionings, the gaps-and-islands windows on the id
+    partitioning — no pair join, no cartesian, no Python beyond the one
+    fingerprint UDF, no single-reducer stage."""
     from kaer_spark.operators.dedup import remove_duplicate_passages
 
     plan = executed_plan(remove_duplicate_passages(documents, length=24))
     assert "CartesianProduct" not in plan
     assert_python_only_fphash(plan)
-    assert "LeftSemi" in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert "hashpartitioning(fp#" in plan and "hashpartitioning(wstr#" in plan
     assert "Exchange SinglePartition" not in plan
 
 
@@ -423,10 +425,10 @@ def test_duplicate_passages_no_expand_distinct(documents):
 
 
 def test_passage_overlap_between_plan_shape(documents):
-    """Cross-corpus passage probe: the right corpus collapses to a
-    DISTINCT fp set joined LEFT SEMI — no cartesian, no Python, no
-    single-reducer stage, and the left corpus is never re-shuffled by
-    anything but its own id/fp aggregates."""
+    """Cross-corpus passage probe: both corpora hash in one fingerprint
+    UDF over their tagged union, and the both-sides test is a window on
+    the fp partitioning — no cartesian, no Python beyond the one
+    fingerprint UDF, no single-reducer stage."""
     from kaer_spark.operators.dedup import passage_overlap_between
 
     left = documents.filter(F.col("doc_id") % 2 == 0)
@@ -434,7 +436,8 @@ def test_passage_overlap_between_plan_shape(documents):
     plan = executed_plan(passage_overlap_between(left, right, length=24))
     assert "CartesianProduct" not in plan
     assert_python_only_fphash(plan)
-    assert "LeftSemi" in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert "hashpartitioning(fp#" in plan
     assert "Exchange SinglePartition" not in plan
 
 
@@ -566,3 +569,71 @@ def test_ensure_parallelism_decides_from_plan(spark, tmp_path, kind):
         assert out is df
     else:
         assert plan.count("RoundRobinPartitioning") == 1, plan
+
+
+_OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+@pytest.mark.parametrize("kind", ["scan", "groupBy", "one_split", "python_rows"])
+def test_size_python_stage_sizes_by_estimate(spark, tmp_path, kind):
+    """``size_python_stage`` sizes a Python-worker stage by Catalyst's
+    size estimate over ``openCostInBytes`` and fires no Spark job: a
+    small multi-split scan and a small AQE-rooted input go to one
+    partition; a one-split input estimated at 1.6 open costs is widened
+    by round-robin to two; a frame built from a Python list, whose size
+    Catalyst does not know, keeps the ``defaultParallelism`` widening."""
+    from kaer_spark.operators.util import size_python_stage
+
+    from tests.conftest import jobs_fired
+
+    cores = spark.sparkContext.defaultParallelism
+    saved = spark.conf.get(_OPEN_COST)
+    if kind == "scan":
+        df, want = _multi_split_scan(spark, tmp_path), 1
+        assert df.rdd.getNumPartitions() > 1 or cores == 1
+    elif kind == "groupBy":
+        df, want = _WIDEN_INPUTS["groupBy"](spark, tmp_path), 1
+    elif kind == "one_split":
+        df, want = spark.range(0, 1000, numPartitions=1), min(2, cores)
+        spark.conf.set(_OPEN_COST, "5000")  # the estimate is 8000 bytes
+    else:
+        df = spark.createDataFrame([(i, "x") for i in range(8)], "id long, t string")
+        want = cores
+    try:
+        with jobs_fired(spark) as fired:
+            out = size_python_stage(df)
+            plan = executed_plan(out)
+    finally:
+        spark.conf.set(_OPEN_COST, saved)
+    assert fired == [], f"{kind}: size_python_stage fired jobs {fired}"
+    assert out.rdd.getNumPartitions() == want
+    widened = kind == "one_split" and want > 1
+    assert plan.count("RoundRobinPartitioning") == (1 if widened else 0)
+
+
+@pytest.mark.parametrize("op", ["minhash_signatures", "window_fps", "winnow"])
+def test_fphash_stages_agree_across_round_counts(spark, documents, op):
+    """The MinHash signatures, window fingerprints and winnow selections
+    are the same rows whether their Python-worker stage runs as one round
+    (a small input at the default open cost) or as ``defaultParallelism``
+    rounds (an open cost of one byte)."""
+    import kaer_spark.operators.dedup as D
+    from kaer_spark.operators.util import size_python_stage
+
+    docs = documents.select("doc_id", "text")
+    run = {
+        "minhash_signatures": lambda: D.minhash_signatures(docs).select("id", "sig"),
+        "window_fps": lambda: D._window_fp_explode(docs, "doc_id", "text", 24),
+        "winnow": lambda: D.winnow_fingerprints(docs, k=16, window=8),
+    }[op]
+    cores = spark.sparkContext.defaultParallelism
+    saved = spark.conf.get(_OPEN_COST)
+    got = {}
+    for open_cost, rounds in ((saved, 1), ("1", cores)):
+        spark.conf.set(_OPEN_COST, open_cost)
+        try:
+            assert size_python_stage(docs).rdd.getNumPartitions() == rounds
+            got[rounds] = sorted(map(tuple, run().collect()))
+        finally:
+            spark.conf.set(_OPEN_COST, saved)
+    assert got[1] and got[1] == got[cores]
