@@ -42,7 +42,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 HASH_MOD = 1_000_000_007
@@ -75,6 +75,17 @@ def _window_hashes(codes, length: int, base: int, mod: int):
         return np.empty(0, dtype=np.int64)
     win = np.lib.stride_tricks.sliding_window_view(codes, length)
     return (win @ pw) % mod
+
+
+def _fphash_udf(return_type: str):
+    """``F.pandas_udf(return_type)``, after shipping ``kaer_spark`` to the
+    Python workers of the active session: the UDFs below unpickle by
+    importing this module."""
+    # late import: the operators package imports dedup, which imports this module
+    from kaer_spark.operators.util import ensure_package_shipped
+
+    ensure_package_shipped(SparkSession.active())
+    return F.pandas_udf(return_type)
 
 
 def paired_window_fps(
@@ -110,7 +121,7 @@ def window_fps_col(
     L = int(length)
     ms = (int(base), int(mod), int(base2), int(mod2))
 
-    @F.pandas_udf("array<long>")
+    @_fphash_udf("array<long>")
     def fphash_window_fps(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for texts in it:
             yield pd.Series(
@@ -138,7 +149,7 @@ def minhash_sig_col(
     A = [int(a) for a, _ in coeffs]
     B = [int(b) for _, b in coeffs]
 
-    @F.pandas_udf("array<long>")
+    @_fphash_udf("array<long>")
     def fphash_minhash_sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         a = np.array(A, dtype=np.int64)[:, None]
         b = np.array(B, dtype=np.int64)[:, None]
@@ -174,7 +185,7 @@ def winnow_selections_col(
     K, W = int(k), int(window)
     ms = (int(base), int(mod), int(base2), int(mod2))
 
-    @F.pandas_udf("struct<p: array<long>, f: array<long>>")
+    @_fphash_udf("struct<p: array<long>, f: array<long>>")
     def fphash_winnow_sel(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for texts in it:
             ps, fs = [], []

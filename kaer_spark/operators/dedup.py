@@ -49,7 +49,6 @@ from kaer_spark.functions.text import char_shingles, tokens, word_shingles
 from kaer_spark.functions.vector import cached_expr, dot, vector_norm
 from kaer_spark.operators.util import (
     above_watermark,
-    ensure_package_shipped,
     ensure_parallelism,
     flip_watermark,
     floor_watermark,
@@ -3381,10 +3380,10 @@ def duplicate_passages(
     if length <= 0:
         raise ValueError("length must be positive")
     L = int(length)
-    # size_python_stage: the hash is one Arrow UDF pass (~0.3 s of numpy
-    # for a 3,000-document corpus) and each Python-worker round costs
-    # ~0.25-0.37 CPU-s whatever it holds, so a small input hashes in one
-    # round and a large one in up to defaultParallelism
+    # size_python_stage: the hash is one Arrow UDF pass (~0.9 MB of text
+    # per CPU-s over the sf0.1 documents) and each Python-worker round
+    # costs ~0.25-0.37 CPU-s whatever it holds, so a small input hashes
+    # in one round and a large one in up to defaultParallelism
     exploded = (
         size_python_stage(df.filter(F.length(text_col) >= L))
         .select(
@@ -3536,15 +3535,16 @@ def _flagged_verified_against(
     lt = left.schema[left_id_col].dataType
     rt = right.schema[right_id_col].dataType
 
-    def tagged(df: DataFrame, side: int, lid: Column, rid: Column) -> DataFrame:
+    def tagged(df: DataFrame, side: int, own: str) -> DataFrame:
+        ids = [F.lit(None), F.lit(None)]
+        ids[side] = F.col(own)
         key = F.struct(
-            F.lit(side).alias("side"), lid.cast(lt).alias("l"), rid.cast(rt).alias("r")
+            F.lit(side).alias("side"), ids[0].cast(lt).alias("l"), ids[1].cast(rt).alias("r")
         )
-        return df.select(key.alias("id"), F.col(text_col))
+        # a null id has no text to join back to, as in the per-corpus joins
+        return df.filter(F.col(own).isNotNull()).select(key.alias("id"), F.col(text_col))
 
-    both = tagged(left, 0, F.col(left_id_col), F.lit(None)).unionByName(
-        tagged(right, 1, F.lit(None), F.col(right_id_col))
-    )
+    both = tagged(left, 0, left_id_col).unionByName(tagged(right, 1, right_id_col))
     cand = _in_min_distinct(
         _window_fp_explode(both, "id", text_col, length), "fp", 2, "id.side"
     )
@@ -3688,15 +3688,14 @@ def winnow_fingerprints(
     if k < 1 or window < 1:
         raise ValueError("k and window must be positive")
     K, w = int(k), int(window)
-    # sized (and the package shipped) before the UDF is built; no
-    # checkpoint needed: the UDF output is a single struct of parallel
-    # (pos0, fp) arrays, exploded once
-    base = size_python_stage(df.filter(F.length(text_col) >= K))
+    # no checkpoint needed: the UDF output is a single struct of
+    # parallel (pos0, fp) arrays, exploded once
     sel = winnow_selections_col(
         text_col, K, w, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
     )
     return (
-        base.select(F.col(id_col).alias("id"), sel.alias("__s"))
+        size_python_stage(df.filter(F.length(text_col) >= K))
+        .select(F.col(id_col).alias("id"), sel.alias("__s"))
         .select(
             "id",
             F.explode(F.arrays_zip(F.col("__s.p"), F.col("__s.f"))).alias(
@@ -4326,7 +4325,6 @@ def cdc_chunks(
     W, D = int(w), int(divisor)
     if W < 2 or D < 2:
         raise ValueError("w and divisor must be >= 2")
-    ensure_package_shipped(df.sparkSession)
     fps = window_fps_col(
         text_col, W, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
     )

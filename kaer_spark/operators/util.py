@@ -51,6 +51,16 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 #: e.g. a frame built from a Python RDD)
 _UNKNOWN_SIZE = 2**63 - 1
 
+#: Estimated input bytes that carry one Python-worker round's worth of
+#: ``fphash`` work. Measured on a 4-vCPU VM (work CPU of the process
+#: tree, 8 interleaved runs, one round each): over the 5,000 sf0.1
+#: documents (a parquet-scan estimate of 255 KB for 1.45 MB of text)
+#: the window fingerprints hash 162 KB of estimate per CPU-s, MinHash
+#: signatures 178 KB and winnow selections 201 KB, and a round costs
+#: 0.25-0.37 CPU-s whatever it holds. A round carries its own cost in
+#: hashing at 40-74 KB of estimate.
+_ROUND_BYTES = 64 * 1024
+
 
 def size_python_stage(df: DataFrame) -> DataFrame:
     """``df`` repartitioned for a stage whose work is a Python worker (the
@@ -58,40 +68,36 @@ def size_python_stage(df: DataFrame) -> DataFrame:
 
     A Python-worker round costs ~0.25-0.37 CPU-s on a 4-vCPU VM (worker
     hand-off, Arrow framing, the zipimport cache invalidation of each
-    task), with 400 rows or with none, while hashing a 3,000-document
-    corpus costs ~0.3 s of numpy in total. So the stage gets one round
-    per ``spark.sql.files.openCostInBytes`` of Catalyst's size estimate
-    (``optimizedPlan().stats().sizeInBytes``), clamped to ``[1,
-    defaultParallelism]``: the open cost is Spark's own byte-equivalent
-    of a unit of work's fixed cost, the same figure that packs small
-    files into one scan split.
+    task), with 400 rows or with none, so a small input is hashed in
+    one round rather than spread over every core.
 
-    * A wider input is coalesced to the target and a narrower one is
-      widened by round-robin. An AQE-rooted input, whose partition
-      count is only known once its shuffles have run, is coalesced when
-      the target is one round and round-robin repartitioned otherwise.
+    * An AQE-rooted input is returned unchanged: AQE coalesces the
+      shuffle output it reads from the measured bytes (partitions of at
+      least ``spark.sql.adaptive.coalescePartitions.minPartitionSize``,
+      1 MB, about a CPU-s of hashing), so a small input arrives as one
+      partition and a large one keeps its width.
+    * Otherwise (a scan, a checkpoint, local rows) the stage needs
+      ``ceil(sizeInBytes / _ROUND_BYTES)`` rounds by Catalyst's
+      estimate. An input with more partitions than that is coalesced to
+      it, and one with fewer than ``min(need, defaultParallelism)`` is
+      widened by round-robin to that; a many-split scan of a large
+      input is returned unchanged.
     * An estimate Catalyst does not know (``Long.MaxValue``) keeps the
       :func:`ensure_parallelism` widening.
-
-    Every stage sized here also ships ``kaer_spark`` to the workers
-    (:func:`ensure_package_shipped`), because the UDFs it feeds import it.
     """
-    spark = df.sparkSession
-    ensure_package_shipped(spark)
     qe = df._jdf.queryExecution()
     est = int(str(qe.optimizedPlan().stats().sizeInBytes()))
     if est >= _UNKNOWN_SIZE:
         return ensure_parallelism(df)
-    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
-    cap = spark.sparkContext.defaultParallelism
-    target = max(1, min(cap, -(-est // max(int(open_cost), 1))))
     if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
-        return df.coalesce(1) if target == 1 else df.repartition(target)
+        return df
+    need = max(1, -(-est // _ROUND_BYTES))
+    widest = min(need, df.sparkSession.sparkContext.defaultParallelism)
     have = df.rdd.getNumPartitions()
-    if have > target:
-        return df.coalesce(target)
-    if have < target:
-        return df.repartition(target)
+    if have > need:
+        return df.coalesce(need)
+    if have < widest:
+        return df.repartition(widest)
     return df
 
 

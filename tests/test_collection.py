@@ -321,9 +321,9 @@ def test_ingest_job_budget(spark, tmp_path):
 
 def test_minhash_catch_up_signs_in_one_round(spark, tmp_path, monkeypatch):
     """An insert into a MinHash-indexed collection signs its three-row
-    catch-up tail in one Python-worker round: the tail is far below one
-    ``openCostInBytes``, so its signature stage runs one task instead of
-    one per core."""
+    catch-up tail in one Python-worker round: the collection's estimate
+    is far below one round's bytes (``util._ROUND_BYTES``), so its
+    signature stage runs one task instead of one per core."""
     import kaer_spark.operators.dedup as D
     from kaer_spark.context import KaerContext
 

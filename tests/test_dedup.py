@@ -799,6 +799,22 @@ def test_passage_overlap_between_and_removal_against(spark):
     for d in (1, 2, 3, 4):
         assert len(left_rows[d - 1][1]) == len(out[d]["text_clean"]) + out[d]["n_chars_removed"]
 
+    # a null id takes no part in verification on either side: a null-id
+    # right row verifies nothing, and null-id left rows pass through
+    # once each, never paired with one another's text
+    left = spark.createDataFrame(
+        [(1, leak), (None, "a " + leak), (None, leak + " b")], "doc_id long, text string"
+    )
+    null_right = spark.createDataFrame([(None, "copy " + leak)], "doc_id long, text string")
+    assert passage_overlap_between(left, null_right, length=L).filter(
+        "doc_id = 1"
+    ).first()["n_flagged"] == 0
+    for rows, cleaned in ((null_right, leak), (null_right.unionByName(right), "")):
+        out = remove_duplicate_passages_against(left, rows, length=L).collect()
+        assert sorted((r["doc_id"] or 0, r["text_clean"]) for r in out) == sorted(
+            [(1, cleaned), (0, "a " + leak), (0, leak + " b")]
+        )
+
 
 def test_semdedup_cell_scoped_groups_and_keep_far(spark):
     """SemDeDup semantics on a constructed fixture: duplicate groups form

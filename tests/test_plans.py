@@ -571,53 +571,69 @@ def test_ensure_parallelism_decides_from_plan(spark, tmp_path, kind):
         assert plan.count("RoundRobinPartitioning") == 1, plan
 
 
-_OPEN_COST = "spark.sql.files.openCostInBytes"
+def _large_multi_split_scan(spark, tmp_path):
+    """A scan of one split per core whose estimate exceeds a round's
+    bytes per core: random doubles, which parquet cannot compress."""
+    from kaer_spark.operators.util import _ROUND_BYTES
+
+    path = str(tmp_path / "large_multi_split.parquet")
+    n = spark.sparkContext.defaultParallelism
+    rows = n * (_ROUND_BYTES * 3 // 2 // 8)
+    spark.range(0, rows).select(F.rand(7).alias("x")).repartition(n).write.parquet(path)
+    return spark.read.parquet(path)
 
 
-@pytest.mark.parametrize("kind", ["scan", "groupBy", "one_split", "python_rows"])
+@pytest.mark.parametrize(
+    "kind", ["scan", "large_scan", "groupBy", "one_split", "python_rows"]
+)
 def test_size_python_stage_sizes_by_estimate(spark, tmp_path, kind):
-    """``size_python_stage`` sizes a Python-worker stage by Catalyst's
-    size estimate over ``openCostInBytes`` and fires no Spark job: a
-    small multi-split scan and a small AQE-rooted input go to one
-    partition; a one-split input estimated at 1.6 open costs is widened
-    by round-robin to two; a frame built from a Python list, whose size
-    Catalyst does not know, keeps the ``defaultParallelism`` widening."""
-    from kaer_spark.operators.util import size_python_stage
+    """``size_python_stage`` sizes a Python-worker stage and fires no Spark
+    job: a small multi-split scan is coalesced to one partition; a scan
+    with a split per core whose estimate needs more rounds than that
+    comes back unchanged; an AQE-rooted input comes back unchanged, and
+    AQE coalesces its small output to one partition; a one-split input
+    estimated at 1.5 rounds' bytes is widened by round-robin to two; a
+    frame built from a Python list, whose size Catalyst does not know,
+    keeps the ``defaultParallelism`` widening."""
+    from kaer_spark.operators.util import _ROUND_BYTES, size_python_stage
 
     from tests.conftest import jobs_fired
 
     cores = spark.sparkContext.defaultParallelism
-    saved = spark.conf.get(_OPEN_COST)
     if kind == "scan":
         df, want = _multi_split_scan(spark, tmp_path), 1
         assert df.rdd.getNumPartitions() > 1 or cores == 1
+    elif kind == "large_scan":
+        df, want = _large_multi_split_scan(spark, tmp_path), cores
+        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        assert est > cores * _ROUND_BYTES and df.rdd.getNumPartitions() == cores
     elif kind == "groupBy":
         df, want = _WIDEN_INPUTS["groupBy"](spark, tmp_path), 1
     elif kind == "one_split":
-        df, want = spark.range(0, 1000, numPartitions=1), min(2, cores)
-        spark.conf.set(_OPEN_COST, "5000")  # the estimate is 8000 bytes
+        rows = _ROUND_BYTES * 3 // 2 // 8  # eight bytes a row
+        df, want = spark.range(0, rows, numPartitions=1), min(2, cores)
     else:
         df = spark.createDataFrame([(i, "x") for i in range(8)], "id long, t string")
         want = cores
-    try:
-        with jobs_fired(spark) as fired:
-            out = size_python_stage(df)
-            plan = executed_plan(out)
-    finally:
-        spark.conf.set(_OPEN_COST, saved)
+    with jobs_fired(spark) as fired:
+        out = size_python_stage(df)
+        plan = executed_plan(out)
     assert fired == [], f"{kind}: size_python_stage fired jobs {fired}"
+    if kind in ("large_scan", "groupBy"):
+        assert out is df
     assert out.rdd.getNumPartitions() == want
     widened = kind == "one_split" and want > 1
     assert plan.count("RoundRobinPartitioning") == (1 if widened else 0)
 
 
 @pytest.mark.parametrize("op", ["minhash_signatures", "window_fps", "winnow"])
-def test_fphash_stages_agree_across_round_counts(spark, documents, op):
+def test_fphash_stages_agree_across_round_counts(spark, documents, op, monkeypatch):
     """The MinHash signatures, window fingerprints and winnow selections
     are the same rows whether their Python-worker stage runs as one round
-    (a small input at the default open cost) or as ``defaultParallelism``
-    rounds (an open cost of one byte)."""
+    (the small fixture) or as ``defaultParallelism`` rounds (a round's
+    bytes lowered to one)."""
     import kaer_spark.operators.dedup as D
+    from kaer_spark.operators import util
     from kaer_spark.operators.util import size_python_stage
 
     docs = documents.select("doc_id", "text")
@@ -627,13 +643,9 @@ def test_fphash_stages_agree_across_round_counts(spark, documents, op):
         "winnow": lambda: D.winnow_fingerprints(docs, k=16, window=8),
     }[op]
     cores = spark.sparkContext.defaultParallelism
-    saved = spark.conf.get(_OPEN_COST)
     got = {}
-    for open_cost, rounds in ((saved, 1), ("1", cores)):
-        spark.conf.set(_OPEN_COST, open_cost)
-        try:
-            assert size_python_stage(docs).rdd.getNumPartitions() == rounds
-            got[rounds] = sorted(map(tuple, run().collect()))
-        finally:
-            spark.conf.set(_OPEN_COST, saved)
+    for round_bytes, rounds in ((util._ROUND_BYTES, 1), (1, cores)):
+        monkeypatch.setattr(util, "_ROUND_BYTES", round_bytes)
+        assert size_python_stage(docs).rdd.getNumPartitions() == rounds
+        got[rounds] = sorted(map(tuple, run().collect()))
     assert got[1] and got[1] == got[cores]
