@@ -412,6 +412,14 @@ class Collection:
     def _save_meta(self) -> None:
         write_sidecar(self.meta_path, self.meta)
 
+    def _pred(self, filter: Mapping[str, Any] | None) -> Column:
+        """``filter`` compiled over this collection's metadata: the JSON
+        metadata column of a schemaless collection, the typed columns
+        otherwise."""
+        if self.meta.get("schemaless"):
+            return compile_filter_json(filter, META_COL)
+        return compile_filter(filter)
+
     # -- data access -----------------------------------------------------
     def df(self) -> DataFrame:
         if not self.meta.get("has_data"):
@@ -635,13 +643,7 @@ class Collection:
             raise CollectionNotFound(
                 f"collection {self.name} has no PQ index; call build_pq_index()"
             )
-        pred = None
-        if filter is not None:
-            pred = (
-                compile_filter_json(filter, META_COL)
-                if self.meta.get("schemaless")
-                else compile_filter(filter)
-            )
+        pred = None if filter is None else self._pred(filter)
         hits = index_store.pq_index_topk(
             self.ctx.spark, self.pq_index_path, self.df(),
             list(query_vector), topk=k, shortlist=shortlist, nprobe=nprobe,
@@ -764,14 +766,6 @@ class Collection:
         the last build/refresh."""
         return self._refresh(_FAMILY["winnow"])
 
-    def compact_data(self, target_bytes: int = 128 << 20) -> int:
-        """Byte-sized alias for :meth:`compact` — the two near-duplicate
-        compaction methods r16 shipped (``compact(target_files=)`` /
-        ``compact_data(target_bytes=)``) are merged (r16 verdict #2):
-        one implementation now carries BOTH the row-count verify and the
-        already-compact short-circuit, behind both sizing arguments."""
-        return self.compact(target_bytes=target_bytes)
-
     def index_health(self) -> dict[str, DataFrame]:
         """Health reports for every index attached to this collection —
         observability the reference lacks entirely (kaer's HNSW never
@@ -887,11 +881,7 @@ class Collection:
                 raise ValueError("need document or query_vector")
             provider = self.ctx.provider_for(self.meta)
             query_vector = embed_texts_local([document], provider)[0]
-        pred: Column = (
-            compile_filter_json(filter, META_COL)
-            if self.meta.get("schemaless")
-            else compile_filter(filter)
-        )
+        pred = self._pred(filter)
         if k <= 0:
             return self.df().filter(pred).limit(0)
         if approximate:
@@ -947,11 +937,7 @@ class Collection:
         terms = [t for t in document.lower().split() if t]
         if not terms:
             raise ValueError("document must contain at least one token")
-        pred: Column = (
-            compile_filter_json(filter, META_COL)
-            if self.meta.get("schemaless")
-            else compile_filter(filter)
-        )
+        pred = self._pred(filter)
         base = self.df().filter(pred)
         vec_top = self.query(document, k=pool, filter=filter).select(
             F.col(ID_COL).alias("id"), "_dist"
@@ -1039,11 +1025,7 @@ class Collection:
                 raise ValueError("need document or query_vector")
             provider = self.ctx.provider_for(self.meta)
             query_vector = embed_texts_local([document], provider)[0]
-        pred: Column = (
-            compile_filter_json(filter, META_COL)
-            if self.meta.get("schemaless")
-            else compile_filter(filter)
-        )
+        pred = self._pred(filter)
         picked = similarity.mmr_rerank(
             self.df().filter(pred), list(query_vector), k=k, pool=pool,
             lam=lam, vec_col=EMB_COL, id_col=ID_COL,
@@ -1098,13 +1080,7 @@ class Collection:
                 "two different index paths (PQ code table vs IVF cell "
                 "table) — pick one"
             )
-        pred: Column | None = None
-        if filter is not None:
-            pred = (
-                compile_filter_json(filter, META_COL)
-                if self.meta.get("schemaless")
-                else compile_filter(filter)
-            )
+        pred = None if filter is None else self._pred(filter)
         if compressed:
             if not self.meta.get("has_pq_index"):
                 raise CollectionNotFound(
@@ -1154,11 +1130,7 @@ class Collection:
         """
         if not self.meta.get("has_data"):
             return 0
-        pred = (
-            compile_filter_json(filter, META_COL)
-            if self.meta.get("schemaless")
-            else compile_filter(filter)
-        )
+        pred = self._pred(filter)
         # The pre-delete total rides the rewrite job as an Observation
         # (CollectMetrics over the un-filtered scan) instead of a separate
         # count() scan — one job computes both the surviving rows and the

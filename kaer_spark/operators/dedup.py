@@ -52,9 +52,9 @@ from kaer_spark.operators.util import (
     ensure_parallelism,
     flip_watermark,
     floor_watermark,
-    json_id,
     open_refresh,
     ranked_quantiles,
+    reset_index,
     size_python_stage,
     vec_dim,
     watermark_health_cols,
@@ -346,6 +346,9 @@ def _ngram_text_counts(
     )
 
 
+SHINGLE_META_FILE = "shingle_index.json"
+
+
 def build_shingle_index(
     df: DataFrame,
     path: str,
@@ -356,84 +359,45 @@ def build_shingle_index(
     unit: str = "char",
 ) -> dict:
     """Materialize the shingle inverted index at ``path`` — the at-rest
-    artifact for the RECURRING-dedup regime (the keep-best cluster-table /
-    PQ code-table precedent, r13 verdict #8): a pipeline that re-runs
-    near-dup detection per crawl snapshot pays the shingle explode, the
-    heavy-hitter doc-freq pass, and the per-doc size aggregate on every
-    call, although none of them changed. Build (format v2) writes
+    artifact for the RECURRING-dedup regime: a pipeline that re-runs
+    near-dup detection per crawl snapshot would otherwise pay the shingle
+    explode, the doc-freq pass and the per-doc size aggregate on every
+    call. The index (format v2) holds
 
     ``<path>/postings/``  (id, g) — the UNCAPPED posting list,
-    ``<path>/sizes/``     (id, sz) — per-doc distinct-shingle counts
-                          (per-doc independent, so append-sound),
+    ``<path>/sizes/``     (id, sz) — per-doc distinct-shingle counts,
     ``<path>/df/<seg>/``  (g, cnt) — per-shingle doc-freq counts for one
-                          watermark window (MERGEABLE on append — the
-                          state the doc-freq cap needs),
+                          watermark window (mergeable across windows),
     ``<path>/hot/<tag>/`` (g) — the over-cap shingles at the current
-                          watermark, precomputed so serving never pays
-                          the corpus-wide doc-freq aggregate, and
+                          watermark (``corr/<tag>/`` their per-doc
+                          counts), and
     ``<path>/shingle_index.json``  the frozen parameters + watermark +
                           the LIST of live df segments / hot table.
 
+    Format v1 froze the ``max_doc_freq`` cap into capped postings; v2
+    stores the cap's INPUT and applies the cap at serve time, which is
+    what lets :func:`refresh_shingle_index` append.
     :func:`ngram_jaccard_pairs_indexed` then serves pairs with ONE
     self-join + one aggregate — measured 4× cheaper than the from-text
-    operator at sf0.1 (0.86s vs 3.41s min, same session). Unlike format
-    v1 (which froze the ``max_doc_freq`` cap at build by writing capped
-    postings — rebuild-only, because an append would silently change
-    which shingles are over the cap), v2 stores the cap's INPUT (the
-    mergeable doc-freq counts) and applies the cap at SERVE time, so
-    :func:`refresh_shingle_index` is exact: refresh ≡ rebuild over the
-    union, reference O8 catch-up (``updateIndexFromLastId``,
-    ``db/db.go:191-207``) for the last at-rest index family. At 100 TB
-    the postings table is the thing you'd bucket BY ``g`` (saveAsTable +
-    bucketBy — the ``write_ivf_bucketed_table`` recipe) so the self-join
-    carries no exchange at all; the parquet layout here keeps the
-    artifact warehouse-free and portable."""
-    import os as _os
+    operator at sf0.1. At 100 TB the postings table is the thing you'd
+    bucket BY ``g`` (the ``write_ivf_bucketed_table`` recipe).
 
-    spark = df.sparkSession
-    sh = (
-        ensure_parallelism(df)
-        .select(
-            F.col(id_col).alias("id"),
-            _shingle_expr(text_col, n, unit).alias("shingles"),
-        )
-        .filter(F.size("shingles") > 0)
-        # multi-consumer frame: the postings, sizes and df-segment writes
-        .localCheckpoint(eager=False)
-    )
-    sh.select("id", F.explode("shingles").alias("g")).write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(path, "postings"))
-    # shingle arrays are already distinct (char_shingles/word_shingles),
-    # so the UNCAPPED per-doc size is just the array size — no postings
-    # re-read, no aggregate
-    sh.select("id", F.size("shingles").alias("sz")).write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(path, "sizes"))
-    max_id = json_id(df.agg(F.max(F.col(id_col))).collect()[0][0])
-    seg = _shingle_seg_name(None, max_id)
-    sh.select(F.explode("shingles").alias("g")).groupBy("g").agg(
-        F.count("*").alias("cnt")
-    ).write.mode("overwrite").parquet(_os.path.join(path, "df", seg))
-    hot_dir = None
-    corr_dir = None
-    if max_doc_freq is not None:
-        hot_dir = "hot/" + _shingle_seg_name("hot", max_id)
-        corr_dir = _write_shingle_hot(spark, path, [seg], max_doc_freq, hot_dir)
-    meta = {
+    The build resets the index
+    (:func:`~kaer_spark.operators.util.reset_index`) and fills it through
+    :func:`refresh_shingle_index`."""
+    reset_index(path, SHINGLE_META_FILE, ["postings", "sizes", "df", "hot", "corr"], {
         "version": 2,
         "id_col": id_col,
         "text_col": text_col,
         "n": int(n),
         "unit": unit,
         "max_doc_freq": max_doc_freq,
-        "max_id": max_id,
-        "df_segments": [seg],
-        "hot_dir": hot_dir,
-        "corr_dir": corr_dir,
-    }
-    write_sidecar(_os.path.join(path, "shingle_index.json"), meta)
-    return meta
+        "max_id": None,
+        "df_segments": [],
+        "hot_dir": None,
+        "corr_dir": None,
+    })
+    return refresh_shingle_index(df, path)
 
 
 def _shingle_seg_name(lo, hi) -> str:
@@ -517,8 +481,8 @@ def refresh_shingle_index(
     ``advance_to`` (optional) floors the flipped watermark — for
     screen-and-drop callers (``streaming.ingest.neardup_ingest_batch``):
     a dropped doc's id is decided but never stored. Ids must be int or
-    string (enforced at build by :func:`~kaer_spark.operators.util.json_id`) and append-only above
-    the watermark. ``batch`` is the id range an insert just wrote
+    string (:func:`~kaer_spark.operators.util.json_id`) and append-only
+    above the watermark. ``batch`` is the id range an insert just wrote
     (:func:`~kaer_spark.operators.util.open_refresh`)."""
     import os as _os
     import shutil as _shutil
@@ -536,10 +500,9 @@ def refresh_shingle_index(
     post_dir = _os.path.join(path, "postings")
     sizes_dir = _os.path.join(path, "sizes")
     wm, tail, new_max, guard = open_refresh(
-        df, path, "shingle_index.json", meta, sizes_dir, "id", advance_to,
-        batch,
+        df, path, SHINGLE_META_FILE, meta, sizes_dir, "id", advance_to, batch
     )
-    if new_max is None:
+    if tail is None:
         return meta
     # docs whose sizes row landed are fully indexed (sizes write LAST
     # among the per-id tables) — drop them from the tail entirely
@@ -582,7 +545,7 @@ def refresh_shingle_index(
     meta["df_segments"] = segs
     meta["hot_dir"] = hot_dir
     meta["corr_dir"] = corr_dir
-    flip_watermark(path, "shingle_index.json", meta, wm_new)
+    flip_watermark(path, SHINGLE_META_FILE, meta, wm_new)
     # sweep orphans from crashed grown-window replays (safe AFTER the
     # flip: anything not listed in the live sidecar is dead by contract)
     for sub, live in (
@@ -654,7 +617,7 @@ def write_shingle_bucketed_table(
         "table": table,
         "num_buckets": int(num_buckets),
     }
-    write_sidecar(_os.path.join(meta_path, "shingle_index.json"), meta)
+    write_sidecar(_os.path.join(meta_path, SHINGLE_META_FILE), meta)
     return meta
 
 
@@ -751,7 +714,7 @@ def shingle_index_stats(
 def read_shingle_index_meta(path: str) -> dict:
     import os as _os
 
-    return read_sidecar(_os.path.join(path, "shingle_index.json"))
+    return read_sidecar(_os.path.join(path, SHINGLE_META_FILE))
 
 
 def _ngram_index_counts(
@@ -1204,6 +1167,9 @@ def _fuzzy_join_verify(
     )
 
 
+FUZZY_META_FILE = "fuzzy_index.json"
+
+
 def build_fuzzy_index(
     df: DataFrame,
     path: str,
@@ -1213,48 +1179,33 @@ def build_fuzzy_index(
     key_len: int = 32,
 ) -> dict:
     """Materialize the REFERENCE side of cross-corpus edit-distance
-    screening at ``path`` — the at-rest artifact for the LAST
-    recurring-decontamination family without one (r15 verdict #5: every
-    other recurring screen — MinHash, sign-LSH, shingle — serves from a
-    standing index; ``fuzzy_dups_between`` re-derived the reference's
-    segment keys per call). Writes
+    screening at ``path``, so :func:`fuzzy_dups_against_index` does not
+    re-derive the reference's segment keys per call. Holds
 
     ``<path>/segments/``  (id, key, i, seg) — the reference's PassJoin
                           segment rows, key riding along for the in-join
-                          ``levenshtein`` verify (the sign-LSH
-                          vector-carrying layout), and
+                          ``levenshtein`` verify, and
     ``<path>/fuzzy_index.json``  the frozen (max_edits, key_len) — the
                           probe side derives its shifted substrings from
                           these, so both sides always cut alike.
 
-    :func:`fuzzy_dups_against_index` is then value-identical to
-    :func:`fuzzy_near_dups_between` with the reference as the index side
-    (same shared segment/probe/verify bodies). Growable: every stored
-    row derives from its document alone under the frozen geometry, so
-    :func:`refresh_fuzzy_index` appends the tail — reference O8
-    catch-up (``updateIndexFromLastId``, ``db/db.go:191-207``) for the
-    edit-distance artifact."""
-    import os as _os
-
+    The build checks the geometry, resets the index
+    (:func:`~kaer_spark.operators.util.reset_index`) and fills it through
+    :func:`refresh_fuzzy_index`."""
     if max_edits < 1:
         raise ValueError("max_edits must be >= 1 (0 is exact matching)")
     if key_len < (max_edits + 1) * 2:
         raise ValueError(
             f"key_len {key_len} too small for {max_edits + 1} segments"
         )
-    bounds = _fuzzy_bounds(key_len, max_edits)
-    _fuzzy_segment_rows(
-        _fuzzy_keyed(df, id_col, text_col, key_len), bounds
-    ).write.mode("overwrite").parquet(_os.path.join(path, "segments"))
-    meta = {
+    reset_index(path, FUZZY_META_FILE, ["segments"], {
         "id_col": id_col,
         "text_col": text_col,
         "max_edits": int(max_edits),
         "key_len": int(key_len),
-        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
-    }
-    write_sidecar(_os.path.join(path, "fuzzy_index.json"), meta)
-    return meta
+        "max_id": None,
+    })
+    return refresh_fuzzy_index(df, path)
 
 
 def refresh_fuzzy_index(
@@ -1268,12 +1219,11 @@ def refresh_fuzzy_index(
     edit-distance member of the engine-wide O8 rule
     (``updateIndexFromLastId``, ``db/db.go:191-207``): documents with
     ``id > meta.max_id`` are keyed and segmented through the
-    SIDECAR-frozen geometry (the same :func:`_fuzzy_segment_rows` body
-    the build uses) and appended — row-identical to a from-scratch build
-    over the union. Single-table artifact, so one crash window: a replay
+    SIDECAR-frozen geometry (:func:`_fuzzy_segment_rows`) and appended.
+    Single-table artifact, so one crash window: a replay
     anti-joins the tail against ids already above the watermark
     (id-column-only, predicate-pushed scan of the index). Blank docs are
-    excluded by :func:`_fuzzy_keyed` exactly as at build, but still
+    excluded by :func:`_fuzzy_keyed`, but still
     advance the watermark (``max_id`` covers the full batch — the
     minhash-index discipline). ``advance_to`` floors the flip for
     screen-and-drop callers. ``batch`` is the id range an insert just
@@ -1284,22 +1234,22 @@ def refresh_fuzzy_index(
     icol = meta["id_col"]
     seg_dir = _os.path.join(path, "segments")
     _, tail, new_max, guard = open_refresh(
-        df, path, "fuzzy_index.json", meta, seg_dir, "id", advance_to, batch
+        df, path, FUZZY_META_FILE, meta, seg_dir, "id", advance_to, batch
     )
-    if new_max is None:
+    if tail is None:
         return meta
     tail = guard(tail, icol, seg_dir, "id")
     bounds = _fuzzy_bounds(meta["key_len"], meta["max_edits"])
     _fuzzy_segment_rows(
         _fuzzy_keyed(tail, icol, meta["text_col"], meta["key_len"]), bounds
     ).write.mode("append").parquet(seg_dir)
-    return flip_watermark(path, "fuzzy_index.json", meta, new_max, advance_to)
+    return flip_watermark(path, FUZZY_META_FILE, meta, new_max, advance_to)
 
 
 def read_fuzzy_index_meta(path: str) -> dict:
     import os as _os
 
-    return read_sidecar(_os.path.join(path, "fuzzy_index.json"))
+    return read_sidecar(_os.path.join(path, FUZZY_META_FILE))
 
 
 def fuzzy_index_stats(
@@ -1769,6 +1719,9 @@ def minhash_near_dups_between(
     )
 
 
+MINHASH_META_FILE = "minhash_index.json"
+
+
 def build_minhash_index(
     df: DataFrame,
     path: str,
@@ -1781,52 +1734,29 @@ def build_minhash_index(
     unit: str = "char",
 ) -> dict:
     """Materialize the REFERENCE side of cross-corpus near-dup screening
-    at ``path`` — the at-rest artifact for the canonical RECURRING
-    decontamination regime: every new crawl / training batch screens
-    against the SAME fixed reference corpus (eval benchmarks, the
-    existing training set), yet :func:`minhash_near_dups_between`
-    recomputes the reference's signatures and band keys on every call.
-    Build once writes
+    at ``path`` — the at-rest artifact for the RECURRING decontamination
+    regime, where every new batch screens against the same reference
+    corpus and :func:`minhash_near_dups_between` would re-sign it per
+    call. Holds
 
     ``<path>/bands/``  (id, band, key) — the reference's LSH band keys,
     ``<path>/docs/``   (id, text) — the text of every signed document
                        (``length(text) >= n`` for char shingles, at least
                        one word shingle for word shingles): the exact
                        verify re-shingles only the candidate ids from it,
-                       so the artifact is self-contained (no source path)
-                       and stores no shingle arrays, and
+                       so the artifact is self-contained and stores no
+                       shingle arrays, and
     ``<path>/minhash_index.json``  the frozen (n, num_hashes, bands,
                        seed, unit) — the query side derives ITS keys
                        from these, so both sides always hash alike.
 
-    Bands are written from ``(id, sig)`` alone and ``docs/`` straight
-    from ``df``, so the corpus-wide shingle strings are never built. A
-    rebuild over an artifact of the older ``shingles/`` layout (which
-    :func:`read_minhash_index_meta` refuses) removes that table once the
-    new ``docs/`` has landed.
-
-    :func:`minhash_near_dups_against_index` /
-    :func:`dedup_against_index` then pay only the query side's signature
-    pass, the band join, and the candidates' re-shingling —
-    value-identical to the from-text cross call by construction (same
-    seeded math, same banding, same exact Jaccard verify). Growable
-    reference sets: band keys are per-doc independent (no corpus-global
-    state, unlike the shingle index's doc-freq cap), so
-    :func:`refresh_minhash_index` appends new docs' rows under the frozen
-    hashing — reference O8 catch-up (``updateIndexFromLastId``,
-    ``db/db.go:191-207``) for the decontamination artifact."""
-    import os as _os
-    import shutil
-
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed, unit)
-    _minhash_banded(
-        sig.select("id", "sig"), bands, num_hashes // bands
-    ).write.mode("overwrite").parquet(_os.path.join(path, "bands"))
-    _minhash_docs(df, id_col, text_col, n, unit).write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(path, "docs"))
-    shutil.rmtree(_os.path.join(path, "shingles"), ignore_errors=True)
-    meta = {
+    :func:`minhash_near_dups_against_index` / :func:`dedup_against_index`
+    then pay only the query side's signature pass, the band join and the
+    candidates' re-shingling. The build resets the index
+    (:func:`~kaer_spark.operators.util.reset_index`, which also removes
+    the older ``shingles/`` layout :func:`read_minhash_index_meta`
+    refuses) and fills it through :func:`refresh_minhash_index`."""
+    reset_index(path, MINHASH_META_FILE, ["bands", "docs", "shingles"], {
         "id_col": id_col,
         "text_col": text_col,
         "n": int(n),
@@ -1834,10 +1764,9 @@ def build_minhash_index(
         "bands": int(bands),
         "seed": int(seed),
         "unit": unit,
-        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
-    }
-    write_sidecar(_os.path.join(path, "minhash_index.json"), meta)
-    return meta
+        "max_id": None,
+    })
+    return refresh_minhash_index(df, path)
 
 
 def refresh_minhash_index(
@@ -1855,11 +1784,7 @@ def refresh_minhash_index(
     precedent, r13). Sound here because the artifact holds NO
     corpus-global state: every ``(id, band, key)`` and ``(id, text)``
     row derives from its document alone under the sidecar-frozen
-    ``(n, num_hashes, bands, seed, unit)``, so appending the tail is
-    row-identical to a from-scratch build over the union (pytest-pinned).
-    The shingle index stays rebuild-only BY DESIGN — its doc-freq cap is
-    corpus-global and an append would silently change which shingles are
-    over the cap (see :func:`build_shingle_index`).
+    ``(n, num_hashes, bands, seed, unit)``, so the tail appends.
 
     Idempotent against BOTH crash windows (the ``refresh_text_index``
     discipline — bands append lands first, docs second, watermark
@@ -1893,12 +1818,12 @@ def refresh_minhash_index(
     bands_dir = _os.path.join(path, "bands")
     docs_dir = _os.path.join(path, "docs")
     _, tail, new_max, guard = open_refresh(
-        df, path, "minhash_index.json", meta, docs_dir, "id", advance_to, batch
+        df, path, MINHASH_META_FILE, meta, docs_dir, "id", advance_to, batch
     )
-    if new_max is None:
+    if tail is None:
         return meta
-    # docs whose docs row landed are fully indexed (docs write LAST in
-    # both build and refresh) — drop them from the tail entirely
+    # docs whose docs row landed are fully indexed (docs write LAST) —
+    # drop them from the tail entirely
     tail = guard(tail, icol, docs_dir, "id")
     if presigned is not None:
         # caller-owned fast path (minhash_near_dups docstring): reuse the
@@ -1924,9 +1849,7 @@ def refresh_minhash_index(
     _minhash_docs(tail, icol, tcol, meta["n"], meta["unit"]).write.mode(
         "append"
     ).parquet(docs_dir)
-    return flip_watermark(
-        path, "minhash_index.json", meta, new_max, advance_to
-    )
+    return flip_watermark(path, MINHASH_META_FILE, meta, new_max, advance_to)
 
 
 def read_minhash_index_meta(path: str) -> dict:
@@ -1943,7 +1866,7 @@ def read_minhash_index_meta(path: str) -> dict:
             f"MinHash index at {path!r} has the older shingles/ layout; "
             "rebuild it with build_minhash_index"
         )
-    return read_sidecar(_os.path.join(path, "minhash_index.json"))
+    return read_sidecar(_os.path.join(path, MINHASH_META_FILE))
 
 
 def minhash_index_stats(
@@ -2497,6 +2420,9 @@ def embedding_near_dups_between(
     )
 
 
+SIGNLSH_META_FILE = "signlsh_index.json"
+
+
 def build_signlsh_index(
     df: DataFrame,
     path: str,
@@ -2508,35 +2434,25 @@ def build_signlsh_index(
 ) -> dict:
     """Materialize the REFERENCE side of cross-corpus EMBEDDING near-dup
     screening at ``path`` — the semantic twin of
-    :func:`build_minhash_index` for the same recurring regime
-    (paraphrase-level decontamination against a fixed benchmark corpus):
-    the reference's vector-carrying inverted band index — ``(right_id,
-    vr, nr, band, key)``, exactly the r11 ride-the-index layout
-    :func:`embedding_near_dups_between` builds per call — goes to
-    parquet once, with the plane geometry (dim, bands, bits, seed)
-    frozen in the sidecar so the query side always hashes through the
-    SAME seeded planes. Vectors + norms ride the stored index, so the
-    exact-cosine verify still runs INSIDE the band join at serve time —
-    co-located, zero extra shuffle. Growable like its MinHash twin:
-    every stored row derives from its vector alone under the frozen
-    plane geometry, so :func:`refresh_signlsh_index` appends the tail."""
-    import os as _os
-
-    dim = vec_dim(df, vec_col)
-    _signlsh_inverted(
-        df, id_col, vec_col, dim, bands, bits_per_band, seed
-    ).write.mode("overwrite").parquet(_os.path.join(path, "bands"))
-    meta = {
+    :func:`build_minhash_index`: the vector-carrying inverted band rows
+    ``(right_id, vr, nr, band, key)`` that
+    :func:`embedding_near_dups_between` builds per call, with the plane
+    geometry (dim, bands, bits, seed) frozen in the sidecar so the query
+    side hashes through the SAME seeded planes. Vectors + norms ride the
+    stored index, so the exact-cosine verify runs inside the band join
+    at serve time. The build fits ``dim`` from the corpus, resets the
+    index (:func:`~kaer_spark.operators.util.reset_index`) and fills it
+    through :func:`refresh_signlsh_index`."""
+    reset_index(path, SIGNLSH_META_FILE, ["bands"], {
         "id_col": id_col,
         "vec_col": vec_col,
-        "dim": int(dim),
+        "dim": vec_dim(df, vec_col),
         "bands": int(bands),
         "bits_per_band": int(bits_per_band),
         "seed": int(seed),
-        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
-    }
-    write_sidecar(_os.path.join(path, "signlsh_index.json"), meta)
-    return meta
+        "max_id": None,
+    })
+    return refresh_signlsh_index(df, path)
 
 
 def _signlsh_keyed(
@@ -2551,7 +2467,7 @@ def _signlsh_keyed(
     """The one sign-LSH band-row builder: ``(id, v, nrm, __bks)``, one
     array of ``(band, key)`` structs per vector under the seeded planes
     for ``dim``. Every form — the self-join, both cross sides, the
-    stored index's build and refresh — keys its vectors here, so no two
+    stored index's refresh — keys its vectors here, so no two
     can hash differently. A non-null vector whose length is not ``dim``
     fails the query: zip-padding would otherwise collapse every band key
     to 0 and null every cosine, so a mismatched corpus would silently
@@ -2684,9 +2600,7 @@ def refresh_signlsh_index(
     twin of :func:`refresh_minhash_index` (reference O8,
     ``updateIndexFromLastId``, ``db/db.go:191-207``). New vectors with
     ``id > meta.max_id`` are keyed through the SIDECAR-frozen planes
-    (:func:`_signlsh_inverted`, the same body the build uses) and
-    appended — row-identical to a from-scratch build over the union
-    (pytest-pinned). Single-table artifact, so one crash window: a
+    (:func:`_signlsh_inverted`) and appended. Single-table artifact, so one crash window: a
     replay after crash-between-append-and-watermark anti-joins the tail
     against right_ids already above the watermark (id-column-only,
     predicate-pushed scan of the index). Geometry guarded: a tail whose
@@ -2703,10 +2617,10 @@ def refresh_signlsh_index(
     icol = meta["id_col"]
     bands_dir = _os.path.join(path, "bands")
     _, tail, new_max, guard = open_refresh(
-        df, path, "signlsh_index.json", meta, bands_dir, "right_id",
+        df, path, SIGNLSH_META_FILE, meta, bands_dir, "right_id",
         advance_to, batch,
     )
-    if new_max is None:
+    if tail is None:
         return meta
     tail_dim = vec_dim(tail, meta["vec_col"])
     if tail_dim != meta["dim"]:
@@ -2720,15 +2634,13 @@ def refresh_signlsh_index(
         tail, icol, meta["vec_col"], meta["dim"], meta["bands"],
         meta["bits_per_band"], meta["seed"],
     ).write.mode("append").parquet(bands_dir)
-    return flip_watermark(
-        path, "signlsh_index.json", meta, new_max, advance_to
-    )
+    return flip_watermark(path, SIGNLSH_META_FILE, meta, new_max, advance_to)
 
 
 def read_signlsh_index_meta(path: str) -> dict:
     import os as _os
 
-    return read_sidecar(_os.path.join(path, "signlsh_index.json"))
+    return read_sidecar(_os.path.join(path, SIGNLSH_META_FILE))
 
 
 def signlsh_index_stats(
@@ -3829,6 +3741,9 @@ def winnow_overlap_between(
 # ---------------------------------------------------------------------------
 # at-rest winnow (MOSS fingerprint) reference index — the 8th standing family
 # ---------------------------------------------------------------------------
+WINNOW_META_FILE = "winnow_index.json"
+
+
 def build_winnow_index(
     df: DataFrame,
     path: str,
@@ -3838,40 +3753,26 @@ def build_winnow_index(
     window: int = 8,
 ) -> dict:
     """Materialize the REFERENCE side of cross-corpus winnowed-overlap
-    screening at ``path`` — the eighth at-rest family, landing complete
-    (build + O8 refresh + stats twin, the engine-wide template the r16
-    verdict froze): a recurring eval-decontamination pipeline re-selects
-    the reference corpus's MOSS fingerprints on every
-    :func:`winnow_overlap_between` call although the reference didn't
-    change. Writes
+    screening at ``path``, so :func:`winnow_overlap_against_index` does
+    not re-select the reference's MOSS fingerprints per call. Holds
 
     ``<path>/fps/``  (id, pos0, fp) — the winnowed selections
-                     (:func:`winnow_fingerprints`; per-doc independent,
-                     so append-sound), and
+                     (:func:`winnow_fingerprints`), and
     ``<path>/winnow_index.json``  the frozen (k, window) — the probe
                      side derives ITS selections from these, so both
                      sides always select alike.
 
-    :func:`winnow_overlap_against_index` is then value-identical to
-    :func:`winnow_overlap_between` with the reference as the stored
-    side (same selection body). Growable: every stored row derives from
-    its document alone under the frozen geometry, so
-    :func:`refresh_winnow_index` appends the tail — reference O8
-    catch-up (``updateIndexFromLastId``, ``db/db.go:191-207``)."""
-    import os as _os
-
-    winnow_fingerprints(df, id_col, text_col, k, window).write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(path, "fps"))
-    meta = {
+    The build resets the index
+    (:func:`~kaer_spark.operators.util.reset_index`) and fills it through
+    :func:`refresh_winnow_index`."""
+    reset_index(path, WINNOW_META_FILE, ["fps"], {
         "id_col": id_col,
         "text_col": text_col,
         "k": int(k),
         "window": int(window),
-        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
-    }
-    write_sidecar(_os.path.join(path, "winnow_index.json"), meta)
-    return meta
+        "max_id": None,
+    })
+    return refresh_winnow_index(df, path)
 
 
 def refresh_winnow_index(
@@ -3883,10 +3784,8 @@ def refresh_winnow_index(
 ) -> dict:
     """Catch-up for the at-rest winnow reference index — the MOSS member
     of the engine-wide O8 rule: documents with ``id > meta.max_id`` are
-    fingerprinted through the SIDECAR-frozen (k, window) (the same
-    :func:`winnow_fingerprints` body the build uses) and appended —
-    row-identical to a from-scratch build over the union. Single-table
-    artifact, one crash window: a replay anti-joins the tail against
+    fingerprinted through the SIDECAR-frozen (k, window)
+    (:func:`winnow_fingerprints`) and appended. Single-table artifact, one crash window: a replay anti-joins the tail against
     ids already above the watermark (id-column-only, predicate-pushed
     scan). Sub-``k``-char docs select nothing but still advance the
     watermark (``max_id`` covers the full batch — the family-wide
@@ -3899,21 +3798,21 @@ def refresh_winnow_index(
     icol = meta["id_col"]
     fps_dir = _os.path.join(path, "fps")
     _, tail, new_max, guard = open_refresh(
-        df, path, "winnow_index.json", meta, fps_dir, "id", advance_to, batch
+        df, path, WINNOW_META_FILE, meta, fps_dir, "id", advance_to, batch
     )
-    if new_max is None:
+    if tail is None:
         return meta
     tail = guard(tail, icol, fps_dir, "id")
     winnow_fingerprints(
         tail, icol, meta["text_col"], meta["k"], meta["window"]
     ).write.mode("append").parquet(fps_dir)
-    return flip_watermark(path, "winnow_index.json", meta, new_max, advance_to)
+    return flip_watermark(path, WINNOW_META_FILE, meta, new_max, advance_to)
 
 
 def read_winnow_index_meta(path: str) -> dict:
     import os as _os
 
-    return read_sidecar(_os.path.join(path, "winnow_index.json"))
+    return read_sidecar(_os.path.join(path, WINNOW_META_FILE))
 
 
 def winnow_index_stats(

@@ -8,11 +8,12 @@ file, last_id, size)`` (``/root/reference/db/db.go:102-109``,
 ``_m_id > checkpoint`` into the graph (``db/db.go:191-207``). Here the
 "index" is an IVF layout on disk:
 
-* **build** — fit a k-means coarse quantizer (MLlib), assign every vector
-  to its nearest centroid *with a pure Catalyst argmin* (array of (dist,
-  cell) structs → ``array_min``; narrow, no shuffle), write parquet
-  partitioned by cell, record ``{centroids, cells, dim, seed, max_id}`` in
-  an ``index.json`` sidecar (the meta row).
+* **build** — fit a k-means coarse quantizer (MLlib), record ``{centroids,
+  cells, dim, seed, max_id}`` in an ``index.json`` sidecar (the meta row)
+  over an emptied index, and fill it with the refresh below: every vector
+  is assigned to its nearest centroid *with a pure Catalyst argmin*
+  (array of (dist, cell) structs → ``array_min``; narrow, no shuffle) and
+  written as parquet partitioned by cell.
 * **search** — pick the ``nprobe`` nearest cells driver-side from the tiny
   sidecar centroids, scan only those cell partitions (directory-level
   partition pruning — verified in tests), exact-rank inside.
@@ -45,6 +46,7 @@ from kaer_spark.operators.util import (
     flip_watermark,
     group_ranked_quantiles,
     open_refresh,
+    reset_index,
     watermark_health_cols,
 )
 from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
@@ -62,7 +64,9 @@ def build_ivf_index(
     seed: int = 42,
     fit: str = "kmeans",
 ) -> dict:
-    """Build the index table at ``path`` and return its meta dict.
+    """Build the IVF index at ``path`` and return its meta dict: fit the
+    coarse quantizer, reset the index (``util.reset_index``) and fill it
+    through :func:`refresh_ivf_index`.
 
     ``fit`` picks the coarse quantizer: ``"kmeans"`` (MLlib — best cell
     balance/recall, but iterated float sums can't replay in a SQL oracle),
@@ -71,30 +75,24 @@ def build_ivf_index(
     end, so an approximate ``query()`` over this index is itself
     oracle-checkable), or ``"spread"`` (hash-ordered sample,
     ``similarity.ivf_fit_spread`` — equally replayable, decorrelated from
-    ingestion order for better cell balance). Search and refresh are fit-agnostic: both read the
-    stored centroid literals from the sidecar.
+    ingestion order for better cell balance). Search and refresh are
+    fit-agnostic: both read the stored centroid literals from the sidecar.
     """
     centroids = S._fit_centroids(
         corpus, fit, ("kmeans", "deterministic", "spread"), vec_col, id_col,
         cells, seed,
     )
-    assigned = S.ivf_assign_deterministic(corpus, centroids, vec_col)
-    assigned.write.mode("overwrite").partitionBy("_cell").parquet(
-        os.path.join(path, DATA_DIR)
-    )
-    max_id = corpus.agg(F.max(id_col)).collect()[0][0]
-    meta = {
+    reset_index(path, META_FILE, [DATA_DIR], {
         "cells": cells,
         "dim": len(centroids[0]),
         "seed": seed,
         "fit": fit,
         "id_col": id_col,
         "vec_col": vec_col,
-        "max_id": int(max_id) if max_id is not None else -1,
+        "max_id": None,
         "centroids": centroids,
-    }
-    write_sidecar(os.path.join(path, META_FILE), meta)
-    return meta
+    })
+    return refresh_ivf_index(corpus, path)
 
 
 def read_index_meta(path: str) -> dict:
@@ -112,7 +110,7 @@ def refresh_ivf_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     _, tail, new_max, guard = open_refresh(
         corpus, path, META_FILE, meta, data_dir, meta["id_col"], batch=batch
     )
-    if new_max is None:
+    if tail is None:
         return meta
     tail = guard(tail, meta["id_col"], data_dir)
     assigned = S.ivf_assign_deterministic(tail, meta["centroids"], meta["vec_col"])
@@ -359,28 +357,24 @@ def build_pq_index(
 ) -> dict:
     """Materialize the PQ code table at ``path`` — the reference's
     persisted-index cycle (``/root/reference/db/db.go:102-109``, O10/O16)
-    for PRODUCT-QUANTIZED serving: codes are fit + encoded ONCE at build
-    and every query thereafter reads only the ``(id, pq_code[, _cell])``
-    columns — m ints per vector instead of ``dim`` floats (32× less IO at
-    m=8 / dim=64 float32). Without this, every ``pq_topk_refined`` call
-    re-fits codebooks and re-encodes the whole corpus — fine for a one-off
-    batch job, wrong for a serving index (and the dominant cost of the
-    pre-r12 ``pq_knn_refined`` bench row).
+    for PRODUCT-QUANTIZED serving: codes are fit + encoded ONCE and every
+    query thereafter reads only the ``(id, pq_code[, _cell])`` columns —
+    m ints per vector instead of ``dim`` floats (32× less IO at m=8 /
+    dim=64 float32).
 
     ``fit``: ``"deterministic"`` — codebooks are slices of the ``k``
     smallest-id vectors, so a SQL oracle re-derives the exact stored
     codes from the source corpus alone; ``"kmeans"`` — MLlib subspace
-    k-means (recall-first, rows-only checkable). Either way the encode is
-    the Catalyst slice-grouped argmin (``similarity.pq_encode``).
-    ``cells``: also coarse-quantize (deterministic smallest-id
-    centroids) and PARTITION the code table by ``_cell`` so a probed
-    search scans ``nprobe/cells`` of the codes — the IVFADC layout
-    (Jégou et al. 2011 §V).
+    k-means (recall-first, rows-only checkable). ``cells``: also
+    coarse-quantize (deterministic smallest-id centroids) and PARTITION
+    the code table by ``_cell`` so a probed search scans ``nprobe/cells``
+    of the codes — the IVFADC layout (Jégou et al. 2011 §V).
 
-    The sidecar records geometry + codebooks + centroids + the id
-    high-water mark for the O8-style :func:`refresh_pq_index` catch-up.
-    ``extra_meta`` entries (e.g. a source fingerprint) are stored
-    verbatim for the caller's own staleness checks.
+    The build fits the codebooks (and centroids), resets the index
+    (``util.reset_index``) with them in the sidecar and fills it through
+    :func:`refresh_pq_index`. ``extra_meta`` entries (e.g. a source
+    fingerprint) are stored verbatim for the caller's own staleness
+    checks.
     """
     if fit == "deterministic":
         books = S.pq_fit_deterministic(corpus, vec_col, id_col, m, k)
@@ -393,12 +387,7 @@ def build_pq_index(
         centroids = S._fit_centroids(
             corpus, fit, ("deterministic", "kmeans"), vec_col, id_col, cells, seed
         )
-    _write_codes(
-        corpus, books, centroids, id_col, vec_col,
-        os.path.join(path, DATA_DIR), "overwrite",
-    )
-    max_id = corpus.agg(F.max(id_col)).collect()[0][0]
-    meta = {
+    reset_index(path, PQ_META_FILE, [DATA_DIR], {
         "kind": "pq",
         "m": m,
         "k": k,
@@ -408,38 +397,12 @@ def build_pq_index(
         "id_col": id_col,
         "vec_col": vec_col,
         "cells": cells,
-        "max_id": int(max_id) if max_id is not None else -1,
+        "max_id": None,
         "codebooks": books,
         "centroids": centroids,
-    }
-    if extra_meta:
-        meta.update(extra_meta)
-    write_sidecar(os.path.join(path, PQ_META_FILE), meta)
-    return meta
-
-
-def _write_codes(
-    rows: DataFrame,
-    books: list[list[list[float]]],
-    centroids: list[list[float]] | None,
-    id_col: str,
-    vec_col: str,
-    data_dir: str,
-    mode: str,
-) -> None:
-    """Encode ``rows`` under ``books`` (``similarity.pq_encode``, whatever
-    the fit), cell-assign them when the index has coarse ``centroids``,
-    and write ``(id, pq_code[, _cell])`` — build and refresh both write
-    through here, so a refreshed table is row-identical to a rebuild."""
-    encoded = S.pq_encode(rows, books, vec_col)
-    cols = [id_col, "pq_code"]
-    if centroids is not None:
-        encoded = S.ivf_assign_deterministic(encoded, centroids, vec_col)
-        cols.append("_cell")
-    writer = encoded.select(*cols).write.mode(mode)
-    if centroids is not None:
-        writer = writer.partitionBy("_cell")
-    writer.parquet(data_dir)
+        **(extra_meta or {}),
+    })
+    return refresh_pq_index(corpus, path)
 
 
 def read_pq_meta(path: str) -> dict:
@@ -449,29 +412,31 @@ def read_pq_meta(path: str) -> dict:
 def refresh_pq_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     """Catch-up (reference O8, ``updateIndexFromLastId`` — the PQ twin of
     :func:`refresh_ivf_index`): encode vectors with ``id > meta.max_id``
-    under the STORED codebooks (and stored coarse centroids, if any) and
-    append their codes. No refit — codes stay comparable across the whole
-    table, and the encode is the build's one Catalyst argmin, so a
-    refreshed index is row-identical to a from-scratch build over the
-    union.
-    Incremental, and idempotent against BOTH failure directions: the meta
-    watermark flips atomically (``util.flip_watermark``), and a replayed
-    refresh after a crash-between-append-and-meta anti-joins away the ids
-    already on disk (``util.unindexed``) instead of re-appending them.
+    under the STORED codebooks (``similarity.pq_encode``, whatever the
+    fit), cell-assign them under the stored coarse centroids if any, and
+    append ``(id, pq_code[, _cell])``. No refit — codes stay comparable
+    across the whole table. A replay after a crash between the append
+    and the watermark flip appends nothing twice (``util.unindexed``).
     ``batch`` is the id range an insert just wrote (``util.open_refresh``)."""
     meta = read_pq_meta(path)
     data_dir = os.path.join(path, DATA_DIR)
+    id_col, centroids = meta["id_col"], meta["centroids"]
     _, tail, new_max, guard = open_refresh(
-        corpus, path, PQ_META_FILE, meta, data_dir, meta["id_col"],
-        batch=batch,
+        corpus, path, PQ_META_FILE, meta, data_dir, id_col, batch=batch
     )
-    if new_max is None:
+    if tail is None:
         return meta
-    tail = guard(tail, meta["id_col"], data_dir)
-    _write_codes(
-        tail, meta["codebooks"], meta["centroids"],
-        meta["id_col"], meta["vec_col"], data_dir, "append",
+    encoded = S.pq_encode(
+        guard(tail, id_col, data_dir), meta["codebooks"], meta["vec_col"]
     )
+    cols = [id_col, "pq_code"]
+    if centroids is not None:
+        encoded = S.ivf_assign_deterministic(encoded, centroids, meta["vec_col"])
+        cols.append("_cell")
+    writer = encoded.select(*cols).write.mode("append")
+    if centroids is not None:
+        writer = writer.partitionBy("_cell")
+    writer.parquet(data_dir)
     return flip_watermark(path, PQ_META_FILE, meta, new_max)
 
 

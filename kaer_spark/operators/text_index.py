@@ -18,8 +18,8 @@ as everything else (atomic sidecar, no daemon):
                        (``search_phrase``).
 ``<path>/doclens/``    (id, dl) — per-doc token counts for BM25 length
                        normalization.
-``<path>/index.json``  {n_docs, sum_dl, n_buckets, ...} corpus stats
-                       frozen at build time.
+``<path>/index.json``  {n_docs, sum_dl, n_buckets, ...} corpus stats,
+                       advanced by every refresh.
 
 Search scores with EXACTLY ``ranking.bm25_scores``' arithmetic (rational
 idf, fixed left-assoc term order), so for any query the index path
@@ -32,14 +32,12 @@ aggregate (all map-side combined). Search reads O(postings of the query
 terms): per-term document frequencies come from the pruned postings
 themselves, the per-term stats broadcast, and the final top-k plans as
 TakeOrderedAndProject. df(t) at search time reflects the CURRENT
-postings, N/avgdl come from the sidecar — refresh by rebuilding (the
-index is derived data; rebuild is one pass).
+postings, N/avgdl come from the sidecar.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,13 +48,14 @@ from kaer_spark.operators.util import (
     above_watermark,
     batch_tail,
     ensure_parallelism,
+    first_fill,
     flip_watermark,
-    json_id,
     ranked_quantiles,
+    reset_index,
     unindexed,
     watermark_health_cols,
 )
-from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
+from kaer_spark.sources.files import read_parquet, read_sidecar
 
 META_FILE = "index.json"
 POSTINGS_DIR = "postings"
@@ -116,68 +115,24 @@ def build_text_index(
     text_col: str = "text",
     n_buckets: int = 64,
 ) -> dict:
-    """Materialize the inverted index for ``df`` at ``path`` (overwrite).
+    """Materialize the inverted index for ``df`` at ``path``: reset it
+    (:func:`~kaer_spark.operators.util.reset_index`) and fill it through
+    :func:`refresh_text_index`.
 
     Tokenization is the engine-wide whitespace split, lowercased — the
     same definition as ``bm25_scores``/``token_count``, so index-path and
     scan-path scores agree bit-for-bit.
     """
-    # clear any prior build explicitly: partitioned overwrite under
-    # spark.sql.sources.partitionOverwriteMode=dynamic only rewrites
-    # buckets the NEW build touches, silently keeping stale partitions
-    # from a previous larger build (the _commit_rewrite path clears for
-    # exactly this reason — the build must too)
-    shutil.rmtree(os.path.join(path, POSTINGS_DIR), ignore_errors=True)
-    shutil.rmtree(os.path.join(path, DOCLENS_DIR), ignore_errors=True)
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(tokens(text_col), F.lower).alias("__toks"),
-    )
-    # positional postings: per (term, doc) keep the sorted 0-based token
-    # positions next to tf — what turns the BM25 index into a phrase/
-    # proximity index (Lucene's positional-postings trade: bigger lists,
-    # exact phrase match with no corpus re-scan). collect_list is bounded
-    # by one document's occurrences of one term.
-    exploded = ensure_parallelism(toks).select(
-        "id", F.posexplode("__toks").alias("pos", "term")
-    )
-    postings = (
-        exploded.groupBy("term", "id")
-        .agg(
-            F.count("*").cast("long").alias("tf"),
-            F.sort_array(
-                F.collect_list(F.col("pos").cast("int"))
-            ).alias("positions"),
-        )
-        .withColumn(
-            "bucket", F.pmod(_term_hash_col(F.col("term")), F.lit(n_buckets))
-        )
-    )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, POSTINGS_DIR)
-    )
-    doclens = toks.select(
-        "id", F.size("__toks").cast("long").alias("dl")
-    )
-    doclens.write.mode("overwrite").parquet(os.path.join(path, DOCLENS_DIR))
-    stats = doclens.agg(
-        F.count("*").alias("n"),
-        F.sum("dl").alias("sumdl"),
-        F.max("id").alias("maxid"),
-    ).collect()[0]
-    meta = {
-        "n_docs": int(stats["n"]),
-        "sum_dl": int(stats["sumdl"] or 0),
-        # any orderable, JSON-serializable id type works (ints stay ints;
-        # string ids round-trip as-is for the refresh high-water filter)
-        "max_id": json_id(stats["maxid"]),
+    reset_index(path, META_FILE, [POSTINGS_DIR, DOCLENS_DIR], {
+        "n_docs": 0,
+        "sum_dl": 0,
+        "max_id": None,
         "n_buckets": int(n_buckets),
         "id_col": id_col,
         "text_col": text_col,
         "positional": True,
-    }
-    write_sidecar(os.path.join(path, META_FILE), meta)
-    return meta
+    })
+    return refresh_text_index(df, path)
 
 
 def refresh_text_index(df: DataFrame, path: str, *, batch=None) -> dict:
@@ -246,14 +201,14 @@ def refresh_text_index(df: DataFrame, path: str, *, batch=None) -> dict:
         F.sum("dl").alias("sumdl"),
         F.max("id").alias("maxid"),
     ).collect()[0]
-    if not stats["n"] and not acc_n:
+    if not stats["n"] and not acc_n and not first_fill(wm, doclens_dir):
         return meta  # nothing to replay
     meta["n_docs"] += int(stats["n"]) + acc_n
     meta["sum_dl"] += int(stats["sumdl"] or 0) + acc_sumdl
     new_max = stats["maxid"]
     if acc_maxid is not None and (new_max is None or acc_maxid > new_max):
         new_max = acc_maxid
-    if not stats["n"]:  # pure replay: everything already on disk — heal meta
+    if acc_n and not stats["n"]:  # pure replay: all on disk — heal meta
         return flip_watermark(path, META_FILE, meta, new_max)
     aggs = [F.count("*").cast("long").alias("tf")]
     if meta.get("positional"):
@@ -271,7 +226,9 @@ def refresh_text_index(df: DataFrame, path: str, *, batch=None) -> dict:
     # returns zero rows (row-group stats prune at id > watermark) and the
     # anti-join is a no-op.
     postings_dir = os.path.join(path, POSTINGS_DIR)
-    toks_postings = toks if clean else unindexed(toks, "id", postings_dir, wm)
+    toks_postings = ensure_parallelism(
+        toks if clean else unindexed(toks, "id", postings_dir, wm)
+    )
     # an index built before the positional layout keeps appending the
     # (term, id, tf) shape it was built with — mixed parquet schemas in
     # one postings dir would make reads schema-dependent on file order

@@ -3,18 +3,18 @@
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import zipfile
 
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kaer_spark.sources.files import read_parquet, write_sidecar
+from kaer_spark.sources.files import has_data_files, read_parquet, write_sidecar
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition if the input may have too few partitions.
 
     A small parquet table arrives as one split, which serializes
@@ -40,7 +40,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
       below the core count. At scale the widening costs one round-robin
       exchange of the input, never a re-run of its upstream.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     root = df._jdf.queryExecution().executedPlan().nodeName()
     if root != "AdaptiveSparkPlan" and df.rdd.getNumPartitions() >= target:
         return df
@@ -262,6 +262,36 @@ def batch_tail(df: DataFrame, meta: dict, batch) -> DataFrame | None:
     return df.filter((ids >= F.lit(batch[0])) & (ids < F.lit(batch[1])))
 
 
+def reset_index(path: str, meta_file: str, tables: list[str], meta: dict) -> None:
+    """Empty the standing index at ``path`` for a build: every
+    ``build_*`` fits its geometry, resets, then returns its family's
+    ``refresh_*``, so each table has one write path, the refresh's.
+
+    1. Remove the sidecar ``meta_file``.
+    2. Remove the table directories ``tables``.
+    3. Write ``meta`` (the new geometry, ``max_id`` None) as the sidecar.
+
+    A crash in steps 1-2 leaves no sidecar: reads fail loudly and a
+    rebuild starts clean. A crash after step 3 leaves a ``max_id`` None
+    sidecar over empty or partial tables, so the next refresh (or a
+    retried build) replays everything through :func:`unindexed`. No
+    crash leaves an old geometry describing new tables."""
+    target = os.path.join(path, meta_file)
+    if os.path.exists(target):
+        os.remove(target)
+    for t in tables:
+        shutil.rmtree(os.path.join(path, t), ignore_errors=True)
+    write_sidecar(target, meta)
+
+
+def first_fill(wm, table_dir: str) -> bool:
+    """Whether a refresh with no row above the watermark still writes its
+    (empty) tail: only the first fill of a reset index (watermark None,
+    no data in ``table_dir``), so a build over zero rows leaves tables
+    that read as empty, typed by the corpus."""
+    return wm is None and not has_data_files(table_dir)
+
+
 def open_refresh(
     df: DataFrame,
     path: str,
@@ -272,7 +302,9 @@ def open_refresh(
     advance_to=None,
     batch=None,
 ):
-    """Open a refresh: ``(wm, tail, new_max, guard)``.
+    """Open a refresh: ``(wm, tail, new_max, guard)``; ``tail`` is None
+    when there is nothing to append (no row above the watermark, and not
+    a :func:`first_fill`).
 
     * Clean (:func:`batch_tail`): the batch range is the tail and
       ``hi - 1`` the new watermark, so no ``max()`` job runs, and
@@ -280,13 +312,15 @@ def open_refresh(
     * Lagging: :func:`catch_up_tail`, and ``guard(frame, id_col,
       table_dir, table_id_col=None)`` is :func:`unindexed` above ``wm``.
     The caller guards each append with ``guard``, then calls
-    :func:`flip_watermark` when ``new_max`` is not None."""
+    :func:`flip_watermark`."""
     tail = batch_tail(df, meta, batch)
     if tail is not None:
         return meta["max_id"], tail, batch[1] - 1, lambda frame, *_: frame
     wm, tail, new_max = catch_up_tail(
         df, path, meta_file, meta, table_dir, table_id_col, advance_to
     )
+    if new_max is None and not first_fill(wm, table_dir):
+        tail = None
 
     def guard(frame, id_col, guard_dir, guard_id_col=None):
         return unindexed(frame, id_col, guard_dir, wm, guard_id_col)
@@ -345,13 +379,13 @@ def unindexed(
     append but before the watermark flip leaves rows on disk with ids
     above ``wm``; the replay anti-joins them away instead of appending
     them twice. The scan reads only the id column above the watermark
-    (predicate-pushed), never the corpus. A table with no data files (a
-    partitioned build over zero rows) has nothing to guard against."""
+    (predicate-pushed), never the corpus. A table with no data files (not
+    written yet, or a partitioned fill of zero rows) has nothing to guard
+    against, and is not read."""
     table_id_col = table_id_col or id_col
-    try:
-        have = read_parquet(df.sparkSession, table_dir)
-    except AnalysisException:
+    if not has_data_files(table_dir):
         return df
+    have = read_parquet(df.sparkSession, table_dir)
     have = above_watermark(
         have.select(F.col(table_id_col).alias(id_col)), id_col, wm
     )

@@ -110,6 +110,24 @@ def _listing(root: str) -> tuple | None:
     return tuple(out)
 
 
+def has_data_files(path: str) -> bool:
+    """Whether the local table at ``path`` holds a file Spark would read:
+    one with no hidden path component, by Spark's rule (a name starting
+    with ``.``, or with ``_`` and holding no ``=``: a ``_SUCCESS`` marker
+    or a crashed write's ``_temporary/`` is hidden, a ``_cell=3/``
+    partition is not). Lets a caller skip the Spark read of a missing or
+    empty table, and the warning Spark logs for it, without a job."""
+
+    def hidden(c: str) -> bool:
+        return c.startswith(".") or (c.startswith("_") and "=" not in c)
+
+    listing = _listing(_local_path(path) or path) or ()
+    return any(
+        not any(hidden(c) for c in name.split(os.sep))
+        for name, _size, _mtime in listing
+    )
+
+
 def read_parquet(
     spark: SparkSession,
     path: str,

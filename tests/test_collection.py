@@ -1179,7 +1179,7 @@ def test_df_columns_follow_the_catalog_order(ctx):
 
 
 def test_compact_data_preserves_rows_and_indexes(ctx):
-    """[r16] compact_data(): per-insert parquet splinters collapse to
+    """[r16] compact(target_bytes=): per-insert parquet splinters collapse to
     ceil(bytes/target) files; rows/ids/schema unchanged, so attached
     indexes stay valid with zero lag and queries serve identically."""
     import glob
@@ -1198,7 +1198,7 @@ def test_compact_data_preserves_rows_and_indexes(ctx):
     top_before = [r["_m_id"] for r in coll.query("document batch 3", k=5)
                   .collect()]
 
-    n = coll.compact_data(target_bytes=1 << 30)
+    n = coll.compact(target_bytes=1 << 30)
     assert n == 1
     assert len(glob.glob(f"{coll.data_path}/part-*")) == 1
     assert sorted(

@@ -327,3 +327,38 @@ def test_every_index_family_refresh_takes_a_keyword_only_batch():
         assert param is not None, f.key
         assert param.kind is inspect.Parameter.KEYWORD_ONLY, f.key
         assert param.default is None, f.key
+
+
+def test_every_index_build_is_a_reset_then_its_refresh():
+    """Each build_* in dedup, index_store and text_index writes no table
+    itself: it calls no ``.write`` and returns its family's refresh_*, so
+    every table of a family has one write path."""
+    import ast
+    import importlib
+
+    builds = {}
+    for modname in (
+        "kaer_spark.operators.dedup",
+        "kaer_spark.operators.index_store",
+        "kaer_spark.operators.text_index",
+    ):
+        mod = importlib.import_module(modname)
+        src = open(mod.__file__, encoding="utf-8").read()
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("build_"):
+                builds[f"{modname}.{node.name}"] = node
+    assert len(builds) == 8, sorted(builds)
+    for name, node in builds.items():
+        writes = [
+            n.lineno for n in ast.walk(node)
+            if isinstance(n, ast.Attribute) and n.attr == "write"
+        ]
+        assert not writes, f"{name} calls .write (line {writes})"
+        ret = node.body[-1]
+        refresh = "refresh_" + node.name[len("build_"):]
+        assert (
+            isinstance(ret, ast.Return)
+            and isinstance(ret.value, ast.Call)
+            and isinstance(ret.value.func, ast.Name)
+            and ret.value.func.id == refresh
+        ), f"{name} does not end in return {refresh}(...)"

@@ -869,6 +869,90 @@ def test_watermark_protocol_stamp_derive_once_and_replay(spark, tmp_path):
     assert read_sidecar(sidecar) == {"id_col": "id", "max_id": 5}
 
 
+def _local_docs(spark):
+    import pandas as pd
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    rows = [(i, " ".join(words[(i + j) % 10] for j in range(6 + i % 3)))
+            for i in range(12)]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["doc_id", "text"]), "doc_id long, text string"
+    )
+
+
+def _crash_family(family):
+    """(build, refresh, read_meta, tables, table whose write crashes,
+    geometry A, geometry B, corpus) for the crash-in-rebuild test."""
+    from kaer_spark.operators import dedup as D
+    from kaer_spark.operators import index_store as I
+
+    if family == "minhash":
+        return (
+            D.build_minhash_index, D.refresh_minhash_index,
+            D.read_minhash_index_meta, ["bands", "docs"], "docs",
+            {"n": 5, "num_hashes": 16, "bands": 4},
+            {"n": 4, "num_hashes": 12, "bands": 3},
+            _local_docs,
+        )
+    return (
+        I.build_ivf_index, I.refresh_ivf_index, I.read_index_meta,
+        ["data"], "data",
+        {"cells": 4, "fit": "deterministic"},
+        {"cells": 2, "fit": "deterministic"},
+        lambda spark: _local_vectors(spark, 21, 0, 5),
+    )
+
+
+@pytest.mark.parametrize("family", ["minhash", "ivf"])
+def test_crash_in_rebuild_leaves_no_stale_geometry(
+    spark, tmp_path, monkeypatch, family
+):
+    """A rebuild with new geometry B over an index of geometry A crashes
+    in a table write (MinHash ``docs/``, its second; IVF ``data/``, its
+    only). The sidecar then either fails to read or reports B with no
+    watermark, never A over B's tables; and the next refresh leaves
+    tables row-equal to a clean B build."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    build, refresh, read_meta, tables, crash, geom_a, geom_b, make = (
+        _crash_family(family)
+    )
+    df = make(spark)
+    path, clean = str(tmp_path / "idx"), str(tmp_path / "clean")
+    build(df, path, **geom_a)
+    real = DataFrameWriter.parquet
+
+    def crashing(self, target, *args, **kwargs):
+        if os.path.basename(target) == crash:
+            raise RuntimeError(f"crash writing {crash}/")
+        return real(self, target, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crashing)
+        with pytest.raises(RuntimeError, match="crash writing"):
+            build(df, path, **geom_b)
+    try:
+        meta = read_meta(path)
+    except (OSError, ValueError):
+        meta = None
+    if meta is None:
+        build(df, path, **geom_b)
+    else:
+        assert meta["max_id"] is None, meta
+        assert {k: meta[k] for k in geom_b} == geom_b, meta
+        refresh(df, path)
+    want = build(df, clean, **geom_b)
+    assert read_meta(path) == want
+    for t in tables:
+        got, ref = (
+            sorted(map(repr, spark.read.parquet(os.path.join(p, t)).collect()))
+            for p in (path, clean)
+        )
+        assert got == ref, t
+
+
 # ---------------------------------------------------------------------------
 # Form agreement on 24 pandas-backed vectors (fast tier): the standing-index,
 # in-memory and join forms of each vector-search stage answer alike

@@ -179,6 +179,24 @@ def test_read_parquet_memo_hits_until_the_listing_changes(spark, tmp_path):
     assert jobs >= 1
 
 
+def test_has_data_files_follows_sparks_hidden_file_rule(tmp_path):
+    """A table holds data when a file has no hidden path component: a
+    missing table, a ``_SUCCESS`` marker and a crashed write's
+    ``_temporary/`` hold none, a ``_cell=0/`` partition file does."""
+    from kaer_spark.sources.files import has_data_files
+
+    t = tmp_path / "t"
+    assert not has_data_files(str(t))
+    (t / "_temporary" / "0").mkdir(parents=True)
+    (t / "_temporary" / "0" / "part-0.parquet").write_bytes(b"x")
+    (t / "_SUCCESS").write_bytes(b"")
+    (t / ".part-0.parquet.crc").write_bytes(b"x")
+    assert not has_data_files(str(t))
+    (t / "_cell=0").mkdir()
+    (t / "_cell=0" / "part-0.parquet").write_bytes(b"x")
+    assert has_data_files(str(t))
+
+
 def test_read_parquet_hit_rechecks_sparks_own_listing(spark, tmp_path, monkeypatch):
     """A file appended after the memo's listing but before Spark lists the
     path inside ``.parquet(...)`` sends the hit back to inference, so its

@@ -721,6 +721,7 @@ def test_stream_insert_refreshes_each_owned_index_once(
     coll.insert([f"seed doc {i}" for i in range(8)])
     coll.build_index(cells=2, fit="deterministic")
     coll.build_pq_index(m=4, k=2)
+    calls.clear()  # each build fills its index through the same refresh
 
     schema = "batch INT, _m_doc STRING"
     spark.createDataFrame(
