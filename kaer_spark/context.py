@@ -40,7 +40,6 @@ from typing import Any, Callable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from kaer_spark.embeddings import (
     EmbeddingProvider,
@@ -60,7 +59,14 @@ from kaer_spark.operators import (
     similarity,
     text_index,
 )
-from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
+from kaer_spark.operators.util import local_frame
+from kaer_spark.sources.files import (
+    data_files,
+    read_catalogued,
+    read_parquet,
+    read_sidecar,
+    write_sidecar,
+)
 
 DOC_COL = "_m_doc"  # reference: db/db.go:18
 ID_COL = "_m_id"  # reference: db/db.go:19
@@ -166,16 +172,16 @@ def dense_ids_with_count(
     pass collects anyway, so callers that need the total — e.g. the insert
     path advancing ``next_id`` — do not pay a second full scan).
 
-    Scalable shape: per-partition ``row_number`` (windows partitioned by
-    ``spark_partition_id`` run independently per partition — no global
-    shuffle) plus broadcast cumulative partition offsets. The reference
+    Scalable shape: each row's position inside its partition plus
+    broadcast cumulative partition offsets, no shuffle. The reference
     requires dense ids for its HNSW node addressing (``db/db.go:75-76``,
     ``db/hnsw.go:17-20``); we keep the invariant because it makes id-range
     pruning and stable tie-breaks free.
 
     ``order_col``: optional column giving a deterministic global order
-    (ids then follow that order). Without it, order is partition-position —
-    dense and stable for a materialized input but not semantically ordered.
+    (ids then follow that order; tied values keep their order within the
+    range partition). Without it, order is partition-position — dense and
+    stable for a materialized input but not semantically ordered.
     """
     if order_col is not None:
         # Deterministic global order requested: range-partition by the order
@@ -201,18 +207,17 @@ def dense_ids_with_count(
     offmap = F.create_map(
         *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
     )
-    w = (
-        Window.partitionBy("_pid").orderBy(order_col)
-        if order_col
-        else Window.partitionBy("_pid").orderBy(F.monotonically_increasing_id())
-    )
-    out = (
-        tagged.withColumn(
-            ID_COL,
-            (F.row_number().over(w) - 1 + offmap[F.col("_pid")]).cast("long"),
-        )
-        .drop("_pid")
-    )
+    # monotonically_increasing_id() is (partition index << 33) + the row's
+    # position in its partition, so its low 33 bits are the row's position
+    # in the checkpoint's partition _pid (what row_number() over
+    # partitionBy(_pid) in checkpoint order gives, without that window's
+    # shuffle). That holds only while this projection reads the
+    # checkpoint's partitions as they are: nothing may coalesce,
+    # repartition or filter between the checkpoint and it.
+    pos = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+    out = tagged.withColumn(
+        ID_COL, (pos + offmap[F.col("_pid")]).cast("long")
+    ).drop("_pid")
     return out, acc - start
 
 
@@ -422,26 +427,27 @@ class Collection:
 
     # -- data access -----------------------------------------------------
     def df(self) -> DataFrame:
+        """The collection's rows, read under the catalog schema
+        (``meta["schema"]``, the union of every batch ``insert_df`` wrote
+        and every rewrite kept), in the catalog's column order. Nothing
+        is inferred, so constructing the read fires no job, and a field a
+        later batch added reads as NULL on older rows. A catalog with no
+        schema (written before ``insert_df`` kept one) infers with
+        ``mergeSchema`` instead."""
+        schema = (
+            T.StructType.fromJson(json.loads(self.meta["schema"]))
+            if self.meta.get("schema")
+            else None
+        )
         if not self.meta.get("has_data"):
-            schema = T.StructType.fromJson(json.loads(self.meta["schema"])) if self.meta.get("schema") else None
             if schema is None:
                 raise CollectionNotFound(f"collection {self.name} is empty and untyped")
-            return self.ctx.spark.createDataFrame([], schema)
-        # merge_schema: inserts may add metadata fields over time (the
-        # schemaless-metadata contract, SURVEY §1.1); without it Spark picks
-        # one file's schema and silently DROPS the other files' columns.
-        # Type conflicts are rejected at insert time (FieldTypeConflict),
-        # so the merge always succeeds. The merged schema is memoised per
-        # session (sources.files): a warm read fires no job, and the first
-        # read after an insert or rewrite re-merges.
-        df = read_parquet(self.ctx.spark, self.data_path, merge_schema=True)
-        if not self.meta.get("schema"):
-            return df
-        # the merged order varies run to run; every read (and so every
-        # index catch-up written from one) takes the catalog's order
-        catalog = T.StructType.fromJson(json.loads(self.meta["schema"]))
-        order = [f.name for f in catalog.fields if f.name in df.columns]
-        return df.select(*order, *[c for c in df.columns if c not in order])
+            return local_frame(self.ctx.spark, [], schema)
+        if schema is None:
+            # merge_schema: without it Spark picks one file's schema and
+            # silently DROPS the other files' columns
+            return read_parquet(self.ctx.spark, self.data_path, merge_schema=True)
+        return read_catalogued(self.ctx.spark, [self.data_path], schema)
 
     # -- ingest (reference O4, db/db.go:60-100) --------------------------
     def insert(
@@ -478,7 +484,10 @@ class Collection:
         else:
             rows = [dict(m, **{DOC_COL: d}) for d, m in zip(documents, metadatas)]
             df = self.ctx.spark.createDataFrame(rows)  # schema inferred at first insert
-        return self.insert_df(df)
+        # driver-held rows: one partition, so the batch is embedded in one
+        # Python-worker round and written as one file (insert_df's write
+        # keeps its input's partitions)
+        return self.insert_df(df.coalesce(1))
 
     def _check_types(self, incoming: T.StructType) -> None:
         """Reject fields whose type conflicts with the stored schema —
@@ -503,6 +512,10 @@ class Collection:
             raise FieldTypeConflict("; ".join(conflicts))
 
     def insert_df(self, df: DataFrame, text_col: str = DOC_COL) -> int:
+        """Id-stamp, embed (unless ``df`` carries ``_m_embedding``) and
+        append ``df``, then catch up every owned index from the part files
+        the append wrote; returns the batch's first id. The write keeps
+        ``df``'s partitions: at most one part file per partition."""
         self._check_types(df.schema)
         next_id = int(self.meta.get("next_id", 0))
         # ids first, embedding second: the id pass (partition-count collect)
@@ -529,7 +542,15 @@ class Collection:
                     )
                 ),
             )
+        # single writer: the part files this append adds are the ones
+        # missing from the listing taken before it; the catch-up reads only
+        # those (operators.util.batch_tail)
+        before = data_files(self.data_path)
         df.write.mode("append").parquet(self.data_path)
+        added = tuple(
+            os.path.join(self.data_path, f)
+            for f in sorted(data_files(self.data_path) - before)
+        )
         self.meta["next_id"] = next_id + batch_n
         self.meta["has_data"] = True
         # merge the batch's schema into the catalog schema in Python — a
@@ -546,13 +567,14 @@ class Collection:
         self._save_meta()
         # the reference adds every inserted vector to its index inline
         # (db/db.go:87-89); here each owned family catches up from the id
-        # range just written. No refresh has seen an id >= next_id, so a
-        # family whose watermark is next_id - 1 appends that range with no
-        # max() job and no replay guard; any other family takes the full
-        # catch-up (operators.util.open_refresh)
+        # range just written, read from the files that hold it. No refresh
+        # has seen an id >= next_id, so a family whose watermark is
+        # next_id - 1 appends that batch with no max() job and no replay
+        # guard; any other family takes the full catch-up
+        # (operators.util.open_refresh)
         for fam in INDEX_FAMILIES:
             if self.meta.get(fam.flag):
-                self._refresh(fam, batch=(next_id, next_id + batch_n))
+                self._refresh(fam, batch=(next_id, next_id + batch_n, added))
         return next_id
 
     # -- index artifact (reference O7/O8/O10/O14, db/db.go:102-109,176-207)
@@ -875,6 +897,14 @@ class Collection:
         cell is probed, so a selective filter can never silently
         under-fill (the reference's "k nearest among matches",
         ``db/db.go:111-143``).
+
+        Side effect: a filtered approximate query runs its probe at
+        construction — one collect of at most ``k`` rows per escalation
+        round — and returns the filling round as a local frame
+        (``index_store.ivf_index_topk``), so its action fires no job, as
+        the reference's query returns its documents from the one search.
+        Exact and unfiltered approximate queries stay lazy and fire no job
+        at construction.
         """
         if query_vector is None:
             if document is None:
@@ -1492,9 +1522,7 @@ class Collection:
         if not self.meta.get("has_data"):
             return []
         return sorted(
-            os.path.join(self.data_path, f)
-            for f in os.listdir(self.data_path)
-            if f.endswith(".parquet")
+            os.path.join(self.data_path, f) for f in data_files(self.data_path)
         )
 
     def compact(

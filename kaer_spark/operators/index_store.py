@@ -45,6 +45,7 @@ from kaer_spark.operators.knn import _per_query_topk
 from kaer_spark.operators.util import (
     flip_watermark,
     group_ranked_quantiles,
+    local_frame,
     open_refresh,
     reset_index,
     watermark_health_cols,
@@ -282,20 +283,29 @@ def _escalating(
     filtered: bool,
     search,
 ) -> DataFrame:
-    """The one probe-doubling loop. ``search(cells)`` returns ``(result,
-    filled)`` over the probed cells (``similarity.ivf_probe_cells`` order).
-    A filtered search whose ``filled`` holds fewer than ``k`` rows doubles
-    ``nprobe`` until it fills or every cell is probed (full probe ≡ the
-    exact filtered query) — the reference's "k nearest among matches"
-    (``db/db.go:111-143``) under selective filters. Each round costs one
-    bounded count; unfiltered searches keep the fixed-``nprobe`` recall
-    trade."""
+    """The one probe-doubling loop. ``search(cells)`` returns the top-k
+    frame over the probed cells (``similarity.ivf_probe_cells`` order).
+
+    * Unfiltered: the ``nprobe`` round's frame, lazy (the fixed-``nprobe``
+      recall trade); construction fires no job.
+    * Filtered: each round collects its answer (at most ``k`` rows, one
+      Arrow fetch). A round holding fewer than ``k`` rows doubles
+      ``nprobe`` until it fills or every cell is probed (full probe ≡ the
+      exact filtered query): the reference's "k nearest among matches"
+      (``db/db.go:111-143``) under selective filters. The filling round
+      is returned as a local frame (``util.local_frame``), so the answer
+      is computed once: construction runs one collect per round (a
+      documented side effect), and the caller's action reads a
+      ``LocalTableScan`` and fires no job."""
     order = S.ivf_probe_cells(centroids, query_vector, len(centroids))
     cur = max(1, min(int(nprobe), len(order)))
+    if not filtered:
+        return search(order[:cur])
     while True:
-        out, filled = search(order[:cur])
-        if not filtered or cur >= len(order) or filled.count() >= k:
-            return out
+        out = search(order[:cur])
+        got = out.toArrow()
+        if got.num_rows >= k or cur >= len(order):
+            return local_frame(out.sparkSession, got, out.schema)
         cur = min(cur * 2, len(order))
 
 
@@ -315,9 +325,13 @@ def ivf_index_topk(
     Filtered searches escalate (:func:`_escalating`): when the filtered
     probe set fills fewer than ``k`` rows, ``nprobe`` doubles until ``k``
     rows match or every cell is probed — without it a selective filter
-    silently under-fills even when k matches exist in unprobed cells. The
-    common case (filter matches ≥ k in the first probe set) pays exactly
-    one bounded count over the pruned scan."""
+    silently under-fills even when k matches exist in unprobed cells.
+    Each round is one collect of its top-k (one Spark job over the pruned
+    scan) and the answer is local: the filling round comes back as a
+    ``LocalTableScan`` frame, so the caller's action fires no job. The
+    common case (filter matches ≥ k in the first probe set) runs the
+    probed top-k exactly once. An unfiltered search stays one lazy plan
+    and fires no job at construction."""
     meta = read_index_meta(path)
     q = [float(x) for x in query_vector]
     # merge_schema: refresh appends after collection schema evolution may
@@ -329,10 +343,9 @@ def ivf_index_topk(
     df = read_parquet(spark, os.path.join(path, DATA_DIR), merge_schema=True)
 
     def search(cells):
-        out = S._probed_topk(
+        return S._probed_topk(
             df, cells, q, k, meta["vec_col"], meta["id_col"], pred
         )
-        return out, out
 
     return _escalating(meta["centroids"], q, nprobe, k, pred is not None, search)
 
@@ -474,9 +487,13 @@ def pq_index_topk(
     top-k-minus-nonmatches). With cells + ``nprobe``, matches can still
     live outside the probed cells, so the search escalates
     (:func:`_escalating`, the :func:`ivf_index_topk` loop): ``nprobe``
-    doubles until ``topk`` rows fill or every cell is probed; each
-    escalation check is one bounded count, and the common case pays
-    exactly one."""
+    doubles until ``topk`` rows fill or every cell is probed. Each round
+    is one collect of the re-ranked answer (``|out| = min(topk,
+    |shortlist|)``, so the answer itself is the fill check) and the
+    answer is local: the filling round comes back as a
+    ``LocalTableScan`` frame, so the two-stage plan runs once per round
+    and the caller's action fires no job. The common case runs it
+    exactly once; an unfiltered or unprobed search stays one lazy plan."""
     meta = read_pq_meta(path)
     q = [float(x) for x in query_vector]
     id_col, vec_col = meta["id_col"], meta["vec_col"]
@@ -500,18 +517,12 @@ def pq_index_topk(
             .limit(int(shortlist))
             .select(id_col)
         )
-        out = S._l2_topk(
+        return S._l2_topk(
             corpus.join(F.broadcast(short), id_col), q, int(topk), vec_col, id_col
         ).select(id_col, "_score")
-        # the fill check counts the SHORTLIST, not the re-ranked result:
-        # every shortlist id joins the corpus by construction (codes derive
-        # from it), so |out| = min(topk, |short|) and the two counts answer
-        # identically — but the shortlist plan stops before the re-rank
-        # join, so the check does not run the two-stage plan a second time
-        return out, short
 
     if nprobe is None:
-        return search(None)[0]
+        return search(None)
     return _escalating(
         meta["centroids"], q, nprobe, int(topk), pred is not None, search
     )

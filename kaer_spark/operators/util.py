@@ -9,9 +9,15 @@ import zipfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from kaer_spark.sources.files import has_data_files, read_parquet, write_sidecar
+from kaer_spark.sources.files import (
+    has_data_files,
+    read_catalogued,
+    read_parquet,
+    write_sidecar,
+)
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -99,6 +105,28 @@ def size_python_stage(df: DataFrame) -> DataFrame:
     if have < widest:
         return df.repartition(widest)
     return df
+
+
+def local_frame(spark, rows, schema: T.StructType) -> DataFrame:
+    """``rows`` as a DataFrame typed by ``schema`` that plans as a
+    ``LocalTableScan``: the rows travel from the driver as one Arrow
+    table, so an action over the frame starts no Python worker and, over
+    the scan alone, fires no job. A list-of-rows ``createDataFrame``
+    plans a ``PythonRDD`` of ``defaultParallelism`` partitions instead,
+    a Python-worker round each, even for zero rows.
+
+    ``rows`` is a ``pyarrow.Table`` (e.g. ``DataFrame.toArrow()``) or a
+    sequence of tuples in ``schema``'s field order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def ensure_package_shipped(spark) -> None:
@@ -248,18 +276,32 @@ def floor_watermark(wm, advance_to):
 def batch_tail(df: DataFrame, meta: dict, batch) -> DataFrame | None:
     """The one clean/lagging decision of the watermark protocol.
 
-    ``batch`` is the id range ``[lo, hi)`` an insert just wrote, after it
-    saved its cursor ``next_id = hi``; no refresh can have seen an id
-    ``>= lo``. When the sidecar watermark is exactly ``lo - 1`` (clean),
-    the tail is the rows of ``df`` in ``[lo, hi)`` and nothing above the
-    watermark can be on disk. Any other state (no ``batch``, no stamped
-    ``max_id``, a crash between an append and its flip, a rewrite that
-    deleted the top ids, an ``advance_to`` floor) is lagging: None, and
-    the caller takes the full path."""
+    ``batch`` is ``(lo, hi, files)``: the id range ``[lo, hi)`` an insert
+    just wrote, after it saved its cursor ``next_id = hi``, and the part
+    files that write added (absolute paths; may be empty). No refresh can
+    have seen an id ``>= lo``. When the sidecar watermark is exactly
+    ``lo - 1`` (clean), the tail is the rows in ``[lo, hi)`` and nothing
+    above the watermark can be on disk:
+
+    * with ``files``, the tail reads those files only, under ``df``'s
+      schema (the collection's catalog schema: no inference, no job). It
+      plans over the batch's own splits, and its size estimate is the
+      batch's, not the collection's (``size_python_stage``). The id
+      filter stays as a guard;
+    * with none (the listing of ``data/`` failed), it is ``df`` filtered
+      to the range.
+
+    Any other state (no ``batch``, no stamped ``max_id``, a crash between
+    an append and its flip, a rewrite that deleted the top ids, an
+    ``advance_to`` floor) is lagging: None, and the caller takes the full
+    path."""
     if batch is None or meta.get("max_id") != batch[0] - 1:
         return None
+    lo, hi, files = batch
+    if files:
+        df = read_catalogued(df.sparkSession, list(files), df.schema)
     ids = F.col(meta["id_col"])
-    return df.filter((ids >= F.lit(batch[0])) & (ids < F.lit(batch[1])))
+    return df.filter((ids >= F.lit(lo)) & (ids < F.lit(hi)))
 
 
 def reset_index(path: str, meta_file: str, tables: list[str], meta: dict) -> None:
@@ -306,9 +348,9 @@ def open_refresh(
     when there is nothing to append (no row above the watermark, and not
     a :func:`first_fill`).
 
-    * Clean (:func:`batch_tail`): the batch range is the tail and
-      ``hi - 1`` the new watermark, so no ``max()`` job runs, and
-      ``guard`` is the identity.
+    * Clean (:func:`batch_tail`): the batch is the tail, read from the
+      part files the insert wrote, and ``hi - 1`` is the new watermark,
+      so no ``max()`` job runs, and ``guard`` is the identity.
     * Lagging: :func:`catch_up_tail`, and ``guard(frame, id_col,
       table_dir, table_id_col=None)`` is :func:`unindexed` above ``wm``.
     The caller guards each append with ``guard``, then calls

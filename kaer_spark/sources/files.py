@@ -11,8 +11,10 @@ engine's connector surface. Rules every reader here follows:
 * writers partition by low-cardinality keys only, and compact small files
   (``coalesce``) when asked — the classic many-small-files failure mode is
   an explicit parameter, not an accident;
-* :func:`read_parquet` is the engine's only parquet reader, and it infers a
-  table's schema at most once per session (the schema memo below);
+* this module holds the engine's only parquet readers: :func:`read_parquet`
+  infers a table's schema at most once per session (the schema memo
+  below), and :func:`read_catalogued` reads under a schema a catalog
+  already keeps, with no inference;
 * :func:`write_sidecar` is the engine's one atomic-flip path for a local JSON
   sidecar (index watermarks, rollup specs, the collection catalog and its
   swap manifest), and :func:`read_sidecar` its reader.
@@ -26,7 +28,11 @@ JSON is compact (no indentation).
 
 Schema memo. Inferring a parquet schema is one Spark job (a footer read,
 merged across files under ``mergeSchema``) on every read. A catalog-backed
-store knows each table's schema instead, so ``read_parquet`` keeps one:
+store knows each table's schema instead: a collection's ``data/`` (and the
+part files an insert just wrote) is read through :func:`read_catalogued`
+under the catalog's ``meta["schema"]``, and never infers. For the tables
+with no catalog schema (index tables, fixtures, a legacy catalog)
+``read_parquet`` keeps a memo:
 
 * it holds metadata only — the ``StructType`` Spark inferred — never rows;
 * an entry is keyed by the live SparkContext, the absolute path and the
@@ -110,22 +116,31 @@ def _listing(root: str) -> tuple | None:
     return tuple(out)
 
 
-def has_data_files(path: str) -> bool:
-    """Whether the local table at ``path`` holds a file Spark would read:
-    one with no hidden path component, by Spark's rule (a name starting
-    with ``.``, or with ``_`` and holding no ``=``: a ``_SUCCESS`` marker
-    or a crashed write's ``_temporary/`` is hidden, a ``_cell=3/``
-    partition is not). Lets a caller skip the Spark read of a missing or
-    empty table, and the warning Spark logs for it, without a job."""
+def data_files(path: str) -> frozenset[str]:
+    """Relative names of the files under the local table at ``path`` that
+    Spark would read: those with no hidden path component, by Spark's
+    rule (a name starting with ``.``, or with ``_`` and holding no ``=``:
+    a ``_SUCCESS`` marker, a ``.crc`` checksum or a crashed write's
+    ``_temporary/`` is hidden, a ``_cell=3/`` partition is not). Empty
+    for a missing table, or when a file vanishes mid-listing. Driver-side,
+    no job."""
 
     def hidden(c: str) -> bool:
         return c.startswith(".") or (c.startswith("_") and "=" not in c)
 
     listing = _listing(_local_path(path) or path) or ()
-    return any(
-        not any(hidden(c) for c in name.split(os.sep))
+    return frozenset(
+        name
         for name, _size, _mtime in listing
+        if not any(hidden(c) for c in name.split(os.sep))
     )
+
+
+def has_data_files(path: str) -> bool:
+    """Whether the local table at ``path`` holds a file Spark would read
+    (:func:`data_files`). Lets a caller skip the Spark read of a missing or
+    empty table, and the warning Spark logs for it, without a job."""
+    return bool(data_files(path))
 
 
 def read_parquet(
@@ -172,6 +187,17 @@ def read_parquet(
                 if len(_schema_memo) > _SCHEMA_MEMO_MAX:
                     _schema_memo.popitem(last=False)
     return df.select(*columns) if columns else df
+
+
+def read_catalogued(
+    spark: SparkSession, paths: list[str], schema: T.StructType
+) -> DataFrame:
+    """Parquet read of the tables or part files ``paths`` under the schema
+    a catalog keeps for them (a collection's ``meta["schema"]``, the union
+    of every batch it appended). Nothing is inferred, so the read fires no
+    job and takes no memo entry; a column a file lacks reads as NULL, as
+    under ``mergeSchema``."""
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def read_sidecar(path: str):

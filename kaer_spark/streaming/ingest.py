@@ -27,6 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kaer_spark.context import INDEX_FAMILIES, Collection
 from kaer_spark.operators import dedup, index_store, text_index
+from kaer_spark.operators.util import local_frame
 from kaer_spark.sources.files import read_parquet
 
 
@@ -1086,7 +1087,7 @@ def compact_ingest_epochs(
     # one Spark job writes the zero-row tombstone; the remaining epochs
     # get byte-identical filesystem copies of it (the content is pure
     # schema), so N tombstones cost one job + N-1 metadata copies
-    empty = spark.createDataFrame([], schema=union.schema)
+    empty = local_frame(spark, [], union.schema)
     tomb0 = os.path.join(tmp_dir, f"epoch={cands[0]}")
     empty.write.mode("overwrite").parquet(tomb0)
     futil = spark.sparkContext._jvm.org.apache.hadoop.fs.FileUtil

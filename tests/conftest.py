@@ -326,8 +326,7 @@ _SLOW_TESTS = frozenset({
     "test_sketches.py::test_hll_is_multiset_invariant",
     "test_sketches.py::test_hll_merge_equals_union",
     "test_sketches.py::test_hll_tokens_vs_exact",
-    "test_sources.py::test_compact_and_delete_rewrites_miss_the_memo",
-    "test_sources.py::test_insert_with_new_field_misses_the_memo",
+    "test_sources.py::test_compact_and_delete_rewrites_read_by_catalog",
     "test_sources.py::test_lakehouse_formats_gated",
     "test_sources.py::test_new_spark_context_starts_with_an_empty_memo",
     "test_sources.py::test_orc_roundtrip_and_pushdown",

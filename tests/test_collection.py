@@ -119,6 +119,116 @@ def test_dense_ids_large_multipartition_no_collisions(spark):
     assert [r["_m_id"] for r in sample] == sorted(r["_m_id"] for r in sample)
 
 
+def _window_dense_ids(df, start, order_col):
+    """Dense ids numbered by ``row_number()`` over the checkpoint's
+    partitions, with the partition offsets of ``dense_ids_with_count``:
+    the reference numbering its ``monotonically_increasing_id()``
+    positions must reproduce."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    if order_col is not None:
+        df = df.repartitionByRange(F.col(order_col)).sortWithinPartitions(order_col)
+    tagged = df.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
+    counts = dict(tagged.groupBy("_pid").count().collect())
+    offsets, acc = [], start
+    for pid in sorted(counts):
+        offsets += [F.lit(pid), F.lit(acc)]
+        acc += counts[pid]
+    w = Window.partitionBy("_pid").orderBy(
+        order_col or F.monotonically_increasing_id()
+    )
+    return tagged.withColumn(
+        "_m_id",
+        (F.row_number().over(w) - 1 + F.create_map(*offsets)[F.col("_pid")]).cast(
+            "long"
+        ),
+    ).drop("_pid")
+
+
+@pytest.mark.parametrize("order_col", [None, "key"])
+def test_dense_ids_match_the_window_numbering(spark, order_col):
+    """The ids ``dense_ids_with_count`` reads from each row's position in
+    its checkpointed partition equal the window numbering's, on a
+    five-partition input, with and without ``order_col`` (whose values
+    tie: 5,000 rows over 613 keys), and the plan numbers them with no
+    window and no exchange after the checkpoint."""
+    from kaer_spark.context import dense_ids_with_count
+
+    df = spark.range(0, 5000, 1, 5).selectExpr("id AS payload", "id * 7919 % 613 AS key")
+    # keep every range partition: AQE would coalesce 5,000 rows into one
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        out, n = dense_ids_with_count(df, start=10, order_col=order_col)
+        want = _window_dense_ids(df, 10, order_col)
+        got = dict(out.select("payload", "_m_id").collect())
+        assert got == dict(want.select("payload", "_m_id").collect())
+    finally:
+        spark.conf.set(coalesce, prev)
+    assert n == 5000 and sorted(got.values()) == list(range(10, 5010))
+    assert out.rdd.getNumPartitions() > 1
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "Exchange" not in plan, plan
+
+
+def test_df_reads_by_catalog_schema_without_a_job(ctx, spark):
+    """``Collection.df()`` reads under the catalog schema: the first read
+    after an insert that adds a field fires no job, and the field reads
+    as NULL on the older rows."""
+    from pyspark.sql import functions as F
+
+    from tests.conftest import jobs_fired
+
+    coll = ctx.create_collection("catalogued")
+    coll.insert(["first doc", "second doc"], [{"k": 1}, {"k": 2}])
+    coll.insert(["third doc"], [{"k": 3, "added": "x"}])
+    with jobs_fired(spark) as fired:
+        df = coll.df()
+    assert fired == []
+    rows = {r["k"]: r["added"] for r in df.select("k", "added").collect()}
+    assert rows == {1: None, 2: None, 3: "x"}
+    assert df.filter(F.col("added").isNull()).count() == 2
+
+
+def test_empty_frames_plan_as_local_scans(ctx, spark, tmp_path, monkeypatch):
+    """The empty typed collection and the epoch compactor's zero-row
+    tombstone are built by ``util.local_frame``: each plans as a
+    ``LocalTableScan`` with no ``PythonRDD`` under it."""
+    from kaer_spark.streaming import ingest
+
+    def local_scan(df):
+        qe = df._jdf.queryExecution()
+        assert qe.executedPlan().nodeName() == "LocalTableScan"
+        assert "PythonRDD" not in qe.toRdd().toDebugString()
+
+    coll = ctx.create_collection("emptied")
+    coll.insert(["only doc"], [{"k": 1}])
+    assert coll.delete({"k": 1}) == 1
+    empty = coll.df()
+    assert empty.count() == 0 and "k" in empty.columns
+    local_scan(empty)
+
+    built = []
+    make = ingest.local_frame
+
+    def spy(spark_, rows, schema):
+        built.append(make(spark_, rows, schema))
+        return built[-1]
+
+    monkeypatch.setattr(ingest, "local_frame", spy)
+    out = str(tmp_path / "corpus")
+    for e, rows in {0: [(1, "a")], 1: [(2, "b")], 2: [(3, "c")], 3: [(4, "d")]}.items():
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+            f"{out}/epoch={e}"
+        )
+    assert ingest.compact_ingest_epochs(spark, out, target_bytes=1 << 30)["compacted"] == 3
+    (tomb,) = built
+    local_scan(tomb)
+    assert spark.read.parquet(f"{out}/epoch=0").count() == 0
+
+
 def test_insert_schema_evolution_merges(spark, tmp_path):
     """New metadata fields in later inserts must MERGE (older rows read
     NULL), never silently drop earlier columns."""
@@ -1672,8 +1782,9 @@ def _assert_indexed_once(coll):
 #: signature pass runs the small tail in one round
 #: (``util.size_python_stage``); widening it over every core fired 8.
 #: Catching up by re-deriving the batch (a max() job and a replay-guard
-#: anti-join per family) fired 18.
-INSERT_JOBS_IVF_MINHASH = 7
+#: anti-join per family) fired 18. Numbering the ids with a window over
+#: the checkpoint (its exchange ran as its own job) fired 7.
+INSERT_JOBS_IVF_MINHASH = 6
 
 
 def test_insert_catches_up_from_the_batch_range(ctx, spark, monkeypatch):
@@ -1689,6 +1800,63 @@ def test_insert_catches_up_from_the_batch_range(ctx, spark, monkeypatch):
     assert taken == [True, True]
     assert len(fired) == INSERT_JOBS_IVF_MINHASH, fired
     _assert_indexed_once(coll)
+
+
+def test_clean_catch_up_reads_only_the_inserted_files(ctx, spark, monkeypatch):
+    """On the clean path each family's tail scans exactly the part files
+    the insert added to ``data/``, not the whole collection."""
+    from kaer_spark.operators import text_index, util
+
+    coll = _ivf_minhash_collection(ctx, spark)
+    coll.build_text_index(n_buckets=2)
+    tails = []
+    decide = util.batch_tail
+
+    def spy(df, meta, batch):
+        tail = decide(df, meta, batch)
+        tails.append(tail)
+        return tail
+
+    monkeypatch.setattr(util, "batch_tail", spy)
+    monkeypatch.setattr(text_index, "batch_tail", spy)
+    before = set(coll.data_files())
+    coll.insert_df(_batch(spark, 8, 2))
+    added = set(coll.data_files()) - before
+    assert len(added) == 1 and len(before) >= 1 and len(tails) == 3
+    for tail in tails:
+        assert {f.removeprefix("file://") for f in tail.inputFiles()} == added
+    _assert_indexed_once(coll)
+
+
+def test_clean_inserts_match_a_fresh_build(ctx, spark, tmp_path):
+    """Three clean-path inserts leave the IVF, MinHash and text tables
+    row-equal to a from-scratch build over the same collection under the
+    same geometry."""
+    import os
+
+    from kaer_spark.context import ID_COL, INDEX_FAMILIES
+    from kaer_spark.sources.files import read_parquet
+
+    tables = {"ivf": ["data"], "minhash": ["bands", "docs"], "text": ["postings", "doclens"]}
+
+    def rows(root, sub):
+        df = read_parquet(spark, os.path.join(root, sub), merge_schema=True)
+        return sorted(map(tuple, df.select(*sorted(df.columns)).collect()), key=repr)
+
+    coll = _ivf_minhash_collection(ctx, spark)
+    coll.build_text_index(n_buckets=2)
+    for lo in (8, 10, 12):
+        coll.insert_df(_batch(spark, lo, 2))
+    assert coll.count() == 14
+    for fam in INDEX_FAMILIES:
+        if fam.key not in tables:
+            continue
+        grown = fam.dir_in(coll.path)
+        fresh = str(tmp_path / "fresh" / fam.key)
+        geometry = fam.geometry(fam.read_meta(grown), 14)
+        fam.build(coll.df(), fresh, id_col=ID_COL, **fam.column, **geometry)
+        for sub in tables[fam.key]:
+            assert rows(grown, sub) == rows(fresh, sub), (fam.key, sub)
 
 
 def test_insert_after_a_rewrite_that_deleted_the_top_ids(ctx, spark, monkeypatch):

@@ -316,7 +316,8 @@ def test_every_exported_index_family_has_a_table_row():
 
 def test_every_index_family_refresh_takes_a_keyword_only_batch():
     """``Collection.insert_df`` hands each owned family the id range it
-    just wrote as ``batch=(lo, hi)``; every family's refresh must take it
+    just wrote and the part files that hold it as ``batch=(lo, hi,
+    files)``; every family's refresh must take it
     keyword-only, defaulting to None (the full catch-up)."""
     import inspect
 

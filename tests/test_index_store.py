@@ -278,6 +278,66 @@ def test_filtered_query_escalates_nprobe(spark, embeddings, tmp_path):
     assert data.filter(F.col("_cell").isin(first) & pred).count() < k
 
 
+@pytest.mark.parametrize("form", ["ivf", "pq"])
+def test_filtered_search_runs_each_round_once(
+    spark, embeddings, tmp_path, monkeypatch, form
+):
+    """A filtered, probed search collects each escalation round once and
+    returns the filling round as a local frame. Across construction plus
+    action an IVF round fires one Spark job and a PQ round one run of its
+    two-stage plan (its broadcast builds included); the action fires none,
+    and the rows equal the filling round's lazy plan's. An unfiltered
+    search fires no job at construction."""
+    from kaer_spark.operators import similarity as S
+    from kaer_spark.operators.index_store import build_pq_index, pq_index_topk
+
+    from tests.conftest import jobs_fired
+
+    path = str(tmp_path / form)
+    if form == "ivf":
+        build_ivf_index(embeddings, path, cells=8, seed=42)
+        kernel, pred = "_probed_topk", F.col("vec_id") % 97 == 0
+
+        def search(pred):
+            return ivf_index_topk(spark, path, QVEC, k=5, nprobe=1, pred=pred)
+    else:
+        build_pq_index(embeddings, path, m=8, k=16, cells=8)
+        kernel, pred = "_l2_topk", F.col("vec_id") % 50 == 0
+
+        def search(pred):
+            return pq_index_topk(
+                spark, path, embeddings, QVEC, topk=8, shortlist=200,
+                nprobe=1, pred=pred,
+            )
+
+    rounds = []
+    inner = getattr(S, kernel)
+
+    def spy(*args, **kwargs):
+        rounds.append(inner(*args, **kwargs))
+        return rounds[-1]
+
+    monkeypatch.setattr(S, kernel, spy)
+    search(pred)  # the first read of the index table infers its schema
+    rounds.clear()
+    with jobs_fired(spark) as built:
+        got = search(pred)
+    with jobs_fired(spark) as acted:
+        rows = [tuple(r) for r in got.collect()]
+    assert len(rounds) > 1  # the 1-cell probe under-filled: it escalated
+    assert got._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
+    assert acted == []
+    with jobs_fired(spark) as once:
+        lazy = [tuple(r) for r in rounds[-1].select(*got.columns).collect()]
+    if form == "ivf":
+        assert len(once) == 1
+    assert len(built) == len(rounds) * len(once)
+    assert rows == lazy
+    with jobs_fired(spark) as built:
+        search(None)
+    assert built == []
+
+
 # ---------------------------------------------------------------------------
 # At-rest PQ code table (build / serve / catch-up — the PQ twin of the cycle
 # above; reference db/db.go:102-109 persisted-index parity)

@@ -133,17 +133,6 @@ def _jobs(spark, fn):
     return out, len(fired)
 
 
-def _memo_entry(path: str, merge_schema: bool):
-    """(listing, schema) the memo holds for ``path``."""
-    from kaer_spark.sources import files
-
-    (entry,) = [
-        v for k, v in files._schema_memo.items()
-        if k[0] == os.path.abspath(path) and k[1] == merge_schema
-    ]
-    return entry[0], entry[2]
-
-
 def test_read_parquet_memo_hits_until_the_listing_changes(spark, tmp_path):
     """A warm read fires no job and returns Spark's own inferred schema
     (partition column included); an overwrite or an append misses and
@@ -215,9 +204,10 @@ def test_read_parquet_hit_rechecks_sparks_own_listing(spark, tmp_path, monkeypat
 
 
 def test_warm_collection_reads_and_queries_fire_no_jobs(spark, tmp_path):
-    """Constructing a warm ``Collection.df()`` and a filtered exact or
-    full-probe IVF query fires no Spark job; a partial-probe filtered IVF
-    query fires only its documented escalation ``count()``."""
+    """Constructing a warm ``Collection.df()`` and a filtered exact query
+    fires no Spark job. A filtered IVF query, full-probe or partial, runs
+    its probe at construction (one collect per escalation round) and
+    collecting it fires no job."""
     from kaer_spark.context import KaerContext
 
     coll = KaerContext(spark, str(tmp_path / "kaer")).create_collection("warm")
@@ -235,54 +225,40 @@ def test_warm_collection_reads_and_queries_fire_no_jobs(spark, tmp_path):
     def one_probe():
         return coll.query("topic 3", k=1, filter=flt, approximate=True, nprobe=1)
 
-    for build in (coll.df, exact, full_probe):
-        build()  # the first read after the build infers
+    for build in (coll.df, exact):
         _, jobs = _jobs(spark, build)
         assert jobs == 0, build
-    q, jobs = _jobs(spark, one_probe)
-    _, count_jobs = _jobs(spark, q.count)
-    assert jobs == count_jobs >= 1
+    full_probe()  # the first read of the index table infers its schema
+    for build in (full_probe, one_probe):
+        q, jobs = _jobs(spark, build)
+        _, collect_jobs = _jobs(spark, q.collect)
+        assert (jobs, collect_jobs) == (1, 0), build
 
 
-def test_insert_with_new_field_misses_the_memo(spark, tmp_path):
+def test_compact_and_delete_rewrites_read_by_catalog(spark, tmp_path):
+    """A collection's ``data/`` is read under its catalog schema, not
+    through the memo: after a compaction or a delete swaps the directory,
+    the first read fires no job and reads the swapped-in rows."""
     from kaer_spark.context import KaerContext
-
-    coll = KaerContext(spark, str(tmp_path / "kaer")).create_collection("evolve")
-    coll.insert([f"doc {i}" for i in range(6)], [{"a": i} for i in range(6)])
-    assert "b" not in coll.df().columns
-    listing, _ = _memo_entry(coll.data_path, True)
-
-    coll.insert(["fresh doc"], [{"a": 99, "b": "tagged"}])
-    df = coll.df()
-    assert "b" in df.columns
-    assert [r["a"] for r in df.filter(F.col("b") == "tagged").collect()] == [99]
-    assert df.filter(F.col("b").isNull()).count() == 6
-    new_listing, schema = _memo_entry(coll.data_path, True)
-    assert new_listing != listing and "b" in schema.fieldNames()
-
-
-def test_compact_and_delete_rewrites_miss_the_memo(spark, tmp_path):
-    from kaer_spark.context import KaerContext
+    from kaer_spark.sources import files
 
     coll = KaerContext(spark, str(tmp_path / "kaer")).create_collection("rewrite")
     for batch in range(3):
         coll.insert([f"doc {batch}-{i}" for i in range(5)],
                     [{"batch": batch} for _ in range(5)])
     ids = sorted(r["_m_id"] for r in coll.df().collect())
-    listing, _ = _memo_entry(coll.data_path, True)
 
     assert coll.compact(target_files=1) == 1
     df, jobs = _jobs(spark, coll.df)
-    assert jobs >= 1  # the swapped-in directory re-infers
+    assert jobs == 0
     assert sorted(r["_m_id"] for r in df.collect()) == ids
-    compacted, _ = _memo_entry(coll.data_path, True)
-    assert compacted != listing
 
     assert coll.delete({"batch": 1}) == 5
     df, jobs = _jobs(spark, coll.df)
-    assert jobs >= 1
+    assert jobs == 0
     assert sorted(r["batch"] for r in df.select("batch").distinct().collect()) == [0, 2]
-    assert _memo_entry(coll.data_path, True)[0] not in (listing, compacted)
+    data = os.path.abspath(coll.data_path)
+    assert not [k for k in files._schema_memo if k[0] == data]
 
 
 _NEW_CONTEXT_SCRIPT = r"""

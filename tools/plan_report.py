@@ -8,6 +8,11 @@ broadcast-over-shuffle, no global sorts) is what Catalyst actually planned.
 
 Usage: python tools/plan_report.py [sf_dir] > PLANS.md
 
+A filtered, probed approximate search (``index_store.ivf_index_topk``,
+``pq_index_topk`` with ``nprobe``) runs its probe when it is constructed
+and returns the answer as a local frame, so its row shows a
+``LocalTableScan`` in place of the probe's scan, joins and top-k.
+
 Rows can differ between two runs of the same commit. Every query runs in
 one shared session, and the digest reads the FINAL adaptive plan, so a
 row's runtime choices (join strategy, broadcast or sort-merge, coalesced
