@@ -9,7 +9,6 @@ whole-stage codegen — no Python in the hot path.
 from kaer_spark.functions.vector import (
     cosine_similarity,
     dot,
-    l2_distance,
     l2sq,
     vector_norm,
 )
@@ -26,7 +25,6 @@ from kaer_spark.functions.text import (
 
 __all__ = [
     "l2sq",
-    "l2_distance",
     "dot",
     "cosine_similarity",
     "vector_norm",

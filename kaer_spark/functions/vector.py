@@ -214,10 +214,6 @@ def l2sq(a: ColumnOrName, b: ColumnOrName | Sequence[float]) -> Column:
     )
 
 
-def l2_distance(a: ColumnOrName, b: ColumnOrName | Sequence[float]) -> Column:
-    return F.sqrt(l2sq(a, b))
-
-
 def dot(a: ColumnOrName, b: ColumnOrName | Sequence[float]) -> Column:
     fast = _literal_fold_args(a, b)
     if fast is not None:

@@ -39,35 +39,6 @@ def _grams(text_col: str, n: int, unit: str) -> Column:
     raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
 
 
-def contamination_pairs(
-    train: DataFrame,
-    test: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-    unit: str = "word",
-) -> DataFrame:
-    """(train ``doc_id``, test ``test_doc_id``, ``shared_grams``) for every
-    train/test pair sharing at least one distinct word n-gram.
-
-    ``n=13`` is the published decontamination default (GPT-3 appendix C);
-    lower it for short-document corpora.
-    """
-    tr = train.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_grams(text_col, n, unit)).alias("g"),
-    )
-    te = test.select(
-        F.col(id_col).alias("test_doc_id"),
-        F.explode(_grams(text_col, n, unit)).alias("g"),
-    )
-    return (
-        tr.join(F.broadcast(te), "g")
-        .groupBy("doc_id", "test_doc_id")
-        .agg(F.count("*").alias("shared_grams"))
-    )
-
-
 def contamination_report(
     train: DataFrame,
     test: DataFrame,

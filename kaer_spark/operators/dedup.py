@@ -22,8 +22,7 @@ Scale design (100 TB):
   pairs only for band collisions, then exact-Jaccard verification of the
   candidates. Shuffle volume is O(docs × bands), independent of corpus
   pair count.
-* SimHash — one 24-bit fingerprint per doc, banded by bytes; hamming
-  verification via bit_count(xor).
+* SimHash — one 24-bit fingerprint per doc, a bit vote over token hashes.
 * embedding near-dup — banded sign-LSH candidates + exact-cosine verify
   (``embedding_near_dups_lsh``), with ``calibrate_signlsh`` sizing the
   band geometry to corpus scale; the blocked all-pairs form
@@ -59,7 +58,7 @@ from kaer_spark.operators.util import (
     vec_dim,
     watermark_health_cols,
 )
-from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
+from kaer_spark.sources.files import read_parquet, read_sidecar
 
 # HASH_* are defined once, in functions.fphash, and imported here. Callers
 # in this module pass them to the fphash UDFs at call time, so reassigning
@@ -379,8 +378,9 @@ def build_shingle_index(
     what lets :func:`refresh_shingle_index` append.
     :func:`ngram_jaccard_pairs_indexed` then serves pairs with ONE
     self-join + one aggregate — measured 4× cheaper than the from-text
-    operator at sf0.1. At 100 TB the postings table is the thing you'd
-    bucket BY ``g`` (the ``write_ivf_bucketed_table`` recipe).
+    operator at sf0.1. At 100 TB the postings would be placed by ``g``
+    inside this artifact's own layout (the in-layout option of ROADMAP
+    item 7), not copied into a second, catalog-bucketed table.
 
     The build resets the index
     (:func:`~kaer_spark.operators.util.reset_index`) and fills it through
@@ -559,82 +559,6 @@ def refresh_shingle_index(
                 if d not in live:
                     _shutil.rmtree(_os.path.join(root, d), ignore_errors=True)
     return meta
-
-
-def write_shingle_bucketed_table(
-    df: DataFrame,
-    table: str,
-    meta_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    max_doc_freq: int | None = None,
-    unit: str = "char",
-    num_buckets: int = 64,
-) -> dict:
-    """The shingle postings as a CATALOG TABLE bucketed by ``g`` — the
-    ZERO-EXCHANGE layout for the recurring inverted self-join (the
-    ``write_ivf_bucketed_table`` recipe applied to the dedup family's
-    dominant cost). The parquet artifact of :func:`build_shingle_index`
-    still shuffles (or broadcasts) the postings onto the join key per
-    call; bucketing records the hash distribution in the catalog, so the
-    self-join reads both sides bucket-aligned with NO exchange below the
-    join — at 100 TB the postings shuffle IS the operator's cost, and
-    this removes it from every recurring run (plan-asserted in
-    tests/test_dedup.py). Sizes land in ``<table>_sizes`` (id-keyed,
-    broadcast-sized joins); parameters in the ``meta_path`` sidecar, same
-    format as the parquet artifact so either layout serves the scorers."""
-    import os as _os
-
-    from kaer_spark.sources.files import write_bucketed
-
-    sh = (
-        ensure_parallelism(df)
-        .select(
-            F.col(id_col).alias("id"),
-            _shingle_expr(text_col, n, unit).alias("shingles"),
-        )
-        .filter(F.size("shingles") > 0)
-        # two-consumer frame under a cap (doc-freq count + anti-join
-        # probe); a lineage cut before the bucketed write otherwise
-        .localCheckpoint(eager=False)
-    )
-    inv = sh.select("id", F.explode("shingles").alias("g"))
-    if max_doc_freq is not None:
-        inv, _ = _hot_cap(inv, _hot_shingles(inv, max_doc_freq))
-    write_bucketed(inv, table, ["g"], num_buckets=num_buckets, sort_by=["g"])
-    spark = df.sparkSession
-    kept = spark.table(table)
-    kept.groupBy("id").agg(F.count("*").alias("sz")).write.mode(
-        "overwrite"
-    ).saveAsTable(f"{table}_sizes")
-    meta = {
-        "id_col": id_col,
-        "text_col": text_col,
-        "n": int(n),
-        "unit": unit,
-        "max_doc_freq": max_doc_freq,
-        "table": table,
-        "num_buckets": int(num_buckets),
-    }
-    write_sidecar(_os.path.join(meta_path, SHINGLE_META_FILE), meta)
-    return meta
-
-
-def ngram_jaccard_table_pairs(
-    spark, table: str, threshold: float = 0.5
-) -> DataFrame:
-    """:func:`ngram_jaccard_pairs` served from the BUCKETED postings table
-    — value-identical to the from-text operator over the built corpus
-    (same frozen cap), with the self-join's corpus exchange gone: both
-    sides of the ``g`` equi-join read the same bucketed table, so the
-    join is bucket-aligned (no Exchange below it; the only shuffles left
-    are the pair aggregate and the two id-keyed size joins). Kernel:
-    :func:`_ngram_pair_counts`."""
-    return _ngram_jaccard(
-        _ngram_pair_counts((spark.table(table), spark.table(f"{table}_sizes"))),
-        threshold, _SELF_IDS,
-    )
 
 
 def shingle_index_stats(
@@ -2082,66 +2006,6 @@ def simhash(
     return base.select("id", fp.alias("simhash"))
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-    bands: int = 3,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Pairs with SimHash hamming distance ≤ ``max_hamming``.
-
-    Candidates: equality on any of ``bands`` contiguous bit-bands (a pair
-    within hamming ≤ bands−1 always collides on ≥1 band; wider distances
-    are best-effort, the standard SimHash-dedup trade-off). Verification:
-    ``bit_count(xor)``.
-
-    Scale note: each band's key space is ``2^(bits // bands)`` — the
-    default (24, 3) gives 256 buckets/band, whose within-bucket pair join
-    goes quadratic on a large corpus exactly like a too-narrow sign-LSH
-    band. Size ``bits ≳ bands × log2(N / target_bucket_rows)`` (e.g.
-    ``bits=60, bands=3`` → 2^20 buckets/band) — same calibration rule as
-    :func:`calibrate_signlsh`; ``bits ≤ 62`` keeps the fingerprint inside
-    a signed int64.
-    """
-    if bits > 62:
-        raise ValueError("bits must be <= 62 (signed int64 fingerprint)")
-    band_bits = bits // bands
-    sh = simhash(df, id_col, text_col, bits)
-    banded = sh.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright(F.col("simhash"), bi * band_bits)
-                        .bitwiseAND(F.lit(2**band_bits - 1))
-                        .alias("key"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 # ---------------------------------------------------------------------------
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
@@ -2603,9 +2467,11 @@ def refresh_signlsh_index(
     (:func:`_signlsh_inverted`) and appended. Single-table artifact, so one crash window: a
     replay after crash-between-append-and-watermark anti-joins the tail
     against right_ids already above the watermark (id-column-only,
-    predicate-pushed scan of the index). Geometry guarded: a tail whose
-    vectors are not ``meta.dim``-dimensional raises instead of silently
-    hashing through mismatched planes. Pre-watermark artifacts derive
+    predicate-pushed scan of the index). Geometry guarded: a tail vector
+    that is not ``meta.dim``-dimensional fails the append's write job
+    in-plan (:func:`_signlsh_keyed`) instead of silently hashing through
+    mismatched planes, so the table and the watermark stay as they were
+    and no extra job reads the tail first. Pre-watermark artifacts derive
     the watermark from the stored table once, then stamp it.
     ``advance_to`` floors the flipped watermark, exactly as in
     :func:`refresh_minhash_index` — for screen-and-drop callers whose
@@ -2622,13 +2488,6 @@ def refresh_signlsh_index(
     )
     if tail is None:
         return meta
-    tail_dim = vec_dim(tail, meta["vec_col"])
-    if tail_dim != meta["dim"]:
-        raise ValueError(
-            f"refresh_signlsh_index: tail vectors are {tail_dim}-dim but "
-            f"the index at {path!r} was built over {meta['dim']}-dim "
-            "vectors — rebuilding is the only sound operation"
-        )
     tail = guard(tail, icol, bands_dir, "right_id")
     _signlsh_inverted(
         tail, icol, meta["vec_col"], meta["dim"], meta["bands"],

@@ -50,7 +50,7 @@ from kaer_spark.operators.util import (
     reset_index,
     watermark_health_cols,
 )
-from kaer_spark.sources.files import read_parquet, read_sidecar, write_sidecar
+from kaer_spark.sources.files import read_parquet, read_sidecar
 
 META_FILE = "index.json"
 DATA_DIR = "data"
@@ -117,127 +117,6 @@ def refresh_ivf_index(corpus: DataFrame, path: str, *, batch=None) -> dict:
     assigned = S.ivf_assign_deterministic(tail, meta["centroids"], meta["vec_col"])
     assigned.write.mode("append").partitionBy("_cell").parquet(data_dir)
     return flip_watermark(path, META_FILE, meta, new_max)
-
-
-def write_ivf_bucketed_table(
-    corpus: DataFrame,
-    table: str,
-    meta_path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cells: int = 16,
-    fit: str = "spread",
-) -> dict:
-    """Materialize the cell-assigned corpus as a CATALOG TABLE bucketed by
-    ``_cell`` — the zero-corpus-shuffle layout for RECURRING kNN joins.
-
-    The path-based index (``build_ivf_index``) prunes single-query probes
-    by partition directory; for the JOIN workload the relevant cost is the
-    cell equi-join's corpus-side exchange once the query side outgrows a
-    broadcast (AQE falls back to a shuffle join). Bucketing the table on
-    ``_cell`` records the hash distribution in the catalog, so that join
-    reads the corpus bucket-aligned with NO exchange below the join — only
-    the (small) query side shuffles. Centroids and geometry go to the
-    ``meta_path`` sidecar, same format as the path index.
-    """
-    from kaer_spark.sources.files import write_bucketed
-
-    centroids = S._fit_centroids(
-        corpus, fit, ("spread", "deterministic"), vec_col, id_col, cells
-    )
-    assigned = S.ivf_assign_deterministic(corpus, centroids, vec_col)
-    write_bucketed(assigned, table, ["_cell"], num_buckets=cells, sort_by=[id_col])
-    meta = {
-        "cells": cells,
-        "dim": len(centroids[0]),
-        "fit": fit,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "table": table,
-        "centroids": centroids,
-    }
-    write_sidecar(os.path.join(meta_path, META_FILE), meta)
-    return meta
-
-
-def ivf_table_knn_join(
-    spark: SparkSession,
-    table: str,
-    meta_path: str,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = 4,
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    pred=None,
-) -> DataFrame:
-    """kNN join against the BUCKETED cell table written by
-    :func:`write_ivf_bucketed_table`: the corpus side of the cell
-    equi-join carries no exchange (bucket-aligned scan) even when the
-    query side is too large to broadcast — plan-asserted in
-    ``tests/test_index_store.py``."""
-    meta = read_index_meta(meta_path)
-    return S.ivf_knn_join(
-        queries,
-        spark.table(table),
-        k,
-        nprobe=nprobe,
-        query_vec_col=query_vec_col,
-        corpus_vec_col=meta["vec_col"],
-        query_id_col=query_id_col,
-        corpus_id_col=meta["id_col"],
-        centroids=meta["centroids"],
-        corpus_pred=pred,
-    )
-
-
-def ivf_table_hard_negatives(
-    spark: SparkSession,
-    table: str,
-    meta_path: str,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = 4,
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    metric: str = "cosine",
-    exclude_pairs: DataFrame | None = None,
-    exclude_self: bool = True,
-    dup_ceiling: float | None = None,
-    pred=None,
-) -> DataFrame:
-    """Hard-negative mining against the BUCKETED cell table — the standing
-    serving layout for a RECURRING mining pass (every contrastive-training
-    epoch re-mines as the encoder moves): ``knn.ivf_hard_negatives``'s
-    exclusion semantics with the corpus side of the cell equi-join
-    carrying NO exchange at all (bucket-aligned scan; only the
-    nprobe×-replicated query side shuffles). Reuses the table's stored
-    ``_cell`` assignment and the sidecar centroids, so mining never
-    recomputes a corpus argmin. Same caveat as the table join: don't
-    probe an L2-assigned layout by angle — build the table with the
-    metric the miner will use. ``pred`` restricts the candidate pool
-    (filtered mining — same contract as ``knn.ivf_hard_negatives``'s
-    ``corpus_pred``), pushed into the bucket-aligned scan."""
-    from kaer_spark.operators.knn import ivf_hard_negatives
-
-    meta = read_index_meta(meta_path)
-    return ivf_hard_negatives(
-        queries,
-        spark.table(table),
-        k,
-        cells=meta["cells"],
-        nprobe=nprobe,
-        query_vec_col=query_vec_col,
-        corpus_vec_col=meta["vec_col"],
-        query_id_col=query_id_col,
-        corpus_id_col=meta["id_col"],
-        centroids=meta["centroids"],
-        metric=metric,
-        exclude_pairs=exclude_pairs,
-        exclude_self=exclude_self,
-        dup_ceiling=dup_ceiling,
-        corpus_pred=pred,
-    )
 
 
 def ivf_index_knn_join(

@@ -21,9 +21,9 @@ Physical plans (verified via ``.explain``):
   corpus × queries. Plan-asserted in ``tests/test_knn.py``.
 
 Every join-shaped form here and in ``similarity``/``index_store``
-(broadcast, IVF cell join, bucketed table, standing index) scores its
-pairs with :func:`_score_pairs` — one metric table, cosine norms once per
-side below the join — and ranks them with :func:`_per_query_topk`.
+(broadcast, IVF cell join, standing index) scores its pairs with
+:func:`_score_pairs` — one metric table, cosine norms once per side below
+the join — and ranks them with :func:`_per_query_topk`.
 """
 
 from __future__ import annotations

@@ -11,12 +11,11 @@
   instead of the full table (partition pruning on the cell column).
 
 Each vector-search stage has one kernel here, shared by the in-memory
-forms below, the bucketed cell table and the standing indexes
-(``index_store``): :func:`_nearest` (argmin cell / codeword),
-:func:`ivf_probe_cells` (driver probe order) and :func:`_probe` (in-plan
-probe), :func:`_fit_centroids` (coarse fit by name), :func:`_adc_tables`
-+ :func:`_adc_score` (PQ asymmetric distance) and :func:`_l2_topk` (exact
-rank). Pairs are scored by ``knn._score_pairs``.
+forms below and the standing indexes (``index_store``): :func:`_nearest`
+(argmin cell / codeword), :func:`ivf_probe_cells` (driver probe order)
+and :func:`_probe` (in-plan probe), :func:`_fit_centroids` (coarse fit by
+name), :func:`_adc_tables` + :func:`_adc_score` (PQ asymmetric distance)
+and :func:`_l2_topk` (exact rank). Pairs are scored by ``knn._score_pairs``.
 
 The reference's ANN is a single in-RAM HNSW graph (``/root/reference/
 db/hnsw.go``) which cannot exceed one machine's memory; these paths are its

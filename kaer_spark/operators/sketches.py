@@ -361,46 +361,15 @@ def cms_build(
         .groupBy("j", "pos")
         .agg(F.count("*").cast("long").alias("cnt"))
         # build geometry rides every cell row (like bloom_build's one-row
-        # metadata): cms_query/cms_merge assert against it, because a
-        # probe or merge under mismatched width/depth/seed returns
-        # plausible-looking WRONG counts instead of failing
+        # metadata): cms_query asserts against it, because a probe
+        # under mismatched width/depth/seed returns plausible-looking
+        # WRONG counts instead of failing
         .select(
             "j", "pos", "cnt",
             F.lit(int(width)).cast("int").alias("width"),
             F.lit(int(depth)).cast("int").alias("depth"),
             F.lit(int(seed)).cast("long").alias("seed"),
         )
-    )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge CMS states cell-wise (union of multisets = sum of counts —
-    exact, like the HLL register max). Refuses to merge sketches whose
-    recorded (width, depth, seed) geometries differ — cell-wise sums
-    across different hash layouts are meaningless but would otherwise
-    produce a plausible-looking sketch."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    meta_ok = out.agg(
-        (
-            F.count_distinct(F.struct("width", "depth", "seed")) <= 1
-        ).alias("__ok")
-    )
-    guard = F.when(F.col("__ok"), F.lit(True)).otherwise(
-        F.raise_error(
-            F.lit("cms geometry mismatch: cannot merge sketches built "
-                  "with different (width, depth, seed)")
-        ).cast("boolean")
-    )
-    return (
-        out.join(F.broadcast(meta_ok), F.lit(True), "inner")
-        .filter(guard)
-        .groupBy("j", "pos", "width", "depth", "seed")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .select("j", "pos", "cnt", "width", "depth", "seed")
     )
 
 

@@ -3,7 +3,6 @@ from kaer_spark.plans.inspect import (
     explain_summary,
     formatted_plan,
     has_broadcast_join,
-    has_exchange_before,
     pushed_filters,
     read_schema_columns,
 )
@@ -15,5 +14,4 @@ __all__ = [
     "pushed_filters",
     "read_schema_columns",
     "has_broadcast_join",
-    "has_exchange_before",
 ]

@@ -80,11 +80,3 @@ def read_schema_columns(df: DataFrame) -> list[set[str]]:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in executed_plan(df)
-
-
-def has_exchange_before(df: DataFrame, operator: str) -> bool:
-    """True if an Exchange appears above (before, in text order) the first
-    occurrence of ``operator`` in the executed plan."""
-    plan = executed_plan(df)
-    idx = plan.find(operator)
-    return idx >= 0 and "Exchange" in plan[:idx]

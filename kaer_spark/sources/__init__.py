@@ -1,21 +1,9 @@
 from kaer_spark.sources.files import (
-    read_csv,
-    read_json,
-    read_jsonl,
-    read_orc,
     read_parquet,
-    read_text,
     write_bucketed,
-    write_partitioned,
 )
 
 __all__ = [
     "read_parquet",
-    "read_csv",
-    "read_json",
-    "read_jsonl",
-    "read_orc",
-    "read_text",
-    "write_partitioned",
     "write_bucketed",
 ]

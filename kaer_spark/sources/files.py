@@ -2,15 +2,11 @@
 
 The reference has no file formats at all (its storage is a document store
 it boots itself — SURVEY.md §2.3 "Scans/sources/sinks"); this module is the
-engine's connector surface. Rules every reader here follows:
+engine's connector surface:
 
-* explicit schema wherever the format allows it — ``inferSchema`` on a
-  100 TB CSV is a full extra pass over the data;
-* parquet is the default interchange format (columnar, predicate pushdown,
-  min/max pruning);
-* writers partition by low-cardinality keys only, and compact small files
-  (``coalesce``) when asked — the classic many-small-files failure mode is
-  an explicit parameter, not an accident;
+* parquet is the interchange format (columnar, predicate pushdown, min/max
+  pruning); other formats are read with ``spark.read`` directly, under an
+  explicit schema wherever the format allows it;
 * this module holds the engine's only parquet readers: :func:`read_parquet`
   infers a table's schema at most once per session (the schema memo
   below), and :func:`read_catalogued` reads under a schema a catalog
@@ -216,81 +212,6 @@ def write_sidecar(path: str, obj) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """CSV with a REQUIRED schema (no inference pass)."""
-    return spark.read.options(header=str(header).lower(), **options).schema(
-        schema
-    ).csv(path)
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType | str, **options: str
-) -> DataFrame:
-    """Newline-delimited JSON with a required schema."""
-    return spark.read.options(**options).schema(schema).json(path)
-
-
-def read_orc(
-    spark: SparkSession, path: str, columns: list[str] | None = None
-) -> DataFrame:
-    """ORC — Spark-native columnar alternative; same pushdown/pruning
-    contract as parquet (predicate + column pruning reach the scan)."""
-    df = spark.read.orc(path)
-    return df.select(*columns) if columns else df
-
-
-def read_text(
-    spark: SparkSession, path: str, whole_file: bool = False
-) -> DataFrame:
-    """Raw text: one row per line (``value`` column), or one row per file
-    (``wholetext`` — the ingestion shape for document corpora where a file
-    IS a document). ``wholetext`` is a reader-method parameter, not a
-    string option (the option spelling is silently ignored)."""
-    return spark.read.text(path, wholetext=whole_file)
-
-
-# spark.read.json IS jsonl; multiline json is the odd one out
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType | str, multiline: bool = False
-) -> DataFrame:
-    return (
-        spark.read.option("multiLine", str(multiline).lower()).schema(schema).json(path)
-    )
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    target_files_per_partition: int | None = None,
-) -> None:
-    """Partitioned write with optional small-file compaction.
-
-    ``partition_by`` keys should be low-cardinality (date, lang, cell id);
-    ``target_files_per_partition`` repartitions by the partition keys first
-    so each Hive partition gets ~that many files instead of one per task.
-    """
-    if target_files_per_partition and partition_by:
-        from pyspark.sql import functions as F
-
-        df = df.repartition(
-            target_files_per_partition * max(1, len(partition_by)),
-            *[F.col(c) for c in partition_by],
-        )
-    writer = df.write.mode(mode).format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
 
 
 def write_bucketed(

@@ -1,5 +1,6 @@
-"""Structured-Streaming surface: streaming ingest into a collection and
-event-time windowed aggregation.
+"""Structured-Streaming surface: screened corpus ingest (exact, MinHash
+and sign-LSH near-dup screens), a streaming HLL distinct sketch, and
+event-time session windows.
 
 The reference's closest analogue is incremental insert + every-1000-ids
 index checkpoint (``/root/reference/db/db.go:91-97``) and
@@ -8,10 +9,10 @@ onto Spark's own mechanics: ``foreachBatch`` gives exactly-once batch
 appends, and the streaming checkpoint directory *is* the recovery cursor —
 no bespoke meta rows.
 
-Scale notes: the insert path is the batch insert path (same dense-id
-allocation, same embedding stage) applied per micro-batch; state for
-windowed aggs is bounded by the watermark, and ``session_window`` handles
-gap-based sessionization without custom state code.
+Scale notes: a near-dup ingest screens each micro-batch against an at-rest
+index and advances that index with the batch's survivors; stateful exact
+dedup is bounded by its TTL, and ``session_window`` handles gap-based
+sessionization without custom state code.
 """
 
 from __future__ import annotations
@@ -25,8 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kaer_spark.context import INDEX_FAMILIES, Collection
-from kaer_spark.operators import dedup, index_store, text_index
+from kaer_spark.operators import dedup
 from kaer_spark.operators.util import local_frame
 from kaer_spark.sources.files import read_parquet
 
@@ -115,84 +115,6 @@ def _start(
     return writer.start()
 
 
-def stream_insert(
-    collection: Collection,
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    text_col: str = "_m_doc",
-    trigger: dict[str, Any] | None = None,
-    text_index_path: str | None = None,
-    pq_index_path: str | None = None,
-) -> StreamingQuery:
-    """Continuously ingest a streaming DataFrame into a collection.
-
-    Each micro-batch runs the normal insert path (dense ids continue from
-    the collection's catalog cursor; single-writer semantics, matching the
-    reference's process-local id counter, ``db/db.go:75``). That path
-    catches up every index the collection owns (``Collection.insert_df``
-    — the reference adds every inserted vector to its HNSW inline,
-    ``db/db.go:95-99``; here each family appends the batch's id range, a
-    file-pruned scan thanks to id-block clustering, or runs its
-    idempotent ``id > max_id`` catch-up when its watermark lags), so each
-    owned index refreshes exactly once per batch.
-
-    ``text_index_path`` / ``pq_index_path`` (optional) keep an EXTERNAL
-    inverted text index (``operators.text_index``) or PQ code table
-    (``operators.index_store``) built over this collection current the
-    same way: per batch, ``refresh_text_index`` appends only the tail's
-    postings and advances the frozen corpus stats, and
-    ``refresh_pq_index`` encodes the tail under the STORED codebooks (no
-    refit — the codes stay comparable); the replay guard makes a
-    crashed/replayed batch idempotent. A path that is the directory of a
-    family the collection owns is skipped — the insert already refreshed
-    it.
-    """
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        collection.insert_df(batch_df, text_col=text_col)
-        owned = {
-            os.path.realpath(fam.dir_in(collection.path))
-            for fam in INDEX_FAMILIES
-            if collection.meta.get(fam.flag)
-        }
-        for path, refresh in (
-            (text_index_path, text_index.refresh_text_index),
-            (pq_index_path, index_store.refresh_pq_index),
-        ):
-            if path is not None and os.path.realpath(path) not in owned:
-                refresh(collection.df(), path)
-
-    return _start(stream_df, sink, checkpoint_dir, trigger)
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Event-time tumbling-window counts/sums; works identically on a batch
-    or streaming DataFrame (the batch run is the correctness oracle for the
-    streaming one — tested in tests/test_streaming.py)."""
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window(ts_col, window).alias("win"), key_col)
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            key_col,
-            "n",
-            "sum_value",
-        )
-    )
-
-
 def streaming_dedup(
     stream_df: DataFrame,
     fp_col: str,
@@ -274,72 +196,6 @@ def sessionized_counts(
     )
 
 
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    left_ts: str,
-    right_ts: str,
-    lower_s: int,
-    upper_s: int,
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join (the streaming twin of
-    ``operators.interval.interval_join``): right rows within
-    ``[left_ts + lower_s, left_ts + upper_s)`` seconds, equi-keyed.
-
-    Both sides are watermarked and the band is expressed as event-time
-    INTERVAL arithmetic, which is the exact form Spark's streaming planner
-    needs to derive state-eviction bounds — each side's join state is
-    purged once the watermark passes the farthest point the band can still
-    match, so state is O(watermark × rate), not unbounded. On batch
-    DataFrames the same function degrades to a plain band join, which is
-    the oracle the stream run is tested against (stream ≡ batch,
-    tests/test_streaming.py).
-    """
-    lsrc = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rsrc = right.withWatermark(right_ts, watermark) if right.isStreaming else right
-    l, r = lsrc.alias("l"), rsrc.alias("r")
-    cond = F.expr(
-        f"r.{right_ts} >= l.{left_ts} + INTERVAL {int(lower_s)} SECOND"
-    ) & F.expr(f"r.{right_ts} < l.{left_ts} + INTERVAL {int(upper_s)} SECOND")
-    for k in keys:
-        cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
-    return l.join(r, cond, how)
-
-
-def stream_refresh_rollup(
-    stream_df: DataFrame,
-    source_path: str,
-    rollup_path: str,
-    checkpoint_dir: str,
-    trigger: dict[str, Any] | None = None,
-) -> StreamingQuery:
-    """Continuous aggregate: keep a materialized time_bucket rollup fresh
-    as new event files land.
-
-    The stream is only the CHANGE SIGNAL — each micro-batch triggers
-    ``refresh_rollup`` against the full batch view of the source, which
-    recomputes exactly the day partitions at/after the rollup's high-water
-    mark (minus its lateness allowance) and overwrites them atomically.
-    This is the TimescaleDB continuous-aggregate refresh model on Spark
-    mechanics: foreachBatch gives exactly-once refresh scheduling via the
-    streaming checkpoint, and the refresh itself is idempotent (dynamic
-    partition overwrite), so a replayed batch re-writes the same bytes.
-    Requires the rollup to exist (``materialize_rollup``).
-    """
-    from kaer_spark.operators.rollup import refresh_rollup
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        refresh_rollup(read_parquet(spark, source_path), rollup_path)
-
-    return _start(stream_df, sink, checkpoint_dir, trigger)
-
-
 def streaming_dedup_against(
     stream_df: DataFrame,
     reference: DataFrame,
@@ -363,71 +219,6 @@ def streaming_dedup_against(
     ref_fps = reference.select(F.col(fp_col)).distinct()
     novel = stream_df.join(ref_fps, fp_col, "left_anti")
     return streaming_dedup(novel, fp_col, id_col, ttl_minutes)
-
-
-def streaming_bloom_decontaminate(
-    stream_df: DataFrame,
-    bloom: DataFrame,
-    text_col: str = "text",
-    n: int = 13,
-    unit: str = "word",
-    m_bits: int = 1 << 20,
-    k_hashes: int = 4,
-    seed: int = 1337,
-) -> DataFrame:
-    """Streaming twin of ``contamination.bloom_decontaminate``: drop every
-    arrival containing a Bloom-positive n-gram against the STATIC bitset
-    built by ``contamination.bloom_build`` (``bloom`` is that one-row
-    DataFrame; the m_bits/k_hashes/seed parameters must match the build).
-
-    Why the Bloom shape specifically for streams: the exact stream-static
-    LEFT ANTI screen (:func:`streaming_dedup_against`) joins every
-    micro-batch against the reference's distinct-fingerprint set — fine
-    when the reference is one corpus, but an eval-decontamination screen
-    covering hundreds of benchmark suites re-reads and re-joins that whole
-    set per batch. Here the static side is ONE row (O(m/8) bytes however
-    many suites the bitset absorbs); the stream-static inner join
-    broadcasts it, the membership test is inline bit arithmetic inside the
-    batch's scan, and — because the static side is re-planned per
-    micro-batch — REBUILDING the bitset file-backed picks up newly
-    registered benchmarks without restarting the stream or touching any
-    state store (the operator is stateless; false positives only ever
-    over-drop, the safe direction for decontamination).
-    """
-    from kaer_spark.operators.contamination import _bloom_member, _grams
-    from kaer_spark.operators.dedup import _poly_hash, minhash_coeffs
-
-    coeffs = minhash_coeffs(k_hashes, seed)
-    joined = stream_df.join(F.broadcast(bloom), F.lit(True), "inner")
-    fps = F.transform(_grams(text_col, n, unit), lambda g: _poly_hash(g))
-    clean = ~F.exists(
-        fps, lambda fp: _bloom_member(fp, F.col("words"), coeffs, m_bits)
-    )
-    # geometry guard: probing with mismatched m_bits/k_hashes/seed would
-    # silently fail OPEN (contaminated docs pass the screen — the unsafe
-    # direction), so the filter refuses to evaluate against a bitset row
-    # whose recorded build parameters differ from the probe's. Woven into
-    # the per-batch expression (not checked once at setup) because the
-    # static side re-plans every micro-batch: a bitset REBUILT mid-stream
-    # with different geometry must also fail loudly.
-    meta_ok = (
-        (F.col("m_bits") == F.lit(int(m_bits)))
-        & (F.col("k_hashes") == F.lit(int(k_hashes)))
-        & (F.col("seed") == F.lit(int(seed)))
-    )
-    guard = F.when(
-        meta_ok, F.lit(True)
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                "bloom geometry mismatch: probe (m_bits=%s, k_hashes=%s, "
-                "seed=%s) vs built (m_bits=%%s, k_hashes=%%s, seed=%%s)"
-                % (int(m_bits), int(k_hashes), int(seed)),
-                F.col("m_bits"), F.col("k_hashes"), F.col("seed"),
-            )
-        ).cast("boolean")
-    )
-    return joined.filter(guard & clean).select(*stream_df.columns)
 
 
 def streaming_hll_ingest(

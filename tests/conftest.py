@@ -201,7 +201,6 @@ _SLOW_TESTS = frozenset({
     "test_dedup.py::test_ngram_containment_indexed_equals_fresh",
     "test_dedup.py::test_ngram_jaccard_against_index_matches_between",
     "test_dedup.py::test_ngram_jaccard_between_matches_bruteforce",
-    "test_dedup.py::test_ngram_jaccard_bucketed_table_no_postings_shuffle",
     "test_dedup.py::test_ngram_jaccard_indexed_equals_fresh",
     "test_dedup.py::test_passage_overlap_between_and_removal_against",
     "test_dedup.py::test_passage_verify_rejects_fingerprint_collisions",
@@ -221,7 +220,6 @@ _SLOW_TESTS = frozenset({
     "test_dedup.py::test_signlsh_calibrated_candidates_subquadratic",
     "test_dedup.py::test_signlsh_index_served_equals_from_vectors",
     "test_dedup.py::test_signlsh_index_stats_report",
-    "test_dedup.py::test_simhash_wide_fingerprint_scales_band_space",
     "test_dedup.py::test_split_leakage_and_holdout_is_leak_free",
     "test_dedup.py::test_winnow_between_matches_global_selection",
     "test_dedup.py::test_winnow_guarantee_and_density",
@@ -255,7 +253,6 @@ _SLOW_TESTS = frozenset({
     "test_index_store.py::test_indexed_collection_survives_schema_evolution",
     "test_index_store.py::test_ivf_index_stats_health_report",
     "test_index_store.py::test_ivf_refresh_replayed_after_crash_no_duplicates",
-    "test_index_store.py::test_ivf_table_hard_negatives_no_corpus_exchange",
     "test_index_store.py::test_pq_index_knn_join_equals_per_query_serving",
     "test_index_store.py::test_pq_index_knn_join_filtered",
     "test_index_store.py::test_pq_index_knn_join_unprobed_guard",
@@ -269,7 +266,6 @@ _SLOW_TESTS = frozenset({
     "test_index_store.py::test_refresh_catches_up_from_max_id",
     "test_index_store.py::test_refresh_replayed_after_crash_no_duplicates",
     "test_index_store.py::test_search_prunes_partitions",
-    "test_interval.py::test_salted_join_equals_plain_join",
     "test_knn.py::test_contrastive_triplets_assembly",
     "test_knn.py::test_contrastive_triplets_filtered_negative_pool",
     "test_knn.py::test_exact_knn_dot_metric",
@@ -299,7 +295,6 @@ _SLOW_TESTS = frozenset({
     "test_rollup.py::test_lateness_window_recomputes_older_days",
     "test_rollup.py::test_materialize_and_incremental_refresh",
     "test_rollup.py::test_refresh_is_idempotent",
-    "test_rollup.py::test_stream_refresh_rollup_tracks_source",
     "test_rollup.py::test_time_bucket_boundaries",
     "test_similarity.py::test_ivf_fit_spread_balances_clumped_ingestion",
     "test_similarity.py::test_ivf_fit_spread_pmod_discipline",
@@ -329,7 +324,6 @@ _SLOW_TESTS = frozenset({
     "test_sources.py::test_compact_and_delete_rewrites_read_by_catalog",
     "test_sources.py::test_lakehouse_formats_gated",
     "test_sources.py::test_new_spark_context_starts_with_an_empty_memo",
-    "test_sources.py::test_orc_roundtrip_and_pushdown",
     "test_sources.py::test_warm_collection_reads_and_queries_fire_no_jobs",
     "test_streaming.py::test_compact_ingest_epochs_crash_recovery",
     "test_streaming.py::test_compact_ingest_epochs_preserves_rows_and_replay",
@@ -337,23 +331,14 @@ _SLOW_TESTS = frozenset({
     "test_streaming.py::test_ingest_continues_after_compaction",
     "test_streaming.py::test_stream_embedding_neardup_ingest_end_to_end",
     "test_streaming.py::test_stream_equals_batch_sessionized",
-    "test_streaming.py::test_stream_equals_batch_windowed",
-    "test_streaming.py::test_stream_insert_dense_ids",
-    "test_streaming.py::test_stream_insert_keeps_index_current",
-    "test_streaming.py::test_stream_insert_keeps_pq_index_current",
-    "test_streaming.py::test_stream_insert_keeps_text_index_current",
     "test_streaming.py::test_stream_neardup_ingest_end_to_end",
     "test_streaming.py::test_stream_neardup_ingest_surrogate_ids_hash_source",
-    "test_streaming.py::test_stream_stream_interval_join_equals_batch",
-    "test_streaming.py::test_streaming_bloom_decontaminate",
-    "test_streaming.py::test_streaming_bloom_geometry_mismatch_fails_loudly",
     "test_streaming.py::test_streaming_dedup_against_reference",
     "test_streaming.py::test_streaming_dedup_first_seen_wins",
     "test_streaming.py::test_streaming_hll_corrupt_state_raises",
     "test_streaming.py::test_streaming_hll_ingest_merge_equals_whole",
     "test_streaming.py::test_streaming_hll_recovers_interrupted_swap",
     "test_streaming.py::test_surrogate_mode_indexes_dropped_docs_transitive_redelivery",
-    "test_streaming.py::test_watermark_late_data_semantics",
     "test_text_index.py::test_build_search_roundtrip_and_parity",
     "test_text_index.py::test_doclens_broadcast_contract",
     "test_text_index.py::test_hybrid_ranks_favor_both_modalities",

@@ -1116,8 +1116,8 @@ def test_index_health_reports_staleness_and_shape(ctx):
     assert t["n_docs"] == 8 and t["n_terms"] > 0
 
     # batch insert auto-refreshes ALL THREE families (r15 closed the PQ
-    # gap: it rode O8 catch-up on stream_insert but not on batch insert),
-    # so the health reports read zero lag right after the insert
+    # gap: PQ used to miss the O8 catch-up on batch insert), so the
+    # health reports read zero lag right after the insert
     coll.insert(["a brand new late arrival about shuffles"], [{"k": 99}])
     lags = {k: df.collect()[0]["watermark_lag"]
             for k, df in coll.index_health().items()}

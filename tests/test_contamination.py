@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from kaer_spark.operators.contamination import (
-    contamination_pairs,
     contamination_report,
     decontaminate,
 )
@@ -30,15 +29,6 @@ def corpus_pair(spark):
         "doc_id long, text string",
     )
     return train, test
-
-
-def test_pairs_exact(spark, corpus_pair):
-    train, test = corpus_pair
-    got = {
-        (r["doc_id"], r["test_doc_id"]): r["shared_grams"]
-        for r in contamination_pairs(train, test, n=3).collect()
-    }
-    assert got == {(1, 100): 2, (2, 101): 1, (3, 101): 1}
 
 
 def test_report_counts_distinct_grams_once(spark, corpus_pair):

@@ -14,7 +14,6 @@ from kaer_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
-    simhash_near_dups,
 )
 
 
@@ -133,11 +132,11 @@ def test_simhash(dup_docs):
     out = {r["id"]: r["simhash"] for r in simhash(dup_docs).collect()}
     assert out[0] == out[1]
     assert all(0 <= v < 2**24 for v in out.values())
-    near = simhash_near_dups(dup_docs, max_hamming=6).collect()
-    pairs = {(r["id_a"], r["id_b"]) for r in near}
-    assert (0, 1) in pairs
-    hams = {(r["id_a"], r["id_b"]): r["hamming"] for r in near}
-    assert hams[(0, 1)] == 0
+    # the wide (corpus-scale) fingerprint: same verdict, deterministic
+    wide = {r["id"]: r["simhash"] for r in simhash(dup_docs, bits=60).collect()}
+    assert wide[0] == wide[1] and all(0 <= v < 2**60 for v in wide.values())
+    again = {r["id"]: r["simhash"] for r in simhash(dup_docs, bits=60).collect()}
+    assert wide == again
 
 
 def test_embedding_near_dups(spark):
@@ -395,25 +394,6 @@ def test_calibrate_signlsh_properties_fuzz():
             assert 1.0 - (1.0 - p**bits) ** bands >= recall - 1e-9
 
     check()
-
-
-def test_simhash_wide_fingerprint_scales_band_space(dup_docs):
-    """bits=60, bands=3: the wide fingerprint (2^20 buckets/band — the
-    corpus-scale geometry) still pairs duplicates with hamming 0 and
-    agrees with the 24-bit verdicts on this fixture; 63 bits is rejected
-    (signed int64)."""
-    out = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dups(dup_docs, bits=60, bands=3, max_hamming=6).collect()
-    }
-    assert (0, 1) in out and out[(0, 1)] == 0
-    fps = {r["id"]: r["simhash"] for r in simhash(dup_docs, bits=60).collect()}
-    assert fps[0] == fps[1] and all(0 <= v < 2**60 for v in fps.values())
-    # determinism at the wider width
-    again = {r["id"]: r["simhash"] for r in simhash(dup_docs, bits=60).collect()}
-    assert fps == again
-    with pytest.raises(ValueError):
-        simhash_near_dups(dup_docs, bits=63)
 
 
 def test_minhash_between_and_dedup_against(spark, dup_docs):
@@ -1781,56 +1761,6 @@ def test_refreshable_index_id_types_fail_loud(spark, tmp_path):
                             num_hashes=16, bands=4, seed=1)
 
 
-def test_ngram_jaccard_bucketed_table_no_postings_shuffle(spark, tmp_path):
-    """The bucketed postings table: (a) pairs equal the from-text operator
-    exactly, (b) with broadcast disabled (the cluster regime) the inverted
-    self-join reads BOTH sides bucket-aligned — no Exchange on g below the
-    join (the only shuffles left are the pair aggregate and the id-keyed
-    size joins). At 100 TB the postings shuffle IS the operator's cost."""
-    import re
-
-    from kaer_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_table_pairs,
-        write_shingle_bucketed_table,
-    )
-    from kaer_spark.plans import executed_plan
-
-    rows = [
-        (i, f"the quick brown fox number {i % 4} jumps over the lazy dog "
-            f"variant {i % 4} again and again")
-        for i in range(12)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    try:
-        write_shingle_bucketed_table(
-            docs, "b_shingles", str(tmp_path / "sh_meta"),
-            n=8, max_doc_freq=10, num_buckets=8,
-        )
-        fresh = sorted(map(tuple, ngram_jaccard_pairs(
-            docs, n=8, threshold=0.3, max_doc_freq=10).collect()))
-        served = sorted(map(tuple, ngram_jaccard_table_pairs(
-            spark, "b_shingles", threshold=0.3).collect()))
-        assert served == fresh and fresh
-
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            df = ngram_jaccard_table_pairs(spark, "b_shingles", threshold=0.3)
-            plan = executed_plan(df)
-            assert "BroadcastHashJoin" not in plan
-            # zero exchanges on the join key: the g-join is bucket-aligned
-            assert not re.findall(r"Exchange hashpartitioning\(g[#,]", plan)
-            assert sorted(
-                map(tuple, df.collect())
-            ) == fresh
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_shingles")
-        spark.sql("DROP TABLE IF EXISTS b_shingles_sizes")
-
-
 def test_minhash_index_served_equals_from_text(spark, tmp_path):
     """The at-rest decontamination index: pairs and survivors served
     against the built reference equal minhash_near_dups_between /
@@ -2052,8 +1982,9 @@ def test_refresh_signlsh_index_equals_rebuild_and_replay(
 ):
     """The embedding twin: refresh ≡ rebuild row-identical through the
     sidecar-frozen planes; crash-replay appends nothing twice; a
-    dimension-mismatched tail raises instead of hashing through the
-    wrong planes."""
+    dimension-mismatched tail fails the append's write in-plan instead
+    of hashing through the wrong planes, and leaves the table and the
+    watermark as they were."""
     import json
     import os
 
@@ -2099,12 +2030,18 @@ def test_refresh_signlsh_index_equals_rebuild_and_replay(
     ).collect()))
     assert served_inc == served_full and served_inc
 
-    # geometry guard: a wider tail must raise, not silently mis-hash
+    # geometry guard: a wider tail must fail the write, not silently
+    # mis-hash, and the failed refresh must leave no rows and no
+    # advanced watermark behind
     wide2 = spark.createDataFrame(
         [(10**9, [0.0] * (stale["dim"] + 1))], "vec_id long, embedding array<double>"
     )
-    with _pytest.raises(ValueError, match="dim"):
+    before_max = read_signlsh_index_meta(inc)["max_id"]
+    before_rows = spark.read.parquet(os.path.join(inc, "bands")).count()
+    with _pytest.raises(Exception, match=f"not {stale['dim']}-dimensional"):
         refresh_signlsh_index(wide2, inc)
+    assert read_signlsh_index_meta(inc)["max_id"] == before_max
+    assert spark.read.parquet(os.path.join(inc, "bands")).count() == before_rows
 
 
 def test_shingle_index_stats_report(spark, tmp_path):
@@ -2927,7 +2864,7 @@ def test_each_probe_body_lives_in_one_kernel():
     src = open(D.__file__, encoding="utf-8").read()
     only_in = {
         r'on=\["band","key"\]': {
-            "_minhash_probe", "_signlsh_probe", "simhash_near_dups",
+            "_minhash_probe", "_signlsh_probe",
         },
         r'on="g"': {"_ngram_pair_counts"},
         r'F\.col\("sz_a"\)\+F\.col\("sz_b"\)-F\.col\("inter"\)': {"_ngram_jaccard"},

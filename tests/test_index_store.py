@@ -193,62 +193,6 @@ def test_index_knn_join_matches_fresh_join(spark, embeddings, tmp_path):
     assert key_set(ivf_index_knn_join(spark, path, queries, k=5, nprobe=4)) == exact
 
 
-def test_bucketed_cell_table_join_no_corpus_shuffle(spark, embeddings, tmp_path):
-    """The bucketed cell table: (a) results equal the path-index join,
-    (b) with broadcast disabled (the huge-query regime), the shuffle join
-    reads the corpus bucket-aligned — no Exchange on the corpus side below
-    the join; only the query side shuffles on _cell."""
-    from kaer_spark.operators.index_store import (
-        ivf_index_knn_join,
-        ivf_table_knn_join,
-        write_ivf_bucketed_table,
-    )
-    from kaer_spark.plans import executed_plan
-
-    meta_path = str(tmp_path / "ivf_tbl_meta")
-    path = str(tmp_path / "ivf_path")
-    try:
-        write_ivf_bucketed_table(
-            embeddings, "b_cells", meta_path, cells=4, fit="deterministic"
-        )
-        build_ivf_index(embeddings, path, cells=4, fit="deterministic")
-        queries = (
-            embeddings.orderBy("vec_id").limit(10)
-            .select(F.col("vec_id").alias("query_id"), "embedding")
-        )
-        a = {
-            (r["query_id"], r["vec_id"], r["rank"])
-            for r in ivf_table_knn_join(
-                spark, "b_cells", meta_path, queries, k=5, nprobe=2
-            ).collect()
-        }
-        b = {
-            (r["query_id"], r["vec_id"], r["rank"])
-            for r in ivf_index_knn_join(spark, path, queries, k=5, nprobe=2).collect()
-        }
-        assert a == b and a
-
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            df = ivf_table_knn_join(spark, "b_cells", meta_path, queries, k=5, nprobe=2)
-            plan = executed_plan(df)
-            assert "BroadcastHashJoin" not in plan
-            # exactly one _cell exchange (the query side); the bucketed
-            # corpus scan feeds the join with no exchange of its own
-            import re
-
-            cell_exchanges = re.findall(
-                r"Exchange hashpartitioning\(_cell", plan
-            )
-            assert len(cell_exchanges) == 1
-            assert {(r["query_id"], r["vec_id"], r["rank"]) for r in df.collect()} == a
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_cells")
-
-
 def test_filtered_query_escalates_nprobe(spark, embeddings, tmp_path):
     """A selective filter must return exactly k rows whenever k matches
     exist ANYWHERE in the index — nprobe doubles until filled or all
@@ -615,65 +559,6 @@ def test_collection_query_pq_filtered(spark, tmp_path):
     assert all(r["parity"] == 1 for r in got)
     exact = coll.query("topic three", k=5, filter={"parity": 1}).collect()
     assert [r[ID_COL] for r in got] == [r[ID_COL] for r in exact]
-
-
-def test_ivf_table_hard_negatives_no_corpus_exchange(spark, embeddings, tmp_path):
-    """Mining from the bucketed cell table: full probe equals the exact
-    broadcast miner (same exclusions), and with broadcast disabled the
-    corpus side feeds the cell join bucket-aligned — zero corpus-side
-    exchange, the recurring-epoch mining layout."""
-    import re
-
-    from kaer_spark.operators.index_store import (
-        ivf_table_hard_negatives,
-        write_ivf_bucketed_table,
-    )
-    from kaer_spark.operators.knn import hard_negatives
-    from kaer_spark.plans import executed_plan
-
-    meta_path = str(tmp_path / "hn_tbl_meta")
-    try:
-        write_ivf_bucketed_table(
-            embeddings, "hn_cells", meta_path, cells=4, fit="deterministic"
-        )
-        queries = (
-            embeddings.orderBy("vec_id").limit(4)
-            .select(F.col("vec_id").alias("query_id"), "embedding")
-        )
-        ex = spark.createDataFrame(
-            [(q, q + 3) for q in range(4)], "query_id long, vec_id long"
-        )
-        kwargs = dict(
-            metric="l2sq", exclude_pairs=ex, exclude_self=True,
-        )
-        exact = hard_negatives(
-            queries,
-            embeddings.select(F.col("vec_id"), "embedding"),
-            k=5, corpus_id_col="vec_id", **kwargs,
-        )
-        mined = ivf_table_hard_negatives(
-            spark, "hn_cells", meta_path, queries, k=5, nprobe=4, **kwargs
-        )
-        assert sorted(map(tuple, exact.collect())) == sorted(
-            map(tuple, mined.collect())
-        )
-
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            df = ivf_table_hard_negatives(
-                spark, "hn_cells", meta_path, queries, k=5, nprobe=2, **kwargs
-            )
-            plan = executed_plan(df)
-            assert "BroadcastHashJoin" not in plan
-            assert "BroadcastNestedLoopJoin" not in plan
-            cell_exchanges = re.findall(r"Exchange hashpartitioning\(_cell", plan)
-            assert len(cell_exchanges) == 1  # query side only
-            assert df.count() > 0
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS hn_cells")
 
 
 def test_pq_index_knn_join_equals_per_query_serving(spark, embeddings, tmp_path):

@@ -48,23 +48,6 @@ def test_time_bucket_join_matches_bruteforce(spark):
     assert f == s
 
 
-def test_salted_join_equals_plain_join(spark):
-    from kaer_spark.operators.skew import salted_join
-
-    big = spark.range(0, 2000).select(
-        (F.when(F.col("id") < 1800, F.lit(7)).otherwise(F.col("id") % 5)).alias("k"),
-        F.col("id").alias("rid"),
-    )
-    dim = spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k LONG, v STRING")
-    got = salted_join(big, dim, on="k", salt_buckets=8, salt_source="rid")
-    want = big.join(dim, "k")
-    assert got.count() == want.count()
-    assert sorted(r["rid"] for r in got.collect()) == sorted(
-        r["rid"] for r in want.collect()
-    )
-    assert "_salt" not in got.columns
-
-
 def test_merge_intervals_islands(spark):
     """Overlap, touch (half-open: [1,3)+[3,5) merge), containment, gap,
     multi-key isolation, and the reversed-interval guard."""

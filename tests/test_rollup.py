@@ -127,43 +127,3 @@ def test_day_partition_layout_prunes(events, tmp_path):
 def test_misaligned_width_rejected(events, tmp_path):
     with pytest.raises(ValueError):
         materialize_rollup(events, str(tmp_path / "r"), 7_000 * NS_PER_SECOND)
-
-
-def test_stream_refresh_rollup_tracks_source(spark, tmp_path):
-    """Continuous aggregate: new event files trigger incremental refresh;
-    after each drain the stored rollup equals a from-scratch rebuild."""
-    from kaer_spark.streaming.ingest import stream_refresh_rollup
-
-    src = str(tmp_path / "ev")
-    os.makedirs(src)
-    schema = "ts LONG, event_type STRING, value DOUBLE"
-    day = 86_400 * NS_PER_SECOND
-
-    def batch(day_i, n, tag):
-        rows = [
-            (day_i * day + j * HOUR_NS // 4, "click" if j % 2 == 0 else "view", float(j))
-            for j in range(n)
-        ]
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src}/{tag}")
-
-    batch(0, 20, "b0")
-    rpath = str(tmp_path / "rollup")
-    materialize_rollup(
-        spark.read.parquet(f"{src}/*"), rpath, HOUR_NS, dims=["event_type"]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{src}/*")
-    )
-    q = stream_refresh_rollup(stream, f"{src}/*", rpath, str(tmp_path / "ckpt"))
-    q.processAllAvailable()
-    batch(1, 16, "b1")  # next day lands
-    q.processAllAvailable()
-    batch(1, 8, "b1b")  # same day grows (partial-day recompute)
-    q.processAllAvailable()
-    q.stop()
-
-    stored = _snapshot(read_rollup(spark, rpath).drop("bucket_day"))
-    rebuilt = _snapshot(
-        rollup(spark.read.parquet(f"{src}/*"), HOUR_NS, dims=["event_type"])
-    )
-    assert stored == rebuilt

@@ -8,12 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from kaer_spark.sources import (
-    read_csv,
-    read_jsonl,
-    read_parquet,
-    write_partitioned,
-)
+from kaer_spark.sources import read_parquet
 from kaer_spark.sources.files import open_table
 
 
@@ -25,26 +20,9 @@ def small(spark):
     )
 
 
-def test_csv_roundtrip(spark, small, tmp_path):
-    p = str(tmp_path / "csv")
-    small.write.option("header", "true").csv(p)
-    back = read_csv(spark, p, "id long, name string, grp string, score double")
-    assert back.count() == 40
-    assert sorted(r["id"] for r in back.collect()) == list(range(40))
-    assert dict(back.dtypes)["score"] == "double"  # schema applied, not inferred
-
-
-def test_jsonl_roundtrip(spark, small, tmp_path):
-    p = str(tmp_path / "jsonl")
-    small.write.json(p)
-    back = read_jsonl(spark, p, "id long, name string, grp string, score double")
-    assert back.count() == 40
-    assert back.filter(F.col("grp") == "a").count() == 20
-
-
 def test_partitioned_write_layout(spark, small, tmp_path):
     p = str(tmp_path / "pq")
-    write_partitioned(small, p, partition_by=["grp"])
+    small.write.partitionBy("grp").parquet(p)
     assert sorted(
         d for d in os.listdir(p) if d.startswith("grp=")
     ) == ["grp=a", "grp=b"]
@@ -89,37 +67,6 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_orc_roundtrip_and_pushdown(spark, small, tmp_path):
-    from kaer_spark.sources.files import read_orc
-
-    p = str(tmp_path / "orc")
-    small.write.orc(p)
-    back = read_orc(spark, p, columns=["id", "grp"])
-    assert sorted(r["id"] for r in back.collect()) == list(range(40))
-    plan = (
-        read_orc(spark, p).filter(F.col("id") > 30)._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    # predicate reaches the ORC scan, projection prunes columns
-    assert "PushedFilters" in plan and "GreaterThan(id,30)" in plan
-
-
-def test_text_reader_lines_and_wholefile(spark, tmp_path):
-    from kaer_spark.sources.files import read_text
-
-    d = tmp_path / "txt"
-    os.makedirs(d)
-    (d / "a.txt").write_text("line one\nline two\n")
-    (d / "b.txt").write_text("solo\n")
-    lines = read_text(spark, str(d))
-    assert sorted(r["value"] for r in lines.collect()) == [
-        "line one", "line two", "solo",
-    ]
-    docs = read_text(spark, str(d), whole_file=True)
-    assert docs.count() == 2
-    assert any("line one\nline two" in r["value"] for r in docs.collect())
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
-"""Structured-Streaming surface: streaming ingest (ids dense across
-micro-batches), and stream-vs-batch answer equivalence for windowed aggs."""
+"""Structured-Streaming surface: screened near-dup ingest, stateful
+first-seen dedup, streaming HLL state, epoch compaction, and
+stream-vs-batch answer equivalence for session windows."""
 
 from __future__ import annotations
 
@@ -10,13 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kaer_spark.context import KaerContext
-from kaer_spark.streaming.ingest import (
-    sessionized_counts,
-    stream_insert,
-    streaming_dedup,
-    windowed_event_counts,
-)
+from kaer_spark.streaming.ingest import sessionized_counts, streaming_dedup
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -60,25 +55,6 @@ def _run_stream(df_stream, transform, tmp_path, name):
     q.processAllAvailable()
     q.stop()
     return name
-
-
-def test_stream_equals_batch_windowed(spark, events_batch, tmp_path):
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)  # force several micro-batches
-        .parquet(events_batch)
-    )
-    name = _run_stream(stream, windowed_event_counts, tmp_path, "win_counts")
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    batch = spark.read.parquet(events_batch)
-    want = {
-        (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in windowed_event_counts(batch).collect()
-    }
-    assert got == want and len(want) > 0
 
 
 def test_stream_equals_batch_sessionized(spark, events_batch, tmp_path):
@@ -134,188 +110,6 @@ def test_streaming_dedup_first_seen_wins(spark, tmp_path):
     assert rows[2][0] in (12, 20)  # whichever file triggered first
 
 
-def test_stream_insert_dense_ids(spark, tmp_path):
-    """Streaming ingest: ids stay dense and strictly increasing across
-    micro-batches (the reference's incremental-insert invariant)."""
-    src = tmp_path / "src"
-    os.makedirs(src)
-    ctx = KaerContext(spark, str(tmp_path / "kaer"))
-    coll = ctx.create_collection("stream")
-
-    schema = "batch INT, _m_doc STRING"
-    spark.createDataFrame([(0, f"doc a{i}") for i in range(5)], schema).write.parquet(
-        f"{src}/b0"
-    )
-    stream = (
-        spark.readStream.schema("batch INT, _m_doc STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = stream_insert(coll, stream, str(tmp_path / "ckpt"))
-    q.processAllAvailable()
-    spark.createDataFrame([(1, f"doc b{i}") for i in range(3)], schema).write.parquet(
-        f"{src}/b1"
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    rows = coll.df().select("batch", "_m_id").collect()
-    ids = sorted(r["_m_id"] for r in rows)
-    assert ids == list(range(8))
-    b0 = {r["_m_id"] for r in rows if r["batch"] == 0}
-    assert b0 == set(range(5))  # second batch strictly after the first
-    assert coll.meta["next_id"] == 8
-
-
-def test_stream_insert_keeps_index_current(spark, tmp_path):
-    """The materialized IVF index catches up after each
-    micro-batch (the streaming form of the reference's inline
-    HNSW-add-on-insert) — index row count and max_id track the collection."""
-    from kaer_spark.operators.index_store import read_index_meta
-
-    src = tmp_path / "src"
-    os.makedirs(src)
-    ctx = KaerContext(spark, str(tmp_path / "kaer"))
-    coll = ctx.create_collection("stream_idx")
-    coll.insert([f"seed doc {i}" for i in range(8)])
-    coll.build_index(cells=2, fit="deterministic")
-
-    schema = "batch INT, _m_doc STRING"
-    spark.createDataFrame([(0, f"late doc {i}") for i in range(4)], schema).write.parquet(
-        f"{src}/b0"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = stream_insert(coll, stream, str(tmp_path / "ckpt_idx"))
-    q.processAllAvailable()
-    q.stop()
-
-    assert read_index_meta(coll.index_path)["max_id"] == 11
-    indexed = spark.read.parquet(f"{coll.index_path}/data")
-    assert indexed.count() == 12
-    assert indexed.select("_m_id").distinct().count() == 12
-    # the approximate path sees streamed rows immediately
-    assert coll.query("late doc 2", k=12, approximate=True, nprobe=2).count() == 12
-
-
-def test_watermark_late_data_semantics(spark, tmp_path):
-    """Append-mode watermark contract: a late row arriving while its window
-    is still open (event time above the current watermark) is aggregated;
-    the same row arriving after the watermark passed its window end is
-    DROPPED. Batch boundaries are forced with sequential writes +
-    processAllAvailable, so the watermark advance between arrivals is
-    deterministic (watermark updates at end-of-batch from that batch's max
-    event time)."""
-    from datetime import datetime
-
-    src = tmp_path / "wsrc"
-    os.makedirs(src)
-    schema = "ts TIMESTAMP, event_type STRING, value DOUBLE"
-
-    def ev(h, m):
-        return (datetime(2024, 1, 1, h, m), "click", 1.0)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{src}/*")
-    )
-    q = (
-        windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_wm"))
-        .start()
-    )
-    # batch 0: on-time rows at 01:30, 02:30 → watermark becomes 00:30
-    spark.createDataFrame([ev(1, 30), ev(2, 30)], schema).coalesce(1).write.parquet(
-        f"{src}/b0"
-    )
-    q.processAllAvailable()
-    # batch 1: 01:45 is LATE but above the 00:30 watermark → must be
-    # aggregated; 10:30 then advances the watermark to 08:30, finalizing
-    # (and emitting) the 01:00 and 02:00 windows
-    spark.createDataFrame([ev(1, 45), ev(10, 30)], schema).coalesce(1).write.parquet(
-        f"{src}/b1"
-    )
-    q.processAllAvailable()
-    # batch 2: 01:50 is now BELOW the 08:30 watermark (window closed) →
-    # must be dropped; 11:30 keeps the stream advancing
-    spark.createDataFrame([ev(1, 50), ev(11, 30)], schema).coalesce(1).write.parquet(
-        f"{src}/b2"
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = {
-        r["window_start"]: r["n"] for r in spark.sql("SELECT * FROM wm_out").collect()
-    }
-    # emitted finalized windows: 01:00 holds the on-time row AND the
-    # accepted late row but NOT the dropped one; 02:00 holds its single row
-    assert got == {
-        datetime(2024, 1, 1, 1, 0): 2,
-        datetime(2024, 1, 1, 2, 0): 1,
-    }
-
-
-def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join ≡ the same function run on
-    batch frames: every impression×click pair with the click 0-30 min
-    after the impression, same user."""
-    from datetime import datetime, timedelta
-
-    from kaer_spark.streaming.ingest import stream_interval_join
-
-    base = datetime(2024, 3, 1, 0, 0)
-    imps = [
-        (i, (i % 7), base + timedelta(minutes=3 * i)) for i in range(60)
-    ]
-    clicks = [
-        (100 + i, (i % 5), base + timedelta(minutes=3 * i + (i % 11)))
-        for i in range(60)
-    ]
-    imp_schema = "imp_id LONG, user_id LONG, ts TIMESTAMP"
-    clk_schema = "click_id LONG, user_id LONG, cts TIMESTAMP"
-    imp_dir, clk_dir = str(tmp_path / "imps"), str(tmp_path / "clicks")
-    # two files per side → several micro-batches interleave
-    spark.createDataFrame(imps[:30], imp_schema).coalesce(1).write.parquet(f"{imp_dir}/a")
-    spark.createDataFrame(imps[30:], imp_schema).coalesce(1).write.parquet(f"{imp_dir}/b")
-    spark.createDataFrame(clicks[:30], clk_schema).coalesce(1).write.parquet(f"{clk_dir}/a")
-    spark.createDataFrame(clicks[30:], clk_schema).coalesce(1).write.parquet(f"{clk_dir}/b")
-
-    def join(l, r):
-        return stream_interval_join(
-            l, r, keys=["user_id"], left_ts="ts", right_ts="cts",
-            lower_s=0, upper_s=1800, watermark="1 hour",
-        ).select("l.imp_id", "r.click_id")
-
-    li = spark.readStream.schema(imp_schema).option("maxFilesPerTrigger", 1).parquet(f"{imp_dir}/*")
-    ri = spark.readStream.schema(clk_schema).option("maxFilesPerTrigger", 1).parquet(f"{clk_dir}/*")
-    q = (
-        join(li, ri)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ssj_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(
-        (r["imp_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM ssj_out").collect()
-    )
-    want = sorted(
-        (r["imp_id"], r["click_id"])
-        for r in join(
-            spark.read.parquet(f"{imp_dir}/*"), spark.read.parquet(f"{clk_dir}/*")
-        ).collect()
-    )
-    assert got == want and len(want) > 0
-
-
 def test_streaming_dedup_against_reference(spark, tmp_path):
     """Stream-static decontamination + in-stream dedup: arrivals whose
     fingerprint exists in the static reference never reach the state store,
@@ -360,151 +154,6 @@ def test_streaming_dedup_against_reference(spark, tmp_path):
     assert set(rows) == {7, 8}           # 100/200 filtered by the reference
     assert rows[7] == (2, "novel-seven")  # min-id first-seen, re-arrival dropped
     assert rows[8] == (11, "novel-eight")
-
-
-def test_stream_insert_keeps_text_index_current(spark, tmp_path):
-    """text_index_path: the inverted text index catches up after each
-    micro-batch — a BM25 search over the index finds documents from every
-    ingested batch, and the refreshed index equals a from-scratch
-    rebuild."""
-    from kaer_spark.operators.text_index import (
-        build_text_index,
-        read_text_index_meta,
-        search_text_index,
-    )
-
-    src = tmp_path / "src"
-    os.makedirs(src)
-    ctx = KaerContext(spark, str(tmp_path / "kaer"))
-    coll = ctx.create_collection("tstream")
-    schema = "batch INT, _m_doc STRING"
-    spark.createDataFrame(
-        [(0, "alpha needle document"), (0, "plain filler text")], schema
-    ).write.parquet(f"{src}/b0")
-
-    tix = str(tmp_path / "tix")
-    # prime the index on the (still empty) collection: build on first batch
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = stream_insert(coll, stream, str(tmp_path / "ckpt"))
-    q.processAllAvailable()
-    q.stop()
-    build_text_index(coll.df(), tix, id_col="_m_id", text_col="_m_doc")
-
-    # second batch arrives; the refresh hook keeps the index current
-    spark.createDataFrame(
-        [(1, "beta needle arrives late"), (1, "more filler words")], schema
-    ).write.parquet(f"{src}/b1")
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q2 = stream_insert(
-        coll, stream2, str(tmp_path / "ckpt"), text_index_path=tix
-    )
-    q2.processAllAvailable()
-    q2.stop()
-
-    meta = read_text_index_meta(tix)
-    assert meta["n_docs"] == coll.count() == 4
-    hits = {
-        r["id"]
-        for r in search_text_index(spark, tix, ["needle"], k=10).collect()
-    }
-    docs = {
-        r["_m_id"]: r["_m_doc"] for r in coll.df().collect()
-    }
-    want = {i for i, d in docs.items() if "needle" in d}
-    assert hits == want and len(hits) == 2  # one per batch
-
-
-def test_streaming_bloom_decontaminate(spark, tmp_path):
-    """Stateless Bloom screen on a stream: contaminated arrivals (sharing
-    a word 3-gram with the benchmark set) are dropped in every
-    micro-batch, clean arrivals pass, and the stream result equals the
-    batch operator on the union of batches (stream ≡ batch contract)."""
-    from kaer_spark.operators.contamination import (
-        bloom_build,
-        bloom_decontaminate,
-    )
-    from kaer_spark.streaming.ingest import streaming_bloom_decontaminate
-
-    src = tmp_path / "bloomsrc"
-    os.makedirs(src)
-    schema = "doc_id LONG, text STRING"
-    b0 = [(1, "the secret eval question about turtles"),
-          (2, "a perfectly ordinary training document")]
-    b1 = [(3, "another clean crawl page with words"),
-          (4, "question about turtles and other copied eval text")]
-    spark.createDataFrame(b0, schema).coalesce(1).write.parquet(f"{src}/b0")
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/b1")
-    test_set = spark.createDataFrame(
-        [(100, "the secret eval question about turtles today")], schema
-    )
-    kw = dict(n=3, m_bits=1 << 12, k_hashes=4, seed=7)
-    bloom = bloom_build(test_set, m_bits=kw["m_bits"], n=3,
-                        k_hashes=4, seed=7)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        streaming_bloom_decontaminate(stream, bloom, **kw)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("bloom_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_bloom"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r["doc_id"]
-        for r in spark.sql("SELECT doc_id FROM bloom_stream_out").collect()
-    }
-    batch_all = spark.createDataFrame(b0 + b1, schema)
-    want = {
-        r["doc_id"]
-        for r in bloom_decontaminate(
-            batch_all, test_set, n=3, m_bits=kw["m_bits"],
-            k_hashes=4, seed=7,
-        ).collect()
-    }
-    assert got == want == {2, 3}
-
-
-def test_streaming_bloom_geometry_mismatch_fails_loudly(spark):
-    """A probe whose m_bits/k_hashes/seed differ from the bitset row's
-    recorded build parameters must RAISE, not silently fail open (a
-    mismatched probe reads wrong bit positions and passes contaminated
-    docs). The guard is woven into the filter expression, so it fires on
-    batch evaluation too — tested here without a stream for speed."""
-    import pytest
-
-    from kaer_spark.operators.contamination import bloom_build
-    from kaer_spark.streaming.ingest import streaming_bloom_decontaminate
-
-    schema = "doc_id LONG, text STRING"
-    docs = spark.createDataFrame([(1, "some words in a row here")], schema)
-    bloom = bloom_build(
-        spark.createDataFrame([(9, "benchmark words in a row")], schema),
-        n=3, m_bits=1 << 12, k_hashes=4, seed=7,
-    )
-    # matching geometry: evaluates fine
-    streaming_bloom_decontaminate(
-        docs, bloom, n=3, m_bits=1 << 12, k_hashes=4, seed=7
-    ).collect()
-    # mismatched m_bits: must raise, not return rows
-    with pytest.raises(Exception, match="bloom geometry mismatch"):
-        streaming_bloom_decontaminate(
-            docs, bloom, n=3, m_bits=1 << 13, k_hashes=4, seed=7
-        ).collect()
 
 
 def test_streaming_hll_ingest_merge_equals_whole(spark, tmp_path):
@@ -620,124 +269,6 @@ def test_streaming_hll_recovers_interrupted_swap(spark, tmp_path):
     assert merged["z_num"] == whole["z_num"]
     assert merged["estimate"] == whole["estimate"]
     assert not os.path.isdir(state + ".old")
-
-
-def test_stream_insert_keeps_pq_index_current(spark, tmp_path):
-    """pq_index_path: the at-rest PQ code table catches up after each
-    micro-batch (O8 parity for the third index family — r13 verdict #4:
-    it used to go stale until a manual refresh_pq_index). Streamed
-    refreshes must be ROW-IDENTICAL to one batch refresh over the final
-    corpus (same stored codebooks, same encoded tail), and all three
-    index families ride the same stream."""
-    from kaer_spark.operators.index_store import (
-        build_pq_index,
-        read_index_meta,
-        read_pq_meta,
-    )
-    from kaer_spark.operators.text_index import (
-        build_text_index,
-        read_text_index_meta,
-    )
-
-    src = tmp_path / "src"
-    os.makedirs(src)
-    ctx = KaerContext(spark, str(tmp_path / "kaer"))
-    coll = ctx.create_collection("pqstream")
-    coll.insert([f"seed doc {i} words" for i in range(20)])
-    coll.build_index(cells=2, fit="deterministic")
-    coll.build_pq_index(m=8, k=16)
-    tix = str(tmp_path / "tix")
-    build_text_index(coll.df(), tix, id_col="_m_id", text_col="_m_doc")
-    # the batch-path twin: same prefix corpus, same deterministic fit
-    twin = str(tmp_path / "pq_twin")
-    build_pq_index(
-        coll.df(), twin, vec_col="_m_embedding", id_col="_m_id", m=8, k=16
-    )
-
-    schema = "batch INT, _m_doc STRING"
-    for b in range(2):
-        spark.createDataFrame(
-            [(b, f"late doc {b}-{i} extra") for i in range(3)], schema
-        ).write.parquet(f"{src}/b{b}")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = stream_insert(
-        coll, stream, str(tmp_path / "ckpt_pq"),
-        text_index_path=tix,
-        pq_index_path=coll.pq_index_path,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    n = coll.count()
-    assert n == 26
-    # all three families current
-    assert read_index_meta(coll.index_path)["max_id"] == 25
-    assert read_text_index_meta(tix)["n_docs"] == 26
-    assert read_pq_meta(coll.pq_index_path)["max_id"] == 25
-
-    # stream (two incremental refreshes) == batch (one refresh at the end)
-    from kaer_spark.operators.index_store import refresh_pq_index
-
-    refresh_pq_index(coll.df(), twin)
-    streamed = {
-        (r["_m_id"], tuple(r["pq_code"]))
-        for r in spark.read.parquet(f"{coll.pq_index_path}/data").collect()
-    }
-    batch = {
-        (r["_m_id"], tuple(r["pq_code"]))
-        for r in spark.read.parquet(f"{twin}/data").collect()
-    }
-    assert streamed == batch and len(streamed) == 26
-
-
-def test_stream_insert_refreshes_each_owned_index_once(
-    spark, tmp_path, monkeypatch
-):
-    """One micro-batch into a collection owning IVF and PQ, with
-    ``pq_index_path`` naming the collection's own PQ directory: the
-    insert already catches up every owned family, so each refresh runs
-    exactly once — a second pass would be a no-op that still fires the
-    tail-max job."""
-    from kaer_spark.operators import index_store
-    from kaer_spark.operators.index_store import read_index_meta, read_pq_meta
-
-    calls = []
-    for name in ("refresh_ivf_index", "refresh_pq_index"):
-        def counted(df, path, _real=getattr(index_store, name), _name=name,
-                    **kw):
-            calls.append(_name)
-            return _real(df, path, **kw)
-
-        monkeypatch.setattr(index_store, name, counted)
-
-    src = tmp_path / "src"
-    os.makedirs(src)
-    ctx = KaerContext(spark, str(tmp_path / "kaer"))
-    coll = ctx.create_collection("once")
-    coll.insert([f"seed doc {i}" for i in range(8)])
-    coll.build_index(cells=2, fit="deterministic")
-    coll.build_pq_index(m=4, k=2)
-    calls.clear()  # each build fills its index through the same refresh
-
-    schema = "batch INT, _m_doc STRING"
-    spark.createDataFrame(
-        [(0, f"late doc {i}") for i in range(3)], schema
-    ).write.parquet(f"{src}/b0")
-    stream = spark.readStream.schema(schema).parquet(f"{src}/*")
-    q = stream_insert(
-        coll, stream, str(tmp_path / "ckpt_once"),
-        pq_index_path=coll.pq_index_path,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    assert sorted(calls) == ["refresh_ivf_index", "refresh_pq_index"]
-    assert read_index_meta(coll.index_path)["max_id"] == 10
-    assert read_pq_meta(coll.pq_index_path)["max_id"] == 10
 
 
 def test_stream_neardup_ingest_end_to_end(spark, tmp_path):
